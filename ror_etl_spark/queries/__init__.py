@@ -43,30 +43,13 @@ def load() -> None:
         vector,
         windows,
     )
-    from ror_etl_spark.queries import staged_r9, staged_r10, staged_r11, staged_r12
-
-    # r9 flip (VERDICT r8 item 1): the 16 operators staged under the r8
-    # registry freeze are now live registry entries.
-    staged_r9.register()
-
-    # r10 flip (VERDICT r9 item 1): the 28 operators staged under the r9
-    # registry freeze are now live registry entries. They carry no past
-    # driver verdict, so ``ordered_queries`` tiers them first and the r10
-    # driver window records all 28 before any re-confirmation.
-    staged_r10.register()
-
-    # r11 flip (VERDICT r10 item 1): the 63 operators staged under the
-    # r10 registry freeze are now live registry entries. They carry no
-    # past driver verdict, so ``ordered_queries`` tiers them first; the
-    # r11 driver window (cap 50) records the first 50 and the remaining
-    # 13 lead the r12 window.
-    staged_r11.register()
-
-    # r12 flip (VERDICT r11 item 1): the 31 operators staged under the
-    # r11 registry freeze are now live registry entries. The r12 driver
-    # window = 13 r11 names still lacking a driver verdict (tier-0 by
-    # ordered_queries) + these 31 = 44 <= 50, so one round records a
-    # driver verdict for every previously-unverified registry entry.
-    staged_r12.register()
+    # Imported last: registration order follows import order, and
+    # ordered_queries breaks priority ties by it.
+    from ror_etl_spark.queries import (  # noqa: F401
+        staged_r9,
+        staged_r10,
+        staged_r11,
+        staged_r12,
+    )
 
     _LOADED = True

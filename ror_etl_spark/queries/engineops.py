@@ -1204,7 +1204,11 @@ def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the collect IS the set-bits count — the former separate count
     # aggregate re-ran the whole build subtree for a number the driver
-    # already holds (len of the bounded collected rows; §5)
+    # already holds (len of the bounded collected rows; §5). This collect
+    # SNAPSHOTS the build side at construction time: the bloom bits and
+    # set_bits (hence fpr_expected) are literals in the returned
+    # DataFrame, while n_build/n_probes/n_false_pos are computed when it
+    # executes — re-executing it after orders changes mixes the two.
     bits_rows = pos.collect()
     bits = [0] * _BLOOM_BITS
     for r in bits_rows:

@@ -1,28 +1,21 @@
-"""Operators staged during round 9 for the r10 registry flip — same
-discipline as ``staged_r9.py`` (which r8 staged and r9 flipped live):
-implemented, oracle-equipped, and driver-gate-checked under pytest
-(``tests/test_staged_r10.py``) while the r9 driver window drains the 20
-names registered this round. ``register()`` is NOT called from
-``queries.load()`` yet; r10 flips it after CORRECTNESS_r09 lands.
-
-Batch theme: the distribution-statistics and survival/tail toolkit a
-training-data pipeline runs on its telemetry — two-sample tests (KS,
-Mann-Whitney), rank correlation (Spearman), extreme-value fit (Gumbel
-block maxima, Hill tail index), resampling variance (jackknife CV),
-survival analysis (Kaplan-Meier), inequality (Lorenz deciles), graph
-local structure (clustering coefficient), sketch-style quantiles
-(fixed-bin histogram interpolation), and corpus lexical diversity.
+"""Distribution-statistics and survival/tail operators a
+training-data pipeline runs on its telemetry: two-sample tests (KS,
+Mann-Whitney), rank correlation (Spearman, Kendall), extreme-value fit
+(Gumbel block maxima, Hill tail index), resampling variance (jackknife
+CV), survival analysis (Kaplan-Meier), inequality (Lorenz deciles, Theil
+index), graph local structure (clustering coefficient, bipartite
+projection, diameter), sketch-style quantiles (fixed-bin histogram
+interpolation), and corpus lexical diversity.
 
 Every entry follows the registry discipline (registry.py module
 docstring): identical aliases both sides, epsilon-shifted rounding on
 floats, deterministic total orders for every rank/tiebreak.
+``tests/test_staged_r10.py`` runs the Spark-vs-DuckDB comparison.
 """
 
 from __future__ import annotations
 
 import math
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,37 +31,15 @@ _DISK_ONLY = StorageLevel.DISK_ONLY
 from ror_etl_spark.operators.util import global_cumsum, global_rank, spread
 from ror_etl_spark.queries.corpusops import _TOKS_SQL
 from ror_etl_spark.functions.text import tokens
+from ror_etl_spark.registry import query
 from ror_etl_spark.tables import Tables
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-STAGED: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query: {name}")
-        STAGED[name] = (fn, " ".join(oracle.split()) if oracle else None)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """r10 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
-
 
 # ---------------------------------------------------------------------------
 # Two-sample tests
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "ks_test_value_click_purchase",
     oracle="""
     WITH s AS (
@@ -148,7 +119,7 @@ def ks_test_value_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mannwhitney_totalprice_urgent_low",
     oracle="""
     WITH s AS (
@@ -230,7 +201,7 @@ def mannwhitney_totalprice_urgent_low(
     )
 
 
-@staged(
+@query(
     "spearman_daily_qty_price",
     oracle="""
     WITH daily AS (
@@ -334,7 +305,7 @@ def _gumbel_oracle() -> str:
     """
 
 
-@staged("gumbel_block_maxima_revenue", oracle=_gumbel_oracle())
+@query("gumbel_block_maxima_revenue", oracle=_gumbel_oracle())
 def gumbel_block_maxima_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extreme-value analysis of daily revenue: weekly block maxima
     fitted to a Gumbel distribution by the method of moments
@@ -386,7 +357,7 @@ def gumbel_block_maxima_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "clustering_coefficient_nations",
     oracle="""
     WITH und AS (
@@ -537,7 +508,7 @@ def _histogram_quantile_oracle() -> str:
     """
 
 
-@staged("histogram_quantile_sketch", oracle=_histogram_quantile_oracle())
+@query("histogram_quantile_sketch", oracle=_histogram_quantile_oracle())
 def histogram_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-bin histogram quantile estimation — the mergeable,
     deterministic sketch path for quantiles at scale (contrast
@@ -612,7 +583,7 @@ def histogram_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "lexical_diversity_by_source",
     oracle=f"""
     WITH tok AS (
@@ -696,7 +667,7 @@ def lexical_diversity_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "lorenz_curve_deciles",
     oracle="""
     WITH per AS (
@@ -787,7 +758,7 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HILL_K = 500
 
 
-@staged(
+@query(
     "hill_tail_index_totalprice",
     oracle=f"""
     WITH top AS (
@@ -840,7 +811,7 @@ def hill_tail_index_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "jackknife_cv_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -926,7 +897,7 @@ def jackknife_cv_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "kaplan_meier_time_to_purchase",
     oracle="""
     WITH per_user AS (
@@ -1044,7 +1015,7 @@ def kaplan_meier_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("duration_h")
 
 
-@staged(
+@query(
     "user_event_entropy_topk",
     oracle="""
     WITH c AS (
@@ -1093,7 +1064,7 @@ def user_event_entropy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "anova_f_value_by_event_type",
     oracle="""
     WITH g AS (
@@ -1190,7 +1161,7 @@ def _llr_oracle() -> str:
     """
 
 
-@staged("llr_collocations_topk", oracle=_llr_oracle())
+@query("llr_collocations_topk", oracle=_llr_oracle())
 def llr_collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dunning log-likelihood-ratio (G²) collocations over adjacent
     bigrams — the statistically sound replacement for raw-PMI ranking
@@ -1280,7 +1251,7 @@ def _pacf_oracle() -> str:
     """
 
 
-@staged("pacf_daily_revenue", oracle=_pacf_oracle())
+@query("pacf_daily_revenue", oracle=_pacf_oracle())
 def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partial autocorrelation of daily revenue at lags 1-3 via the
     Durbin-Levinson recursion applied to the lag-pair Pearson ACF (the
@@ -1324,7 +1295,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mutual_information_priority_status",
     oracle="""
     WITH xy AS (
@@ -1448,7 +1419,7 @@ def _qq_oracle() -> str:
     """
 
 
-@staged("qq_deciles_click_purchase", oracle=_qq_oracle())
+@query("qq_deciles_click_purchase", oracle=_qq_oracle())
 def qq_deciles_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-quantile report between click and purchase values at the
     nine deciles — WHERE the two distributions differ, the drill-down
@@ -1497,7 +1468,7 @@ def qq_deciles_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "interarrival_exponential_fit",
     oracle="""
     WITH ev AS (
@@ -1583,7 +1554,7 @@ def interarrival_exponential_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "fano_factor_by_event_type",
     oracle="""
     WITH span AS (
@@ -1668,7 +1639,7 @@ def fano_factor_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BIPROJ_MIN_ORDERS = 2
 
 
-@staged(
+@query(
     "bipartite_projection_suppliers",
     oracle=f"""
     WITH os AS (
@@ -1721,7 +1692,7 @@ def bipartite_projection_suppliers(
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "theil_index_customer_revenue",
     oracle="""
     WITH per AS (
@@ -1767,7 +1738,7 @@ def theil_index_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "ols_log_elasticity_qty_price",
     oracle="""
     WITH daily AS (
@@ -1821,7 +1792,7 @@ def ols_log_elasticity_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRIM_P = 0.05  # symmetric trim/winsor fraction
 
 
-@staged(
+@query(
     "trimmed_winsorized_mean_totalprice",
     oracle=f"""
     WITH g AS (
@@ -1912,7 +1883,7 @@ def trimmed_winsorized_mean_totalprice(
     )
 
 
-@staged(
+@query(
     "dedup_cluster_size_histogram",
     oracle="""
     WITH fp AS (
@@ -1957,7 +1928,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "kendall_tau_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -2034,7 +2005,7 @@ def kendall_tau_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIAM_MAX_HOPS = 8
 
 
-@staged(
+@query(
     "graph_diameter_trade",
     oracle=f"""
     WITH RECURSIVE und AS (
@@ -2120,7 +2091,7 @@ graph_diameter_trade.__doc__ = graph_diameter_trade.__doc__.format(
 )
 
 
-@staged(
+@query(
     "embedding_silhouette_by_label",
     oracle="""
     WITH e AS (
@@ -2216,7 +2187,7 @@ def embedding_silhouette_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@staged(
+@query(
     "knee_point_customer_revenue",
     oracle="""
     WITH per AS (

@@ -1,39 +1,31 @@
-"""Operators staged during round 10 for the r11 registry flip — same
-discipline as ``staged_r9.py``/``staged_r10.py`` (staged one round,
-flipped live the next after the driver window drains): implemented,
-oracle-equipped, and driver-gate-checked under pytest
-(``tests/test_staged_r11.py``) while the r10 driver window records the
-28 names registered this round. ``register()`` is NOT called from
-``queries.load()`` yet; r11 flips it after CORRECTNESS_r10 lands.
-
-Batch theme: the MODEL/DATA EVALUATION & CALIBRATION toolkit a
-training-data pipeline runs on its model telemetry and curation
-heuristics — ranking metrics (ROC AUC via the rank closed form,
-average precision), probability calibration (ECE reliability bins,
-Brier decomposition by cohort, isotonic-adjacent Wilson bounds),
-campaign economics (lift/gains deciles), categorical association
-(chi-square + Cramér's V, G-test), forensic screens (Benford first
-digit), effect sizes (Cohen's d), multiple-testing control
-(Benjamini-Hochberg over an engine-portable normal-CDF polynomial),
-robust trend (Theil-Sen median slope), changepoint detection (CUSUM),
-link analysis (HITS hubs/authorities), graph structure
-(degree assortativity, LPA modularity), cluster quality
-(Davies-Bouldin), weighted reservoir sampling (A-Res with an
-engine-portable Lehmer stream), quantile normalization, and a
-DRIVER-GATED iterative BFS on a 10k-node synthetic graph (recursive-CTE
-oracle) so an iterative kernel is hash-checked at more than 25 nodes
-(VERDICT r9 item 7).
+"""Model/data evaluation and calibration operators a training-data
+pipeline runs on its model telemetry and curation heuristics: ranking
+metrics (ROC AUC via the rank closed form, average precision, NDCG/MRR),
+probability calibration (ECE reliability bins, Brier decomposition by
+cohort, Wilson lower bounds), campaign economics (lift/gains deciles,
+attribution, discounted LTV), categorical association (chi-square,
+G-test, McNemar, Cochran's Q), effect sizes and experiment design
+(Cohen's d, CUPED, SRM, power/MDE, SPRT, difference-in-differences),
+multiple-testing control (Benjamini-Hochberg over an engine-portable
+normal-CDF polynomial), rank and two-sample tests (Kruskal-Wallis,
+Friedman, Wilcoxon, Cramér-von Mises, energy distance, log-rank),
+changepoint detection (CUSUM), link analysis (HITS hubs/authorities,
+link prediction, rich club), graph structure (degree assortativity, LPA
+modularity), cluster quality (Davies-Bouldin), weighted reservoir
+sampling (A-Res with an engine-portable Lehmer stream), quantile
+normalization, and an iterative BFS on a 10k-node synthetic graph
+(recursive-CTE oracle) so an iterative kernel is hash-checked at more
+than 25 nodes.
 
 Every entry follows the registry discipline (registry.py module
 docstring): identical aliases both sides, epsilon-shifted rounding on
 floats, deterministic total orders for every rank/tiebreak, and the
 DISK_ONLY rule for loop-internal checkpoints
-(tests/test_checkpoint_discipline.py).
+(tests/test_checkpoint_discipline.py). ``tests/test_staged_r11.py``
+runs the Spark-vs-DuckDB comparison.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,39 +34,17 @@ from pyspark.storagelevel import StorageLevel
 
 from ror_etl_spark.operators.util import global_cumsum, global_rank, spread
 from ror_etl_spark.queries.util import epoch_us
+from ror_etl_spark.registry import query
 from ror_etl_spark.tables import Tables
 
 _DISK_ONLY = StorageLevel.DISK_ONLY
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-STAGED: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query: {name}")
-        STAGED[name] = (fn, " ".join(oracle.split()) if oracle else None)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """r11 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
-
 
 # ---------------------------------------------------------------------------
 # Ranking metrics: ROC AUC, average precision
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "roc_auc_click_purchase",
     oracle="""
     WITH s AS (
@@ -139,7 +109,7 @@ def roc_auc_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "average_precision_purchase",
     oracle="""
     WITH s AS (
@@ -207,7 +177,7 @@ def average_precision_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "calibration_ece_bins",
     oracle="""
     WITH s AS (
@@ -280,7 +250,7 @@ def calibration_ece_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "brier_score_by_cohort",
     oracle="""
     WITH s AS (
@@ -335,7 +305,7 @@ def brier_score_by_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "lift_gains_deciles",
     oracle="""
     WITH s AS (
@@ -425,7 +395,7 @@ def lift_gains_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "chi_square_priority_status",
     oracle="""
     WITH obs AS (
@@ -496,7 +466,7 @@ def chi_square_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "g_test_event_type_cohort",
     oracle="""
     WITH obs AS (
@@ -566,7 +536,7 @@ def g_test_event_type_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "cohens_d_urgent_low",
     oracle="""
     WITH s AS (
@@ -671,7 +641,7 @@ def _pvalue_col(z):
     return poly * F.exp(-(x * x))
 
 
-@staged(
+@query(
     "bh_fdr_cohort_value",
     oracle=f"""
     WITH s AS (
@@ -768,7 +738,7 @@ def bh_fdr_cohort_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "cusum_changepoint_daily",
     oracle="""
     WITH daily AS (
@@ -1061,7 +1031,7 @@ def _hits_trajectory_udf():
     return traj.asNondeterministic()
 
 
-@staged("hits_nation_trade", oracle=_hits_oracle())
+@query("hits_nation_trade", oracle=_hits_oracle())
 def hits_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities on the directed nation trade graph
     (supplier nation -> customer nation, weight = shipment count):
@@ -1138,7 +1108,7 @@ def hits_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "degree_assortativity_trade",
     oracle=f"""
     WITH {_TRADE_EDGE_CTES},
@@ -1345,7 +1315,7 @@ def _lpa_modularity_udf(rounds: int):
 
 
 
-@staged("modularity_lpa_communities", oracle=_modularity_oracle())
+@query("modularity_lpa_communities", oracle=_modularity_oracle())
 def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman weighted modularity of the 3-round LPA partition of the
     nation trade graph, reported per community: Q_c = w_in_c/2m -
@@ -1406,7 +1376,7 @@ def modularity_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "davies_bouldin_embeddings",
     oracle="""
     WITH e AS (
@@ -1529,7 +1499,7 @@ _LEHMER_M = 2147483647  # 2^31 - 1 (Park-Miller modulus)
 _LEHMER_A = 48271
 
 
-@staged(
+@query(
     "weighted_sample_ares",
     oracle=f"""
     WITH s AS (
@@ -1588,7 +1558,7 @@ def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "quantile_normalize_across_segments",
     oracle="""
     WITH r AS (
@@ -1658,7 +1628,7 @@ def quantile_normalize_across_segments(spark: SparkSession, sf_dir: str) -> Data
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "wilson_lower_bound_sources",
     oracle="""
     WITH s AS (
@@ -1718,7 +1688,7 @@ _BFS_P = 10007  # prime node count
 _BFS_CAP = 15  # depth cap, identical in the recursive oracle
 
 
-@staged(
+@query(
     "bfs_distances_synthetic_10k",
     oracle=f"""
     WITH RECURSIVE ids AS (SELECT unnest(range({_BFS_P})) AS i),
@@ -1858,7 +1828,7 @@ def _ndcg_oracle(
     )
 
 
-@staged("ndcg_mrr_ann_eval", oracle=_ndcg_oracle())
+@query("ndcg_mrr_ann_eval", oracle=_ndcg_oracle())
 def ndcg_mrr_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded ranking-quality evaluation of the trained-IVF ANN index:
     per query, NDCG@10 with relevance grade (11 - true_cosine_rank) for
@@ -1972,7 +1942,7 @@ def ndcg_mrr_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "kruskal_wallis_value_by_type",
     oracle="""
     WITH s AS (
@@ -2066,7 +2036,7 @@ def kruskal_wallis_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "friedman_daily_type_ranks",
     oracle="""
     WITH day AS (
@@ -2150,7 +2120,7 @@ def friedman_daily_type_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mcnemar_click_shift_halves",
     oracle="""
     WITH bounds AS (
@@ -2232,7 +2202,7 @@ def mcnemar_click_shift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mcc_confusion_value_threshold",
     oracle="""
     WITH scored AS (
@@ -2296,7 +2266,7 @@ def mcc_confusion_value_threshold(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@staged(
+@query(
     "divergence_lang_by_source",
     oracle="""
     WITH per AS (
@@ -2373,7 +2343,7 @@ def divergence_lang_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cross_correlation_click_purchase",
     oracle="""
     WITH bounds AS (
@@ -2472,7 +2442,7 @@ def cross_correlation_click_purchase(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@staged(
+@query(
     "robust_zscore_anomaly_daily",
     oracle="""
     WITH daily AS (
@@ -2541,7 +2511,7 @@ def robust_zscore_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cuped_variance_reduction",
     oracle="""
     WITH bounds AS (
@@ -2619,7 +2589,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "sprt_purchase_rate_crossing",
     oracle="""
     WITH trials AS (
@@ -2710,7 +2680,7 @@ def sprt_purchase_rate_crossing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "pairwise_welch_priority_means",
     oracle="""
     WITH g AS (
@@ -2779,7 +2749,7 @@ def pairwise_welch_priority_means(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@staged(
+@query(
     "fuzzy_name_pairs_blocked",
     oracle="""
     WITH p AS (SELECT p_partkey, p_name, p_brand, p_size FROM part),
@@ -2847,7 +2817,7 @@ def fuzzy_name_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "markov_event_transitions",
     oracle="""
     WITH seq AS (
@@ -2903,7 +2873,7 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "class_balance_weights",
     oracle="""
     WITH c AS (
@@ -2969,7 +2939,7 @@ def class_balance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "lognormal_fit_totalprice",
     oracle="""
     WITH lx AS (
@@ -3033,7 +3003,7 @@ def lognormal_fit_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "randomization_test_mean_diff",
     oracle=f"""
     WITH s AS (
@@ -3173,7 +3143,7 @@ def randomization_test_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "srm_check_assignment",
     oracle=f"""
     WITH u AS (SELECT DISTINCT user_id FROM events),
@@ -3228,7 +3198,7 @@ def srm_check_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "ab_power_mde",
     oracle=f"""
     WITH pu AS (
@@ -3341,7 +3311,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "attribution_credit_models",
     oracle="""
     WITH fpu AS (
@@ -3438,7 +3408,7 @@ def attribution_credit_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "cochran_q_daily_types",
     oracle="""
     WITH bounds AS (
@@ -3546,7 +3516,7 @@ def cochran_q_daily_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "page_l_trend_daily",
     oracle="""
     WITH bounds AS (
@@ -3644,7 +3614,7 @@ def page_l_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "nelson_aalen_time_to_purchase",
     oracle="""
     WITH per_user AS (
@@ -3731,7 +3701,7 @@ def nelson_aalen_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("duration_h")
 
 
-@staged(
+@query(
     "jonckheere_trend_priority",
     oracle="""
     WITH s AS (
@@ -3872,7 +3842,7 @@ def jonckheere_trend_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "ljung_box_daily_revenue",
     oracle="""
     WITH bounds AS (
@@ -3994,7 +3964,7 @@ def ljung_box_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lag")
 
 
-@staged(
+@query(
     "readability_flesch_by_lang",
     oracle="""
     WITH per_doc AS (
@@ -4062,7 +4032,7 @@ def readability_flesch_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cooks_distance_orders",
     oracle="""
     WITH s AS (
@@ -4183,7 +4153,7 @@ def cooks_distance_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ck.orderBy(F.desc("d_cooks_ppm"), F.asc("o_orderkey")).limit(10)
 
 
-@staged(
+@query(
     "ltv_discounted_by_segment",
     oracle="""
     WITH o AS (
@@ -4259,7 +4229,7 @@ def ltv_discounted_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "ols_two_factor_pricing",
     oracle="""
     WITH m AS (
@@ -4329,7 +4299,7 @@ def ols_two_factor_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@staged(
+@query(
     "wilcoxon_signed_rank_weekly",
     oracle="""
     WITH daily AS (
@@ -4416,7 +4386,7 @@ def wilcoxon_signed_rank_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cvm_two_sample_value",
     oracle="""
     WITH s AS (
@@ -4493,7 +4463,7 @@ def cvm_two_sample_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "logrank_time_to_purchase",
     oracle="""
     WITH u AS (
@@ -4614,7 +4584,7 @@ def logrank_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "ar1_forecast_backtest_daily",
     oracle="""
     WITH daily AS (
@@ -4706,7 +4676,7 @@ def ar1_forecast_backtest_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mood_median_test_priority",
     oracle="""
     WITH g AS (SELECT o_totalprice AS v, count(*) AS c FROM orders GROUP BY v),
@@ -4813,7 +4783,7 @@ def mood_median_test_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "charclass_profile_by_lang",
     oracle="""
     WITH d AS (
@@ -4886,7 +4856,7 @@ def charclass_profile_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@staged(
+@query(
     "link_prediction_trade_graph",
     oracle=f"""
     WITH {_TRADE_EDGE_CTES},
@@ -4974,7 +4944,7 @@ def link_prediction_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sc.orderBy(F.desc("adamic_adar"), "u", "v").limit(10)
 
 
-@staged(
+@query(
     "rich_club_trade_graph",
     oracle=f"""
     WITH {_TRADE_EDGE_CTES},
@@ -5052,7 +5022,7 @@ def rich_club_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("k")
 
 
-@staged(
+@query(
     "embedding_isotropy_stats",
     oracle="""
     WITH e AS (
@@ -5153,7 +5123,7 @@ def _sweep_oracle() -> str:
     """
 
 
-@staged("dedup_threshold_sweep", oracle=_sweep_oracle())
+@query("dedup_threshold_sweep", oracle=_sweep_oracle())
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dedup THRESHOLD TUNING CURVE: candidate pairs and affected
     documents at Jaccard cutoffs 0.5–0.9, all from ONE MinHash-LSH
@@ -5208,7 +5178,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "seasonal_strength_weekday",
     oracle="""
     WITH daily AS (
@@ -5338,7 +5308,7 @@ def _dft_oracle() -> str:
     """
 
 
-@staged("dft_weekly_power", oracle=_dft_oracle())
+@query("dft_weekly_power", oracle=_dft_oracle())
 def dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-bin discrete Fourier transform of daily revenue at the
     weekly frequency (the Goertzel statistic): C = Σ(y−ȳ)cos(2πd/7),
@@ -5395,7 +5365,7 @@ def dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "mahalanobis_outlier_customers",
     oracle="""
     WITH cust AS (
@@ -5462,7 +5432,7 @@ def mahalanobis_outlier_customers(spark: SparkSession, sf_dir: str) -> DataFrame
     return out.orderBy(F.desc("mahalanobis_d2"), F.asc("c_custkey")).limit(10)
 
 
-@staged(
+@query(
     "did_revenue_building_1995",
     oracle="""
     WITH s AS (
@@ -5539,7 +5509,7 @@ def did_revenue_building_1995(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "energy_distance_value",
     oracle="""
     WITH s AS (
@@ -5651,7 +5621,7 @@ def energy_distance_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "heaps_law_vocab_fit",
     oracle="""
     WITH toks AS (
@@ -5754,7 +5724,7 @@ def heaps_law_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "negbin_overdispersion_events",
     oracle="""
     WITH u AS (

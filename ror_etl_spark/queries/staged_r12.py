@@ -1,39 +1,27 @@
-"""Operators staged during round 11 for the r12 registry flip — same
-discipline as ``staged_r9/r10/r11.py`` (staged one round, flipped live
-the next after the driver window drains): implemented, oracle-equipped,
-and driver-gate-checked under pytest (``tests/test_staged_r12.py``)
-while the r11 driver window records the first 50 of the 63 staged_r11
-names flipped this round (the remaining 13 lead the r12 window, so this
-batch queues behind them — 13 + this batch < 50 keeps the whole r12
-window green-able in one round). ``register()`` is NOT called from
-``queries.load()`` yet; r12 flips it after CORRECTNESS_r11 lands.
-
-Batch theme: the GOVERNANCE & DECISION layer a training-data platform
-runs beside curation — privacy risk audits (k-anonymity, l-diversity,
+"""Governance and decision operators a training-data platform runs
+beside curation: privacy risk audits (k-anonymity, l-diversity,
 differentially-private release counts over an engine-portable Lehmer
-Laplace stream), causal measurement of pipeline interventions
-(IPTW ATE, regression discontinuity, interrupted time series), leakage-
-safe tabular feature engineering (smoothed target encoding, WOE/IV
-binning, VIF, partial correlation, split-conformal intervals), survival
-and spectral closures (Weibull median-rank fit, spectral entropy,
-Yule-Walker AR(2), lag-1 OLS, two-sample Poisson rate test,
-Anderson-Darling), empirical-Bayes shrinkage of per-source quality
-rates, product-analytics state (DAU/WAU stickiness, bounce depth), a
-geo family over deterministic coordinates (Z-order grid cells,
-broadcast haversine k-NN, bounding-box range join), and closeness
-centrality on the sparsified trade graph (recursive-CTE oracle).
+Laplace stream), causal measurement of pipeline interventions (IPTW ATE,
+regression discontinuity, interrupted time series, quantile treatment
+effects), leakage-safe tabular feature engineering (smoothed target
+encoding, WOE/IV binning, VIF, partial correlation, split-conformal
+intervals), survival and spectral closures (Weibull median-rank fit,
+Aalen-Johansen CIF, spectral entropy, Yule-Walker AR(2), two-sample
+Poisson rate test, Anderson-Darling), empirical-Bayes shrinkage of
+per-source quality rates, product-analytics state (DAU/WAU stickiness,
+bounce depth, growth accounting), a geo family over deterministic
+coordinates (Z-order grid cells, broadcast haversine k-NN, bounding-box
+range join), and closeness centrality on the sparsified trade graph
+(recursive-CTE oracle).
 
 Every entry follows the registry discipline (registry.py module
 docstring): identical aliases both sides, epsilon-shifted rounding on
-floats, deterministic total orders for every rank/tiebreak, and the
-dtype rule the r11 flip added (tests mirror tools/check.py's strict
-dtype comparison — int32-vs-int64 drift fails in staging, not at the
-driver).
+floats, deterministic total orders for every rank/tiebreak, and output
+dtypes that match the oracle's exactly (``tests/test_staged_r12.py``
+mirrors tools/check.py's strict dtype comparison).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,32 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ror_etl_spark.queries.util import epoch_us
+from ror_etl_spark.registry import query
 from ror_etl_spark.tables import Tables
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
 _DISK_ONLY = StorageLevel.DISK_ONLY
-
-STAGED: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query: {name}")
-        STAGED[name] = (fn, " ".join(oracle.split()) if oracle else None)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """r12 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
-
 
 # Engine-portable Lehmer stream (same constants as staged_r11's A-Res
 # sampler): exact int64 arithmetic on both engines, no RNG state.
@@ -97,7 +63,7 @@ def _lehmer_u_sql(key_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "k_anonymity_customer_qi",
     oracle="""
     WITH qi AS (
@@ -157,7 +123,7 @@ def k_anonymity_customer_qi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "l_diversity_order_priority",
     oracle="""
     WITH joined AS (
@@ -213,7 +179,7 @@ def l_diversity_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "dp_noisy_counts_laplace",
     oracle=f"""
     WITH daily AS (
@@ -281,7 +247,7 @@ def dp_noisy_counts_laplace(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "target_encoding_smoothed",
     oracle="""
     WITH joined AS (
@@ -337,7 +303,7 @@ def target_encoding_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "woe_iv_acctbal_band",
     oracle="""
     WITH lab AS (
@@ -442,7 +408,7 @@ def woe_iv_acctbal_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "vif_lineitem_factors",
     oracle="""
     WITH st AS (
@@ -505,7 +471,7 @@ def vif_lineitem_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "partial_corr_qty_price_disc",
     oracle="""
     WITH st AS (
@@ -554,7 +520,7 @@ def partial_corr_qty_price_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "conformal_interval_totalprice",
     oracle="""
     WITH base AS (
@@ -642,7 +608,7 @@ def conformal_interval_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "iptw_ate_urgent_revenue",
     oracle="""
     WITH base AS (
@@ -716,7 +682,7 @@ def iptw_ate_urgent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "rdd_acctbal_threshold",
     oracle="""
     WITH base AS (
@@ -779,7 +745,7 @@ def rdd_acctbal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "its_segmented_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -914,7 +880,7 @@ def its_segmented_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "weibull_fit_time_to_purchase",
     oracle="""
     WITH su AS (
@@ -1022,7 +988,7 @@ def weibull_fit_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "spectral_entropy_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -1111,7 +1077,7 @@ def spectral_entropy_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@staged(
+@query(
     "yule_walker_ar2_daily",
     oracle="""
     WITH daily AS (
@@ -1199,7 +1165,7 @@ def yule_walker_ar2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "poisson_two_rate_test",
     oracle="""
     WITH daily AS (
@@ -1272,7 +1238,7 @@ def poisson_two_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "anderson_darling_click_purchase",
     oracle="""
     WITH s AS (
@@ -1371,7 +1337,7 @@ def anderson_darling_click_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@staged(
+@query(
     "eb_shrunk_source_rates",
     oracle="""
     WITH s AS (
@@ -1455,7 +1421,7 @@ def eb_shrunk_source_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "dau_wau_stickiness",
     oracle="""
     WITH d AS (
@@ -1514,7 +1480,7 @@ def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "session_bounce_depth",
     oracle="""
     WITH ordered AS (
@@ -1644,7 +1610,7 @@ def _geo_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "geo_zorder_cell_counts",
     oracle=f"""
     WITH pts AS ({_geo_sql()}),
@@ -1710,7 +1676,7 @@ def geo_zorder_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "geo_haversine_knn",
     oracle=f"""
     WITH pts AS ({_geo_sql()}),
@@ -1785,7 +1751,7 @@ def geo_haversine_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "geo_bbox_containment_join",
     oracle=f"""
     WITH pts AS ({_geo_sql()}),
@@ -1858,7 +1824,7 @@ _CLOSE_MAX = 8
 _CLOSE_K = 3
 
 
-@staged(
+@query(
     "closeness_centrality_trade",
     oracle=f"""
     WITH RECURSIVE
@@ -1974,7 +1940,7 @@ def closeness_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "capture_recapture_users",
     oracle="""
     WITH w1 AS (
@@ -2040,7 +2006,7 @@ def capture_recapture_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "price_index_laspeyres_paasche",
     oracle="""
     WITH li AS (
@@ -2120,7 +2086,7 @@ def price_index_laspeyres_paasche(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@staged(
+@query(
     "quantile_treatment_effects",
     oracle="""
     WITH s AS (
@@ -2233,7 +2199,7 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "ipf_raking_segment_priority",
     oracle="""
     WITH cell AS (
@@ -2326,7 +2292,7 @@ def ipf_raking_segment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged(
+@query(
     "aalen_johansen_cif",
     oracle="""
     WITH per_user AS (
@@ -2493,7 +2459,7 @@ def aalen_johansen_cif(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("duration_h")
 
 
-@staged(
+@query(
     "entropy_rate_markov",
     oracle="""
     WITH seq AS (
@@ -2562,7 +2528,7 @@ def entropy_rate_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "growth_accounting_weekly",
     oracle="""
     WITH wk AS (
@@ -2689,7 +2655,7 @@ def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cmh_test_segment_strata",
     oracle="""
     WITH med AS (

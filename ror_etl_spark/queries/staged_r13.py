@@ -1,13 +1,11 @@
-"""Operators staged during round 12 for the r13 registry flip — same
-discipline as ``staged_r9/r10/r11/r12.py`` (staged one round, flipped
-live the next after the driver window drains): implemented,
-oracle-equipped, and driver-gate-checked under pytest
-(``tests/test_staged_r13.py``) while the r12 driver window records the
-44 previously-unverified names plus the 3 re-based trade-graph ops.
-``register()`` is NOT called from ``queries.load()`` yet; r13 flips it
-after CORRECTNESS_r12 lands.
+"""Unserved operators: implemented and oracle-equipped, checked under
+pytest (``tests/test_staged_r13.py``), but never imported by
+``queries.load()``, so neither the registry nor the driver reaches them.
+The module is kept only while its tests are retired a batch at a time;
+nothing may register from it. ``staged_r14`` reuses its daily frame and
+text helpers.
 
-Batch theme: the DIAGNOSTIC & ROBUSTNESS layer — residual diagnostics
+Contents: the DIAGNOSTIC & ROBUSTNESS layer — residual diagnostics
 for the regression closures the registry already carries (Jarque-Bera
 normality, Durbin-Watson autocorrelation, Breusch-Pagan
 heteroskedasticity, Grubbs max-outlier), long-memory and complexity
@@ -24,11 +22,11 @@ kernels (personalized PageRank, k-truss), the cell-blocked geo k-NN
 scale path whose recall the registered broadcast k-NN oracles, and
 incremental product-state closures (two-batch sessionize merge proven
 against the full-corpus sessionizer, session-depth half-life fit,
-BPE tokenizer fertility by language), plus wave 8: revenue-weighted
-quantiles over the discrete quantity domain and a Simpson's-paradox
-reversal screen; waves 9-10: inequality/association/unit-root
-closures, exact 1-Wasserstein, centrality and robust-regression
-kernels; wave 11: Chao1 unseen-vocabulary richness, Cronbach's alpha
+BPE tokenizer fertility by language), plus revenue-weighted quantiles
+over the discrete quantity domain and a Simpson's-paradox reversal
+screen; inequality/association/unit-root closures, exact
+1-Wasserstein, centrality and robust-regression kernels; Chao1
+unseen-vocabulary richness, Cronbach's alpha
 (zero-cell-free sufficient statistics), Page-Hinkley drift,
 Hotelling's T-squared two-sample test, and the Calinski-Harabasz
 variance-ratio index completing the clustering-validity triad.
@@ -66,14 +64,6 @@ def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]
         return fn
 
     return deco
-
-
-def register() -> None:
-    """r13 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
 
 
 # ---------------------------------------------------------------------------

@@ -1,35 +1,20 @@
-"""Operators staged during round 12 for the (future) r14 registry flip
-— same discipline as ``staged_r9``..``staged_r13``: implemented,
-oracle-equipped, and driver-gate-checked under pytest
-(``tests/test_staged_r14.py``) while staying OUT of the live registry.
-Pre-building the r14 batch one round early keeps the flip pipeline full:
-r13 flips ``staged_r13`` (50 ops, exactly one driver window) and can
-accumulate tri-SF evidence for this batch without authoring from zero.
+"""Unserved operators: implemented and oracle-equipped, checked under
+pytest (``tests/test_staged_r14.py``), but never imported by
+``queries.load()``, so neither the registry nor the driver reaches them.
+The module is kept only while its tests are retired a batch at a time;
+nothing may register from it.
 
-Batch theme: EXACT SMALL-SAMPLE INFERENCE & SEQUENCE MODELS — exact
-hypergeometric inference on bounded populations (Fisher's exact test on
-the 25-nation grid), odds-ratio homogeneity across strata (Breslow-Day
-on the CMH common OR), the Kuiper circular-sensitive ECDF statistic
-completing the KS/CvM/AD family, rank concordance across repeated
-rankings (Kendall's W), grouped logistic regression by IRLS with its
-Hosmer-Lemeshow calibration companion, a 1-D local-level Kalman filter
-(the state-space complement to Holt), corpus language-model scoring by
-stupid-backoff trigrams, TextRank keyword extraction (PageRank over the
-token co-occurrence graph), linear CKA between embedding halves,
-grid-density (DBSCAN-style) clustering over the embedding plane,
-doubly-robust AIPW treatment effects, kth-NN distance outliers, and
-deterministic Misra-Gries heavy-hitter tokens with an exact recount.
-Wave 2 completes the survival family with Cox proportional hazards,
-adds exact-minimax isotonic regression (the PAVA closed form needs no
-sequential pooling), and DTW between weekday/weekend profiles (the
-anti-diagonal wavefront makes the DP SQL-expressible). Wave 3 adds
-Moran's I spatial autocorrelation and Bradley-Terry paired-comparison
-strengths (Zermelo MM). Wave 4 adds the decision layer: an
-O'Brien-Fleming-shaped sequential monitor and a deterministic UCB1
-bandit replay. Wave 5 rounds out classical inference: Cochran-Armitage
-ordered trend, Baron-Kenny/Sobel mediation, single-instrument
-Wald/2SLS with the weak-instrument F, Fleiss' kappa, and SMR indirect
-standardization.
+Contents: the Kuiper ECDF statistic and Kendall's W rank concordance,
+grouped logistic regression by IRLS with its Hosmer-Lemeshow
+calibration companion, deterministic Misra-Gries heavy-hitter tokens
+with an exact recount, kth-NN distance outliers on the embedding
+subsample, exact-minimax isotonic regression, Cochran-Armitage ordered
+trend, single-instrument Wald/2SLS, Fleiss' kappa, SMR indirect
+standardization, weighted single-source shortest paths and a Kruskal
+spanning backbone on the sparsified trade graph, zero-inflated Poisson
+moments, Yule's K lexical diversity, the Hodges-Lehmann shift, Katz
+centrality, Taylor's power law, the Pettitt rank change point and the
+generalized ESD outlier test.
 
 Every entry follows the registry discipline (registry.py module
 docstring): identical aliases both sides, epsilon-shifted rounding on
@@ -40,7 +25,6 @@ dtype rule.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -65,211 +49,6 @@ def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]
         return fn
 
     return deco
-
-
-def register() -> None:
-    """r14 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
-
-
-# ---------------------------------------------------------------------------
-# Exact small-sample inference on bounded populations
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "fisher_exact_nation_revenue",
-    oracle="""
-    WITH nrev AS (
-      SELECT n.n_nationkey AS nk, n.n_regionkey AS rk,
-             sum(o.o_totalprice) AS rev
-      FROM nation n
-      JOIN customer c ON c.c_nationkey = n.n_nationkey
-      JOIN orders o ON o.o_custkey = c.c_custkey
-      GROUP BY n.n_nationkey, n.n_regionkey),
-    med AS (
-      SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY rev) AS m
-      FROM nrev),
-    flags AS (
-      SELECT nk,
-             CASE WHEN rk IN (2, 3) THEN 1 ELSE 0 END AS t,
-             CASE WHEN rev > med.m THEN 1 ELSE 0 END AS hi
-      FROM nrev CROSS JOIN med),
-    cells AS (
-      SELECT sum(CASE WHEN t = 1 AND hi = 1 THEN 1 ELSE 0 END) AS a,
-             sum(CASE WHEN t = 1 AND hi = 0 THEN 1 ELSE 0 END) AS b,
-             sum(CASE WHEN t = 0 AND hi = 1 THEN 1 ELSE 0 END) AS c,
-             sum(CASE WHEN t = 0 AND hi = 0 THEN 1 ELSE 0 END) AS d
-      FROM flags),
-    marg AS (
-      SELECT a, b, c, d, a + b AS r1, a + c AS c1,
-             a + b + c + d AS n
-      FROM cells),
-    supp AS (
-      SELECT marg.*, gs.k FROM marg
-      CROSS JOIN (SELECT unnest(range(0, 26)) AS k) gs
-      WHERE gs.k >= greatest(0, marg.r1 + marg.c1 - marg.n)
-        AND gs.k <= least(marg.r1, marg.c1)),
-    lf AS (
-      SELECT gs.x,
-             coalesce(list_sum(list_transform(
-               range(2, CAST(gs.x AS BIGINT) + 1),
-               i -> ln(CAST(i AS DOUBLE)))), 0.0) AS lfact
-      FROM (SELECT unnest(range(0, 26)) AS x) gs),
-    pk AS (
-      SELECT supp.*,
-             round(exp(l1.lfact - l2.lfact - l3.lfact
-                       + l4.lfact - l5.lfact - l6.lfact
-                       - (l7.lfact - l8.lfact - l9.lfact))
-                   + 1e-12, 10) AS p
-      FROM supp
-      JOIN lf l1 ON l1.x = supp.r1
-      JOIN lf l2 ON l2.x = supp.k
-      JOIN lf l3 ON l3.x = supp.r1 - supp.k
-      JOIN lf l4 ON l4.x = supp.n - supp.r1
-      JOIN lf l5 ON l5.x = supp.c1 - supp.k
-      JOIN lf l6 ON l6.x = supp.n - supp.r1 - supp.c1 + supp.k
-      JOIN lf l7 ON l7.x = supp.n
-      JOIN lf l8 ON l8.x = supp.c1
-      JOIN lf l9 ON l9.x = supp.n - supp.c1),
-    pobs AS (SELECT p AS po FROM pk WHERE k = a),
-    sums AS (
-      SELECT sum(CASE WHEN pk.p <= pobs.po * (1.0 + 1e-7)
-                      THEN pk.p ELSE 0 END) AS p_two,
-             sum(CASE WHEN pk.k >= pk.a THEN pk.p ELSE 0 END) AS p_one
-      FROM pk CROSS JOIN pobs)
-    SELECT CAST(marg.a AS BIGINT) AS a, CAST(marg.b AS BIGINT) AS b,
-           CAST(marg.c AS BIGINT) AS c, CAST(marg.d AS BIGINT) AS d,
-           round(CASE WHEN marg.b * marg.c > 0
-                      THEN marg.a * 1.0 * marg.d / (marg.b * marg.c)
-                      END + 1e-9, 4) AS sample_or,
-           round(least(sums.p_two, 1.0) + 1e-9, 6) AS p_two_sided,
-           round(least(sums.p_one, 1.0) + 1e-9, 6) AS p_one_sided
-    FROM marg CROSS JOIN sums
-    """,
-)
-def fisher_exact_nation_revenue(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fisher's EXACT test on a bounded population: is membership in
-    the ASIA/EUROPE regions (regionkeys 2, 3) associated with
-    above-median total order revenue, across the 25 nations? The 2x2
-    table's cells are NATION counts, so the hypergeometric support is
-    at most 26 terms at ANY data scale — the exact-inference
-    complement to the asymptotic ``chi_square_priority_status`` /
-    ``g_test_independence`` family, usable exactly where chi-square's
-    expected-count assumptions fail. Two-sided p sums P(k) <= P(obs)
-    x (1+1e-7) (the R convention); probabilities are quantized to 10
-    dp before the comparison so both engines sum identical terms.
-
-    Scale shape: one fact-scan aggregate to the 25-row nation frame;
-    the hypergeometric enumeration is a <=26-row exploded sequence of
-    lgamma terms. Nothing downstream of the rollup is data-sized."""
-    t = Tables(spark, sf_dir)
-    nrev = (
-        t.nation.join(
-            t.customer, F.col("n_nationkey") == F.col("c_nationkey")
-        )
-        .join(t.orders, F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy("n_nationkey", "n_regionkey")
-        .agg(F.sum("o_totalprice").alias("rev"))
-    )
-    med = nrev.agg(
-        F.expr(
-            "percentile_disc(0.5) WITHIN GROUP (ORDER BY rev)"
-        ).alias("m")
-    )
-    flags = nrev.crossJoin(F.broadcast(med)).select(
-        F.when(F.col("n_regionkey").isin(2, 3), 1).otherwise(0).alias("t"),
-        F.when(F.col("rev") > F.col("m"), 1).otherwise(0).alias("hi"),
-    )
-    cells = flags.agg(
-        F.sum(F.when((F.col("t") == 1) & (F.col("hi") == 1), 1).otherwise(0)).alias("a"),
-        F.sum(F.when((F.col("t") == 1) & (F.col("hi") == 0), 1).otherwise(0)).alias("b"),
-        F.sum(F.when((F.col("t") == 0) & (F.col("hi") == 1), 1).otherwise(0)).alias("c"),
-        F.sum(F.when((F.col("t") == 0) & (F.col("hi") == 0), 1).otherwise(0)).alias("d"),
-    )
-    marg = cells.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        (F.col("a") + F.col("b")).alias("r1"),
-        (F.col("a") + F.col("c")).alias("c1"),
-        (F.col("a") + F.col("b") + F.col("c") + F.col("d")).alias("n"),
-    )
-    def lfact(x):
-        # ln(x!) as an ascending fold over [2..x]; bounded by n <= 25.
-        # No lgamma in Spark SQL — an explicit log-sum keeps both
-        # engines on the same bounded arithmetic (10-dp quantization
-        # absorbs fold-order ulps).
-        return F.when(
-            x >= 2,
-            F.aggregate(
-                F.sequence(F.lit(2), x.cast("int")),
-                F.lit(0.0),
-                lambda acc, i: acc + F.log(i.cast("double")),
-            ),
-        ).otherwise(0.0)
-
-    supp = (
-        marg.select(
-            "*", F.explode(F.sequence(F.lit(0), F.lit(25))).alias("k")
-        )
-        .filter(
-            (F.col("k") >= F.greatest(F.lit(0), F.col("r1") + F.col("c1") - F.col("n")))
-            & (F.col("k") <= F.least(F.col("r1"), F.col("c1")))
-        )
-    )
-    r1, c1, n, k = F.col("r1"), F.col("c1"), F.col("n"), F.col("k")
-    logp = (
-        lfact(r1)
-        - lfact(k)
-        - lfact(r1 - k)
-        + lfact(n - r1)
-        - lfact(c1 - k)
-        - lfact(n - r1 - c1 + k)
-        - (lfact(n) - lfact(c1) - lfact(n - c1))
-    )
-    pk = supp.select(
-        "*", F.round(F.exp(logp) + 1e-12, 10).alias("p")
-    )
-    pobs = pk.filter(F.col("k") == F.col("a")).select(
-        F.col("p").alias("po")
-    )
-    sums = pk.crossJoin(F.broadcast(pobs)).agg(
-        F.sum(
-            F.when(F.col("p") <= F.col("po") * (1.0 + 1e-7), F.col("p")).otherwise(0.0)
-        ).alias("p_two"),
-        F.sum(
-            F.when(F.col("k") >= F.col("a"), F.col("p")).otherwise(0.0)
-        ).alias("p_one"),
-    )
-    return marg.crossJoin(F.broadcast(sums)).select(
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("c").cast("long").alias("c"),
-        F.col("d").cast("long").alias("d"),
-        F.round(
-            F.when(
-                F.col("b") * F.col("c") > 0,
-                F.col("a").cast("double")
-                * F.col("d")
-                / (F.col("b").cast("double") * F.col("c")),
-            )
-            + 1e-9,
-            4,
-        ).alias("sample_or"),
-        F.round(F.least(F.col("p_two"), F.lit(1.0)) + 1e-9, 6).alias(
-            "p_two_sided"
-        ),
-        F.round(F.least(F.col("p_one"), F.lit(1.0)) + 1e-9, 6).alias(
-            "p_one_sided"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -440,174 +219,6 @@ def kendall_w_weekday_type_ranks(
         F.round(m * (k - 1.0) * 12.0 * s / denom + 1e-9, 4).alias(
             "chi2_stat"
         ),
-    )
-
-
-@staged(
-    "breslow_day_or_homogeneity",
-    oracle="""
-    WITH base AS (
-      SELECT r.r_name AS region,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-               AS t,
-             CASE WHEN o.o_totalprice > 150000 THEN 1 ELSE 0 END AS hi
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      JOIN region r ON r.r_regionkey = n.n_regionkey),
-    cells AS (
-      SELECT region,
-             CAST(sum(CASE WHEN t = 1 AND hi = 1 THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS a,
-             CAST(sum(CASE WHEN t = 1 AND hi = 0 THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS b,
-             CAST(sum(CASE WHEN t = 0 AND hi = 1 THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS c,
-             CAST(sum(CASE WHEN t = 0 AND hi = 0 THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS d
-      FROM base GROUP BY region),
-    psi AS (
-      SELECT sum(a * d / (a + b + c + d))
-             / sum(b * c / (a + b + c + d)) AS w
-      FROM cells),
-    ex AS (
-      SELECT cells.region, cells.a, cells.b, cells.c, cells.d, psi.w,
-             cells.a + cells.b AS r1, cells.a + cells.c AS c1,
-             cells.a + cells.b + cells.c + cells.d AS nn
-      FROM cells CROSS JOIN psi),
-    sol AS (
-      SELECT region, a, b, c, d, w, r1, c1, nn,
-             CASE WHEN abs(w - 1.0) < 1e-12 THEN r1 * c1 / nn
-                  ELSE ((w * (r1 + c1) + (nn - r1 - c1))
-                        - sqrt((w * (r1 + c1) + (nn - r1 - c1))
-                               * (w * (r1 + c1) + (nn - r1 - c1))
-                               - 4.0 * (w - 1.0) * w * r1 * c1))
-                       / (2.0 * (w - 1.0)) END AS e
-      FROM ex),
-    vv AS (
-      SELECT region, a, b, c, d, w, e,
-             1.0 / (1.0 / e + 1.0 / (r1 - e) + 1.0 / (c1 - e)
-                    + 1.0 / (nn - r1 - c1 + e)) AS v
-      FROM sol),
-    bd AS (
-      SELECT round(sum((a - e) * (a - e) / v) + 1e-9, 4) AS bd_stat,
-             CAST(count(*) - 1 AS BIGINT) AS df
-      FROM vv)
-    SELECT vv.region,
-           CAST(vv.a AS BIGINT) AS a,
-           round(vv.e + 1e-9, 4) AS expected_a,
-           round(vv.v + 1e-9, 4) AS var_a,
-           round(vv.a * vv.d / (vv.b * vv.c) + 1e-9, 4) AS or_stratum,
-           round(vv.w + 1e-9, 4) AS psi_cmh,
-           bd.bd_stat, bd.df
-    FROM vv CROSS JOIN bd
-    ORDER BY vv.region
-    """,
-)
-def breslow_day_or_homogeneity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Breslow-Day test for odds-ratio HOMOGENEITY across region
-    strata (treatment = URGENT priority, outcome = order value >
-    150k): under the CMH common odds ratio psi, each stratum's
-    expected a-cell solves the quadratic (psi-1)E^2 - [psi(r1+c1) +
-    (N-r1-c1)]E + psi*r1*c1 = 0 (valid minus-sqrt root; exact
-    r1*c1/N fallback at psi = 1), V is the inverse-sum-of-inverses
-    hypergeometric variance, and BD = sum (a-E)^2/V ~ chi2(strata-1).
-    The homogeneity gate that tells you whether the registered
-    ``cmh_common_odds_ratio``'s pooling is even licensed — a large BD
-    means report per-stratum ORs instead.
-
-    Scale shape: one fact-scan conditional aggregate to the 5-stratum
-    cell frame; everything after is closed-form algebra on 5 rows."""
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.join(
-            t.customer, F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(t.region, F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(
-            F.col("r_name").alias("region"),
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1)
-            .otherwise(0)
-            .alias("t"),
-            F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("hi"),
-        )
-    )
-    cells = base.groupBy("region").agg(
-        F.sum(F.when((F.col("t") == 1) & (F.col("hi") == 1), 1).otherwise(0))
-        .cast("double")
-        .alias("a"),
-        F.sum(F.when((F.col("t") == 1) & (F.col("hi") == 0), 1).otherwise(0))
-        .cast("double")
-        .alias("b"),
-        F.sum(F.when((F.col("t") == 0) & (F.col("hi") == 1), 1).otherwise(0))
-        .cast("double")
-        .alias("c"),
-        F.sum(F.when((F.col("t") == 0) & (F.col("hi") == 0), 1).otherwise(0))
-        .cast("double")
-        .alias("d"),
-    )
-    nn_ = F.col("a") + F.col("b") + F.col("c") + F.col("d")
-    psi = cells.agg(
-        (
-            F.sum(F.col("a") * F.col("d") / nn_)
-            / F.sum(F.col("b") * F.col("c") / nn_)
-        ).alias("w")
-    )
-    ex = cells.crossJoin(F.broadcast(psi)).select(
-        "*",
-        (F.col("a") + F.col("b")).alias("r1"),
-        (F.col("a") + F.col("c")).alias("c1"),
-        nn_.alias("nn"),
-    )
-    w, r1, c1, nn = F.col("w"), F.col("r1"), F.col("c1"), F.col("nn")
-    bq = w * (r1 + c1) + (nn - r1 - c1)
-    root = (bq - F.sqrt(bq * bq - 4.0 * (w - 1.0) * w * r1 * c1)) / (
-        2.0 * (w - 1.0)
-    )
-    sol = ex.select(
-        "*",
-        F.when(F.abs(w - 1.0) < 1e-12, r1 * c1 / nn)
-        .otherwise(root)
-        .alias("e"),
-    )
-    e = F.col("e")
-    vv = sol.select(
-        "*",
-        (
-            1.0
-            / (
-                1.0 / e
-                + 1.0 / (r1 - e)
-                + 1.0 / (c1 - e)
-                + 1.0 / (nn - r1 - c1 + e)
-            )
-        ).alias("v"),
-    )
-    bd = vv.agg(
-        F.round(
-            F.sum((F.col("a") - e) * (F.col("a") - e) / F.col("v")) + 1e-9,
-            4,
-        ).alias("bd_stat"),
-        (F.count(F.lit(1)) - 1).cast("long").alias("df"),
-    )
-    return (
-        vv.crossJoin(F.broadcast(bd))
-        .select(
-            "region",
-            F.col("a").cast("long").alias("a"),
-            F.round(e + 1e-9, 4).alias("expected_a"),
-            F.round(F.col("v") + 1e-9, 4).alias("var_a"),
-            F.round(
-                F.col("a") * F.col("d") / (F.col("b") * F.col("c")) + 1e-9, 4
-            ).alias("or_stratum"),
-            F.round(w + 1e-9, 4).alias("psi_cmh"),
-            "bd_stat",
-            "df",
-        )
-        .orderBy("region")
     )
 
 
@@ -824,218 +435,12 @@ def hosmer_lemeshow_logistic_hour(
     ).select("g_cells", "df", "hl_stat", "max_cell_gap")
 
 
-# ---------------------------------------------------------------------------
-# State-space smoothing on the daily series
-# ---------------------------------------------------------------------------
-
-# Shared daily frame + engine-portable quantizer from the r13 batch —
-# reusing them keeps the series definition identical across batches.
+# Shared daily frame from staged_r13 — reusing it keeps the series
+# definition identical across both modules.
 from ror_etl_spark.queries.staged_r13 import (  # noqa: E402
     _DAILY_SQL,
     _daily_df,
-    _qr_sql,
 )
-
-_KF_Q = 100.0
-_KF_R = 10000.0
-
-
-def _kalman_oracle() -> str:
-    newl = _qr_sql(
-        f"st.l + ((st.p + {_KF_Q}) / (st.p + {_KF_Q} + {_KF_R}))"
-        " * (rn.y - st.l)"
-    )
-    newp = _qr_sql(
-        f"(1.0 - (st.p + {_KF_Q}) / (st.p + {_KF_Q} + {_KF_R}))"
-        f" * (st.p + {_KF_Q})"
-    )
-    newsse = _qr_sql("st.sse + (rn.y - st.l) * (rn.y - st.l)")
-    return f"""
-    WITH RECURSIVE {_DAILY_SQL},
-    rn AS (SELECT row_number() OVER (ORDER BY t) AS k, y FROM daily),
-    st (k, l, p, sse) AS (
-      SELECT CAST(1 AS BIGINT),
-             CAST((SELECT y FROM rn WHERE k = 1) AS DOUBLE),
-             CAST({_KF_R} AS DOUBLE), CAST(0.0 AS DOUBLE)
-      UNION ALL
-      SELECT rn.k, {newl}, {newp}, {newsse}
-      FROM st JOIN rn ON rn.k = st.k + 1)
-    SELECT CAST(st.k AS BIGINT) AS n_days,
-           st.l AS level,
-           st.p AS p_var,
-           {_qr_sql(f"(st.p + {_KF_Q}) / (st.p + {_KF_Q} + {_KF_R})")}
-             AS k_gain,
-           round(sqrt(st.sse / (st.k - 1.0)) + 1e-9, 4) AS innov_rmse
-    FROM st WHERE st.k = (SELECT max(k) FROM rn)
-    """
-
-
-@staged("kalman_local_level_daily", oracle=_kalman_oracle())
-def kalman_local_level_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-D local-level Kalman filter on daily purchase revenue (state =
-    latent level; fixed process variance q = 100, observation variance
-    r = 10000): per step, predict P' = P + q, gain K = P'/(P' + r),
-    update l <- l + K(y - l), P <- (1-K)P'. Reports the final filtered
-    level, steady-state-ish P and K, and the one-step innovation RMSE.
-    The probabilistic counterpart to ``ewma_daily_revenue`` — EWMA is
-    exactly the K = const special case; the Kalman gain ADAPTS from 0.5
-    at t=1 toward its Riccati fixed point, trusting early noisy
-    estimates less.
-
-    The recurrence is sequential over the BOUNDED daily frame, so it
-    runs as one Arrow kernel on the coalesced frame (the Holt posture:
-    an executor task, never the driver); level, P, and SSE are
-    quantized each step with the engine-portable floor-based 6-dp rule
-    so DuckDB's recursive CTE replays the exact trajectory. At 100 TB
-    only the day-keyed pre-aggregate sees data."""
-    d = _daily_df(spark, sf_dir)
-
-    def q6(x: float) -> float:
-        import math
-
-        v = x + 1e-9
-        if v >= 0:
-            return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-        return -math.floor(-v * 1000000.0 + 0.5) / 1000000.0
-
-    def kernel(batches):
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True)
-        rows = rows.sort_values("t")
-        ys = rows["y"].tolist()
-        n = len(ys)
-        level = ys[0]
-        pvar = _KF_R
-        sse = 0.0
-        gain = 0.0
-        for y in ys[1:]:
-            pp = pvar + _KF_Q
-            gain = pp / (pp + _KF_R)
-            sse = q6(sse + (y - level) * (y - level))
-            level = q6(level + gain * (y - level))
-            pvar = q6((1.0 - gain) * pp)
-        yield pd.DataFrame(
-            {
-                "n_days": pd.Series([n], dtype="int64"),
-                "level": [level],
-                "p_var": [pvar],
-                "k_gain": [q6((pvar + _KF_Q) / (pvar + _KF_Q + _KF_R))],
-                # floor-based 4-dp half-up — Python round() is
-                # banker's; DuckDB round() is half-away (wave-9 lore)
-                "innov_rmse": [
-                    __import__("math").floor(
-                        ((sse / (n - 1.0)) ** 0.5 + 1e-9) * 10000.0 + 0.5
-                    )
-                    / 10000.0
-                ],
-            }
-        )
-
-    schema = (
-        "n_days long, level double, p_var double, k_gain double,"
-        " innov_rmse double"
-    )
-    return d.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
-# ---------------------------------------------------------------------------
-# Doubly-robust causal estimation
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "causal_aipw_ate",
-    oracle="""
-    WITH base AS (
-      SELECT c.c_mktsegment AS x,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1.0
-                  ELSE 0.0 END AS t,
-             o.o_totalprice AS y
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
-    mod AS (
-      SELECT x,
-             avg(t) AS e,
-             sum(t * y) / nullif(sum(t), 0) AS m1,
-             sum((1.0 - t) * y) / nullif(sum(1.0 - t), 0) AS m0
-      FROM base GROUP BY x),
-    infl AS (
-      SELECT b.t, b.y, m.e, m.m1, m.m0,
-             m.m1 - m.m0
-               + b.t * (b.y - m.m1) / m.e
-               - (1.0 - b.t) * (b.y - m.m0) / (1.0 - m.e) AS psi
-      FROM base b JOIN mod m ON m.x = b.x),
-    naive AS (
-      SELECT sum(t * y) / sum(t) - sum((1.0 - t) * y) / sum(1.0 - t)
-               AS ate FROM base)
-    SELECT CAST(count(*) AS BIGINT) AS n_orders,
-           round(avg(infl.psi) + 1e-9, 4) AS ate_aipw,
-           round(stddev_samp(infl.psi) / sqrt(count(*)) + 1e-9, 4)
-             AS se_aipw,
-           round(max(naive.ate) + 1e-9, 4) AS ate_naive
-    FROM infl CROSS JOIN naive
-    """,
-)
-def causal_aipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doubly-robust AIPW estimate of the 'effect' of URGENT priority
-    on order value, adjusting for market segment: psi_i = m1(x) -
-    m0(x) + t(y - m1)/e(x) - (1-t)(y - m0)/(1-e(x)), ATE = mean(psi),
-    with the influence-function standard error mean +/- sd/sqrt(n).
-    With a discrete covariate both nuisance models (propensity e(x),
-    outcome means m1/m0) are exact group frequencies, so the estimator
-    is consistent if EITHER is right — the doubly-robust upgrade of
-    ``iptw_ate_urgent_revenue`` (weighting only), and the influence
-    function gives the SE the IPTW point estimate lacks.
-
-    Scale shape: one groupBy(segment) nuisance aggregate (bounded,
-    broadcast back), one map-side influence-function pass, one scalar
-    aggregate. Two fact scans total, no data-sized state."""
-    t = Tables(spark, sf_dir)
-    base = t.orders.join(
-        t.customer, F.col("o_custkey") == F.col("c_custkey")
-    ).select(
-        F.col("c_mktsegment").alias("x"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
-        .otherwise(0.0)
-        .alias("t"),
-        F.col("o_totalprice").alias("y"),
-    )
-    mod = base.groupBy("x").agg(
-        F.avg("t").alias("e"),
-        (
-            F.sum(F.col("t") * F.col("y"))
-            / F.nullif(F.sum("t"), F.lit(0))
-        ).alias("m1"),
-        (
-            F.sum((1.0 - F.col("t")) * F.col("y"))
-            / F.nullif(F.sum(1.0 - F.col("t")), F.lit(0))
-        ).alias("m0"),
-    )
-    infl = base.join(F.broadcast(mod), "x").select(
-        (
-            F.col("m1")
-            - F.col("m0")
-            + F.col("t") * (F.col("y") - F.col("m1")) / F.col("e")
-            - (1.0 - F.col("t"))
-            * (F.col("y") - F.col("m0"))
-            / (1.0 - F.col("e"))
-        ).alias("psi")
-    )
-    naive = base.agg(
-        (
-            F.sum(F.col("t") * F.col("y")) / F.sum("t")
-            - F.sum((1.0 - F.col("t")) * F.col("y"))
-            / F.sum(1.0 - F.col("t"))
-        ).alias("ate")
-    )
-    return infl.crossJoin(F.broadcast(naive)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.round(F.avg("psi") + 1e-9, 4).alias("ate_aipw"),
-        F.round(
-            F.stddev_samp("psi") / F.sqrt(F.count(F.lit(1))) + 1e-9, 4
-        ).alias("se_aipw"),
-        F.round(F.max("ate") + 1e-9, 4).alias("ate_naive"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1207,889 +612,6 @@ def knn_distance_outliers_embeddings(
     )
 
 
-# ---------------------------------------------------------------------------
-# Corpus language-model scoring: stupid-backoff trigrams
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "stupid_backoff_trigram_score",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, source, u.u.pos AS pos, u.u.w AS w
-      FROM (
-        SELECT doc_id, source,
-               string_split(trim(regexp_replace(lower(text), '\\s+', ' ',
-                            'g')), ' ') AS ws
-        FROM documents) d,
-      unnest(list_transform(d.ws,
-             (x, i) -> struct_pack(w := x, pos := i))) AS u(u)),
-    seq AS (
-      SELECT doc_id, source, pos, w,
-             lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w1,
-             lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-      FROM toks),
-    train AS (SELECT * FROM seq WHERE doc_id % 5 <> 0),
-    test AS (
-      SELECT * FROM seq WHERE doc_id % 5 = 0 AND w2 IS NOT NULL),
-    uni AS (SELECT w, count(*) AS c FROM train GROUP BY w),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM train),
-    bi AS (
-      SELECT w1, w, count(*) AS c FROM train WHERE w1 IS NOT NULL
-      GROUP BY w1, w),
-    tri AS (
-      SELECT w2, w1, w, count(*) AS c FROM train WHERE w2 IS NOT NULL
-      GROUP BY w2, w1, w),
-    bctx AS (SELECT w1, w, count(*) AS cc FROM train
-             WHERE w1 IS NOT NULL GROUP BY w1, w),
-    scored AS (
-      SELECT test.source,
-             CASE
-               WHEN tri.c IS NOT NULL THEN 0
-               WHEN bi.c IS NOT NULL THEN 1
-               ELSE 2 END AS lvl,
-             CASE
-               WHEN tri.c IS NOT NULL
-                 THEN ln(tri.c * 1.0 / bc.cc) / ln(10.0)
-               WHEN bi.c IS NOT NULL
-                 THEN ln(0.4 * bi.c / uc.c) / ln(10.0)
-               ELSE ln(0.16 * coalesce(u0.c, 0.5) / n.n) / ln(10.0)
-             END AS s
-      FROM test
-      LEFT JOIN tri ON tri.w2 = test.w2 AND tri.w1 = test.w1
-                   AND tri.w = test.w
-      LEFT JOIN bctx bc ON bc.w1 = test.w2 AND bc.w = test.w1
-      LEFT JOIN bi ON bi.w1 = test.w1 AND bi.w = test.w
-      LEFT JOIN uni uc ON uc.w = test.w1
-      LEFT JOIN uni u0 ON u0.w = test.w
-      CROSS JOIN n)
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_positions,
-           round(avg(CASE WHEN lvl = 0 THEN 1.0 ELSE 0 END) + 1e-9, 6)
-             AS share_trigram,
-           round(avg(CASE WHEN lvl = 1 THEN 1.0 ELSE 0 END) + 1e-9, 6)
-             AS share_bigram,
-           round(avg(CASE WHEN lvl = 2 THEN 1.0 ELSE 0 END) + 1e-9, 6)
-             AS share_unigram,
-           round(avg(s) + 1e-9, 6) AS avg_log10_score
-    FROM scored GROUP BY source ORDER BY source
-    """,
-)
-def stupid_backoff_trigram_score(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Stupid-backoff trigram language-model scoring of held-out text:
-    the LM trains on the doc_id %% 5 != 0 split (trigram, bigram,
-    unigram count tables), and every full-context position of the
-    held-out docs scores S(w|w2 w1) = c3/c2ctx, else 0.4·c2/c1ctx,
-    else 0.4²·c1/N (unseen words get count 0.5). Per source: the
-    backoff-level mix and the mean log10 score — the cheap
-    LM-quality filter (Brants et al.'s stupid backoff) that ranks
-    sources by fluency without smoothing machinery, complementing
-    the registered unigram/bigram surprisal filters with a deeper
-    context and an explicit train/held-out split (scoring a corpus
-    with its own counts makes every trigram seen — the split is what
-    makes backoff real).
-
-    Scale shape: lag windows are doc-bounded; all count tables are
-    vocabulary-keyed aggregates; scoring is a chain of LEFT equi-joins
-    on token keys — no data-sized state beyond the shuffles Catalyst
-    already partial-aggregates."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select(
-        "doc_id",
-        "source",
-        F.posexplode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            )
-        ).alias("pos", "w"),
-    )
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    seq = toks.select(
-        "doc_id",
-        "source",
-        "pos",
-        "w",
-        F.lag("w", 1).over(wdoc).alias("w1"),
-        F.lag("w", 2).over(wdoc).alias("w2"),
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    train = seq.filter(F.col("doc_id") % 5 != 0)
-    test = seq.filter(
-        (F.col("doc_id") % 5 == 0) & F.col("w2").isNotNull()
-    )
-    uni = train.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    n = train.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    bi = (
-        train.filter(F.col("w1").isNotNull())
-        .groupBy("w1", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tri = (
-        train.filter(F.col("w2").isNotNull())
-        .groupBy("w2", "w1", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    t3 = tri.select(
-        F.col("w2").alias("t_w2"),
-        F.col("w1").alias("t_w1"),
-        F.col("w").alias("t_w"),
-        F.col("c").alias("c3"),
-    )
-    bc = bi.select(
-        F.col("w1").alias("bc_w1"),
-        F.col("w").alias("bc_w"),
-        F.col("c").alias("c2ctx"),
-    )
-    b2 = bi.select(
-        F.col("w1").alias("b_w1"),
-        F.col("w").alias("b_w"),
-        F.col("c").alias("c2"),
-    )
-    u1 = uni.select(F.col("w").alias("u_w"), F.col("c").alias("c1ctx"))
-    u0 = uni.select(F.col("w").alias("u0_w"), F.col("c").alias("c1"))
-    scored = (
-        test.join(
-            t3,
-            (F.col("w2") == F.col("t_w2"))
-            & (F.col("w1") == F.col("t_w1"))
-            & (F.col("w") == F.col("t_w")),
-            "left",
-        )
-        .join(
-            bc,
-            (F.col("w2") == F.col("bc_w1")) & (F.col("w1") == F.col("bc_w")),
-            "left",
-        )
-        .join(
-            b2,
-            (F.col("w1") == F.col("b_w1")) & (F.col("w") == F.col("b_w")),
-            "left",
-        )
-        .join(u1, F.col("w1") == F.col("u_w"), "left")
-        .join(u0, F.col("w") == F.col("u0_w"), "left")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "source",
-            F.when(F.col("c3").isNotNull(), 0)
-            .when(F.col("c2").isNotNull(), 1)
-            .otherwise(2)
-            .alias("lvl"),
-            F.when(
-                F.col("c3").isNotNull(),
-                F.log(F.col("c3") / F.col("c2ctx")) / F.log(F.lit(10.0)),
-            )
-            .when(
-                F.col("c2").isNotNull(),
-                F.log(0.4 * F.col("c2") / F.col("c1ctx"))
-                / F.log(F.lit(10.0)),
-            )
-            .otherwise(
-                F.log(
-                    0.16
-                    * F.coalesce(F.col("c1"), F.lit(0.5))
-                    / F.col("n")
-                )
-                / F.log(F.lit(10.0))
-            )
-            .alias("s"),
-        )
-    )
-    return (
-        scored.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_positions"),
-            F.round(
-                F.avg(F.when(F.col("lvl") == 0, 1.0).otherwise(0.0)) + 1e-9,
-                6,
-            ).alias("share_trigram"),
-            F.round(
-                F.avg(F.when(F.col("lvl") == 1, 1.0).otherwise(0.0)) + 1e-9,
-                6,
-            ).alias("share_bigram"),
-            F.round(
-                F.avg(F.when(F.col("lvl") == 2, 1.0).otherwise(0.0)) + 1e-9,
-                6,
-            ).alias("share_unigram"),
-            F.round(F.avg("s") + 1e-9, 6).alias("avg_log10_score"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# TextRank keywords: PageRank over the token co-occurrence graph
-# ---------------------------------------------------------------------------
-
-from ror_etl_spark.queries.staged_r13 import _RAKE_STOPS  # noqa: E402
-
-_TR_ITERS = 4
-_TR_DAMP = 0.85
-_TR_ROUND = 8
-
-
-def _textrank_oracle() -> str:
-    stops = ", ".join(f"'{w}'" for w in _RAKE_STOPS)
-    ctes = [
-        f"""toks AS (
-      SELECT d.doc_id, u.u.pos AS pos, u.u.w AS tok
-      FROM (SELECT doc_id, string_split(text, ' ') AS ws
-            FROM documents WHERE lang = 'en') d,
-      unnest(list_transform(d.ws,
-             (x, i) -> struct_pack(w := x, pos := i))) AS u(u))""",
-        """adj AS (
-      SELECT lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS p,
-             tok AS c
-      FROM toks)""",
-        f"""edge AS (
-      SELECT least(p, c) AS u, greatest(p, c) AS v, count(*) AS w
-      FROM adj
-      WHERE p IS NOT NULL AND p <> c
-        AND p NOT IN ({stops}) AND c NOT IN ({stops})
-      GROUP BY least(p, c), greatest(p, c))""",
-        """dir AS (
-      SELECT u, v, w FROM edge
-      UNION ALL SELECT v AS u, u AS v, w FROM edge)""",
-        """deg AS (SELECT u AS n, CAST(sum(w) AS DOUBLE) AS wo
-      FROM dir GROUP BY u)""",
-        """nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM deg)""",
-        """r0 AS (SELECT deg.n AS id, 1.0 / nn.n AS r
-      FROM deg CROSS JOIN nn)""",
-    ]
-    for k in range(_TR_ITERS):
-        ctes.append(
-            f"""f{k} AS (
-      SELECT dir.v AS id, sum(r{k}.r * dir.w / deg.wo) AS fin
-      FROM dir JOIN r{k} ON r{k}.id = dir.u JOIN deg ON deg.n = dir.u
-      GROUP BY dir.v)"""
-        )
-        ctes.append(
-            f"""r{k + 1} AS (
-      SELECT deg.n AS id,
-             round((1.0 - {_TR_DAMP}) / nn.n
-                   + {_TR_DAMP} * coalesce(f{k}.fin, 0.0)
-                   + 1e-12, {_TR_ROUND}) AS r
-      FROM deg CROSS JOIN nn LEFT JOIN f{k} ON f{k}.id = deg.n)"""
-        )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT id AS tok, round(r + 1e-9, 6) AS textrank
-    FROM r{_TR_ITERS}
-    ORDER BY round(r + 1e-9, 6) DESC, id LIMIT 15
-    """
-
-
-@staged("textrank_keywords", oracle=_textrank_oracle())
-def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank keywords over the English slice: nodes = non-stopword
-    tokens, undirected edges = adjacent-token co-occurrences (weight =
-    corpus count), ranked by 4 quantized rounds of damped weighted
-    PageRank r <- (1-d)/N + d·sum w(u,v)/W_u·r_u, d = 0.85. The
-    graph-centrality keyword extractor (Mihalcea & Tarau) that
-    complements ``text_rake_keyphrases`` (degree/frequency scoring,
-    phrase-level) and TF-IDF (document-frequency weighting) — a token
-    bridging many contexts outranks a merely frequent one. Stopword
-    list shared with RAKE; per-round scores quantized to 8 dp so the
-    DuckDB oracle replays the trajectory (the PPR discipline);
-    round-before-rank top-15 with token tiebreak.
-
-    Scale shape: edge derivation is one doc-bounded lag window + a
-    vocabulary-pair-keyed aggregate; each PR round is one shuffle of
-    the vocabulary-sized rank frame against the edge list. Nothing is
-    data-sized after the first aggregate."""
-    d = Tables(spark, sf_dir).documents.filter(F.col("lang") == "en")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    adj = toks.select(
-        F.lag("tok").over(wdoc).alias("p"), F.col("tok").alias("c")
-    )
-    stops = F.array(*[F.lit(w) for w in _RAKE_STOPS])
-    edge = (
-        adj.filter(
-            F.col("p").isNotNull()
-            & (F.col("p") != F.col("c"))
-            & ~F.array_contains(stops, F.col("p"))
-            & ~F.array_contains(stops, F.col("c"))
-        )
-        .groupBy(
-            F.least("p", "c").alias("u"), F.greatest("p", "c").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    direct = (
-        edge.select("u", "v", "w")
-        .unionAll(
-            edge.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
-            )
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    deg = (
-        direct.groupBy(F.col("u").alias("node"))
-        .agg(F.sum("w").cast("double").alias("wo"))
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    nn = deg.agg(F.count(F.lit(1)).cast("double").alias("cnt"))
-    r = deg.crossJoin(F.broadcast(nn)).select(
-        F.col("node").alias("id"), (F.lit(1.0) / F.col("cnt")).alias("r")
-    )
-    for _ in range(_TR_ITERS):
-        flow = (
-            direct.join(r.withColumnRenamed("id", "u"), "u")
-            .join(deg.withColumnRenamed("node", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(
-                F.sum(F.col("r") * F.col("w") / F.col("wo")).alias("fin")
-            )
-        )
-        r = (
-            deg.crossJoin(F.broadcast(nn))
-            .join(flow, deg["node"] == flow["id"], "left")
-            .select(
-                deg["node"].alias("id"),
-                F.round(
-                    (1.0 - _TR_DAMP) / F.col("cnt")
-                    + _TR_DAMP * F.coalesce(F.col("fin"), F.lit(0.0))
-                    + 1e-12,
-                    _TR_ROUND,
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-    return (
-        r.select(
-            F.col("id").alias("tok"),
-            F.round(F.col("r") + 1e-9, 6).alias("textrank"),
-        )
-        .orderBy(F.desc("textrank"), F.asc("tok"))
-        .limit(15)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Linear CKA between embedding halves
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "embedding_cka_halves",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cell AS (
-      SELECT i.i AS i, j.j AS j,
-             sum(e.v[i.i] * e.v[j.j]) AS s
-      FROM e,
-           (SELECT unnest(range(1, 65)) AS i) i,
-           (SELECT unnest(range(1, 65)) AS j) j
-      GROUP BY i.i, j.j),
-    mu AS (
-      SELECT i.i AS i, avg(e.v[i.i]) AS m
-      FROM e, (SELECT unnest(range(1, 65)) AS i) i
-      GROUP BY i.i),
-    nv AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
-    cov AS (
-      SELECT cell.i, cell.j,
-             cell.s / nv.n - mi.m * mj.m AS c
-      FROM cell
-      JOIN mu mi ON mi.i = cell.i
-      JOIN mu mj ON mj.i = cell.j
-      CROSS JOIN nv),
-    fro AS (
-      SELECT sum(CASE WHEN i <= 32 AND j > 32 THEN c * c ELSE 0 END)
-               AS fxy,
-             sum(CASE WHEN i <= 32 AND j <= 32 THEN c * c ELSE 0 END)
-               AS fxx,
-             sum(CASE WHEN i > 32 AND j > 32 THEN c * c ELSE 0 END)
-               AS fyy
-      FROM cov)
-    SELECT CAST(nv.n AS BIGINT) AS n_vectors,
-           round(fro.fxy + 1e-9, 6) AS fro_xy_sq,
-           round(sqrt(fro.fxx) + 1e-9, 6) AS fro_xx,
-           round(sqrt(fro.fyy) + 1e-9, 6) AS fro_yy,
-           round(fro.fxy / (sqrt(fro.fxx) * sqrt(fro.fyy)) + 1e-9, 6)
-             AS cka_linear
-    FROM fro CROSS JOIN nv
-    """,
-)
-def embedding_cka_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear Centered Kernel Alignment between the first and last 32
-    dimensions of the embedding: CKA = ||Cxy||_F^2 / (||Cxx||_F
-    ||Cyy||_F) over the centered cross-covariance blocks of the full
-    64x64 second-moment grid. The representation-similarity metric
-    (Kornblith et al.) answering 'do the two halves encode the same
-    geometry' — near 1 means half the dimensions are redundant (prune
-    before the ANN index), near 0 means they carry complementary
-    structure. Complements ``embedding_participation_ratio`` (how many
-    effective dims) with WHERE the information lives.
-
-    Scale shape: ONE map-side outer-product pass builds the 64x64
-    sufficient-statistics grid (4096 cells + 64 means — partial-agg
-    friendly, constant-size state); everything downstream is algebra
-    on the bounded grid. The feature-space formulation — never the
-    n x n Gram matrix, which is what makes CKA computable at 100 TB."""
-    emb = Tables(spark, sf_dir).embeddings
-    # outer product via per-vector self-join on the exploded frame;
-    # dims are 1-based to match the oracle's list indexing
-    ev = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform("embedding", lambda x: x.cast("double"))
-        ).alias("i0", "x"),
-    ).select("vec_id", (F.col("i0") + 1).alias("i"), "x")
-    ca = ev.select("vec_id", F.col("i").alias("i"), F.col("x").alias("xi"))
-    cb = ev.select(
-        F.col("vec_id").alias("vid2"),
-        F.col("i").alias("j"),
-        F.col("x").alias("xj"),
-    )
-    cell = (
-        ca.join(cb, ca["vec_id"] == cb["vid2"])
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("xi") * F.col("xj")).alias("s"))
-    )
-    mu = ev.groupBy("i").agg(F.avg("x").alias("m"))
-    nv = emb.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    mi = mu.select(F.col("i").alias("mi_i"), F.col("m").alias("m_i"))
-    mj = mu.select(F.col("i").alias("mj_j"), F.col("m").alias("m_j"))
-    cov = (
-        cell.join(F.broadcast(mi), F.col("i") == F.col("mi_i"))
-        .join(F.broadcast(mj), F.col("j") == F.col("mj_j"))
-        .crossJoin(F.broadcast(nv))
-        .select(
-            "i",
-            "j",
-            (F.col("s") / F.col("n") - F.col("m_i") * F.col("m_j")).alias(
-                "c"
-            ),
-        )
-    )
-    fro = cov.agg(
-        F.sum(
-            F.when(
-                (F.col("i") <= 32) & (F.col("j") > 32),
-                F.col("c") * F.col("c"),
-            ).otherwise(0.0)
-        ).alias("fxy"),
-        F.sum(
-            F.when(
-                (F.col("i") <= 32) & (F.col("j") <= 32),
-                F.col("c") * F.col("c"),
-            ).otherwise(0.0)
-        ).alias("fxx"),
-        F.sum(
-            F.when(
-                (F.col("i") > 32) & (F.col("j") > 32),
-                F.col("c") * F.col("c"),
-            ).otherwise(0.0)
-        ).alias("fyy"),
-    )
-    return fro.crossJoin(F.broadcast(nv)).select(
-        F.col("n").cast("long").alias("n_vectors"),
-        F.round(F.col("fxy") + 1e-9, 6).alias("fro_xy_sq"),
-        F.round(F.sqrt(F.col("fxx")) + 1e-9, 6).alias("fro_xx"),
-        F.round(F.sqrt(F.col("fyy")) + 1e-9, 6).alias("fro_yy"),
-        F.round(
-            F.col("fxy")
-            / (F.sqrt(F.col("fxx")) * F.sqrt(F.col("fyy")))
-            + 1e-9,
-            6,
-        ).alias("cka_linear"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Grid-density (DBSCAN-style) clustering on the embedding plane
-# ---------------------------------------------------------------------------
-
-from ror_etl_spark.queries.staged_r12 import (  # noqa: E402
-    _lehmer_u,
-    _lehmer_u_sql,
-)
-
-_GRID = 32
-_DB_ROUNDS = 10
-
-
-def _dbscan_oracle() -> str:
-    ctes = [
-        f"""pts AS (
-      SELECT event_id,
-             ((user_id % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 1")}) - 0.5) * 0.8 AS x,
-             ((user_id % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 2")}) - 0.5) * 0.8 AS y
-      FROM events)""",
-        f"""cellpts AS (
-      SELECT event_id,
-             least(CAST(floor((x + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gx,
-             least(CAST(floor((y + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gy
-      FROM pts)""",
-        """tot AS (SELECT count(*) AS n FROM cellpts)""",
-        """minpts AS (
-      SELECT greatest(5, CAST(ceil(tot.n / 500.0) AS BIGINT)) AS mp
-      FROM tot)""",
-        """cc AS (
-      SELECT gx, gy, count(*) AS c FROM cellpts GROUP BY gx, gy)""",
-        f"""dense AS (
-      SELECT cc.gy * {_GRID} + cc.gx AS cid, cc.gx, cc.gy, cc.c
-      FROM cc CROSS JOIN minpts WHERE cc.c >= minpts.mp)""",
-        """nbr AS (
-      SELECT a.cid AS u, b.cid AS v
-      FROM dense a JOIN dense b
-        ON abs(a.gx - b.gx) <= 1 AND abs(a.gy - b.gy) <= 1)""",
-        """l0 AS (SELECT cid, cid AS lab FROM dense)""",
-    ]
-    for k in range(_DB_ROUNDS):
-        ctes.append(
-            f"""l{k + 1} AS (
-      SELECT nbr.u AS cid, min(l{k}.lab) AS lab
-      FROM nbr JOIN l{k} ON l{k}.cid = nbr.v
-      GROUP BY nbr.u)"""
-        )
-    final = f"l{_DB_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    sizes AS (
-      SELECT {final}.lab, count(*) AS n_cells, sum(dense.c) AS n_points
-      FROM {final} JOIN dense ON dense.cid = {final}.cid
-      GROUP BY {final}.lab),
-    agg AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_clusters,
-             CAST(max(n_cells) AS BIGINT) AS largest_cluster_cells,
-             CAST(max(n_points) AS BIGINT) AS largest_cluster_points
-      FROM sizes),
-    dn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_dense_cells,
-             CAST(sum(c) AS BIGINT) AS n_core_points
-      FROM dense),
-    noise AS (
-      SELECT CAST(tot.n - dn.n_core_points AS BIGINT) AS n_noise_points
-      FROM tot CROSS JOIN dn)
-    SELECT dn.n_dense_cells, agg.n_clusters, agg.largest_cluster_cells,
-           agg.largest_cluster_points, noise.n_noise_points,
-           CAST(minpts.mp AS BIGINT) AS min_pts
-    FROM dn CROSS JOIN agg CROSS JOIN noise CROSS JOIN minpts
-    """
-
-
-@staged("grid_dbscan_user_clusters", oracle=_dbscan_oracle())
-def grid_dbscan_user_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-density clustering (the DBSCAN scale recipe) on a planted
-    2-D plane: each event lands in a deterministic square blob
-    around one of 7 Lehmer-spread centers keyed by its user cohort (the embedding table's
-    cluster structure lives across all 64 dims — no 2-D projection of
-    it is multimodal, so the instance is SYNTHESIZED the way
-    ``bfs_distances_synthetic_10k`` plants its expander). Points land
-    in a 32x32 grid over [-4,4]^2, a cell is DENSE if it holds >=
-    max(5, n/500) points, and clusters are connected components of
-    the 8-neighbor adjacency over dense cells (10 unrolled min-label
-    rounds; the staging test pins that one extra round changes
-    nothing). Points outside dense cells are noise. This is how density clustering actually runs at 100 TB:
-    the data pass is ONE cell-count aggregate; the quadratic
-    neighbor-join runs on the <= 1024-cell dense frame, never on
-    points (the ``geo_knn_cell_blocked`` posture applied to DBSCAN).
-
-    The oracle replays the same 10 rounds, so agreement is exact even
-    before convergence; the convergence pin is what upgrades the
-    labels to true components."""
-    ev = Tables(spark, sf_dir).events.select("event_id", "user_id")
-    cx = ((F.col("user_id") % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-    cy = ((F.col("user_id") % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-    pts = ev.select(
-        "event_id",
-        (cx + (_lehmer_u(F.col("event_id") * 2 + 1) - 0.5) * 0.8).alias("x"),
-        (cy + (_lehmer_u(F.col("event_id") * 2 + 2) - 0.5) * 0.8).alias("y"),
-    )
-    cellpts = pts.select(
-        "event_id",
-        F.least(
-            F.floor((F.col("x") + 4.0) / 8.0 * _GRID).cast("long"),
-            F.lit(_GRID - 1).cast("long"),
-        ).alias("gx"),
-        F.least(
-            F.floor((F.col("y") + 4.0) / 8.0 * _GRID).cast("long"),
-            F.lit(_GRID - 1).cast("long"),
-        ).alias("gy"),
-    )
-    tot = cellpts.agg(F.count(F.lit(1)).alias("n"))
-    minpts = tot.select(
-        F.greatest(
-            F.lit(5).cast("long"),
-            F.ceil(F.col("n") / 500.0).cast("long"),
-        ).alias("mp"),
-        F.col("n"),
-    )
-    cc = cellpts.groupBy("gx", "gy").agg(F.count(F.lit(1)).alias("c"))
-    dense = (
-        cc.crossJoin(F.broadcast(minpts))
-        .filter(F.col("c") >= F.col("mp"))
-        .select(
-            (F.col("gy") * _GRID + F.col("gx")).alias("cid"),
-            "gx",
-            "gy",
-            "c",
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    a = dense.select(
-        F.col("cid").alias("u"), F.col("gx").alias("ax"), F.col("gy").alias("ay")
-    )
-    b = dense.select(
-        F.col("cid").alias("v"), F.col("gx").alias("bx"), F.col("gy").alias("by")
-    )
-    nbr = a.join(
-        b,
-        (F.abs(F.col("ax") - F.col("bx")) <= 1)
-        & (F.abs(F.col("ay") - F.col("by")) <= 1),
-    ).select("u", "v")
-    lab = dense.select("cid", F.col("cid").alias("lab"))
-    for _ in range(_DB_ROUNDS):
-        lab = (
-            nbr.join(lab.withColumnRenamed("cid", "v"), "v")
-            .groupBy(F.col("u").alias("cid"))
-            .agg(F.min("lab").alias("lab"))
-        )
-    sizes = (
-        lab.join(dense.select("cid", "c"), "cid")
-        .groupBy("lab")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("c").alias("n_points"),
-        )
-    )
-    agg = sizes.agg(
-        F.count(F.lit(1)).cast("long").alias("n_clusters"),
-        F.max("n_cells").cast("long").alias("largest_cluster_cells"),
-        F.max("n_points").cast("long").alias("largest_cluster_points"),
-    )
-    dn = dense.agg(
-        F.count(F.lit(1)).cast("long").alias("n_dense_cells"),
-        F.sum("c").alias("n_core"),
-    )
-    return (
-        dn.crossJoin(F.broadcast(agg))
-        .crossJoin(F.broadcast(minpts))
-        .select(
-            "n_dense_cells",
-            "n_clusters",
-            "largest_cluster_cells",
-            "largest_cluster_points",
-            (F.col("n") - F.col("n_core")).cast("long").alias(
-                "n_noise_points"
-            ),
-            F.col("mp").cast("long").alias("min_pts"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 2: Cox proportional hazards, isotonic regression, DTW
-# ---------------------------------------------------------------------------
-
-_COX_ROUNDS = 3
-_COX_Q = 8
-
-_COX_BASE_SQL = """per_user AS (
-      SELECT user_id,
-             min(ts) AS t0,
-             max(ts) AS tmax,
-             min(CASE WHEN event_type = 'purchase' THEN ts END) AS tp
-      FROM events GROUP BY user_id),
-    dur AS (
-      SELECT user_id,
-             (epoch_us(coalesce(tp, tmax)) - epoch_us(t0)) // 3600000000
-               AS d_h,
-             CASE WHEN tp IS NOT NULL THEN 1 ELSE 0 END AS observed,
-             CAST(user_id % 2 AS DOUBLE) AS x
-      FROM per_user),
-    bt AS (
-      SELECT d_h,
-             CAST(sum(x) AS DOUBLE) AS c1,
-             CAST(count(*) - sum(x) AS DOUBLE) AS c0,
-             CAST(sum(observed) AS DOUBLE) AS d,
-             CAST(sum(observed * x) AS DOUBLE) AS sx
-      FROM dur GROUP BY d_h),
-    tots AS (SELECT sum(c1) AS t1, sum(c0) AS t0 FROM bt),
-    risk AS (
-      SELECT bt.d_h, bt.d, bt.sx,
-             tots.t1 - coalesce(sum(bt.c1) OVER (ORDER BY bt.d_h
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS r1,
-             tots.t0 - coalesce(sum(bt.c0) OVER (ORDER BY bt.d_h
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS r0
-      FROM bt, tots),
-    ev AS (SELECT * FROM risk WHERE d > 0)"""
-
-
-def _cox_oracle() -> str:
-    ctes = [_COX_BASE_SQL, "b0 AS (SELECT 0.0 AS b)"]
-    for k in range(_COX_ROUNDS):
-        ctes.append(
-            f"""s{k} AS (
-      SELECT sum(ev.sx - ev.d * (exp(b{k}.b) * ev.r1)
-                 / (ev.r0 + exp(b{k}.b) * ev.r1)) AS u,
-             sum(ev.d * ((exp(b{k}.b) * ev.r1)
-                         / (ev.r0 + exp(b{k}.b) * ev.r1))
-                      * (1.0 - (exp(b{k}.b) * ev.r1)
-                         / (ev.r0 + exp(b{k}.b) * ev.r1))) AS i
-      FROM ev CROSS JOIN b{k})"""
-        )
-        ctes.append(
-            f"""b{k + 1} AS (
-      SELECT round(b{k}.b + s{k}.u / s{k}.i + 1e-12, {_COX_Q}) AS b
-      FROM b{k} CROSS JOIN s{k})"""
-        )
-    fb = f"b{_COX_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    fin AS (
-      SELECT sum(ev.sx - ev.d * (exp({fb}.b) * ev.r1)
-                 / (ev.r0 + exp({fb}.b) * ev.r1)) AS u,
-             sum(ev.d * ((exp({fb}.b) * ev.r1)
-                         / (ev.r0 + exp({fb}.b) * ev.r1))
-                      * (1.0 - (exp({fb}.b) * ev.r1)
-                         / (ev.r0 + exp({fb}.b) * ev.r1))) AS i
-      FROM ev CROSS JOIN {fb}),
-    nn AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(observed) AS BIGINT) AS n_events
-      FROM dur)
-    SELECT nn.n_users, nn.n_events,
-           round({fb}.b + 1e-9, 6) AS beta,
-           round(exp({fb}.b) + 1e-9, 6) AS hazard_ratio,
-           round(1.0 / sqrt(fin.i) + 1e-9, 6) AS se_beta,
-           round(abs(fin.u) + 1e-9, 4) AS score_residual
-    FROM nn CROSS JOIN {fb} CROSS JOIN fin
-    """
-
-
-@staged("cox_ph_time_to_purchase", oracle=_cox_oracle())
-def cox_ph_time_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cox proportional-hazards fit of time-to-first-purchase on a
-    binary user cohort (x = user_id %% 2): Breslow partial likelihood
-    with tied events, 3 Newton rounds beta <- beta + U/I from 0, each
-    quantized to 8 dp (the IRLS/PPR trajectory rule). For binary x the
-    risk-set sums collapse to S0 = r0 + e^b r1, S1 = e^b r1, so U and
-    I are ONE aggregate per round over the event-time frame. Completes
-    the survival family — ``kaplan_meier_time_to_purchase`` (marginal
-    curve, same duration model), ``logrank_*`` (two-sample test),
-    ``aalen_johansen_cif`` (competing risks) — with the REGRESSION
-    member: a hazard ratio with a standard error, plus the |U| score
-    residual as the convergence witness.
-
-    Scale shape: one data-sized per-user rollup; the event-time frame
-    is bounded by the integer-hour domain (~720 rows — the calendar,
-    not the data), so its suffix-sum windows and per-round aggregates
-    are domain-bounded."""
-    e = Tables(spark, sf_dir).events
-    per_user = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("tmax"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-    )
-    # timestamp_diff(MICROSECOND) works on NTZ (unix_micros rejects
-    # it); `div` keeps the exact integer floor (the registered KM
-    # duration idiom, staged_r10.py)
-    dur = (
-        per_user.select(
-            "user_id",
-            F.timestamp_diff(
-                "MICROSECOND", F.col("t0"), F.coalesce("tp", "tmax")
-            ).alias("d_us"),
-            F.when(F.col("tp").isNotNull(), 1)
-            .otherwise(0)
-            .alias("observed"),
-            (F.col("user_id") % 2).cast("double").alias("x"),
-        )
-        .select(
-            F.expr("d_us div 3600000000").alias("d_h"),
-            "observed",
-            "x",
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    bt = dur.groupBy("d_h").agg(
-        F.sum("x").alias("c1"),
-        (F.count(F.lit(1)) - F.sum("x")).cast("double").alias("c0"),
-        F.sum("observed").cast("double").alias("d"),
-        F.sum(F.col("observed") * F.col("x")).alias("sx"),
-    )
-    tots = bt.agg(F.sum("c1").alias("t1"), F.sum("c0").alias("t0c"))
-    # bounded-domain window (integer-hour event times, <= ~720 rows at
-    # any SF) — the documented exception to the global_cumsum rule
-    wpre = Window.orderBy("d_h").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    risk = (
-        bt.crossJoin(F.broadcast(tots))
-        .select(
-            "d_h",
-            "d",
-            "sx",
-            (
-                F.col("t1")
-                - F.coalesce(F.sum("c1").over(wpre), F.lit(0.0))
-            ).alias("r1"),
-            (
-                F.col("t0c")
-                - F.coalesce(F.sum("c0").over(wpre), F.lit(0.0))
-            ).alias("r0"),
-        )
-        .filter(F.col("d") > 0)
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    beta = dur.sparkSession.range(1).select(F.lit(0.0).alias("b"))
-    frac = lambda b: (  # noqa: E731
-        F.exp(b) * F.col("r1") / (F.col("r0") + F.exp(b) * F.col("r1"))
-    )
-    for _ in range(_COX_ROUNDS):
-        s = risk.crossJoin(F.broadcast(beta)).agg(
-            F.sum(F.col("sx") - F.col("d") * frac(F.col("b"))).alias("u"),
-            F.sum(
-                F.col("d") * frac(F.col("b")) * (1.0 - frac(F.col("b")))
-            ).alias("i"),
-        )
-        beta = beta.crossJoin(F.broadcast(s)).select(
-            F.round(
-                F.col("b") + F.col("u") / F.col("i") + 1e-12, _COX_Q
-            ).alias("b")
-        )
-    fin = risk.crossJoin(F.broadcast(beta)).agg(
-        F.sum(F.col("sx") - F.col("d") * frac(F.col("b"))).alias("u"),
-        F.sum(
-            F.col("d") * frac(F.col("b")) * (1.0 - frac(F.col("b")))
-        ).alias("i"),
-    )
-    nn = dur.agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("observed").cast("long").alias("n_events"),
-    )
-    return (
-        nn.crossJoin(F.broadcast(beta))
-        .crossJoin(F.broadcast(fin))
-        .select(
-            "n_users",
-            "n_events",
-            F.round(F.col("b") + 1e-9, 6).alias("beta"),
-            F.round(F.exp(F.col("b")) + 1e-9, 6).alias("hazard_ratio"),
-            F.round(1.0 / F.sqrt(F.col("i")) + 1e-9, 6).alias("se_beta"),
-            F.round(F.abs(F.col("u")) + 1e-9, 4).alias("score_residual"),
-        )
-    )
-
-
 @staged(
     "isotonic_purchase_rate_by_hour",
     oracle="""
@@ -2181,720 +703,9 @@ def isotonic_purchase_rate_by_hour(
     )
 
 
-def _dtw_oracle() -> str:
-    # weekday/weekend split: DuckDB dayofweek is Sun=0..Sat=6 (Spark is
-    # Sun=1..Sat=7 — verified live; the split must match, the label
-    # convention does not matter elsewhere)
-    ctes = [
-        """hours AS (SELECT unnest(range(0, 24)) AS h)""",
-        """raw AS (
-      SELECT CAST(date_part('hour', ts) AS BIGINT) AS h,
-             CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END AS we,
-             round(avg(value) + 1e-9, 6) AS v
-      FROM events GROUP BY 1, 2)""",
-        """prof AS (
-      SELECT hours.h,
-             coalesce(max(CASE WHEN raw.we = 0 THEN raw.v END), 0.0) AS a,
-             coalesce(max(CASE WHEN raw.we = 1 THEN raw.v END), 0.0) AS b
-      FROM hours LEFT JOIN raw ON raw.h = hours.h
-      GROUP BY hours.h)""",
-        """cost AS MATERIALIZED (
-      SELECT pa.h AS i, pb.h AS j, abs(pa.a - pb.b) AS c
-      FROM prof pa CROSS JOIN prof pb)""",
-        """dg0 AS MATERIALIZED (SELECT 0 AS i, 0 AS j, c AS d FROM cost
-      WHERE i = 0 AND j = 0)""",
-    ]
-    for k in range(1, 47):
-        p2join = (
-            f"LEFT JOIN dg{k - 2} p2 ON p2.i = cost.i - 1"
-            " AND p2.j = cost.j - 1"
-            if k >= 2
-            else ""
-        )
-        p2term = "coalesce(p2.d, 1e18)" if k >= 2 else "1e18"
-        # AS MATERIALIZED: each diagonal is referenced up to 3 times
-        # downstream — default inlining re-expands the whole DP chain
-        # exponentially (the r11 link-prediction CTE lesson; surfaced
-        # here as a too-many-open-files parquet re-scan storm)
-        ctes.append(
-            f"""dg{k} AS MATERIALIZED (
-      SELECT cost.i, cost.j,
-             cost.c + least(coalesce(p1a.d, 1e18),
-                            coalesce(p1b.d, 1e18),
-                            {p2term}) AS d
-      FROM cost
-      LEFT JOIN dg{k - 1} p1a ON p1a.i = cost.i - 1 AND p1a.j = cost.j
-      LEFT JOIN dg{k - 1} p1b ON p1b.i = cost.i AND p1b.j = cost.j - 1
-      {p2join}
-      WHERE cost.i + cost.j = {k})"""
-        )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    l1 AS (SELECT sum(abs(a - b)) AS l1d FROM prof)
-    SELECT CAST(24 AS BIGINT) AS n_hours,
-           round(dg46.d + 1e-9, 4) AS dtw_distance,
-           round(l1.l1d + 1e-9, 4) AS l1_diagonal,
-           round(dg46.d / l1.l1d + 1e-9, 6) AS warp_gain
-    FROM dg46 CROSS JOIN l1
-    """
-
-
-@staged("dtw_weekday_weekend_profiles", oracle=_dtw_oracle())
-def dtw_weekday_weekend_profiles(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dynamic-time-warping distance between the weekday and weekend
-    hourly value profiles: D(i,j) = |a_i - b_j| + min(D(i-1,j),
-    D(i,j-1), D(i-1,j-1)) over the 24x24 grid, reported next to the
-    no-warp L1 diagonal (warp_gain < 1 means the weekend curve is a
-    time-SHIFTED weekday curve, not a different one — the question
-    Euclidean metrics can't answer). The profiles are quantized to
-    6 dp at BUILD time; the DP itself is exact (identical doubles
-    through add/min on both engines), so no per-cell quantization is
-    needed. Empty (hour, split) cells default to 0 via an explicit
-    0..23 scaffold.
-
-    Scale shape: one data-sized aggregate to 48 cells; the DP is a
-    bounded 24x24 grid — an Arrow kernel here (the Holt posture), 46
-    unrolled anti-diagonal CTEs in the oracle (each diagonal depends
-    on the previous two only, which is what makes the wavefront
-    SQL-expressible)."""
-    e = Tables(spark, sf_dir).events
-    raw = e.groupBy(
-        F.hour("ts").cast("long").alias("h"),
-        F.when(F.dayofweek("ts").isin(1, 7), 1).otherwise(0).alias("we"),
-    ).agg(F.round(F.avg("value") + 1e-9, 6).alias("v"))
-    hours = e.sparkSession.range(24).select(F.col("id").alias("h"))
-    prof = (
-        hours.join(raw, "h", "left")
-        .groupBy("h")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("we") == 0, F.col("v"))), F.lit(0.0)
-            ).alias("a"),
-            F.coalesce(
-                F.max(F.when(F.col("we") == 1, F.col("v"))), F.lit(0.0)
-            ).alias("b"),
-        )
-    )
-
-    def kernel(batches):
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True).sort_values("h")
-        a = rows["a"].tolist()
-        b = rows["b"].tolist()
-        n = len(a)
-        inf = 1e18
-        d = [[0.0] * n for _ in range(n)]
-        for i in range(n):
-            for j in range(n):
-                c = abs(a[i] - b[j])
-                if i == 0 and j == 0:
-                    d[i][j] = c
-                else:
-                    best = min(
-                        d[i - 1][j] if i > 0 else inf,
-                        d[i][j - 1] if j > 0 else inf,
-                        d[i - 1][j - 1] if i > 0 and j > 0 else inf,
-                    )
-                    d[i][j] = c + best
-        l1 = sum(abs(x - y) for x, y in zip(a, b))
-
-        def r(x, k):
-            import math
-
-            v = x + 1e-9
-            s = 1.0 if v >= 0 else -1.0
-            return s * math.floor(abs(v) * 10.0**k + 0.5) / 10.0**k
-
-        yield pd.DataFrame(
-            {
-                "n_hours": pd.Series([n], dtype="int64"),
-                "dtw_distance": [r(d[n - 1][n - 1], 4)],
-                "l1_diagonal": [r(l1, 4)],
-                "warp_gain": [r(d[n - 1][n - 1] / l1, 6)],
-            }
-        )
-
-    schema = (
-        "n_hours long, dtw_distance double, l1_diagonal double,"
-        " warp_gain double"
-    )
-    return prof.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
 # ---------------------------------------------------------------------------
-# Wave 3: spatial autocorrelation, paired-comparison ranking
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "morans_i_planted_plane",
-    oracle=f"""
-    WITH pts AS (
-      SELECT ((user_id % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 1")}) - 0.5) * 0.8 AS x,
-             ((user_id % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 2")}) - 0.5) * 0.8 AS y
-      FROM events),
-    cnt AS (
-      SELECT least(CAST(floor((x + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gx,
-             least(CAST(floor((y + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gy,
-             count(*) AS c
-      FROM pts GROUP BY 1, 2),
-    grid AS (
-      SELECT gx.i AS gx, gy.i AS gy,
-             CAST(coalesce(cnt.c, 0) AS DOUBLE) AS c
-      FROM (SELECT unnest(range(0, {_GRID})) AS i) gx
-      CROSS JOIN (SELECT unnest(range(0, {_GRID})) AS i) gy
-      LEFT JOIN cnt ON cnt.gx = gx.i AND cnt.gy = gy.i),
-    mu AS (SELECT avg(c) AS m, count(*) AS n FROM grid),
-    z AS (
-      SELECT grid.gx, grid.gy, grid.c - mu.m AS z
-      FROM grid CROSS JOIN mu),
-    cross_t AS (
-      SELECT sum(a.z * b.z) AS num, count(*) AS w
-      FROM z a JOIN z b
-        ON (abs(a.gx - b.gx) + abs(a.gy - b.gy)) = 1),
-    denom AS (SELECT sum(z * z) AS zz FROM z)
-    SELECT CAST(mu.n AS BIGINT) AS n_cells,
-           CAST(cross_t.w AS BIGINT) AS w_pairs,
-           round((mu.n * 1.0 / cross_t.w) * cross_t.num / denom.zz
-                 + 1e-9, 6) AS morans_i,
-           round(-1.0 / (mu.n - 1.0) + 1e-9, 6) AS expected_i
-    FROM mu CROSS JOIN cross_t CROSS JOIN denom
-    """,
-)
-def morans_i_planted_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moran's I spatial autocorrelation of the planted 7-blob plane's
-    cell counts (rook adjacency, binary weights, the FULL 32x32
-    scaffold including empty cells): I = (N/W)·sum_adj z_i z_j /
-    sum z_i^2 vs E[I] = -1/(N-1). Strongly positive I says the point
-    mass clusters spatially — the scalar screen you run BEFORE paying
-    for ``grid_dbscan_user_clusters``' component labeling, on exactly
-    the same cell aggregate (one shared data pass in a real pipeline).
-
-    Scale shape: one data-sized cell count; the adjacency cross term
-    is a self-join of the bounded 1024-cell frame on |dx|+|dy| = 1.
-    Everything after the rollup is grid-sized."""
-    ev = Tables(spark, sf_dir).events.select("event_id", "user_id")
-    cx = ((F.col("user_id") % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-    cy = ((F.col("user_id") % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-    pts = ev.select(
-        (cx + (_lehmer_u(F.col("event_id") * 2 + 1) - 0.5) * 0.8).alias("x"),
-        (cy + (_lehmer_u(F.col("event_id") * 2 + 2) - 0.5) * 0.8).alias("y"),
-    )
-    cnt = pts.groupBy(
-        F.least(
-            F.floor((F.col("x") + 4.0) / 8.0 * _GRID).cast("long"),
-            F.lit(_GRID - 1).cast("long"),
-        ).alias("gx"),
-        F.least(
-            F.floor((F.col("y") + 4.0) / 8.0 * _GRID).cast("long"),
-            F.lit(_GRID - 1).cast("long"),
-        ).alias("gy"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    ss = ev.sparkSession
-    gx = ss.range(_GRID).select(F.col("id").alias("sgx"))
-    gy = ss.range(_GRID).select(F.col("id").alias("sgy"))
-    grid = (
-        gx.crossJoin(gy)
-        .join(
-            cnt,
-            (F.col("sgx") == F.col("gx")) & (F.col("sgy") == F.col("gy")),
-            "left",
-        )
-        .select(
-            F.col("sgx").alias("gx2"),
-            F.col("sgy").alias("gy2"),
-            F.coalesce(F.col("c"), F.lit(0)).cast("double").alias("c"),
-        )
-    )
-    mu = grid.agg(F.avg("c").alias("m"), F.count(F.lit(1)).alias("n"))
-    z = grid.crossJoin(F.broadcast(mu)).select(
-        "gx2", "gy2", (F.col("c") - F.col("m")).alias("z")
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    a = z.select(
-        F.col("gx2").alias("ax"), F.col("gy2").alias("ay"), F.col("z").alias("za")
-    )
-    b = z.select(
-        F.col("gx2").alias("bx"), F.col("gy2").alias("by"), F.col("z").alias("zb")
-    )
-    cross_t = a.join(
-        b,
-        (F.abs(F.col("ax") - F.col("bx")) + F.abs(F.col("ay") - F.col("by")))
-        == 1,
-    ).agg(
-        F.sum(F.col("za") * F.col("zb")).alias("num"),
-        F.count(F.lit(1)).alias("w"),
-    )
-    denom = z.agg(F.sum(F.col("z") * F.col("z")).alias("zz"))
-    return (
-        mu.crossJoin(F.broadcast(cross_t))
-        .crossJoin(F.broadcast(denom))
-        .select(
-            F.col("n").cast("long").alias("n_cells"),
-            F.col("w").cast("long").alias("w_pairs"),
-            F.round(
-                (F.col("n") / F.col("w")) * F.col("num") / F.col("zz")
-                + 1e-9,
-                6,
-            ).alias("morans_i"),
-            F.round(-1.0 / (F.col("n") - 1.0) + 1e-9, 6).alias(
-                "expected_i"
-            ),
-        )
-    )
-
-
-_BT_ROUNDS = 3
-_BT_Q = 8
-
-
-def _bt_oracle() -> str:
-    ctes = [
-        """dc AS (
-      SELECT CAST(ts AS DATE) AS d, event_type, count(*) AS c
-      FROM events GROUP BY 1, 2)""",
-        """wins AS (
-      SELECT a.event_type AS i, b.event_type AS j,
-             CAST(sum(CASE WHEN a.c > b.c THEN 1 ELSE 0 END) AS DOUBLE)
-               AS w
-      FROM dc a JOIN dc b
-        ON a.d = b.d AND a.event_type <> b.event_type
-      GROUP BY a.event_type, b.event_type)""",
-        """pairs AS (
-      SELECT w1.i, w1.j, w1.w AS wij, w1.w + w2.w AS nij
-      FROM wins w1 JOIN wins w2 ON w2.i = w1.j AND w2.j = w1.i)""",
-        """types AS (SELECT i AS t, sum(wij) AS wi FROM pairs GROUP BY i)""",
-        """k AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM types)""",
-        """s0 AS (SELECT types.t, 1.0 / k.k AS s FROM types CROSS JOIN k)""",
-    ]
-    for r in range(_BT_ROUNDS):
-        ctes.append(
-            f"""m{r} AS (
-      SELECT pairs.i AS t,
-             max(types.wi) / sum(pairs.nij / (si.s + sj.s)) AS raw
-      FROM pairs
-      JOIN types ON types.t = pairs.i
-      JOIN s{r} si ON si.t = pairs.i
-      JOIN s{r} sj ON sj.t = pairs.j
-      GROUP BY pairs.i)"""
-        )
-        ctes.append(
-            f"""s{r + 1} AS (
-      SELECT m{r}.t,
-             round(m{r}.raw / (SELECT sum(raw) FROM m{r})
-                   + 1e-12, {_BT_Q}) AS s
-      FROM m{r})"""
-        )
-    fb = f"s{_BT_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT {fb}.t AS event_type,
-           CAST(types.wi AS BIGINT) AS wins,
-           round({fb}.s + 1e-9, 6) AS bt_strength
-    FROM {fb} JOIN types ON types.t = {fb}.t
-    ORDER BY round({fb}.s + 1e-9, 6) DESC, {fb}.t
-    """
-
-
-@staged("bradley_terry_event_types", oracle=_bt_oracle())
-def bradley_terry_event_types(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bradley-Terry paired-comparison strengths of the event types:
-    each calendar day is a 'match' between every ordered type pair
-    (the higher daily count wins; exact ties are no-contests), and 3
-    Zermelo minorize-maximize rounds s_i <- W_i / sum_j n_ij/(s_i+s_j)
-    (sum-normalized and quantized to 8 dp per round) estimate latent
-    strengths from the win matrix. The ranking-model primitive behind
-    LLM preference/arena scoring — here demonstrating the exact MM
-    trajectory both engines replay. Round-before-rank ordering with a
-    type tiebreak.
-
-    Scale shape: one data-sized (day, type) rollup; the win matrix,
-    the MM rounds, and the output are all bounded by the type domain
-    (k^2 pairs, k <= 5)."""
-    e = Tables(spark, sf_dir).events
-    dc = e.groupBy(
-        F.col("ts").cast("date").alias("d"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("c"))
-    a = dc.select(
-        F.col("d").alias("da"), F.col("event_type").alias("i"), F.col("c").alias("ca")
-    )
-    b = dc.select(
-        F.col("d").alias("db"), F.col("event_type").alias("j"), F.col("c").alias("cb")
-    )
-    wins = (
-        a.join(b, (F.col("da") == F.col("db")) & (F.col("i") != F.col("j")))
-        .groupBy("i", "j")
-        .agg(
-            F.sum(F.when(F.col("ca") > F.col("cb"), 1).otherwise(0))
-            .cast("double")
-            .alias("w")
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    w2 = wins.select(
-        F.col("i").alias("j2"), F.col("j").alias("i2"), F.col("w").alias("wji")
-    )
-    pairs = wins.join(
-        w2, (F.col("i") == F.col("i2")) & (F.col("j") == F.col("j2"))
-    ).select("i", "j", F.col("w").alias("wij"), (F.col("w") + F.col("wji")).alias("nij"))
-    types = pairs.groupBy(F.col("i").alias("t")).agg(
-        F.sum("wij").alias("wi")
-    )
-    k = types.agg(F.count(F.lit(1)).cast("double").alias("k"))
-    s = types.crossJoin(F.broadcast(k)).select(
-        "t", (F.lit(1.0) / F.col("k")).alias("s")
-    )
-    for _ in range(_BT_ROUNDS):
-        si = s.select(F.col("t").alias("ti"), F.col("s").alias("s_i"))
-        sj = s.select(F.col("t").alias("tj"), F.col("s").alias("s_j"))
-        raw = (
-            pairs.join(F.broadcast(si), F.col("i") == F.col("ti"))
-            .join(F.broadcast(sj), F.col("j") == F.col("tj"))
-            .join(F.broadcast(types), F.col("i") == F.col("t"))
-            .groupBy(F.col("i").alias("t2"))
-            .agg(
-                (
-                    F.max("wi")
-                    / F.sum(F.col("nij") / (F.col("s_i") + F.col("s_j")))
-                ).alias("raw")
-            )
-        )
-        tot = raw.agg(F.sum("raw").alias("tr"))
-        s = raw.crossJoin(F.broadcast(tot)).select(
-            F.col("t2").alias("t"),
-            F.round(F.col("raw") / F.col("tr") + 1e-12, _BT_Q).alias("s"),
-        )
-    return (
-        s.join(types, "t")
-        .select(
-            F.col("t").alias("event_type"),
-            F.col("wi").cast("long").alias("wins"),
-            F.round(F.col("s") + 1e-9, 6).alias("bt_strength"),
-        )
-        .orderBy(F.desc("bt_strength"), F.asc("event_type"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 4: decision-layer replays — sequential monitoring, bandits
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "obrien_fleming_daily_monitor",
-    oracle="""
-    WITH s AS (
-      SELECT CAST(date_diff('day', TIMESTAMP '2024-01-01', ts) AS BIGINT)
-               AS t,
-             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS g,
-             value AS v
-      FROM events WHERE event_type IN ('click', 'purchase')),
-    daily AS (
-      SELECT t,
-             sum(CASE WHEN g = 1 THEN 1.0 ELSE 0 END) AS n1,
-             sum(CASE WHEN g = 0 THEN 1.0 ELSE 0 END) AS n0,
-             sum(CASE WHEN g = 1 THEN v ELSE 0 END) AS s1,
-             sum(CASE WHEN g = 0 THEN v ELSE 0 END) AS s0,
-             sum(CASE WHEN g = 1 THEN v * v ELSE 0 END) AS q1,
-             sum(CASE WHEN g = 0 THEN v * v ELSE 0 END) AS q0
-      FROM s GROUP BY t),
-    cum AS (
-      SELECT t,
-             sum(n1) OVER w AS cn1, sum(n0) OVER w AS cn0,
-             sum(s1) OVER w AS cs1, sum(s0) OVER w AS cs0,
-             sum(q1) OVER w AS cq1, sum(q0) OVER w AS cq0,
-             row_number() OVER (ORDER BY t) AS k,
-             count(*) OVER () AS kk
-      FROM daily
-      WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW)),
-    z AS (
-      SELECT t, k, kk,
-             round((cs1 / cn1 - cs0 / cn0)
-                   / sqrt((cq1 - cs1 * cs1 / cn1) / (cn1 - 1.0) / cn1
-                          + (cq0 - cs0 * cs0 / cn0) / (cn0 - 1.0) / cn0)
-                   + 1e-9, 4) AS zstat,
-             round(2.24 / sqrt(k * 1.0 / kk) + 1e-9, 4) AS boundary
-      FROM cum WHERE cn1 > 1 AND cn0 > 1),
-    cross_d AS (
-      SELECT min(t) AS t_cross FROM z WHERE abs(zstat) > boundary),
-    mx AS (
-      SELECT CAST(max(kk) AS BIGINT) AS n_looks,
-             round(max(abs(zstat)) + 1e-9, 4) AS max_abs_z
-      FROM z)
-    SELECT mx.n_looks, mx.max_abs_z,
-           CAST(cross_d.t_cross AS BIGINT) AS first_crossing_day,
-           CAST(cross_d.t_cross IS NOT NULL AS BOOLEAN) AS crossed
-    FROM mx CROSS JOIN cross_d
-    """,
-)
-def obrien_fleming_daily_monitor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """O'Brien-Fleming-shaped sequential monitoring of the running
-    purchase-vs-click value difference: at each daily look k of K, the
-    cumulative Welch z-statistic is compared to the OBF-shaped
-    boundary c/sqrt(k/K) with c = 2.24 (the large-K OBF constant for
-    two-sided alpha 0.05 — documented approximation, not an exact
-    alpha-spending solve). Early looks need overwhelming evidence,
-    late looks approach the fixed-sample threshold — the sequential
-    complement to ``sprt_ab_value_test`` (likelihood-ratio based) and
-    the daily analogue of peeking-safe A/B dashboards.
-
-    Scale shape: one data-sized six-sum daily aggregate; the z
-    trajectory and boundary live on the bounded daily frame."""
-    e = Tables(spark, sf_dir).events.filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    s = e.select(
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("g"),
-        F.col("value").alias("v"),
-    )
-    g1 = F.col("g") == 1
-    daily = s.groupBy("t").agg(
-        F.sum(F.when(g1, 1.0).otherwise(0.0)).alias("n1"),
-        F.sum(F.when(~g1, 1.0).otherwise(0.0)).alias("n0"),
-        F.sum(F.when(g1, F.col("v")).otherwise(0.0)).alias("s1"),
-        F.sum(F.when(~g1, F.col("v")).otherwise(0.0)).alias("s0"),
-        F.sum(F.when(g1, F.col("v") * F.col("v")).otherwise(0.0)).alias("q1"),
-        F.sum(F.when(~g1, F.col("v") * F.col("v")).otherwise(0.0)).alias("q0"),
-    )
-    # bounded daily frame — bare windows are domain-sized here
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    wk = Window.orderBy("t")
-    cum = daily.select(
-        "t",
-        F.sum("n1").over(w).alias("cn1"),
-        F.sum("n0").over(w).alias("cn0"),
-        F.sum("s1").over(w).alias("cs1"),
-        F.sum("s0").over(w).alias("cs0"),
-        F.sum("q1").over(w).alias("cq1"),
-        F.sum("q0").over(w).alias("cq0"),
-        F.row_number().over(wk).alias("k"),
-        F.count(F.lit(1)).over(
-            Window.orderBy("t").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("kk"),
-    )
-    se = F.sqrt(
-        (F.col("cq1") - F.col("cs1") * F.col("cs1") / F.col("cn1"))
-        / (F.col("cn1") - 1.0)
-        / F.col("cn1")
-        + (F.col("cq0") - F.col("cs0") * F.col("cs0") / F.col("cn0"))
-        / (F.col("cn0") - 1.0)
-        / F.col("cn0")
-    )
-    z = cum.filter((F.col("cn1") > 1) & (F.col("cn0") > 1)).select(
-        "t",
-        "k",
-        "kk",
-        F.round(
-            (F.col("cs1") / F.col("cn1") - F.col("cs0") / F.col("cn0"))
-            / se
-            + 1e-9,
-            4,
-        ).alias("zstat"),
-        F.round(
-            2.24 / F.sqrt(F.col("k") / F.col("kk")) + 1e-9, 4
-        ).alias("boundary"),
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    crossed = z.filter(F.abs(F.col("zstat")) > F.col("boundary")).agg(
-        F.min("t").alias("t_cross")
-    )
-    mx = z.agg(
-        F.max("kk").cast("long").alias("n_looks"),
-        F.round(F.max(F.abs(F.col("zstat"))) + 1e-9, 4).alias("max_abs_z"),
-    )
-    return mx.crossJoin(F.broadcast(crossed)).select(
-        "n_looks",
-        "max_abs_z",
-        F.col("t_cross").cast("long").alias("first_crossing_day"),
-        F.col("t_cross").isNotNull().alias("crossed"),
-    )
-
-
-_UCB_Q = 6
-
-
-def _ucb_oracle() -> str:
-    # rewards: per (day-index, type) share of that day's max type
-    # revenue, quantized; the bandit replays days in order, arms
-    # initialized by one forced pull each in type-name order
-    return f"""
-    WITH RECURSIVE dc AS (
-      SELECT CAST(date_diff('day', TIMESTAMP '2024-01-01', ts) AS BIGINT)
-               AS d,
-             event_type AS arm, CAST(count(*) AS DOUBLE) AS rev
-      FROM events GROUP BY 1, 2),
-    days AS (
-      SELECT d, row_number() OVER (ORDER BY d) AS step FROM
-      (SELECT DISTINCT d FROM dc)),
-    arms AS (
-      SELECT arm, row_number() OVER (ORDER BY arm) AS aidx
-      FROM (SELECT DISTINCT arm FROM dc)),
-    rew AS (
-      SELECT days.step, dc.arm,
-             round(dc.rev / max(dc.rev) OVER (PARTITION BY dc.d)
-                   + 1e-9, {_UCB_Q}) AS r
-      FROM dc JOIN days ON days.d = dc.d),
-    ka AS (SELECT CAST(count(*) AS BIGINT) AS k FROM arms),
-    st (step, arm, n, s) AS (
-      SELECT 0, arms.arm, CAST(0 AS BIGINT), CAST(0.0 AS DOUBLE)
-      FROM arms
-      UNION ALL
-      SELECT st.step + 1, st.arm,
-             st.n + CASE WHEN st.arm = pick.parm THEN 1 ELSE 0 END,
-             st.s + CASE WHEN st.arm = pick.parm
-                         THEN coalesce(pr.r, 0.0) ELSE 0 END
-      FROM st
-      CROSS JOIN (
-        SELECT s2.arm AS parm FROM st s2
-        CROSS JOIN arms a2
-        CROSS JOIN ka
-        WHERE a2.arm = s2.arm
-        ORDER BY
-          CASE WHEN s2.step + 1 <= ka.k
-               THEN CASE WHEN a2.aidx = s2.step + 1 THEN 1 ELSE 0 END
-               ELSE 1 END DESC,
-          CASE WHEN s2.step + 1 <= ka.k THEN 0.0
-               WHEN s2.n = 0 THEN 1e18
-               ELSE round(s2.s / s2.n
-                    + sqrt(2.0 * ln(s2.step + 1.0) / s2.n)
-                    + 1e-12, {_UCB_Q}) END DESC,
-          s2.arm
-        LIMIT 1) pick
-      LEFT JOIN rew pr ON pr.step = st.step + 1 AND pr.arm = pick.parm
-      WHERE st.step + 1 <= (SELECT max(step) FROM days)),
-    fin AS (
-      SELECT arm, n, s FROM st
-      WHERE step = (SELECT max(step) FROM days)),
-    best AS (
-      SELECT max(tot) AS btot FROM
-      (SELECT arm, sum(r) AS tot FROM rew GROUP BY arm)),
-    tot AS (SELECT sum(s) AS treward FROM fin)
-    SELECT fin.arm AS event_type,
-           CAST(fin.n AS BIGINT) AS pulls,
-           round(fin.s + 1e-9, 4) AS arm_reward,
-           round(tot.treward + 1e-9, 4) AS total_reward,
-           round(best.btot - tot.treward + 1e-9, 4) AS regret_vs_best
-    FROM fin CROSS JOIN best CROSS JOIN tot
-    ORDER BY fin.arm
-    """
-
-
-@staged("ucb1_bandit_replay_event_types", oracle=_ucb_oracle())
-def ucb1_bandit_replay_event_types(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Deterministic UCB1 bandit replay over the calendar: each day is
-    one pull, arms are the event types, reward = that type's share of
-    the day's best type event COUNT (integer counts divided once, so
-    both engines quantize identical rationals — revenue sums differ in
-    ulps across engines and would fork the trajectory; caught in
-    staging). The first k days
-    force one pull per arm in name order; afterwards the policy picks
-    argmax of mean + sqrt(2 ln t / n) (quantized round-before-argmax,
-    name tiebreak). Reports pulls, per-arm reward, and regret against
-    the best fixed arm in hindsight — the explore/exploit primitive
-    behind adaptive data-selection policies, demonstrated as an exact
-    replayable trajectory (both engines walk the same decisions).
-
-    Scale shape: one data-sized (day, type) rollup; the replay is a
-    bounded sequential Arrow kernel over |days| x |types| rows (the
-    Holt posture); the oracle walks the same steps in a recursive CTE
-    whose working set is the k-row arm state."""
-    import pandas as pd
-
-    e = Tables(spark, sf_dir).events
-    dc = e.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("d"),
-        F.col("event_type").alias("arm"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("rev"))
-    wd = Window.partitionBy("d")
-    rew = dc.select(
-        "d",
-        "arm",
-        F.round(
-            F.col("rev") / F.max("rev").over(wd) + 1e-9, _UCB_Q
-        ).alias("r"),
-    )
-
-    def kernel(batches):
-        import math as _m
-
-        rows = pd.concat(list(batches), ignore_index=True)
-        days = sorted(rows["d"].unique())
-        arms = sorted(rows["arm"].unique())
-        lut = {
-            (row.d, row.arm): row.r
-            for row in rows.itertuples(index=False)
-        }
-        n = {a: 0 for a in arms}
-        s = {a: 0.0 for a in arms}
-        for step, d in enumerate(days, start=1):
-            if step <= len(arms):
-                pick = arms[step - 1]
-            else:
-
-                def ucb(a):
-                    if n[a] == 0:
-                        return 1e18
-                    v = (
-                        s[a] / n[a]
-                        + _m.sqrt(2.0 * _m.log(step) / n[a])
-                        + 1e-12
-                    )
-                    return _m.floor(v * 10.0**_UCB_Q + 0.5) / 10.0**_UCB_Q
-
-                pick = max(arms, key=lambda a: (ucb(a), [-ord(c) for c in a]))
-            n[pick] += 1
-            s[pick] += lut.get((d, pick), 0.0)
-        btot = max(
-            sum(lut.get((d, a), 0.0) for d in days) for a in arms
-        )
-        treward = sum(s.values())
-
-        def r4(x):
-            return _m.floor((x + 1e-9) * 10000.0 + 0.5) / 10000.0
-
-        yield pd.DataFrame(
-            {
-                "event_type": arms,
-                "pulls": pd.Series([n[a] for a in arms], dtype="int64"),
-                "arm_reward": [r4(s[a]) for a in arms],
-                "total_reward": [r4(treward)] * len(arms),
-                "regret_vs_best": [r4(btot - treward)] * len(arms),
-            }
-        )
-
-    schema = (
-        "event_type string, pulls long, arm_reward double,"
-        " total_reward double, regret_vs_best double"
-    )
-    return rew.coalesce(1).mapInPandas(kernel, schema=schema).orderBy(
-        "event_type"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 5: ordered-trend, mediation, instrumental variables,
-# multi-rater agreement, indirect standardization
+# Ordered trend, instrumental variables, multi-rater agreement,
+# indirect standardization
 # ---------------------------------------------------------------------------
 
 
@@ -2971,140 +782,6 @@ def cochran_armitage_trend_priority(
 
 
 @staged(
-    "sobel_mediation_urgent_items_revenue",
-    oracle="""
-    WITH base AS (
-      SELECT o.o_orderkey,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1.0
-                  ELSE 0.0 END AS x,
-             CAST(count(l.l_orderkey) AS DOUBLE) AS m,
-             max(o.o_totalprice) AS y
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_orderkey, o.o_orderpriority),
-    mo AS (
-      SELECT count(*) AS n,
-             sum(x) AS sx, sum(m) AS sm, sum(y) AS sy,
-             sum(x * x) AS sxx, sum(m * m) AS smm,
-             sum(x * m) AS sxm, sum(x * y) AS sxy, sum(m * y) AS smy
-      FROM base),
-    cm AS (
-      SELECT n,
-             sxx - sx * sx / n AS cxx,
-             smm - sm * sm / n AS cmm,
-             sxm - sx * sm / n AS cxm,
-             sxy - sx * sy / n AS cxy,
-             smy - sm * sy / n AS cmy
-      FROM mo),
-    paths AS (
-      SELECT n, cxx, cmm, cxm, cxy, cmy,
-             cxm / cxx AS a,
-             (cmy * cxx - cxm * cxy) / (cmm * cxx - cxm * cxm) AS b,
-             (cxy * cmm - cxm * cmy) / (cmm * cxx - cxm * cxm)
-               AS c_prime
-      FROM cm),
-    resid AS (
-      SELECT p.n, p.a, p.b, p.c_prime, p.cxx,
-             (p.cmm - p.a * p.cxm) / (p.n - 2.0) AS s2_a
-      FROM paths p)
-    SELECT CAST(r.n AS BIGINT) AS n_orders,
-           round(r.a + 1e-9, 6) AS path_a,
-           round(r.b + 1e-9, 6) AS path_b,
-           round(r.c_prime + 1e-9, 6) AS direct_effect,
-           round(r.a * r.b + 1e-9, 6) AS indirect_effect,
-           round(r.a * r.b
-                 / sqrt(r.b * r.b * (r.s2_a / r.cxx)
-                        + r.a * r.a * (r.s2_a / r.cxx)) + 1e-9, 4)
-             AS sobel_z_approx
-    FROM resid r
-    """,
-)
-def sobel_mediation_urgent_items_revenue(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Baron-Kenny mediation decomposition: does URGENT priority (X)
-    move order revenue (Y) THROUGH the item count (M)? Path a = slope
-    of M~X; paths b (mediator) and c' (direct) from the two-regressor
-    OLS of Y on (X, M) in closed co-moment form; indirect effect =
-    a·b with a Sobel-style z using the a-path residual variance (the
-    approximation is documented — the point is the exact replayable
-    decomposition, not the asymptotics). The mediation primitive the
-    causal family (IPTW, AIPW, DiD, RDD, ITS) lacked: it answers
-    'HOW does the effect flow', not just 'how big is it'.
-
-    Scale shape: one orders-lineitem join aggregated per order, then
-    ONE nine-sum co-moment aggregate; everything after is scalar
-    algebra on a single row."""
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.join(
-            t.lineitem, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(
-            F.count("l_orderkey").cast("double").alias("m"),
-            F.max("o_totalprice").alias("y"),
-        )
-        .select(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
-            .otherwise(0.0)
-            .alias("x"),
-            "m",
-            "y",
-        )
-    )
-    mo = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("m").alias("sm"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("m") * F.col("m")).alias("smm"),
-        F.sum(F.col("x") * F.col("m")).alias("sxm"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("m") * F.col("y")).alias("smy"),
-    )
-    n = F.col("n")
-    cm = mo.select(
-        n,
-        (F.col("sxx") - F.col("sx") * F.col("sx") / n).alias("cxx"),
-        (F.col("smm") - F.col("sm") * F.col("sm") / n).alias("cmm"),
-        (F.col("sxm") - F.col("sx") * F.col("sm") / n).alias("cxm"),
-        (F.col("sxy") - F.col("sx") * F.col("sy") / n).alias("cxy"),
-        (F.col("smy") - F.col("sm") * F.col("sy") / n).alias("cmy"),
-    )
-    det = F.col("cmm") * F.col("cxx") - F.col("cxm") * F.col("cxm")
-    paths = cm.select(
-        n,
-        F.col("cxx"),
-        F.col("cmm"),
-        F.col("cxm"),
-        (F.col("cxm") / F.col("cxx")).alias("a"),
-        ((F.col("cmy") * F.col("cxx") - F.col("cxm") * F.col("cxy")) / det).alias("b"),
-        ((F.col("cxy") * F.col("cmm") - F.col("cxm") * F.col("cmy")) / det).alias("c_prime"),
-    )
-    s2a = (F.col("cmm") - F.col("a") * F.col("cxm")) / (n - 2.0)
-    return paths.select(
-        n.cast("long").alias("n_orders"),
-        F.round(F.col("a") + 1e-9, 6).alias("path_a"),
-        F.round(F.col("b") + 1e-9, 6).alias("path_b"),
-        F.round(F.col("c_prime") + 1e-9, 6).alias("direct_effect"),
-        F.round(F.col("a") * F.col("b") + 1e-9, 6).alias(
-            "indirect_effect"
-        ),
-        F.round(
-            F.col("a")
-            * F.col("b")
-            / F.sqrt(
-                F.col("b") * F.col("b") * (s2a / F.col("cxx"))
-                + F.col("a") * F.col("a") * (s2a / F.col("cxx"))
-            )
-            + 1e-9,
-            4,
-        ).alias("sobel_z_approx"),
-    )
-
-
-@staged(
     "iv_wald_orderkey_items_revenue",
     oracle="""
     WITH base AS (
@@ -3147,9 +824,9 @@ def iv_wald_orderkey_items_revenue(
     slope and F statistic (the weak-instrument diagnostic — F below
     ~10 says the parity instrument barely moves x, which on this
     synthetic data is exactly what an honest IV report should show).
-    Completes the causal-identification toolbox: confounder
-    adjustment (IPTW/AIPW), discontinuities (RDD), time (DiD/ITS),
-    mediation (Sobel), and now instruments.
+    Adds instruments to the causal-identification toolbox beside
+    confounder adjustment (IPTW), discontinuities (RDD) and time
+    (DiD/ITS).
 
     Scale shape: one join-aggregate per order, ONE nine-sum co-moment
     aggregate, scalar algebra."""
@@ -3388,764 +1065,6 @@ def smr_indirect_standardization_asia(
     )
 
 
-# ---------------------------------------------------------------------------
-# Wave 6: seasonal state-space, gap decomposition, uplift, attribution
-# ---------------------------------------------------------------------------
-
-_HW_A, _HW_B, _HW_G = 0.3, 0.1, 0.2
-
-from ror_etl_spark.queries.staged_r13 import _qr_sql as _q6  # noqa: E402
-
-
-def _hw_oracle() -> str:
-    a, b, g = _HW_A, _HW_B, _HW_G
-    newl = _q6(
-        f"{a} * (rn.y - st.sl[CAST((rn.k - 1) % 7 AS BIGINT) + 1])"
-        f" + {1 - a} * (st.l + st.b)"
-    )
-    newb = _q6(f"{b} * (({newl}) - st.l) + {1 - b} * st.b")
-    news = _q6(
-        f"{g} * (rn.y - ({newl}))"
-        f" + {1 - g} * st.sl[CAST((rn.k - 1) % 7 AS BIGINT) + 1]"
-    )
-    return f"""
-    WITH RECURSIVE {_DAILY_SQL},
-    rn AS (SELECT row_number() OVER (ORDER BY t) AS k, y FROM daily),
-    nn AS (SELECT max(k) AS n FROM rn),
-    l0 AS (SELECT avg(y) AS l FROM rn WHERE k <= 7),
-    b0 AS (
-      SELECT {_q6("((SELECT avg(y) FROM rn WHERE k BETWEEN 8 AND 14)"
-                  " - (SELECT avg(y) FROM rn WHERE k <= 7)) / 7.0")} AS b),
-    s0 AS (
-      SELECT list({_q6("rn.y - l0.l")} ORDER BY rn.k) AS sl
-      FROM rn CROSS JOIN l0 WHERE rn.k <= 7),
-    st (k, l, b, sl, sse) AS (
-      SELECT CAST(7 AS BIGINT), {_q6("l0.l")}, b0.b, s0.sl,
-             CAST(0.0 AS DOUBLE)
-      FROM l0 CROSS JOIN b0 CROSS JOIN s0
-      UNION ALL
-      SELECT rn.k,
-             {newl},
-             {newb},
-             list_transform(
-               range(1, 8),
-               i -> CASE WHEN i = CAST((rn.k - 1) % 7 AS BIGINT) + 1
-                         THEN {news} ELSE st.sl[i] END),
-             {_q6(f"st.sse + (rn.y - (st.l + st.b"
-                  f" + st.sl[CAST((rn.k - 1) % 7 AS BIGINT) + 1]))"
-                  f" * (rn.y - (st.l + st.b"
-                  f" + st.sl[CAST((rn.k - 1) % 7 AS BIGINT) + 1]))")}
-      FROM st JOIN rn ON rn.k = st.k + 1)
-    SELECT CAST(st.k AS BIGINT) AS n_days,
-           st.l AS level, st.b AS trend,
-           round(list_min(st.sl) + 1e-9, 6) AS seasonal_min,
-           round(list_max(st.sl) + 1e-9, 6) AS seasonal_max,
-           {_q6("st.l + st.b + st.sl[CAST(st.k % 7 AS BIGINT) + 1]")}
-             AS forecast_1,
-           st.sse AS sse_1step
-    FROM st CROSS JOIN nn WHERE st.k = nn.n
-    """
-
-
-@staged("holt_winters_weekday_daily", oracle=_hw_oracle())
-def holt_winters_weekday_daily(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Additive Holt-Winters (level + trend + weekday season, m = 7)
-    on daily purchase revenue, alpha/beta/gamma = 0.3/0.1/0.2: init
-    l = mean(week 1), b = (mean(week 2) - mean(week 1))/7, s_i =
-    y_i - l over week 1; from day 8 the full three-equation recursion
-    runs with every state quantized by the engine-portable 6-dp rule
-    (``holt_linear_daily_revenue``'s discipline extended to a
-    SEASONAL state vector — the oracle carries the 7-slot list
-    through the recursive CTE via an indexed list_transform). The
-    forecasting family is now complete: EWMA (level), Holt (trend),
-    AR(1)/AR(2) (stationary), seasonal-naive (pure season), Kalman
-    (probabilistic level), and Holt-Winters (all three components).
-
-    Scale shape: one data-sized daily rollup; the recursion is a
-    bounded single-task Arrow kernel (the Holt posture)."""
-    d = _daily_df(spark, sf_dir)
-
-    def q(x: float) -> float:
-        import math
-
-        v = x + 1e-9
-        s = 1.0 if v >= 0 else -1.0
-        return s * math.floor(abs(v) * 1e6 + 0.5) / 1e6
-
-    def kernel(batches):
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True).sort_values("t")
-        ys = rows["y"].tolist()
-        n = len(ys)
-        level = q(sum(ys[:7]) / 7.0)
-        trend = q((sum(ys[7:14]) / 7.0 - sum(ys[:7]) / 7.0) / 7.0)
-        sl = [q(ys[i] - level) for i in range(7)]
-        sse = 0.0
-        for k in range(8, n + 1):
-            y = ys[k - 1]
-            si = (k - 1) % 7
-            err = y - (level + trend + sl[si])
-            sse = q(sse + err * err)
-            prev_l = level
-            level = q(
-                _HW_A * (y - sl[si]) + (1 - _HW_A) * (prev_l + trend)
-            )
-            trend = q(_HW_B * (level - prev_l) + (1 - _HW_B) * trend)
-            sl[si] = q(_HW_G * (y - level) + (1 - _HW_G) * sl[si])
-        yield pd.DataFrame(
-            {
-                "n_days": pd.Series([n], dtype="int64"),
-                "level": [level],
-                "trend": [trend],
-                "seasonal_min": [q(min(sl))],
-                "seasonal_max": [q(max(sl))],
-                "forecast_1": [q(level + trend + sl[n % 7])],
-                "sse_1step": [sse],
-            }
-        )
-
-    schema = (
-        "n_days long, level double, trend double, seasonal_min double,"
-        " seasonal_max double, forecast_1 double, sse_1step double"
-    )
-    return d.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
-@staged(
-    "blinder_oaxaca_region_revenue",
-    oracle="""
-    WITH base AS (
-      SELECT CASE WHEN n.n_regionkey = 2 THEN 1 ELSE 0 END AS grp,
-             CAST(cnt.items AS DOUBLE) AS x,
-             cnt.y
-      FROM (
-        SELECT o_orderkey, o_custkey, count(*) AS items,
-               max(o_totalprice) AS y
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        GROUP BY o_orderkey, o_custkey) cnt
-      JOIN customer c ON c.c_custkey = cnt.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey),
-    mo AS (
-      SELECT grp, count(*) AS n, avg(x) AS mx, avg(y) AS my,
-             covar_pop(x, y) / var_pop(x) AS beta
-      FROM base GROUP BY grp),
-    ab AS (
-      SELECT a.n AS na, b.n AS nb,
-             a.mx AS mxa, b.mx AS mxb, a.my AS mya, b.my AS myb,
-             a.beta AS ba, b.beta AS bb,
-             a.my - a.beta * a.mx AS ia,
-             b.my - b.beta * b.mx AS ib
-      FROM (SELECT * FROM mo WHERE grp = 1) a
-      CROSS JOIN (SELECT * FROM mo WHERE grp = 0) b)
-    SELECT CAST(na AS BIGINT) AS n_asia,
-           CAST(nb AS BIGINT) AS n_rest,
-           round(mya - myb + 1e-9, 4) AS total_gap,
-           round(bb * (mxa - mxb) + 1e-9, 4) AS explained,
-           round((ba - bb) * mxa + (ia - ib) + 1e-9, 4) AS unexplained,
-           round(bb * (mxa - mxb)
-                 / nullif(mya - myb, 0) + 1e-9, 6) AS explained_share
-    FROM ab
-    """,
-)
-def blinder_oaxaca_region_revenue(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Blinder-Oaxaca decomposition of the ASIA-vs-rest order-revenue
-    gap: with the single regressor x = item count, gap = (Ȳ_A - Ȳ_B)
-    splits into the EXPLAINED part beta_B(X̄_A - X̄_B) (different item
-    counts priced at the reference group's slope) and the UNEXPLAINED
-    part (beta_A - beta_B)X̄_A + (alpha_A - alpha_B) (different
-    pricing structure). The econometric gap-accounting primitive —
-    the regression-based sibling of ``simpson_paradox_screen`` and
-    ``smr_indirect_standardization_asia``, answering 'how much of the
-    gap is composition vs structure'.
-
-    Scale shape: one join-aggregate per order, one grouped co-moment
-    aggregate per group (2 rows), closed-form algebra."""
-    t = Tables(spark, sf_dir)
-    cnt = (
-        t.orders.join(
-            t.lineitem, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("o_orderkey", "o_custkey")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("x"),
-            F.max("o_totalprice").alias("y"),
-        )
-    )
-    base = (
-        cnt.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(
-            F.when(F.col("n_regionkey") == 2, 1).otherwise(0).alias("grp"),
-            "x",
-            "y",
-        )
-    )
-    mo = base.groupBy("grp").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        (F.covar_pop("x", "y") / F.var_pop("x")).alias("beta"),
-    )
-    a = mo.filter(F.col("grp") == 1).select(
-        F.col("n").alias("na"),
-        F.col("mx").alias("mxa"),
-        F.col("my").alias("mya"),
-        F.col("beta").alias("ba"),
-        (F.col("my") - F.col("beta") * F.col("mx")).alias("ia"),
-    )
-    b = mo.filter(F.col("grp") == 0).select(
-        F.col("n").alias("nb"),
-        F.col("mx").alias("mxb"),
-        F.col("my").alias("myb"),
-        F.col("beta").alias("bb"),
-        (F.col("my") - F.col("beta") * F.col("mx")).alias("ib"),
-    )
-    ab = a.crossJoin(F.broadcast(b))
-    gap = F.col("mya") - F.col("myb")
-    expl = F.col("bb") * (F.col("mxa") - F.col("mxb"))
-    unex = (F.col("ba") - F.col("bb")) * F.col("mxa") + (
-        F.col("ia") - F.col("ib")
-    )
-    return ab.select(
-        F.col("na").cast("long").alias("n_asia"),
-        F.col("nb").cast("long").alias("n_rest"),
-        F.round(gap + 1e-9, 4).alias("total_gap"),
-        F.round(expl + 1e-9, 4).alias("explained"),
-        F.round(unex + 1e-9, 4).alias("unexplained"),
-        F.round(expl / F.nullif(gap, F.lit(0)) + 1e-9, 6).alias(
-            "explained_share"
-        ),
-    )
-
-
-@staged(
-    "uplift_qini_by_segment",
-    oracle="""
-    WITH base AS (
-      SELECT c.c_mktsegment AS seg,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-               AS t,
-             CASE WHEN o.o_totalprice > 150000 THEN 1.0 ELSE 0.0 END
-               AS y
-      FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
-    segs AS (
-      SELECT seg,
-             CAST(sum(t) AS DOUBLE) AS n1,
-             CAST(count(*) - sum(t) AS DOUBLE) AS n0,
-             sum(CASE WHEN t = 1 THEN y ELSE 0 END) AS y1,
-             sum(CASE WHEN t = 0 THEN y ELSE 0 END) AS y0
-      FROM base GROUP BY seg),
-    ranked AS (
-      SELECT seg, n1, n0, y1, y0,
-             round(y1 / n1 - y0 / n0 + 1e-9, 6) AS uplift,
-             row_number() OVER (
-               ORDER BY round(y1 / n1 - y0 / n0 + 1e-9, 6) DESC, seg)
-               AS rk
-      FROM segs),
-    cum AS (
-      SELECT seg, uplift, rk,
-             sum(y1) OVER w AS cy1, sum(y0) OVER w AS cy0,
-             sum(n1) OVER w AS cn1, sum(n0) OVER w AS cn0
-      FROM ranked
-      WINDOW w AS (ORDER BY rk ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW)),
-    q AS (
-      SELECT seg, uplift, rk,
-             round(cy1 - cy0 * cn1 / cn0 + 1e-9, 4) AS qini_value
-      FROM cum),
-    coef AS (
-      SELECT round(avg(qini_value) + 1e-9, 4) AS qini_auc FROM q)
-    SELECT q.seg AS segment, q.uplift, q.rk AS targeting_rank,
-           q.qini_value, coef.qini_auc
-    FROM q CROSS JOIN coef
-    ORDER BY q.rk
-    """,
-)
-def uplift_qini_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment-level uplift modeling with a Qini curve: per market
-    segment, uplift = P(high-value | urgent) - P(high-value | not),
-    segments ranked by uplift (round-before-rank, name tiebreak), and
-    the cumulative Qini value cy1 - cy0·(cn1/cn0) at each targeting
-    depth, summarized by its mean (a bounded-support Qini AUC). The
-    'WHO should get the treatment' layer on top of the ATE family —
-    two ops with identical average effects can have opposite
-    targeting value, which only the uplift ordering reveals.
-
-    Scale shape: one fact-scan conditional aggregate to the 5-segment
-    frame; ranking, cumulatives, and the curve are segment-domain
-    bounded."""
-    t = Tables(spark, sf_dir)
-    base = t.orders.join(
-        t.customer, F.col("o_custkey") == F.col("c_custkey")
-    ).select(
-        F.col("c_mktsegment").alias("seg"),
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0).alias("t"),
-        F.when(F.col("o_totalprice") > 150000, 1.0).otherwise(0.0).alias("y"),
-    )
-    segs = base.groupBy("seg").agg(
-        F.sum("t").cast("double").alias("n1"),
-        (F.count(F.lit(1)) - F.sum("t")).cast("double").alias("n0"),
-        F.sum(F.when(F.col("t") == 1, F.col("y")).otherwise(0.0)).alias("y1"),
-        F.sum(F.when(F.col("t") == 0, F.col("y")).otherwise(0.0)).alias("y0"),
-    )
-    uplift = F.round(
-        F.col("y1") / F.col("n1") - F.col("y0") / F.col("n0") + 1e-9, 6
-    )
-    wrk = Window.orderBy(F.desc("uplift"), F.asc("seg"))
-    ranked = segs.select("*", uplift.alias("uplift")).select(
-        "*", F.row_number().over(wrk).alias("rk")
-    )
-    wcum = Window.orderBy("rk").rowsBetween(Window.unboundedPreceding, 0)
-    cum = ranked.select(
-        "seg",
-        "uplift",
-        "rk",
-        F.sum("y1").over(wcum).alias("cy1"),
-        F.sum("y0").over(wcum).alias("cy0"),
-        F.sum("n1").over(wcum).alias("cn1"),
-        F.sum("n0").over(wcum).alias("cn0"),
-    )
-    q = cum.select(
-        "seg",
-        "uplift",
-        "rk",
-        F.round(
-            F.col("cy1") - F.col("cy0") * F.col("cn1") / F.col("cn0")
-            + 1e-9,
-            4,
-        ).alias("qini_value"),
-    )
-    coef = q.agg(F.round(F.avg("qini_value") + 1e-9, 4).alias("qini_auc"))
-    return (
-        q.crossJoin(F.broadcast(coef))
-        .select(
-            F.col("seg").alias("segment"),
-            "uplift",
-            F.col("rk").cast("long").alias("targeting_rank"),
-            "qini_value",
-            "qini_auc",
-        )
-        .orderBy("targeting_rank")
-    )
-
-
-@staged(
-    "linear_shapley_attribution",
-    oracle="""
-    WITH base AS (
-      SELECT CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1.0
-                  ELSE 0.0 END AS x1,
-             CAST(count(l.l_orderkey) AS DOUBLE) AS x2,
-             max(o.o_totalprice) AS y
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_orderkey, o.o_orderpriority),
-    mo AS (
-      SELECT count(*) AS n, avg(x1) AS m1, avg(x2) AS m2, avg(y) AS my,
-             covar_pop(x1, x1) AS c11, covar_pop(x2, x2) AS c22,
-             covar_pop(x1, x2) AS c12,
-             covar_pop(x1, y) AS c1y, covar_pop(x2, y) AS c2y,
-             var_pop(y) AS cyy
-      FROM base),
-    beta AS (
-      SELECT n, m1, m2, my, c11, c22, c12, c1y, c2y, cyy,
-             (c1y * c22 - c12 * c2y) / (c11 * c22 - c12 * c12) AS b1,
-             (c2y * c11 - c12 * c1y) / (c11 * c22 - c12 * c12) AS b2
-      FROM mo),
-    phi AS (
-      SELECT b.n, b.b1, b.b2,
-             (b.b1 * b.c1y + b.b2 * b.c2y) / b.cyy AS r2,
-             abs(b.b1) * (SELECT avg(abs(x1 - b.m1)) FROM base) AS ma1,
-             abs(b.b2) * (SELECT avg(abs(x2 - b.m2)) FROM base) AS ma2
-      FROM beta b)
-    SELECT f.feature,
-           round(f.beta + 1e-9, 4) AS beta,
-           round(f.mean_abs_phi + 1e-9, 4) AS mean_abs_phi,
-           round(f.mean_abs_phi / (phi.ma1 + phi.ma2) + 1e-9, 6)
-             AS phi_share,
-           round(phi.r2 + 1e-9, 6) AS model_r2
-    FROM phi,
-    LATERAL (VALUES ('urgent', phi.b1, phi.ma1),
-                    ('items', phi.b2, phi.ma2))
-      AS f(feature, beta, mean_abs_phi)
-    ORDER BY f.feature
-    """,
-)
-def linear_shapley_attribution(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Exact Shapley attribution for the two-feature linear model of
-    order revenue on (urgent, item count): for linear models the
-    Shapley value is analytic — phi_j(i) = beta_j (x_ij - mean_j) —
-    so mean |phi_j| = |beta_j| · mean|x_j - mean_j| measures each
-    feature's typical contribution magnitude, reported with its share
-    and the model R². The model-explanation primitive (the honest
-    special case of SHAP: no sampling, no surrogates) that turns the
-    registry's regression closures into per-feature attribution
-    language.
-
-    Scale shape: one join-aggregate per order, one co-moment
-    aggregate + one mean-absolute-deviation aggregate — two bounded
-    passes, 2-row output."""
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.join(
-            t.lineitem, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(
-            F.count("l_orderkey").cast("double").alias("x2"),
-            F.max("o_totalprice").alias("y"),
-        )
-        .select(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1.0)
-            .otherwise(0.0)
-            .alias("x1"),
-            "x2",
-            "y",
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    mo = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.avg("x1").alias("m1"),
-        F.avg("x2").alias("m2"),
-        F.covar_pop("x1", "x1").alias("c11"),
-        F.covar_pop("x2", "x2").alias("c22"),
-        F.covar_pop("x1", "x2").alias("c12"),
-        F.covar_pop("x1", "y").alias("c1y"),
-        F.covar_pop("x2", "y").alias("c2y"),
-        F.var_pop("y").alias("cyy"),
-    )
-    det = F.col("c11") * F.col("c22") - F.col("c12") * F.col("c12")
-    beta = mo.select(
-        "*",
-        ((F.col("c1y") * F.col("c22") - F.col("c12") * F.col("c2y")) / det).alias("b1"),
-        ((F.col("c2y") * F.col("c11") - F.col("c12") * F.col("c1y")) / det).alias("b2"),
-    )
-    mad = base.crossJoin(F.broadcast(beta.select("m1", "m2"))).agg(
-        F.avg(F.abs(F.col("x1") - F.col("m1"))).alias("d1"),
-        F.avg(F.abs(F.col("x2") - F.col("m2"))).alias("d2"),
-    )
-    phi = beta.crossJoin(F.broadcast(mad)).select(
-        F.col("b1"),
-        F.col("b2"),
-        (
-            (F.col("b1") * F.col("c1y") + F.col("b2") * F.col("c2y"))
-            / F.col("cyy")
-        ).alias("r2"),
-        (F.abs(F.col("b1")) * F.col("d1")).alias("ma1"),
-        (F.abs(F.col("b2")) * F.col("d2")).alias("ma2"),
-    )
-    rows = phi.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("items").alias("feature"),
-                    F.col("b2").alias("beta_raw"),
-                    F.col("ma2").alias("ma"),
-                ),
-                F.struct(
-                    F.lit("urgent").alias("feature"),
-                    F.col("b1").alias("beta_raw"),
-                    F.col("ma1").alias("ma"),
-                ),
-            )
-        ).alias("f"),
-        (F.col("ma1") + F.col("ma2")).alias("tot"),
-        "r2",
-    )
-    return rows.select(
-        F.col("f.feature").alias("feature"),
-        F.round(F.col("f.beta_raw") + 1e-9, 4).alias("beta"),
-        F.round(F.col("f.ma") + 1e-9, 4).alias("mean_abs_phi"),
-        F.round(F.col("f.ma") / F.col("tot") + 1e-9, 6).alias(
-            "phi_share"
-        ),
-        F.round(F.col("r2") + 1e-9, 6).alias("model_r2"),
-    ).orderBy("feature")
-
-
-# ---------------------------------------------------------------------------
-# Wave 7: volatility filtering, latent regimes, weighted graph kernels
-# ---------------------------------------------------------------------------
-
-_GARCH_W, _GARCH_A, _GARCH_B = 0.1, 0.1, 0.8
-
-
-def _q8_sql(x: str) -> str:
-    """8-dp engine-portable floor quantizer (the 6-dp rule scaled up
-    for small-magnitude volatility states)."""
-    return (
-        f"CASE WHEN ({x}) + 1e-11 >= 0 THEN"
-        f" floor((({x}) + 1e-11) * 100000000.0 + 0.5) / 100000000.0"
-        f" ELSE -floor(-(({x}) + 1e-11) * 100000000.0 + 0.5)"
-        f" / 100000000.0 END"
-    )
-
-
-def _garch_oracle() -> str:
-    w, a, b = _GARCH_W, _GARCH_A, _GARCH_B
-    news = _q8_sql(
-        f"mo.om + {a} * (rn.r - mo.mr) * (rn.r - mo.mr) + {b} * st.s2"
-    )
-    return f"""
-    WITH RECURSIVE {_DAILY_SQL},
-    ord AS (SELECT row_number() OVER (ORDER BY t) AS k, y FROM daily),
-    ret AS (
-      SELECT o1.k - 1 AS k, ln(o1.y / o0.y) AS r
-      FROM ord o1 JOIN ord o0 ON o0.k = o1.k - 1),
-    rn AS (SELECT k, r FROM ret),
-    mo AS (
-      SELECT avg(r) AS mr, var_pop(r) AS vr,
-             {w} * var_pop(r) AS om, count(*) AS n
-      FROM rn),
-    st (k, s2, mx) AS (
-      SELECT CAST(1 AS BIGINT), {_q8_sql("mo.vr")},
-             {_q8_sql("mo.vr")} FROM mo
-      UNION ALL
-      SELECT st.k + 1, {news}, greatest(st.mx, {news})
-      FROM st JOIN rn ON rn.k = st.k CROSS JOIN mo
-      WHERE st.k + 1 <= (SELECT max(k) FROM rn))
-    SELECT CAST(mo.n AS BIGINT) AS n_returns,
-           round(mo.om + 1e-11, 8) AS omega,
-           round({a} + {b}, 2) AS persistence,
-           round(mo.om / (1.0 - {a} - {b}) + 1e-11, 8)
-             AS unconditional_var,
-           st.s2 AS final_sigma2,
-           st.mx AS max_sigma2
-    FROM st CROSS JOIN mo WHERE st.k = (SELECT max(k) FROM rn)
-    """
-
-
-@staged("garch11_filter_daily", oracle=_garch_oracle())
-def garch11_filter_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GARCH(1,1) conditional-variance FILTER over daily log revenue
-    returns (fixed canonical parameters alpha = 0.1, beta = 0.8,
-    omega = 0.1 x var(r), so persistence 0.9): sigma2_t = omega +
-    alpha(r_{t-1} - mean)^2 + beta sigma2_{t-1}, initialized at the
-    sample variance. Reports the final and maximum conditional
-    variance against the unconditional omega/(1-alpha-beta) — the
-    volatility-clustering diagnostic the homoskedastic family
-    (Breusch-Pagan flags it, EWMA smooths it) cannot track. This is
-    deliberate FILTERING with fixed parameters, not MLE fitting — the
-    replayable part is the state recursion, quantized at 8 dp (the
-    6-dp rule scaled for small variance states).
-
-    Scale shape: daily rollup -> bounded return frame -> single-task
-    Arrow kernel (the Holt/Kalman posture)."""
-    d = _daily_df(spark, sf_dir)
-
-    def q8(x: float) -> float:
-        import math
-
-        v = x + 1e-11
-        s = 1.0 if v >= 0 else -1.0
-        return s * math.floor(abs(v) * 1e8 + 0.5) / 1e8
-
-    def kernel(batches):
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True).sort_values("t")
-        ys = rows["y"].tolist()
-        import math
-
-        rs = [math.log(ys[i] / ys[i - 1]) for i in range(1, len(ys))]
-        n = len(rs)
-        mr = sum(rs) / n
-        vr = sum((r - mr) ** 2 for r in rs) / n
-        om = _GARCH_W * vr
-        s2 = q8(vr)
-        mx = s2
-        for k in range(1, n):
-            s2 = q8(om + _GARCH_A * (rs[k - 1] - mr) ** 2 + _GARCH_B * s2)
-            mx = max(mx, s2)
-        yield pd.DataFrame(
-            {
-                "n_returns": pd.Series([n], dtype="int64"),
-                "omega": [q8(om)],
-                "persistence": [round(_GARCH_A + _GARCH_B, 2)],
-                "unconditional_var": [
-                    q8(om / (1.0 - _GARCH_A - _GARCH_B))
-                ],
-                "final_sigma2": [s2],
-                "max_sigma2": [mx],
-            }
-        )
-
-    schema = (
-        "n_returns long, omega double, persistence double,"
-        " unconditional_var double, final_sigma2 double,"
-        " max_sigma2 double"
-    )
-    return d.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
-_HMM_STAY = 0.8
-_HMM_EH = 0.7  # P(high | state H); P(high | state L) = 1 - _HMM_EH
-
-
-def _hmm_oracle() -> str:
-    import math
-
-    l_stay = round(math.log(_HMM_STAY), 10)
-    l_sw = round(math.log(1.0 - _HMM_STAY), 10)
-    l_eh1 = round(math.log(_HMM_EH), 10)
-    l_eh0 = round(math.log(1.0 - _HMM_EH), 10)
-    l_half = round(math.log(0.5), 10)
-    # emission log-prob for state H given obs o: o=1 -> l_eh1, o=0 -> l_eh0
-    # state L is the mirror
-    eh = f"CASE WHEN rn.o = 1 THEN {l_eh1} ELSE {l_eh0} END"
-    el = f"CASE WHEN rn.o = 1 THEN {l_eh0} ELSE {l_eh1} END"
-    dh = (
-        f"({eh}) + greatest(st.dh + {l_stay}, st.dl + {l_sw})"
-    )
-    dl = (
-        f"({el}) + greatest(st.dl + {l_stay}, st.dh + {l_sw})"
-    )
-    return f"""
-    WITH RECURSIVE {_DAILY_SQL},
-    med AS (
-      SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY y) AS m
-      FROM daily),
-    rn AS (
-      SELECT row_number() OVER (ORDER BY t) AS k,
-             CASE WHEN y > med.m THEN 1 ELSE 0 END AS o
-      FROM daily CROSS JOIN med),
-    fwd (k, dh, dl, ph, pl) AS (
-      SELECT CAST(1 AS BIGINT),
-             {_q8_sql(f"{l_half} + CASE WHEN rn.o = 1 THEN {l_eh1}"
-                      f" ELSE {l_eh0} END")},
-             {_q8_sql(f"{l_half} + CASE WHEN rn.o = 1 THEN {l_eh0}"
-                      f" ELSE {l_eh1} END")},
-             0, 0
-      FROM rn WHERE k = 1
-      UNION ALL
-      SELECT rn.k,
-             {_q8_sql(dh)},
-             {_q8_sql(dl)},
-             CASE WHEN st.dh + {l_stay} >= st.dl + {l_sw}
-                  THEN 1 ELSE 0 END,
-             CASE WHEN st.dl + {l_stay} >= st.dh + {l_sw}
-                  THEN 0 ELSE 1 END
-      FROM fwd st JOIN rn ON rn.k = st.k + 1),
-    nn AS (SELECT max(k) AS n FROM rn),
-    back (k, s) AS (
-      SELECT fwd.k,
-             CASE WHEN fwd.dh >= fwd.dl THEN 1 ELSE 0 END
-      FROM fwd CROSS JOIN nn WHERE fwd.k = nn.n
-      UNION ALL
-      SELECT back.k - 1,
-             CASE WHEN back.s = 1 THEN f2.ph ELSE f2.pl END
-      FROM back JOIN fwd f2 ON f2.k = back.k
-      WHERE back.k > 1),
-    path AS (SELECT k, s FROM back),
-    sw AS (
-      SELECT sum(CASE WHEN p1.s <> p0.s THEN 1 ELSE 0 END) AS switches
-      FROM path p1 JOIN path p0 ON p0.k = p1.k - 1),
-    fh AS (SELECT min(k) AS first_high FROM path WHERE s = 1)
-    SELECT CAST(nn.n AS BIGINT) AS n_days,
-           CAST((SELECT sum(s) FROM path) AS BIGINT) AS n_high_days,
-           CAST(sw.switches AS BIGINT) AS n_switches,
-           CAST(fh.first_high AS BIGINT) AS first_high_day,
-           round(greatest(f.dh, f.dl) + 1e-9, 6) AS viterbi_logprob
-    FROM fwd f CROSS JOIN nn CROSS JOIN sw CROSS JOIN fh
-    WHERE f.k = nn.n
-    """
-
-
-@staged("hmm_viterbi_daily_regimes", oracle=_hmm_oracle())
-def hmm_viterbi_daily_regimes(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-state HMM Viterbi decoding of daily revenue regimes: the
-    observation is 'above the median day' (exact percentile_disc cut),
-    transitions stay/switch = 0.8/0.2, emissions P(high|H) = 0.7
-    mirrored for L, uniform prior. The most-likely regime PATH (not
-    per-day filtering) via the log-space Viterbi recursion with
-    8-dp-quantized scores, then a backward pointer walk — the oracle
-    runs BOTH passes as recursive CTEs (the forward CTE's full
-    iteration history is a table, which is what makes backtracking
-    SQL-expressible). Reports regime occupancy, switch count, first
-    high-regime day, and the best-path log-probability — the
-    latent-state complement to ``entropy_rate_markov`` (observed
-    chain) and ``changepoint_binseg_daily_revenue`` (single split):
-    the HMM finds RECURRING regimes.
-
-    Scale shape: daily rollup -> bounded Arrow kernel (forward +
-    backtrack in one pass over ~30 rows)."""
-    import math as _math
-
-    d = _daily_df(spark, sf_dir)
-    l_stay = round(_math.log(_HMM_STAY), 10)
-    l_sw = round(_math.log(1.0 - _HMM_STAY), 10)
-    l_eh1 = round(_math.log(_HMM_EH), 10)
-    l_eh0 = round(_math.log(1.0 - _HMM_EH), 10)
-    l_half = round(_math.log(0.5), 10)
-
-    def q8(x: float) -> float:
-        v = x + 1e-11
-        s = 1.0 if v >= 0 else -1.0
-        return s * _math.floor(abs(v) * 1e8 + 0.5) / 1e8
-
-    def kernel(batches):
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True).sort_values("t")
-        ys = rows["y"].tolist()
-        n = len(ys)
-        med = sorted(ys)[(n - 1) // 2]  # percentile_disc(0.5)
-        obs = [1 if y > med else 0 for y in ys]
-        eh = lambda o: l_eh1 if o == 1 else l_eh0  # noqa: E731
-        el = lambda o: l_eh0 if o == 1 else l_eh1  # noqa: E731
-        dh = q8(l_half + eh(obs[0]))
-        dl = q8(l_half + el(obs[0]))
-        phs, pls = [0], [0]
-        for k in range(1, n):
-            ph = 1 if dh + l_stay >= dl + l_sw else 0
-            pl = 0 if dl + l_stay >= dh + l_sw else 1
-            ndh = q8(eh(obs[k]) + max(dh + l_stay, dl + l_sw))
-            ndl = q8(el(obs[k]) + max(dl + l_stay, dh + l_sw))
-            dh, dl = ndh, ndl
-            phs.append(ph)
-            pls.append(pl)
-        def q6v(v: float) -> float:
-            s = 1.0 if v >= 0 else -1.0
-            return s * _math.floor(abs(v) * 1e6 + 0.5) / 1e6
-
-        path = [0] * n
-        path[n - 1] = 1 if dh >= dl else 0
-        for k in range(n - 1, 0, -1):
-            path[k - 1] = phs[k] if path[k] == 1 else pls[k]
-        switches = sum(
-            1 for i in range(1, n) if path[i] != path[i - 1]
-        )
-        highs = [i + 1 for i in range(n) if path[i] == 1]
-        yield pd.DataFrame(
-            {
-                "n_days": pd.Series([n], dtype="int64"),
-                "n_high_days": pd.Series([sum(path)], dtype="int64"),
-                "n_switches": pd.Series([switches], dtype="int64"),
-                "first_high_day": pd.Series(
-                    [highs[0] if highs else None], dtype="Int64"
-                ),
-                # 6-dp floor-half-up on the signed shifted value,
-                # mirroring round(x + 1e-9, 6) on the oracle side
-                "viterbi_logprob": [q6v(max(dh, dl) + 1e-9)],
-            }
-        )
-
-    schema = (
-        "n_days long, n_high_days long, n_switches long,"
-        " first_high_day long, viterbi_logprob double"
-    )
-    return d.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
 # Shared sparsified trade graph (r12 re-base builders)
 from ror_etl_spark.queries.staged_r11 import (  # noqa: E402
     _TRADE_EDGE_CTES as _TG_CTES,
@@ -4297,9 +1216,9 @@ def mst_kruskal_trade_backbone(
     Kruskal replay over the (w DESC, a, b)-sorted 90-edge list with
     union-find labels; all weights are integer trade counts, so both
     engines walk identical decisions (the oracle carries the 25-slot
-    label list through a recursive CTE, the same state-vector trick as
-    Holt-Winters' seasonal list). At data scale the graph DERIVATION
-    is the only data-sized pass (the family's standard posture); on a
+    label list through a recursive CTE, a state-vector trick). At data
+    scale the graph DERIVATION is the only data-sized pass (the
+    family's standard posture); on a
     graph too large for this replay, the distributed algorithm is
     Boruvka rounds (per-component best edge + hash-min merge), which
     the CC/LPA kernels already demonstrate at 1e9 edges.
@@ -4344,1017 +1263,7 @@ def mst_kruskal_trade_backbone(
 
 
 # ---------------------------------------------------------------------------
-# Wave 8: entropic optimal transport, spectral graph bisection
-# ---------------------------------------------------------------------------
-
-_SK_EPS = 0.5
-_SK_ROUNDS = 6
-
-
-def _sinkhorn_oracle() -> str:
-    ctes = [
-        """marg AS MATERIALIZED (
-      SELECT CAST(substr(o.o_orderpriority, 1, 1) AS BIGINT) - 1 AS i,
-             sum(CASE WHEN n.n_regionkey = 2 THEN 1.0 ELSE 0 END) AS ca,
-             sum(CASE WHEN n.n_regionkey <> 2 THEN 1.0 ELSE 0 END) AS cb
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      GROUP BY 1)""",
-        """pq AS MATERIALIZED (
-      SELECT i, ca / (SELECT sum(ca) FROM marg) AS p,
-             cb / (SELECT sum(cb) FROM marg) AS q
-      FROM marg)""",
-        f"""kk AS MATERIALIZED (
-      SELECT a.i AS i, b.i AS j,
-             exp(-abs(a.i - b.i) / {_SK_EPS}) AS k
-      FROM pq a CROSS JOIN pq b)""",
-        """v0 AS (SELECT i AS j, 1.0 AS v FROM pq)""",
-    ]
-    for r in range(_SK_ROUNDS):
-        ctes.append(
-            f"""u{r} AS MATERIALIZED (
-      SELECT pq.i,
-             {_q8_sql(f"pq.p / kvs.s")} AS u
-      FROM pq JOIN (
-        SELECT kk.i, sum(kk.k * v{r}.v) AS s
-        FROM kk JOIN v{r} ON v{r}.j = kk.j GROUP BY kk.i) kvs
-      ON kvs.i = pq.i)"""
-        )
-        ctes.append(
-            f"""v{r + 1} AS MATERIALIZED (
-      SELECT pq.i AS j,
-             {_q8_sql(f"pq.q / kus.s")} AS v
-      FROM pq JOIN (
-        SELECT kk.j, sum(kk.k * u{r}.u) AS s
-        FROM kk JOIN u{r} ON u{r}.i = kk.i GROUP BY kk.j) kus
-      ON kus.j = pq.i)"""
-        )
-    fu, fv = f"u{_SK_ROUNDS - 1}", f"v{_SK_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    plan AS (
-      SELECT kk.i, kk.j,
-             {fu}.u * kk.k * {fv}.v AS m
-      FROM kk JOIN {fu} ON {fu}.i = kk.i
-      JOIN {fv} ON {fv}.j = kk.j),
-    cost AS (
-      SELECT sum(plan.m * abs(plan.i - plan.j)) AS ot,
-             sum(plan.m) AS mass FROM plan),
-    rowerr AS (
-      SELECT max(abs(rs.s - pq.p)) AS merr
-      FROM (SELECT i, sum(m) AS s FROM plan GROUP BY i) rs
-      JOIN pq ON pq.i = rs.i),
-    w1 AS (
-      SELECT sum(abs(cp - cq)) AS w1 FROM (
-        SELECT sum(p) OVER (ORDER BY i) AS cp,
-               sum(q) OVER (ORDER BY i) AS cq,
-               row_number() OVER (ORDER BY i) AS rn,
-               count(*) OVER () AS k
-        FROM pq) c WHERE rn < k)
-    SELECT CAST(5 AS BIGINT) AS support_size,
-           round(cost.ot + 1e-9, 6) AS sinkhorn_cost,
-           round(cost.mass + 1e-9, 6) AS plan_mass,
-           round(rowerr.merr + 1e-9, 6) AS max_marginal_err,
-           round(w1.w1 + 1e-9, 6) AS exact_w1
-    FROM cost CROSS JOIN rowerr CROSS JOIN w1
-    """
-
-
-@staged("sinkhorn_ot_priority_mix", oracle=_sinkhorn_oracle())
-def sinkhorn_ot_priority_mix(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Entropic optimal transport between the ASIA and non-ASIA
-    order-priority mixes (ordinal cost |i-j|, epsilon = 0.5): 6
-    Sinkhorn scaling rounds u <- p/(Kv), v <- q/(K'u), each scaling
-    vector quantized to 8 dp so both engines walk the same trajectory
-    (the GMM/IRLS discipline applied to matrix scaling). Reports the
-    entropic transport cost NEXT TO the exact 1-Wasserstein on the
-    same ordered support (the cumulative-difference identity the
-    registered ``wasserstein_value_click_purchase`` uses) plus the
-    worst row-marginal violation — showing exactly how converged 6
-    rounds get. OT is how distribution shift is costed when supports
-    do not align; Sinkhorn is its scalable form.
-
-    Scale shape: one fact-scan aggregate to the 5-point marginals;
-    everything else lives on 5- and 25-row frames."""
-    t = Tables(spark, sf_dir)
-    marg = (
-        t.orders.join(
-            t.customer, F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            (
-                F.substring("o_orderpriority", 1, 1).cast("long") - 1
-            ).alias("i")
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("n_regionkey") == 2, 1.0).otherwise(0.0)
-            ).alias("ca"),
-            F.sum(
-                F.when(F.col("n_regionkey") != 2, 1.0).otherwise(0.0)
-            ).alias("cb"),
-        )
-    )
-    tots = marg.agg(
-        F.sum("ca").alias("ta"), F.sum("cb").alias("tb")
-    )
-    pq = marg.crossJoin(F.broadcast(tots)).select(
-        "i",
-        (F.col("ca") / F.col("ta")).alias("p"),
-        (F.col("cb") / F.col("tb")).alias("q"),
-    )
-
-    def kernel(batches):
-        import math as _m
-
-        import pandas as pd
-
-        rows = pd.concat(list(batches), ignore_index=True).sort_values("i")
-        p = rows["p"].tolist()
-        q = rows["q"].tolist()
-        k = len(p)
-        kmat = [
-            [_m.exp(-abs(i - j) / _SK_EPS) for j in range(k)]
-            for i in range(k)
-        ]
-
-        def q8(x):
-            v = x + 1e-11
-            s = 1.0 if v >= 0 else -1.0
-            return s * _m.floor(abs(v) * 1e8 + 0.5) / 1e8
-
-        v = [1.0] * k
-        u = [1.0] * k
-        for _ in range(_SK_ROUNDS):
-            u = [
-                q8(p[i] / sum(kmat[i][j] * v[j] for j in range(k)))
-                for i in range(k)
-            ]
-            v = [
-                q8(q[j] / sum(kmat[i][j] * u[i] for i in range(k)))
-                for j in range(k)
-            ]
-        plan = [
-            [u[i] * kmat[i][j] * v[j] for j in range(k)] for i in range(k)
-        ]
-        ot = sum(
-            plan[i][j] * abs(i - j) for i in range(k) for j in range(k)
-        )
-        mass = sum(sum(row) for row in plan)
-        merr = max(abs(sum(plan[i]) - p[i]) for i in range(k))
-        cp = cq = 0.0
-        w1 = 0.0
-        for i in range(k - 1):
-            cp += p[i]
-            cq += q[i]
-            w1 += abs(cp - cq)
-
-        def r6(x):
-            v2 = x + 1e-9
-            s = 1.0 if v2 >= 0 else -1.0
-            return s * _m.floor(abs(v2) * 1e6 + 0.5) / 1e6
-
-        yield pd.DataFrame(
-            {
-                "support_size": pd.Series([k], dtype="int64"),
-                "sinkhorn_cost": [r6(ot)],
-                "plan_mass": [r6(mass)],
-                "max_marginal_err": [r6(merr)],
-                "exact_w1": [r6(w1)],
-            }
-        )
-
-    schema = (
-        "support_size long, sinkhorn_cost double, plan_mass double,"
-        " max_marginal_err double, exact_w1 double"
-    )
-    return pq.coalesce(1).mapInPandas(kernel, schema=schema)
-
-
-_SB_ROUNDS = 6
-
-
-def _bisect_oracle() -> str:
-    ctes = [
-        _TG_CTES.strip(),
-        """wdeg AS (SELECT u AS n, CAST(sum(w) AS DOUBLE) AS wd
-      FROM und GROUP BY u)""",
-        """shift AS (SELECT max(wd) + 1.0 AS c FROM wdeg)""",
-        """x0 AS (
-      SELECT wdeg.n AS id,
-             CASE WHEN wdeg.n % 2 = 0 THEN 1.0 ELSE -1.0 END AS x
-      FROM wdeg)""",
-    ]
-    for k in range(_SB_ROUNDS):
-        ctes.append(
-            f"""y{k} AS MATERIALIZED (
-      SELECT wdeg.n AS id,
-             (shift.c - wdeg.wd) * x{k}.x + coalesce(nb.s, 0.0) AS y
-      FROM wdeg CROSS JOIN shift
-      JOIN x{k} ON x{k}.id = wdeg.n
-      LEFT JOIN (
-        SELECT und.v AS id, sum(und.w * x{k}.x) AS s
-        FROM und JOIN x{k} ON x{k}.id = und.u GROUP BY und.v) nb
-      ON nb.id = wdeg.n)"""
-        )
-        ctes.append(
-            f"""z{k} AS MATERIALIZED (
-      SELECT y{k}.id, y{k}.y - (SELECT avg(y) FROM y{k}) AS z
-      FROM y{k})"""
-        )
-        ctes.append(
-            f"""x{k + 1} AS MATERIALIZED (
-      SELECT z{k}.id,
-             {_q8_sql(f"z{k}.z / (SELECT max(abs(z)) FROM z{k})")} AS x
-      FROM z{k})"""
-        )
-    fx = f"x{_SB_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    part AS (
-      SELECT id, CASE WHEN x >= 0 THEN 1 ELSE 0 END AS side
-      FROM {fx}),
-    cut AS (
-      SELECT sum(e0.w) AS cw FROM e0
-      JOIN part pa ON pa.id = e0.a
-      JOIN part pb ON pb.id = e0.b
-      WHERE pa.side <> pb.side),
-    sizes AS (
-      SELECT sum(side) AS na, count(*) - sum(side) AS nb FROM part)
-    SELECT CAST(sizes.na AS BIGINT) AS n_side_a,
-           CAST(sizes.nb AS BIGINT) AS n_side_b,
-           CAST(coalesce(cut.cw, 0) AS BIGINT) AS cut_weight
-    FROM sizes CROSS JOIN cut
-    """
-
-
-@staged("spectral_bisection_trade", oracle=_bisect_oracle())
-def spectral_bisection_trade(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Spectral bisection of the weighted trade graph: 6 quantized
-    power-iteration rounds on the shifted Laplacian cI - L (c = max
-    weighted degree + 1, whose top eigenvector is the Fiedler vector
-    once the constant component is deflated — the per-round
-    mean-subtraction), parity-seeded, max-abs normalized and 8-dp
-    quantized per round (the registered PCA/HITS trajectory
-    discipline). Nations split by the sign of the converged vector;
-    reports the side sizes and the weight of the cut — the
-    graph-partitioning primitive behind min-cut data placement, on
-    the same graph family as PPR/k-truss/SSSP.
-
-    Scale shape: per round one edge-join shuffle + node-sized frames;
-    the graph derivation is the only data-sized pass."""
-    _, und, _ = _tg_edges(Tables(spark, sf_dir))
-    e0 = und.filter(F.col("u") < F.col("v")).select(
-        F.col("u").alias("a"), F.col("v").alias("b"), "w"
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    wdeg = und.groupBy(F.col("u").alias("n")).agg(
-        F.sum("w").cast("double").alias("wd")
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    shift = wdeg.agg((F.max("wd") + 1.0).alias("c"))
-    x = wdeg.select(
-        F.col("n").alias("id"),
-        F.when(F.col("n") % 2 == 0, 1.0).otherwise(-1.0).alias("x"),
-    )
-
-    def q8c(c):
-        v = c + 1e-11
-        return F.when(
-            v >= 0, F.floor(v * 1e8 + F.lit(0.5)) / 1e8
-        ).otherwise(-F.floor(-v * 1e8 + F.lit(0.5)) / 1e8)
-
-    for _ in range(_SB_ROUNDS):
-        nb = (
-            und.join(x.withColumnRenamed("id", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("x")).alias("s"))
-        )
-        y = (
-            wdeg.crossJoin(F.broadcast(shift))
-            .join(x.withColumnRenamed("id", "nid"), F.col("n") == F.col("nid"))
-            .join(nb.withColumnRenamed("id", "bid"),
-                  F.col("n") == F.col("bid"), "left")
-            .select(
-                F.col("n").alias("id"),
-                (
-                    (F.col("c") - F.col("wd")) * F.col("x")
-                    + F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("y"),
-            )
-        )
-        mu = y.agg(F.avg("y").alias("m"))
-        z = y.crossJoin(F.broadcast(mu)).select(
-            "id", (F.col("y") - F.col("m")).alias("z")
-        )
-        mx = z.agg(F.max(F.abs(F.col("z"))).alias("mz"))
-        x = (
-            z.crossJoin(F.broadcast(mx))
-            .select("id", q8c(F.col("z") / F.col("mz")).alias("x"))
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-    part = x.select(
-        "id", F.when(F.col("x") >= 0, 1).otherwise(0).alias("side")
-    )
-    cut = (
-        e0.join(part.withColumnRenamed("id", "a").withColumnRenamed("side", "sa"), "a")
-        .join(part.withColumnRenamed("id", "b").withColumnRenamed("side", "sb"), "b")
-        .filter(F.col("sa") != F.col("sb"))
-        .agg(F.sum("w").alias("cw"))
-    )
-    sizes = part.agg(
-        F.sum("side").cast("long").alias("n_side_a"),
-        (F.count(F.lit(1)) - F.sum("side")).cast("long").alias("n_side_b"),
-    )
-    return sizes.crossJoin(F.broadcast(cut)).select(
-        "n_side_a",
-        "n_side_b",
-        F.coalesce(F.col("cw"), F.lit(0)).cast("long").alias("cut_weight"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 9: graph mixing, robustness, temporal comparison, second PC
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "region_homophily_trade",
-    oracle=f"""
-    WITH {_TG_CTES.strip()},
-    lab AS (
-      SELECT n_nationkey AS nk, n_regionkey AS rg FROM nation),
-    mix AS (
-      SELECT la.rg AS ri, lb.rg AS rj, CAST(sum(e0.w) AS DOUBLE) AS w
-      FROM e0
-      JOIN lab la ON la.nk = e0.a
-      JOIN lab lb ON lb.nk = e0.b
-      GROUP BY la.rg, lb.rg),
-    tot AS (SELECT sum(w) AS tw FROM mix),
-    eii AS (
-      SELECT sum(CASE WHEN ri = rj THEN w ELSE 0 END) / tot.tw AS diag
-      FROM mix CROSS JOIN tot GROUP BY tot.tw),
-    margs AS (
-      SELECT r, sum(ai) AS a, sum(bi) AS b FROM (
-        SELECT ri AS r, w / tot.tw AS ai, 0.0 AS bi
-        FROM mix CROSS JOIN tot
-        UNION ALL
-        SELECT rj AS r, 0.0 AS ai, w / tot.tw AS bi
-        FROM mix CROSS JOIN tot)
-      GROUP BY r),
-    ab AS (SELECT sum(a * b) AS sab FROM margs)
-    SELECT CAST((SELECT count(*) FROM mix) AS BIGINT) AS n_mix_cells,
-           round(eii.diag + 1e-9, 6) AS same_region_share,
-           round(ab.sab + 1e-9, 6) AS expected_share,
-           round((eii.diag - ab.sab) / (1.0 - ab.sab) + 1e-9, 6)
-             AS homophily_r
-    FROM eii CROSS JOIN ab
-    """,
-)
-def region_homophily_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman attribute-assortativity (homophily) of the trade graph
-    by REGION: from the weighted mixing matrix e_ij (region of the
-    lesser endpoint x region of the greater), r = (sum e_ii - sum
-    a_i b_i)/(1 - sum a_i b_i). Positive r = nations trade within
-    their region; negative = cross-region backbone. The CATEGORICAL
-    companion to ``degree_assortativity_trade`` (numeric attribute) —
-    a different question on the same edges: homophily of WHAT a node
-    is, not how connected it is.
-
-    Scale shape: edge derivation + region-domain-bounded (5x5) mixing
-    aggregates."""
-    e0, _, _ = _tg_edges(Tables(spark, sf_dir))
-    lab = Tables(spark, sf_dir).nation.select(
-        F.col("n_nationkey").alias("nk"), F.col("n_regionkey").alias("rg")
-    )
-    mix = (
-        e0.join(
-            F.broadcast(lab.withColumnRenamed("nk", "a").withColumnRenamed("rg", "ri")),
-            "a",
-        )
-        .join(
-            F.broadcast(lab.withColumnRenamed("nk", "b").withColumnRenamed("rg", "rj")),
-            "b",
-        )
-        .groupBy("ri", "rj")
-        .agg(F.sum("w").cast("double").alias("w"))
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    tot = mix.agg(F.sum("w").alias("tw"))
-    mt = mix.crossJoin(F.broadcast(tot))
-    diag = mt.agg(
-        (
-            F.sum(F.when(F.col("ri") == F.col("rj"), F.col("w")).otherwise(0.0))
-            / F.max("tw")
-        ).alias("diag"),
-        F.count(F.lit(1)).cast("long").alias("n_mix_cells"),
-    )
-    ai = mt.groupBy(F.col("ri").alias("r")).agg(
-        (F.sum("w") / F.max("tw")).alias("a")
-    )
-    bi = mt.groupBy(F.col("rj").alias("r")).agg(
-        (F.sum("w") / F.max("tw")).alias("b")
-    )
-    ab = (
-        ai.join(bi, "r", "full")
-        .select(
-            (
-                F.coalesce(F.col("a"), F.lit(0.0))
-                * F.coalesce(F.col("b"), F.lit(0.0))
-            ).alias("p")
-        )
-        .agg(F.sum("p").alias("sab"))
-    )
-    return diag.crossJoin(F.broadcast(ab)).select(
-        "n_mix_cells",
-        F.round(F.col("diag") + 1e-9, 6).alias("same_region_share"),
-        F.round(F.col("sab") + 1e-9, 6).alias("expected_share"),
-        F.round(
-            (F.col("diag") - F.col("sab")) / (1.0 - F.col("sab")) + 1e-9, 6
-        ).alias("homophily_r"),
-    )
-
-
-@staged(
-    "trade_percolation_sweep",
-    oracle=f"""
-    WITH {_TG_CTES.strip()},
-    qs AS (
-      SELECT 0.0 AS q,
-             (SELECT percentile_disc(0.0) WITHIN GROUP (ORDER BY w)
-              FROM e0) AS thr
-      UNION ALL SELECT 0.25,
-        (SELECT percentile_disc(0.25) WITHIN GROUP (ORDER BY w) FROM e0)
-      UNION ALL SELECT 0.5,
-        (SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY w) FROM e0)
-      UNION ALL SELECT 0.75,
-        (SELECT percentile_disc(0.75) WITHIN GROUP (ORDER BY w) FROM e0)),
-    surv AS (
-      SELECT qs.q, qs.thr, e0.a, e0.b
-      FROM qs JOIN e0 ON e0.w >= qs.thr),
-    nodes AS (
-      SELECT DISTINCT q, thr, n FROM (
-        SELECT q, thr, a AS n FROM surv
-        UNION ALL SELECT q, thr, b AS n FROM surv)),
-    l0 AS (SELECT q, n, n AS lab FROM nodes),
-    l1 AS MATERIALIZED (
-      SELECT l0.q, l0.n, least(l0.lab, coalesce(mn.m, l0.lab)) AS lab
-      FROM l0 LEFT JOIN (
-        SELECT s.q, e.n, min(s.lab) AS m FROM (
-          SELECT q, a AS n, b AS o FROM surv
-          UNION ALL SELECT q, b AS n, a AS o FROM surv) e
-        JOIN l0 s ON s.q = e.q AND s.n = e.o GROUP BY s.q, e.n) mn
-      ON mn.q = l0.q AND mn.n = l0.n),
-    l2 AS MATERIALIZED (
-      SELECT l1.q, l1.n, least(l1.lab, coalesce(mn.m, l1.lab)) AS lab
-      FROM l1 LEFT JOIN (
-        SELECT s.q, e.n, min(s.lab) AS m FROM (
-          SELECT q, a AS n, b AS o FROM surv
-          UNION ALL SELECT q, b AS n, a AS o FROM surv) e
-        JOIN l1 s ON s.q = e.q AND s.n = e.o GROUP BY s.q, e.n) mn
-      ON mn.q = l1.q AND mn.n = l1.n),
-    l3 AS MATERIALIZED (
-      SELECT l2.q, l2.n, least(l2.lab, coalesce(mn.m, l2.lab)) AS lab
-      FROM l2 LEFT JOIN (
-        SELECT s.q, e.n, min(s.lab) AS m FROM (
-          SELECT q, a AS n, b AS o FROM surv
-          UNION ALL SELECT q, b AS n, a AS o FROM surv) e
-        JOIN l2 s ON s.q = e.q AND s.n = e.o GROUP BY s.q, e.n) mn
-      ON mn.q = l2.q AND mn.n = l2.n),
-    l4 AS MATERIALIZED (
-      SELECT l3.q, l3.n, least(l3.lab, coalesce(mn.m, l3.lab)) AS lab
-      FROM l3 LEFT JOIN (
-        SELECT s.q, e.n, min(s.lab) AS m FROM (
-          SELECT q, a AS n, b AS o FROM surv
-          UNION ALL SELECT q, b AS n, a AS o FROM surv) e
-        JOIN l3 s ON s.q = e.q AND s.n = e.o GROUP BY s.q, e.n) mn
-      ON mn.q = l3.q AND mn.n = l3.n),
-    l5 AS MATERIALIZED (
-      SELECT l4.q, l4.n, least(l4.lab, coalesce(mn.m, l4.lab)) AS lab
-      FROM l4 LEFT JOIN (
-        SELECT s.q, e.n, min(s.lab) AS m FROM (
-          SELECT q, a AS n, b AS o FROM surv
-          UNION ALL SELECT q, b AS n, a AS o FROM surv) e
-        JOIN l4 s ON s.q = e.q AND s.n = e.o GROUP BY s.q, e.n) mn
-      ON mn.q = l4.q AND mn.n = l4.n),
-    comp AS (
-      SELECT q, count(DISTINCT lab) AS nc, count(*) AS nn,
-             max(cnt) AS giant FROM (
-        SELECT q, lab, count(*) OVER (PARTITION BY q, lab) AS cnt
-        FROM l5) GROUP BY q),
-    ecnt AS (SELECT q, count(*) AS ne FROM surv GROUP BY q)
-    SELECT comp.q AS quantile,
-           CAST(ecnt.ne AS BIGINT) AS n_edges,
-           CAST(comp.nn AS BIGINT) AS n_nodes,
-           CAST(comp.nc AS BIGINT) AS n_components,
-           CAST(comp.giant AS BIGINT) AS giant_size
-    FROM comp JOIN ecnt ON ecnt.q = comp.q
-    ORDER BY comp.q
-    """,
-)
-def trade_percolation_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bond-percolation robustness sweep of the trade graph: at each
-    weight-quantile threshold q in {0, .25, .5, .75}, keep only edges
-    with w >= percentile_disc(q), then count surviving nodes,
-    connected components (5 unrolled min-label rounds — enough for
-    the sparsified graph's diameter, pinned by the convergence test),
-    and the giant-component size. The robustness curve answers 'how
-    much trade can vanish before the network fragments' — the
-    graph-level complement to ``mst_kruskal_trade_backbone`` (the
-    minimal connector) and the percolation framing of k-core.
-
-    Scale shape: ONE edge derivation; the sweep replicates only the
-    90-edge frame per threshold (bounded x 4), labels are node-sized."""
-    e0, _, _ = _tg_edges(Tables(spark, sf_dir))
-    e0 = e0.localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    qs = None
-    sp = e0.sparkSession
-    rows = []
-    for q in (0.0, 0.25, 0.5, 0.75):
-        thr = e0.agg(
-            F.expr(
-                f"percentile_disc({q}) WITHIN GROUP (ORDER BY w)"
-            ).alias("thr")
-        ).select(F.lit(q).alias("q"), "thr")
-        rows.append(thr)
-    qs = rows[0]
-    for r in rows[1:]:
-        qs = qs.unionAll(r)
-    qs = F.broadcast(qs)
-    surv = qs.join(e0, F.col("w") >= F.col("thr")).select(
-        "q", "a", "b"
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    nodes = (
-        surv.select("q", F.col("a").alias("n"))
-        .unionAll(surv.select("q", F.col("b").alias("n")))
-        .distinct()
-    )
-    und2 = surv.select("q", F.col("a").alias("n"), F.col("b").alias("o")).unionAll(
-        surv.select("q", F.col("b").alias("n"), F.col("a").alias("o"))
-    )
-    lab = nodes.select("q", "n", F.col("n").alias("lab"))
-    for _ in range(5):
-        mn = (
-            und2.join(
-                lab.select(
-                    F.col("q").alias("q2"),
-                    F.col("n").alias("o2"),
-                    F.col("lab").alias("ol"),
-                ),
-                (F.col("q") == F.col("q2")) & (F.col("o") == F.col("o2")),
-            )
-            .groupBy("q", "n")
-            .agg(F.min("ol").alias("m"))
-        )
-        lab = (
-            lab.join(
-                mn.select(
-                    F.col("q").alias("q3"),
-                    F.col("n").alias("n3"),
-                    "m",
-                ),
-                (lab["q"] == F.col("q3")) & (lab["n"] == F.col("n3")),
-                "left",
-            )
-            .select(
-                lab["q"],
-                lab["n"],
-                F.least(
-                    F.col("lab"), F.coalesce(F.col("m"), F.col("lab"))
-                ).alias("lab"),
-            )
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-    sizes = lab.groupBy("q", "lab").agg(F.count(F.lit(1)).alias("cnt"))
-    comp = sizes.groupBy("q").agg(
-        F.count(F.lit(1)).cast("long").alias("n_components"),
-        F.sum("cnt").cast("long").alias("n_nodes"),
-        F.max("cnt").cast("long").alias("giant_size"),
-    )
-    ecnt = surv.groupBy("q").agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        comp.join(ecnt, "q")
-        .select(
-            F.col("q").alias("quantile"),
-            "n_edges",
-            "n_nodes",
-            "n_components",
-            "giant_size",
-        )
-        .orderBy("quantile")
-    )
-
-
-def _period_edges_sql(pred: str, alias: str) -> str:
-    return f"""{alias} AS MATERIALIZED (
-      SELECT a, b, w FROM (
-        SELECT least(s.s_nationkey, c.c_nationkey) AS a,
-               greatest(s.s_nationkey, c.c_nationkey) AS b,
-               count(*) AS w,
-               row_number() OVER (ORDER BY count(*) DESC,
-                 least(s.s_nationkey, c.c_nationkey),
-                 greatest(s.s_nationkey, c.c_nationkey)) AS rn
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE s.s_nationkey <> c.c_nationkey AND ({pred})
-        GROUP BY 1, 2)
-      WHERE rn <= 45)"""
-
-
-@staged(
-    "trade_graph_period_jaccard",
-    oracle=f"""
-    WITH {_period_edges_sql("o.o_orderdate < TIMESTAMP '1998-01-01'", "ea")},
-    {_period_edges_sql("o.o_orderdate >= TIMESTAMP '1998-01-01'", "eb")},
-    inter AS (
-      SELECT ea.a, ea.b, ea.w AS wa, eb.w AS wb
-      FROM ea JOIN eb ON eb.a = ea.a AND eb.b = ea.b),
-    sizes AS (
-      SELECT (SELECT count(*) FROM ea) AS na,
-             (SELECT count(*) FROM eb) AS nb,
-             (SELECT count(*) FROM inter) AS ni),
-    corr_i AS (
-      SELECT CASE WHEN count(*) > 2
-                  THEN round(corr(wa, wb) + 1e-9, 6) END AS wcorr
-      FROM inter)
-    SELECT CAST(sizes.na AS BIGINT) AS edges_pre,
-           CAST(sizes.nb AS BIGINT) AS edges_post,
-           CAST(sizes.ni AS BIGINT) AS edges_shared,
-           round(sizes.ni * 1.0 / (sizes.na + sizes.nb - sizes.ni)
-                 + 1e-9, 6) AS edge_jaccard,
-           corr_i.wcorr AS weight_corr_shared
-    FROM sizes CROSS JOIN corr_i
-    """,
-)
-def trade_graph_period_jaccard(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Temporal graph stability: derive the top-45 trade edges
-    separately for orders BEFORE and FROM 1998 (the midpoint of the
-    1995-2001 order window), then measure the edge
-    -set Jaccard and the weight correlation on the shared edges. High
-    Jaccard + high correlation = a stable backbone whose graph ops
-    (PageRank, k-truss, MST) can be computed incrementally; low =
-    the graph must be re-derived per period. The temporal-drift
-    counterpart of ``corpus_drift_psi`` for GRAPH-shaped state.
-
-    Scale shape: two period-filtered fact-scan aggregates (each the
-    standard edge derivation with a domain-bounded top-45 window),
-    then everything is 45-row algebra."""
-    t = Tables(spark, sf_dir)
-
-    def period(pred):
-        pw = (
-            t.lineitem.join(
-                t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-            )
-            .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-            .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-            .filter(
-                (F.col("s_nationkey") != F.col("c_nationkey")) & pred
-            )
-            .groupBy(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        return (
-            pw.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.orderBy(F.desc("w"), F.asc("a"), F.asc("b"))
-                ),
-            )
-            .filter(F.col("rn") <= 45)
-            .select("a", "b", "w")
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-
-    cut = F.lit("1998-01-01").cast("timestamp_ntz")
-    ea = period(F.col("o_orderdate") < cut)
-    eb = period(F.col("o_orderdate") >= cut)
-    inter = ea.join(
-        eb.select(
-            F.col("a").alias("a2"),
-            F.col("b").alias("b2"),
-            F.col("w").alias("wb"),
-        ),
-        (F.col("a") == F.col("a2")) & (F.col("b") == F.col("b2")),
-    ).select(F.col("w").alias("wa"), "wb")
-    na = ea.agg(F.count(F.lit(1)).alias("na"))
-    nb = eb.agg(F.count(F.lit(1)).alias("nb"))
-    ii = inter.agg(
-        F.count(F.lit(1)).alias("ni"),
-        F.when(
-            F.count(F.lit(1)) > 2,
-            F.round(F.corr("wa", "wb") + 1e-9, 6),
-        ).alias("wcorr"),
-    )
-    return (
-        na.crossJoin(F.broadcast(nb))
-        .crossJoin(F.broadcast(ii))
-        .select(
-            F.col("na").cast("long").alias("edges_pre"),
-            F.col("nb").cast("long").alias("edges_post"),
-            F.col("ni").cast("long").alias("edges_shared"),
-            F.round(
-                F.col("ni")
-                / (F.col("na") + F.col("nb") - F.col("ni"))
-                + 1e-9,
-                6,
-            ).alias("edge_jaccard"),
-            F.col("wcorr").alias("weight_corr_shared"),
-        )
-    )
-
-
-_PCA2_ITERS = 3
-_PCA2_ROUND = 8
-
-
-def _pca2_oracle() -> str:
-    ctes = [
-        """ex AS (
-      SELECT vec_id, idx.i AS i,
-             CAST(embedding AS DOUBLE[])[idx.i] AS val
-      FROM embeddings, (SELECT unnest(range(1, 65)) AS i) idx)""",
-        """mu AS (SELECT i, avg(val) AS m FROM ex GROUP BY i)""",
-        """xc AS MATERIALIZED (
-      SELECT ex.vec_id, ex.i, ex.val - mu.m AS x
-      FROM ex JOIN mu ON mu.i = ex.i)""",
-        """v0 AS (SELECT unnest(range(1, 65)) AS i, 0.125 AS v)""",
-    ]
-    # first PC: the registered 3-round recipe
-    for k in range(_PCA2_ITERS):
-        ctes.append(
-            f"""s{k} AS MATERIALIZED (
-      SELECT xc.vec_id, sum(xc.x * v{k}.v) AS s
-      FROM xc JOIN v{k} ON v{k}.i = xc.i GROUP BY xc.vec_id)"""
-        )
-        ctes.append(
-            f"""w{k} AS MATERIALIZED (
-      SELECT xc.i, sum(xc.x * s{k}.s) AS w
-      FROM xc JOIN s{k} ON s{k}.vec_id = xc.vec_id GROUP BY xc.i)"""
-        )
-        ctes.append(
-            f"""v{k + 1} AS MATERIALIZED (
-      SELECT i, round(w / max(abs(w)) OVER () + 1e-12, {_PCA2_ROUND})
-               AS v
-      FROM w{k})"""
-        )
-    v1 = f"v{_PCA2_ITERS}"
-    # second PC: same action + projection deflation against v1
-    ctes.append(
-        """u0 AS (
-      SELECT unnest(range(1, 65)) AS i,
-             CASE WHEN (unnest(range(1, 65))) % 2 = 0
-                  THEN 0.125 ELSE -0.125 END AS v)"""
-    )
-    for k in range(_PCA2_ITERS):
-        ctes.append(
-            f"""t{k} AS MATERIALIZED (
-      SELECT xc.vec_id, sum(xc.x * u{k}.v) AS s
-      FROM xc JOIN u{k} ON u{k}.i = xc.i GROUP BY xc.vec_id)"""
-        )
-        ctes.append(
-            f"""y{k} AS MATERIALIZED (
-      SELECT xc.i, sum(xc.x * t{k}.s) AS w
-      FROM xc JOIN t{k} ON t{k}.vec_id = xc.vec_id GROUP BY xc.i)"""
-        )
-        ctes.append(
-            f"""p{k} AS MATERIALIZED (
-      SELECT (SELECT sum(y{k}.w * {v1}.v)
-              FROM y{k} JOIN {v1} ON {v1}.i = y{k}.i)
-             / (SELECT sum(v * v) FROM {v1}) AS pr)"""
-        )
-        ctes.append(
-            f"""d{k} AS MATERIALIZED (
-      SELECT y{k}.i, y{k}.w - p{k}.pr * {v1}.v AS w
-      FROM y{k} JOIN {v1} ON {v1}.i = y{k}.i CROSS JOIN p{k})"""
-        )
-        ctes.append(
-            f"""u{k + 1} AS MATERIALIZED (
-      SELECT i, round(w / max(abs(w)) OVER () + 1e-12, {_PCA2_ROUND})
-               AS v
-      FROM d{k})"""
-        )
-    v2 = f"u{_PCA2_ITERS}"
-    ctes.append(
-        f"""sf1 AS (
-      SELECT xc.vec_id, sum(xc.x * f.v) AS s
-      FROM xc JOIN {v1} f ON f.i = xc.i GROUP BY xc.vec_id)"""
-    )
-    ctes.append(
-        f"""sf2 AS (
-      SELECT xc.vec_id, sum(xc.x * f.v) AS s
-      FROM xc JOIN {v2} f ON f.i = xc.i GROUP BY xc.vec_id)"""
-    )
-    ctes.append(
-        f"""lams AS (
-      SELECT (SELECT sum(s * s) / count(*) FROM sf1)
-             / (SELECT sum(v * v) FROM {v1}) AS l1,
-             (SELECT sum(s * s) / count(*) FROM sf2)
-             / (SELECT sum(v * v) FROM {v2}) AS l2)"""
-    )
-    ctes.append(
-        """tv AS (SELECT sum(x * x)
-                   / (SELECT count(DISTINCT vec_id) FROM xc) AS t
-                  FROM xc)"""
-    )
-    ctes.append(
-        f"""ortho AS (
-      SELECT abs((SELECT sum(a.v * b.v)
-                  FROM {v1} a JOIN {v2} b ON b.i = a.i))
-             / sqrt((SELECT sum(v * v) FROM {v1})
-                    * (SELECT sum(v * v) FROM {v2})) AS c)"""
-    )
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined}
-    SELECT CAST(64 AS BIGINT) AS dim,
-           round(lams.l1 + 1e-9, 4) AS lambda1,
-           round(lams.l2 + 1e-9, 4) AS lambda2,
-           round(lams.l1 / tv.t + 1e-9, 6) AS evr1,
-           round(lams.l2 / tv.t + 1e-9, 6) AS evr2,
-           round(ortho.c + 1e-9, 6) AS v1_v2_cos
-    FROM lams CROSS JOIN tv CROSS JOIN ortho
-    """
-
-
-@staged("embedding_pca2_deflation", oracle=_pca2_oracle())
-def embedding_pca2_deflation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SECOND principal component of the embedding covariance via
-    projection deflation: the registered 3-round quantized power
-    iteration produces v1, then a second parity-seeded iteration runs
-    the same centered action with the v1-component projected out
-    after every multiply (for symmetric C, projection deflation ==
-    matrix deflation without materializing C). Reports both Rayleigh
-    eigenvalues, their explained-variance ratios, and |cos(v1, v2)|
-    — the orthogonality witness that the deflation actually worked
-    (the staging pin requires it ~ 0). Extends
-    ``embedding_pca_power_iteration`` (top PC only) toward a true
-    spectral profile, still without any matrix library.
-
-    Scale shape: per round two narrow-row aggregates over the
-    exploded frame (the registered PCA posture); deflation adds one
-    64-row projection per round. State is always dim-sized."""
-    emb = Tables(spark, sf_dir).embeddings
-    ex = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform("embedding", lambda x: x.cast("double"))
-        ).alias("i0", "val"),
-    ).select("vec_id", (F.col("i0") + 1).alias("i"), "val")
-    mu = ex.groupBy("i").agg(F.avg("val").alias("m"))
-    xc = (
-        ex.join(F.broadcast(mu), "i")
-        .select("vec_id", "i", (F.col("val") - F.col("m")).alias("x"))
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-
-    def q8c(c):
-        v = c + 1e-12
-        return F.when(
-            v >= 0, F.floor(v * 1e8 + F.lit(0.5)) / 1e8
-        ).otherwise(-F.floor(-v * 1e8 + F.lit(0.5)) / 1e8)
-
-    def one_round(vec, deflate_against=None):
-        s = (
-            xc.join(F.broadcast(vec), "i")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("x") * F.col("v")).alias("s"))
-        )
-        w = (
-            xc.join(s, "vec_id")
-            .groupBy("i")
-            .agg(F.sum(F.col("x") * F.col("s")).alias("w"))
-        )
-        if deflate_against is not None:
-            v1n = deflate_against.agg(
-                F.sum(F.col("v") * F.col("v")).alias("nn")
-            )
-            pr = (
-                w.join(
-                    F.broadcast(
-                        deflate_against.select(
-                            F.col("i").alias("i1"), F.col("v").alias("v1")
-                        )
-                    ),
-                    F.col("i") == F.col("i1"),
-                )
-                .crossJoin(F.broadcast(v1n))
-                .agg(
-                    (F.sum(F.col("w") * F.col("v1")) / F.max("nn")).alias(
-                        "pr"
-                    )
-                )
-            )
-            w = (
-                w.join(
-                    F.broadcast(
-                        deflate_against.select(
-                            F.col("i").alias("i1"), F.col("v").alias("v1")
-                        )
-                    ),
-                    F.col("i") == F.col("i1"),
-                )
-                .crossJoin(F.broadcast(pr))
-                .select(
-                    "i",
-                    (F.col("w") - F.col("pr") * F.col("v1")).alias("w"),
-                )
-            )
-        mx = w.agg(F.max(F.abs(F.col("w"))).alias("mw"))
-        return (
-            w.crossJoin(F.broadcast(mx))
-            .select("i", q8c(F.col("w") / F.col("mw")).alias("v"))
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-
-    ss = emb.sparkSession
-    v = ss.range(1, 65).select(
-        F.col("id").alias("i"), F.lit(0.125).alias("v")
-    )
-    for _ in range(_PCA2_ITERS):
-        v = one_round(v)
-    v1 = v
-    u = ss.range(1, 65).select(
-        F.col("id").alias("i"),
-        F.when(F.col("id") % 2 == 0, 0.125).otherwise(-0.125).alias("v"),
-    )
-    for _ in range(_PCA2_ITERS):
-        u = one_round(u, deflate_against=v1)
-    v2 = u
-
-    def rayleigh(vec):
-        s = (
-            xc.join(F.broadcast(vec), "i")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("x") * F.col("v")).alias("s"))
-        )
-        num = s.agg(
-            (F.sum(F.col("s") * F.col("s")) / F.count(F.lit(1))).alias("n2")
-        )
-        den = vec.agg(F.sum(F.col("v") * F.col("v")).alias("d2"))
-        return num.crossJoin(F.broadcast(den)).select(
-            (F.col("n2") / F.col("d2")).alias("l")
-        )
-
-    l1 = rayleigh(v1).select(F.col("l").alias("l1"))
-    l2 = rayleigh(v2).select(F.col("l").alias("l2"))
-    nv = emb.agg(F.countDistinct("vec_id").alias("nv"))
-    tv = (
-        xc.agg(F.sum(F.col("x") * F.col("x")).alias("sx"))
-        .crossJoin(F.broadcast(nv))
-        .select((F.col("sx") / F.col("nv")).alias("t"))
-    )
-    dot = (
-        v1.select(F.col("i").alias("i1"), F.col("v").alias("va"))
-        .join(
-            v2.select(F.col("i").alias("i2"), F.col("v").alias("vb")),
-            F.col("i1") == F.col("i2"),
-        )
-        .agg(F.sum(F.col("va") * F.col("vb")).alias("d"))
-    )
-    n1 = v1.agg(F.sum(F.col("v") * F.col("v")).alias("na"))
-    n2 = v2.agg(F.sum(F.col("v") * F.col("v")).alias("nb"))
-    ortho = (
-        dot.crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(n2))
-        .select(
-            (
-                F.abs(F.col("d")) / F.sqrt(F.col("na") * F.col("nb"))
-            ).alias("c")
-        )
-    )
-    return (
-        l1.crossJoin(F.broadcast(l2))
-        .crossJoin(F.broadcast(tv))
-        .crossJoin(F.broadcast(ortho))
-        .select(
-            F.lit(64).cast("long").alias("dim"),
-            F.round(F.col("l1") + 1e-9, 4).alias("lambda1"),
-            F.round(F.col("l2") + 1e-9, 4).alias("lambda2"),
-            F.round(F.col("l1") / F.col("t") + 1e-9, 6).alias("evr1"),
-            F.round(F.col("l2") / F.col("t") + 1e-9, 6).alias("evr2"),
-            F.round(F.col("c") + 1e-9, 6).alias("v1_v2_cos"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 10: zero-inflated counts, two-way fixed effects
+# Zero-inflated counts, lexical diversity, rank shift, Katz, Taylor's law
 # ---------------------------------------------------------------------------
 
 
@@ -5448,286 +1357,6 @@ def zero_inflated_poisson_errors(
             + 1e-9,
             6,
         ).alias("zip_p0_implied"),
-    )
-
-
-_FE_ROUNDS = 3
-
-
-def _twfe_oracle() -> str:
-    ctes = [
-        """base AS MATERIALIZED (
-      SELECT l_partkey AS pk,
-             CAST(date_trunc('month', l_shipdate) AS DATE) AS mo,
-             ln(l_quantity) AS y,
-             ln(l_extendedprice / l_quantity) AS x
-      FROM lineitem)""",
-        """r0 AS MATERIALIZED (SELECT pk, mo, y, x FROM base)""",
-    ]
-    for k in range(_FE_ROUNDS):
-        ctes.append(
-            f"""gp{k} AS MATERIALIZED (
-      SELECT pk, round(avg(y) + 1e-12, 8) AS my,
-             round(avg(x) + 1e-12, 8) AS mx
-      FROM r{k} GROUP BY pk)"""
-        )
-        ctes.append(
-            f"""rp{k} AS MATERIALIZED (
-      SELECT r{k}.pk, r{k}.mo, r{k}.y - gp{k}.my AS y,
-             r{k}.x - gp{k}.mx AS x
-      FROM r{k} JOIN gp{k} ON gp{k}.pk = r{k}.pk)"""
-        )
-        ctes.append(
-            f"""gm{k} AS MATERIALIZED (
-      SELECT mo, round(avg(y) + 1e-12, 8) AS my,
-             round(avg(x) + 1e-12, 8) AS mx
-      FROM rp{k} GROUP BY mo)"""
-        )
-        ctes.append(
-            f"""r{k + 1} AS MATERIALIZED (
-      SELECT rp{k}.pk, rp{k}.mo, rp{k}.y - gm{k}.my AS y,
-             rp{k}.x - gm{k}.mx AS x
-      FROM rp{k} JOIN gm{k} ON gm{k}.mo = rp{k}.mo)"""
-        )
-    fin = f"r{_FE_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    pooled AS (
-      SELECT covar_pop(x, y) / var_pop(x) AS b FROM base),
-    within AS (
-      SELECT sum(x * y) / sum(x * x) AS b,
-             count(*) AS n FROM {fin}),
-    dims AS (
-      SELECT (SELECT count(DISTINCT pk) FROM base) AS np,
-             (SELECT count(DISTINCT mo) FROM base) AS nm)
-    SELECT CAST(within.n AS BIGINT) AS n_rows,
-           CAST(dims.np AS BIGINT) AS n_part_groups,
-           CAST(dims.nm AS BIGINT) AS n_month_groups,
-           round(within.b + 1e-9, 6) AS beta_within,
-           round(pooled.b + 1e-9, 6) AS beta_pooled
-    FROM within CROSS JOIN pooled CROSS JOIN dims
-    """
-
-
-@staged("twfe_price_qty_elasticity", oracle=_twfe_oracle())
-def twfe_price_qty_elasticity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-way fixed-effects (part + ship-month) price elasticity of
-    quantity: the within estimator via THREE alternating-demeaning
-    rounds (part means, then month means, repeated — the alternating
-    -projections solution to the unbalanced two-way FE problem; group
-    means are quantized to 8 dp each pass so both engines subtract
-    identical values), then slope = sum xy / sum xx on the residuals,
-    reported against the pooled OLS slope. The panel-econometrics
-    workhorse: 'within part and month, does a higher unit price mean
-    a lower quantity' — confounds that IPTW/AIPW address with
-    covariates are absorbed here by the fixed effects themselves.
-
-    Scale shape: each demeaning pass is one partial-agg groupBy + one
-    broadcast-or-shuffle join, all narrow columns; 3 rounds = 6
-    passes, the honest cost of unbalanced two-way FE at 100 TB (a
-    balanced panel would close in one)."""
-    li = Tables(spark, sf_dir).lineitem
-    base = li.select(
-        F.col("l_partkey").alias("pk"),
-        F.date_trunc("month", "l_shipdate").cast("date").alias("mo"),
-        F.log(F.col("l_quantity")).alias("y"),
-        F.log(F.col("l_extendedprice") / F.col("l_quantity")).alias("x"),
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    r = base
-    for _ in range(_FE_ROUNDS):
-        gp = r.groupBy("pk").agg(
-            F.round(F.avg("y") + 1e-12, 8).alias("my"),
-            F.round(F.avg("x") + 1e-12, 8).alias("mx"),
-        )
-        r = r.join(gp, "pk").select(
-            "pk",
-            "mo",
-            (F.col("y") - F.col("my")).alias("y"),
-            (F.col("x") - F.col("mx")).alias("x"),
-        )
-        gm = r.groupBy("mo").agg(
-            F.round(F.avg("y") + 1e-12, 8).alias("my"),
-            F.round(F.avg("x") + 1e-12, 8).alias("mx"),
-        )
-        r = (
-            r.join(F.broadcast(gm), "mo")
-            .select(
-                "pk",
-                "mo",
-                (F.col("y") - F.col("my")).alias("y"),
-                (F.col("x") - F.col("mx")).alias("x"),
-            )
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-    within = r.agg(
-        (F.sum(F.col("x") * F.col("y")) / F.sum(F.col("x") * F.col("x"))).alias("b"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    pooled = base.agg(
-        (F.covar_pop("x", "y") / F.var_pop("x")).alias("bp")
-    )
-    dims = base.agg(
-        F.countDistinct("pk").cast("long").alias("np"),
-        F.countDistinct("mo").cast("long").alias("nm"),
-    )
-    return (
-        within.crossJoin(F.broadcast(pooled))
-        .crossJoin(F.broadcast(dims))
-        .select(
-            F.col("n").alias("n_rows"),
-            F.col("np").alias("n_part_groups"),
-            F.col("nm").alias("n_month_groups"),
-            F.round(F.col("b") + 1e-9, 6).alias("beta_within"),
-            F.round(F.col("bp") + 1e-9, 6).alias("beta_pooled"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 11: omnibus normality, lexical diversity, robust location shift,
-# Katz centrality, disproportionality signals
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "dagostino_k2_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mu AS (SELECT avg(y) AS m, CAST(count(*) AS DOUBLE) AS n FROM daily),
-    cm AS (
-      SELECT max(mu.n) AS n,
-             sum((d.y - mu.m) * (d.y - mu.m)) / max(mu.n) AS m2,
-             sum((d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m)) / max(mu.n)
-               AS m3,
-             sum((d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m))
-               / max(mu.n) AS m4
-      FROM daily d CROSS JOIN mu),
-    g AS (
-      SELECT n, m3 / (m2 ^ 1.5) AS g1, m4 / (m2 * m2) AS b2 FROM cm),
-    sk AS (
-      SELECT g.*,
-             g1 * sqrt((n + 1.0) * (n + 3.0) / (6.0 * (n - 2.0))) AS yy,
-             3.0 * (n * n + 27.0 * n - 70.0) * (n + 1.0) * (n + 3.0)
-               / ((n - 2.0) * (n + 5.0) * (n + 7.0) * (n + 9.0)) AS beta2
-      FROM g),
-    sk2 AS (
-      SELECT sk.*, sqrt(2.0 * (beta2 - 1.0)) - 1.0 AS w2 FROM sk),
-    sk3 AS (
-      SELECT sk2.*,
-             1.0 / sqrt(0.5 * ln(w2)) AS delta,
-             sqrt(2.0 / (w2 - 1.0)) AS alpha
-      FROM sk2),
-    z1 AS (
-      SELECT sk3.*,
-             delta * ln(yy / alpha + sqrt((yy / alpha) * (yy / alpha)
-               + 1.0)) AS zs
-      FROM sk3),
-    ku AS (
-      SELECT z1.*,
-             (b2 - 3.0 * (n - 1.0) / (n + 1.0))
-               / sqrt(24.0 * n * (n - 2.0) * (n - 3.0)
-                      / ((n + 1.0) * (n + 1.0) * (n + 3.0) * (n + 5.0)))
-               AS x,
-             6.0 * (n * n - 5.0 * n + 2.0) / ((n + 7.0) * (n + 9.0))
-               * sqrt(6.0 * (n + 3.0) * (n + 5.0)
-                      / (n * (n - 2.0) * (n - 3.0))) AS sb1
-      FROM z1),
-    ku2 AS (
-      SELECT ku.*,
-             6.0 + 8.0 / sb1 * (2.0 / sb1
-               + sqrt(1.0 + 4.0 / (sb1 * sb1))) AS a
-      FROM ku),
-    ku3 AS (
-      SELECT ku2.*,
-             (1.0 - 2.0 / (9.0 * a)
-              - sign(1.0 + x * sqrt(2.0 / (a - 4.0)))
-                * cbrt((1.0 - 2.0 / a)
-                       / abs(1.0 + x * sqrt(2.0 / (a - 4.0)))))
-             / sqrt(2.0 / (9.0 * a)) AS zk
-      FROM ku2)
-    SELECT CAST(n AS BIGINT) AS n_days,
-           round(g1 + 1e-9, 6) AS skew_g1,
-           round(b2 + 1e-9, 6) AS kurtosis_b2,
-           round(zs + 1e-9, 6) AS z_skew,
-           round(zk + 1e-9, 6) AS z_kurt,
-           round(zs * zs + zk * zk + 1e-9, 6) AS k2_stat
-    FROM ku3
-    """,
-)
-def dagostino_k2_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D'Agostino-Pearson K-squared omnibus normality test on the daily
-    purchase-revenue series: the skewness transform Z(sqrt(b1))
-    (Johnson SU fit via W^2 = sqrt(2(beta2-1)) - 1) and the
-    Anscombe-Glynn kurtosis transform Z(b2) (Wilson-Hilferty cube root
-    of a scaled chi-square), combined as K^2 = Z1^2 + Z2^2 ~ chi2(2).
-    The finite-sample-calibrated upgrade of
-    ``jarque_bera_daily_revenue`` — JB's asymptotic chi2(2) is badly
-    anticonservative at n~350 days; these are the exact small-sample
-    moment transforms scipy.stats.normaltest uses.
-
-    Scale shape: identical to JB — two-pass central moments (mean
-    first, then centered power sums; raw-moment cancellation at
-    revenue^4 scale would flip 6th decimals between engines), both
-    passes partial-agg friendly, then a pure scalar expression tree on
-    the single-row moment frame."""
-    daily = _daily_df(spark, sf_dir)
-    mu = daily.agg(
-        F.avg("y").alias("m"), F.count(F.lit(1)).cast("double").alias("n")
-    )
-    d = F.col("y") - F.col("m")
-    cm = daily.crossJoin(F.broadcast(mu)).agg(
-        F.max("n").alias("n"),
-        (F.sum(d * d) / F.max("n")).alias("m2"),
-        (F.sum(d * d * d) / F.max("n")).alias("m3"),
-        (F.sum(d * d * d * d) / F.max("n")).alias("m4"),
-    )
-    n = F.col("n")
-    g1 = F.col("m3") / F.pow(F.col("m2"), 1.5)
-    b2 = F.col("m4") / (F.col("m2") * F.col("m2"))
-    g = cm.select(n.alias("n"), g1.alias("g1"), b2.alias("b2"))
-    n, g1, b2 = F.col("n"), F.col("g1"), F.col("b2")
-    yy = g1 * F.sqrt((n + 1.0) * (n + 3.0) / (6.0 * (n - 2.0)))
-    beta2 = (
-        3.0
-        * (n * n + 27.0 * n - 70.0)
-        * (n + 1.0)
-        * (n + 3.0)
-        / ((n - 2.0) * (n + 5.0) * (n + 7.0) * (n + 9.0))
-    )
-    w2 = F.sqrt(2.0 * (beta2 - 1.0)) - 1.0
-    delta = 1.0 / F.sqrt(0.5 * F.log(w2))
-    alpha = F.sqrt(2.0 / (w2 - 1.0))
-    zs = delta * F.log(yy / alpha + F.sqrt((yy / alpha) * (yy / alpha) + 1.0))
-    x = (b2 - 3.0 * (n - 1.0) / (n + 1.0)) / F.sqrt(
-        24.0
-        * n
-        * (n - 2.0)
-        * (n - 3.0)
-        / ((n + 1.0) * (n + 1.0) * (n + 3.0) * (n + 5.0))
-    )
-    sb1 = (
-        6.0
-        * (n * n - 5.0 * n + 2.0)
-        / ((n + 7.0) * (n + 9.0))
-        * F.sqrt(6.0 * (n + 3.0) * (n + 5.0) / (n * (n - 2.0) * (n - 3.0)))
-    )
-    a = 6.0 + 8.0 / sb1 * (2.0 / sb1 + F.sqrt(1.0 + 4.0 / (sb1 * sb1)))
-    denom = 1.0 + x * F.sqrt(2.0 / (a - 4.0))
-    zk = (
-        1.0
-        - 2.0 / (9.0 * a)
-        - F.signum(denom) * F.cbrt((1.0 - 2.0 / a) / F.abs(denom))
-    ) / F.sqrt(2.0 / (9.0 * a))
-    return g.select(
-        n.cast("long").alias("n_days"),
-        F.round(g1 + 1e-9, 6).alias("skew_g1"),
-        F.round(b2 + 1e-9, 6).alias("kurtosis_b2"),
-        F.round(zs + 1e-9, 6).alias("z_skew"),
-        F.round(zk + 1e-9, 6).alias("z_kurt"),
-        F.round(zs * zs + zk * zk + 1e-9, 6).alias("k2_stat"),
     )
 
 
@@ -5839,9 +1468,8 @@ def hodges_lehmann_weekend_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the pairwise cross runs on the DOMAIN-bounded daily
     frame (|weekday days| x |weekend days| ~ 2.6e2 x 1e2 pairs at any
     SF — the date span, not the data, sets it), after one data-sized
-    groupBy. Daily sums are quantized to 4 dp BEFORE pairing (the
-    r14 UCB lesson: selection statistics need quantized inputs, since
-    an ulp of cross-engine sum drift at a median boundary would swap
+    groupBy. Daily sums are quantized to 4 dp BEFORE pairing
+    (selection statistics need quantized inputs, since an ulp of cross-engine sum drift at a median boundary would swap
     the selected element, not just its 7th decimal)."""
     daily = _daily_df(spark, sf_dir).select(
         "t",
@@ -5978,244 +1606,6 @@ def katz_centrality_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @staged(
-    "prr_disproportionality_events",
-    oracle="""
-    WITH ev AS (
-      SELECT event_type,
-             ((CAST(date_diff('day', TIMESTAMP '2024-01-01', ts)
-                    AS BIGINT) % 7) + 7) % 7 IN (5, 6) AS wknd
-      FROM events),
-    cells AS (
-      SELECT event_type,
-             CAST(sum(CASE WHEN wknd THEN 1 ELSE 0 END) AS DOUBLE) AS a,
-             CAST(sum(CASE WHEN NOT wknd THEN 1 ELSE 0 END) AS DOUBLE) AS c
-      FROM ev GROUP BY event_type),
-    tot AS (
-      SELECT sum(a) AS tw, sum(c) AS td FROM cells),
-    tab AS (
-      SELECT cells.event_type, a, c, tot.tw - a AS b, tot.td - c AS d
-      FROM cells CROSS JOIN tot)
-    SELECT event_type,
-           CAST(a AS BIGINT) AS n_weekend,
-           CAST(c AS BIGINT) AS n_weekday,
-           round((a / (a + b)) / (c / (c + d)) + 1e-9, 6) AS prr,
-           round(((a + 0.5) * (d + 0.5)) / ((b + 0.5) * (c + 0.5))
-                 + 1e-9, 6) AS ror_haldane,
-           round(sqrt(1.0 / (a + 0.5) + 1.0 / (b + 0.5) + 1.0 / (c + 0.5)
-                      + 1.0 / (d + 0.5)) + 1e-9, 6) AS log_ror_se,
-           round((a + b + c + d) * (a * d - b * c) * (a * d - b * c)
-                 / ((a + b) * (c + d) * (a + c) * (b + d)) + 1e-9, 6)
-             AS chi2,
-           CAST((a / (a + b)) / (c / (c + d)) > 1.2
-                AND (a + b + c + d) * (a * d - b * c) * (a * d - b * c)
-                    / ((a + b) * (c + d) * (a + c) * (b + d)) > 4.0
-                AND a >= 3 AS BOOLEAN) AS signal
-    FROM tab ORDER BY event_type
-    """,
-)
-def prr_disproportionality_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pharmacovigilance-style disproportionality screen of event types
-    on weekends: for each event_type the 2x2 table (this type vs all
-    others) x (weekend vs weekday) yields the proportional reporting
-    ratio PRR, the Haldane-Anscombe-corrected reporting odds ratio
-    with its log-scale SE, the Pearson chi-square, and the classic
-    Evans signal flag (PRR above threshold AND chi2 > 4 AND a >= 3) —
-    the 'which event category over-reports in this stratum' screen
-    every ops dashboard runs. Weekend membership uses the same
-    engine-portable day-index arithmetic as
-    ``hodges_lehmann_weekend_shift``.
-
-    Scale shape: ONE data-sized groupBy(event_type) with conditional
-    count columns; marginals come from a broadcast 1-row aggregate of
-    the bounded cells frame. Output is |event types| rows."""
-    e = Tables(spark, sf_dir).events
-    idx = F.datediff(
-        F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-    ).cast("long")
-    wknd = (((idx % 7) + 7) % 7).isin(5, 6)
-    cells = e.groupBy("event_type").agg(
-        F.sum(F.when(wknd, 1).otherwise(0)).cast("double").alias("a"),
-        F.sum(F.when(~wknd, 1).otherwise(0)).cast("double").alias("c"),
-    )
-    tot = cells.agg(F.sum("a").alias("tw"), F.sum("c").alias("td"))
-    a, c = F.col("a"), F.col("c")
-    b, d = F.col("tw") - a, F.col("td") - c
-    prr = (a / (a + b)) / (c / (c + d))
-    chi2 = (
-        (a + b + c + d)
-        * (a * d - b * c)
-        * (a * d - b * c)
-        / ((a + b) * (c + d) * (a + c) * (b + d))
-    )
-    return (
-        cells.crossJoin(F.broadcast(tot))
-        .select(
-            "event_type",
-            a.cast("long").alias("n_weekend"),
-            c.cast("long").alias("n_weekday"),
-            F.round(prr + 1e-9, 6).alias("prr"),
-            F.round(
-                ((a + 0.5) * (d + 0.5)) / ((b + 0.5) * (c + 0.5)) + 1e-9, 6
-            ).alias("ror_haldane"),
-            F.round(
-                F.sqrt(
-                    1.0 / (a + 0.5)
-                    + 1.0 / (b + 0.5)
-                    + 1.0 / (c + 0.5)
-                    + 1.0 / (d + 0.5)
-                )
-                + 1e-9,
-                6,
-            ).alias("log_ror_se"),
-            F.round(chi2 + 1e-9, 6).alias("chi2"),
-            ((prr > 1.2) & (chi2 > 4.0) & (a >= 3)).alias("signal"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 12: random-walk tests, fluctuation scaling, Poisson GLM,
-# distribution distances, rank-based scale test
-# ---------------------------------------------------------------------------
-
-_VR_QS = (2, 4, 8)
-
-
-def _vr_oracle() -> str:
-    ctes = [
-        _DAILY_SQL,
-        """dq AS (
-      SELECT row_number() OVER (ORDER BY t) AS k,
-             ln(round(y + 1e-9, 4)) AS ly
-      FROM daily)""",
-        """rr AS (
-      SELECT k - 1 AS j, r FROM (
-        SELECT k, ly - lag(ly) OVER (ORDER BY k) AS r FROM dq)
-      WHERE r IS NOT NULL)""",
-        """mo AS (
-      SELECT CAST(count(*) AS DOUBLE) AS tt, avg(r) AS m,
-             var_pop(r) AS v1
-      FROM rr)""",
-    ]
-    rows = []
-    for q in _VR_QS:
-        ctes.append(
-            f"""s{q} AS (
-      SELECT j,
-             sum(r) OVER (ORDER BY j ROWS BETWEEN {q - 1} PRECEDING
-                          AND CURRENT ROW) AS s,
-             count(*) OVER (ORDER BY j ROWS BETWEEN {q - 1} PRECEDING
-                            AND CURRENT ROW) AS c
-      FROM rr)"""
-        )
-        ctes.append(
-            f"""v{q} AS (
-      SELECT avg((s - {q} * mo.m) * (s - {q} * mo.m)) AS vq
-      FROM s{q} CROSS JOIN mo WHERE c = {q})"""
-        )
-        rows.append(
-            f"""SELECT {q} AS q, mo.tt AS tt,
-             v{q}.vq / ({q} * mo.v1) AS vr
-      FROM v{q} CROSS JOIN mo"""
-        )
-    joined = ",\n    ".join(ctes)
-    un = "\n      UNION ALL ".join(rows)
-    return f"""
-    WITH {joined},
-    allq AS ({un})
-    SELECT CAST(q AS BIGINT) AS q,
-           CAST(tt AS BIGINT) AS n_returns,
-           round(vr + 1e-9, 6) AS vr,
-           round((vr - 1.0)
-                 / sqrt(2.0 * (2 * q - 1) * (q - 1) / (3.0 * q * tt))
-                 + 1e-9, 6) AS z_stat
-    FROM allq ORDER BY q
-    """
-
-
-@staged("variance_ratio_daily_revenue", oracle=_vr_oracle())
-def variance_ratio_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lo-MacKinlay variance-ratio test of the random-walk hypothesis
-    on daily log-revenue returns: VR(q) = Var(q-period overlapping
-    sums) / (q Var(1-period)) for q in {2, 4, 8}, with the
-    homoskedastic z statistic z = (VR-1)/sqrt(2(2q-1)(q-1)/(3qT)).
-    VR < 1 flags mean reversion, VR > 1 momentum — the
-    aggregation-level complement to ``durbin_watson_daily_revenue``
-    (lag-1 only) and ``hurst_rs_daily_revenue`` (all-scales
-    exponent). Daily revenue is quantized to 4 dp before the log (the
-    selection-statistic input rule), returns are
-    adjacent-observation (row-number) differences.
-
-    Scale shape: one data-sized groupBy to the daily frame; returns,
-    overlapping window sums, and moments all live on the
-    domain-bounded (~360-row) series, so the single-partition windows
-    are bounded by the date span, not the data."""
-    daily = _daily_df(spark, sf_dir)
-    w = Window.orderBy("k")
-    dq = daily.select(
-        F.row_number().over(Window.orderBy("t")).alias("k"),
-        F.log(F.round(F.col("y") + 1e-9, 4)).alias("ly"),
-    )
-    rr = (
-        dq.select(
-            (F.col("k") - 1).alias("j"),
-            (F.col("ly") - F.lag("ly").over(w)).alias("r"),
-        )
-        .filter(F.col("r").isNotNull())
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    mo = rr.agg(
-        F.count(F.lit(1)).cast("double").alias("tt"),
-        F.avg("r").alias("m"),
-        F.var_pop("r").alias("v1"),
-    )
-    parts = []
-    wj = Window.orderBy("j")
-    for q in _VR_QS:
-        wf = wj.rowsBetween(-(q - 1), 0)
-        sq = rr.select(
-            F.sum("r").over(wf).alias("s"),
-            F.count(F.lit(1)).over(wf).alias("c"),
-        ).filter(F.col("c") == q)
-        vq = (
-            sq.crossJoin(F.broadcast(mo))
-            .agg(
-                F.avg(
-                    (F.col("s") - q * F.col("m"))
-                    * (F.col("s") - q * F.col("m"))
-                ).alias("vq")
-            )
-            .crossJoin(F.broadcast(mo))
-            .select(
-                F.lit(q).cast("long").alias("q"),
-                F.col("tt").cast("long").alias("n_returns"),
-                F.round(F.col("vq") / (q * F.col("v1")) + 1e-9, 6).alias(
-                    "vr"
-                ),
-                F.round(
-                    (F.col("vq") / (q * F.col("v1")) - 1.0)
-                    / F.sqrt(
-                        2.0
-                        * (2 * q - 1)
-                        * (q - 1)
-                        / (3.0 * q * F.col("tt"))
-                    )
-                    + 1e-9,
-                    6,
-                ).alias("z_stat"),
-            )
-        )
-        parts.append(vq)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("q")
-
-
-@staged(
     "taylor_power_law_users",
     oracle="""
     WITH dd AS (
@@ -6304,386 +1694,8 @@ def taylor_power_law_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PGLM_ROUNDS = 4
-_PGLM_Q = 8
-
-
-def _pglm_oracle() -> str:
-    ctes = [
-        _DAILY_SQL.replace("daily AS", "pday AS").replace(
-            "sum(value) AS y", "CAST(count(*) AS DOUBLE) AS y"
-        ).replace("WHERE event_type = 'purchase'", "WHERE event_type = 'error'"),
-        """cells AS (SELECT t, t / 100.0 AS x, y FROM pday)""",
-        """s0 AS (
-      SELECT sum(w) AS sw, sum(w * x) AS sx, sum(w * x * x) AS sxx,
-             sum(w * z) AS sz, sum(w * x * z) AS sxz
-      FROM (
-        SELECT x, y + 0.5 AS w,
-               ln(y + 0.5) + (y - (y + 0.5)) / (y + 0.5) AS z
-        FROM cells))""",
-        f"""b0 AS (
-      SELECT round((sxx * sz - sx * sxz) / (sw * sxx - sx * sx)
-                   + 1e-12, {_PGLM_Q}) AS b0,
-             round((sw * sxz - sx * sz) / (sw * sxx - sx * sx)
-                   + 1e-12, {_PGLM_Q}) AS b1
-      FROM s0)""",
-    ]
-    for k in range(_PGLM_ROUNDS):
-        ctes.append(
-            f"""s{k + 1} AS (
-      SELECT sum(w) AS sw, sum(w * x) AS sx, sum(w * x * x) AS sxx,
-             sum(w * z) AS sz, sum(w * x * z) AS sxz
-      FROM (
-        SELECT x, mu AS w, (b0 + b1 * x) + (y - mu) / mu AS z
-        FROM (SELECT cells.x, cells.y, b{k}.b0, b{k}.b1,
-                     exp(b{k}.b0 + b{k}.b1 * cells.x) AS mu
-              FROM cells CROSS JOIN b{k})))"""
-        )
-        ctes.append(
-            f"""b{k + 1} AS (
-      SELECT round((sxx * sz - sx * sxz) / (sw * sxx - sx * sx)
-                   + 1e-12, {_PGLM_Q}) AS b0,
-             round((sw * sxz - sx * sz) / (sw * sxx - sx * sx)
-                   + 1e-12, {_PGLM_Q}) AS b1
-      FROM s{k + 1})"""
-        )
-    fin = f"b{_PGLM_ROUNDS}"
-    joined = ",\n    ".join(ctes)
-    return f"""
-    WITH {joined},
-    dev AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_days, sum(y) AS tot,
-             2.0 * sum(coalesce(CASE WHEN y > 0
-                            THEN y * ln(y / exp(b0 + b1 * x)) END, 0.0)
-                       - (y - exp(b0 + b1 * x))) AS d
-      FROM cells CROSS JOIN {fin})
-    SELECT dev.n_days, CAST(dev.tot AS BIGINT) AS n_errors,
-           round(fb.b0 + 1e-9, 6) AS beta0,
-           round(fb.b1 + 1e-9, 6) AS beta1,
-           round(dev.d + 1e-9, 6) AS deviance
-    FROM {fin} fb CROSS JOIN dev
-    """
-
-
-@staged("poisson_glm_irls_daily", oracle=_pglm_oracle())
-def poisson_glm_irls_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson GLM (log link) of daily ERROR counts on scaled time
-    x = t/100 by IRLS: the standard GLM initialization mu0 = y + 0.5
-    (cell-level, so the first Newton step never overshoots exp),
-    then 4 weighted-least-squares rounds with w = mu and working
-    response z = eta + (y - mu)/mu, coefficients quantized to 8 dp
-    per round (the trajectory-replay rule), reported with the model
-    deviance 2 sum[y ln(y/mu) - (y - mu)]. The count-outcome member
-    of the GLM family: Gaussian = ``ridge_elasticity``, binomial =
-    ``logistic_irls_purchase_hour``, Poisson = this — a secular
-    error-rate trend test that respects the mean-variance link where
-    OLS on counts does not.
-
-    Scale shape: ONE data-sized day-grouped count; every IRLS round
-    is closed-form 2x2 normal-equation algebra on the domain-bounded
-    daily frame (no matrix library, no driver math)."""
-    e = Tables(spark, sf_dir).events.filter(F.col("event_type") == "error")
-    cells = (
-        e.groupBy(
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            )
-            .cast("long")
-            .alias("t")
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("y"))
-        .select("t", (F.col("t") / 100.0).alias("x"), "y")
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-
-    def _wls(frame: DataFrame) -> DataFrame:
-        s = frame.agg(
-            F.sum("w").alias("sw"),
-            F.sum(F.col("w") * F.col("x")).alias("sx"),
-            F.sum(F.col("w") * F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("w") * F.col("z")).alias("sz"),
-            F.sum(F.col("w") * F.col("x") * F.col("z")).alias("sxz"),
-        )
-        det = F.col("sw") * F.col("sxx") - F.col("sx") * F.col("sx")
-        return s.select(
-            F.round(
-                (F.col("sxx") * F.col("sz") - F.col("sx") * F.col("sxz"))
-                / det
-                + 1e-12,
-                _PGLM_Q,
-            ).alias("b0"),
-            F.round(
-                (F.col("sw") * F.col("sxz") - F.col("sx") * F.col("sz"))
-                / det
-                + 1e-12,
-                _PGLM_Q,
-            ).alias("b1"),
-        )
-
-    w0 = F.col("y") + 0.5
-    beta = _wls(
-        cells.select(
-            "x",
-            w0.alias("w"),
-            (F.log(w0) + (F.col("y") - w0) / w0).alias("z"),
-        )
-    )
-    for _ in range(_PGLM_ROUNDS):
-        mu = F.exp(F.col("b0") + F.col("b1") * F.col("x"))
-        beta = _wls(
-            cells.crossJoin(F.broadcast(beta)).select(
-                "x",
-                mu.alias("w"),
-                (
-                    F.col("b0")
-                    + F.col("b1") * F.col("x")
-                    + (F.col("y") - mu) / mu
-                ).alias("z"),
-            )
-        )
-    mu = F.exp(F.col("b0") + F.col("b1") * F.col("x"))
-    dev = cells.crossJoin(F.broadcast(beta)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("y").cast("long").alias("n_errors"),
-        (
-            2.0
-            * F.sum(
-                F.coalesce(
-                    F.when(
-                        F.col("y") > 0, F.col("y") * F.log(F.col("y") / mu)
-                    ),
-                    F.lit(0.0),
-                )
-                - (F.col("y") - mu)
-            )
-        ).alias("d"),
-    )
-    return dev.crossJoin(F.broadcast(beta)).select(
-        "n_days",
-        "n_errors",
-        F.round(F.col("b0") + 1e-9, 6).alias("beta0"),
-        F.round(F.col("b1") + 1e-9, 6).alias("beta1"),
-        F.round(F.col("d") + 1e-9, 6).alias("deviance"),
-    )
-
-
-@staged(
-    "bhattacharyya_hellinger_regions",
-    oracle="""
-    WITH rev AS (
-      SELECT r.r_name AS rn, o.o_totalprice AS p
-      FROM orders o
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n ON n.n_nationkey = c.c_nationkey
-      JOIN region r ON r.r_regionkey = n.n_regionkey
-      WHERE r.r_name IN ('ASIA', 'AMERICA')),
-    bins AS (
-      SELECT CAST(floor(4.0 * ln(p)) AS BIGINT) AS b,
-             CAST(sum(CASE WHEN rn = 'ASIA' THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS ca,
-             CAST(sum(CASE WHEN rn = 'AMERICA' THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS cm
-      FROM rev GROUP BY 1),
-    tot AS (SELECT sum(ca) AS na, sum(cm) AS nm FROM bins),
-    pq AS (
-      SELECT ca / tot.na AS pa, cm / tot.nm AS pb
-      FROM bins CROSS JOIN tot),
-    dist AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_bins,
-             sum(sqrt(pa * pb)) AS bc,
-             0.5 * sum(abs(pa - pb)) AS tv,
-             sum(coalesce(CASE WHEN pa > 0 THEN
-                   0.5 * pa * ln(pa / (0.5 * (pa + pb))) END, 0.0)
-                 + coalesce(CASE WHEN pb > 0 THEN
-                   0.5 * pb * ln(pb / (0.5 * (pa + pb))) END, 0.0)) AS js
-      FROM pq)
-    SELECT dist.n_bins,
-           CAST(tot.na AS BIGINT) AS n_asia,
-           CAST(tot.nm AS BIGINT) AS n_america,
-           round(dist.bc + 1e-9, 6) AS bhattacharyya_coef,
-           round(sqrt(1.0 - dist.bc) + 1e-9, 6) AS hellinger,
-           round(dist.tv + 1e-9, 6) AS tv_distance,
-           round(dist.js + 1e-9, 6) AS js_divergence
-    FROM dist CROSS JOIN tot
-    """,
-)
-def bhattacharyya_hellinger_regions(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Distribution-distance panel between ASIA and AMERICA order-price
-    distributions over fixed log-price bins (floor(4 ln p): ~25 bins,
-    data-independent edges so both engines bin identically): the
-    Bhattacharyya coefficient sum sqrt(pa pb), Hellinger distance
-    sqrt(1 - BC), total-variation distance, and Jensen-Shannon
-    divergence (zero-mass terms contribute 0, so no smoothing is
-    needed unlike KL). The bounded-metric complement to
-    ``energy_distance_value`` / ``wasserstein`` — these are
-    bin-spaced f-divergences, cheap enough for every-pair dashboards.
-
-    Scale shape: ONE data-sized conditional-count groupBy to the
-    bounded bin frame; marginals via a broadcast 1-row aggregate;
-    distances are one scalar pass over ~25 rows."""
-    t = Tables(spark, sf_dir)
-    rev = (
-        t.orders.join(
-            t.customer, F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(
-            F.broadcast(t.region),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .filter(F.col("r_name").isin("ASIA", "AMERICA"))
-        .select(F.col("r_name").alias("rn"), F.col("o_totalprice").alias("p"))
-    )
-    bins = rev.groupBy(
-        F.floor(4.0 * F.log("p")).cast("long").alias("b")
-    ).agg(
-        F.sum(F.when(F.col("rn") == "ASIA", 1).otherwise(0))
-        .cast("double")
-        .alias("ca"),
-        F.sum(F.when(F.col("rn") == "AMERICA", 1).otherwise(0))
-        .cast("double")
-        .alias("cm"),
-    )
-    tot = bins.agg(F.sum("ca").alias("na"), F.sum("cm").alias("nm"))
-    pa = F.col("ca") / F.col("na")
-    pb = F.col("cm") / F.col("nm")
-    m = 0.5 * (pa + pb)
-    dist = bins.crossJoin(F.broadcast(tot)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.sum(F.sqrt(pa * pb)).alias("bc"),
-        (0.5 * F.sum(F.abs(pa - pb))).alias("tv"),
-        F.sum(
-            F.coalesce(
-                F.when(pa > 0, 0.5 * pa * F.log(pa / m)), F.lit(0.0)
-            )
-            + F.coalesce(
-                F.when(pb > 0, 0.5 * pb * F.log(pb / m)), F.lit(0.0)
-            )
-        ).alias("js"),
-    )
-    return dist.crossJoin(F.broadcast(tot)).select(
-        "n_bins",
-        F.col("na").cast("long").alias("n_asia"),
-        F.col("nm").cast("long").alias("n_america"),
-        F.round(F.col("bc") + 1e-9, 6).alias("bhattacharyya_coef"),
-        F.round(F.sqrt(1.0 - F.col("bc")) + 1e-9, 6).alias("hellinger"),
-        F.round(F.col("tv") + 1e-9, 6).alias("tv_distance"),
-        F.round(F.col("js") + 1e-9, 6).alias("js_divergence"),
-    )
-
-
-@staged(
-    "ansari_bradley_weekend_scale",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    dq AS (
-      SELECT t, round(y + 1e-9, 4) AS y,
-             ((t % 7) + 7) % 7 IN (5, 6) AS wknd
-      FROM daily),
-    rk AS (
-      SELECT wknd,
-             row_number() OVER (ORDER BY y, t) AS r,
-             CAST(count(*) OVER () AS DOUBLE) AS nn
-      FROM dq),
-    sc AS (
-      SELECT wknd, least(CAST(r AS DOUBLE), nn + 1 - r) AS s, nn
-      FROM rk),
-    ag AS (
-      SELECT max(nn) AS nn,
-             CAST(sum(CASE WHEN wknd THEN 1 ELSE 0 END) AS DOUBLE) AS n,
-             CAST(sum(CASE WHEN NOT wknd THEN 1 ELSE 0 END) AS DOUBLE)
-               AS m,
-             sum(CASE WHEN wknd THEN s ELSE 0 END) AS w
-      FROM sc),
-    st AS (
-      SELECT nn, n, m, w,
-             CASE WHEN CAST(nn AS BIGINT) % 2 = 0
-                  THEN n * (nn + 2.0) / 4.0
-                  ELSE n * (nn + 1.0) * (nn + 1.0) / (4.0 * nn) END AS ew,
-             CASE WHEN CAST(nn AS BIGINT) % 2 = 0
-                  THEN n * m * (nn + 2.0) * (nn - 2.0)
-                       / (48.0 * (nn - 1.0))
-                  ELSE n * m * (nn + 1.0) * (3.0 + nn * nn)
-                       / (48.0 * nn * nn) END AS vw
-      FROM ag)
-    SELECT CAST(m AS BIGINT) AS n_weekday_days,
-           CAST(n AS BIGINT) AS n_weekend_days,
-           round(w + 1e-9, 6) AS ab_stat,
-           round(ew + 1e-9, 6) AS ab_mean,
-           round((w - ew) / sqrt(vw) + 1e-9, 6) AS ab_z
-    FROM st
-    """,
-)
-def ansari_bradley_weekend_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Ansari-Bradley rank test of SCALE difference between weekend and
-    weekday daily revenue: rank the pooled series, score each day
-    min(rank, N+1-rank) (small scores at both extremes), and sum the
-    weekend scores — a small W says weekends sit in the tails, i.e.
-    higher dispersion. Exact null mean/variance use the even/odd-N
-    closed forms; z = (W - E)/sqrt(V). The dispersion complement to
-    ``hodges_lehmann_weekend_shift`` (location) — together they are
-    the rank-based location-scale decomposition (Lepage components).
-    Ties after 4-dp input quantization are broken by day index (a
-    deterministic total order both engines replay; documented
-    departure from midrank scoring).
-
-    Scale shape: one data-sized groupBy to the daily frame; the rank
-    window is domain-bounded (~360 rows); everything after is one
-    scalar aggregate."""
-    daily = _daily_df(spark, sf_dir).select(
-        "t",
-        F.round(F.col("y") + 1e-9, 4).alias("y"),
-        (((F.col("t") % 7) + 7) % 7).isin(5, 6).alias("wknd"),
-    )
-    rk = daily.select(
-        "wknd",
-        F.row_number().over(Window.orderBy("y", "t")).alias("r"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy())
-        .cast("double")
-        .alias("nn"),
-    )
-    sc = rk.select(
-        "wknd",
-        F.least(F.col("r").cast("double"), F.col("nn") + 1 - F.col("r")).alias(
-            "s"
-        ),
-        "nn",
-    )
-    ag = sc.agg(
-        F.max("nn").alias("nn"),
-        F.sum(F.when(F.col("wknd"), 1).otherwise(0))
-        .cast("double")
-        .alias("n"),
-        F.sum(F.when(~F.col("wknd"), 1).otherwise(0))
-        .cast("double")
-        .alias("m"),
-        F.sum(F.when(F.col("wknd"), F.col("s")).otherwise(0.0)).alias("w"),
-    )
-    nn, n, m, w = F.col("nn"), F.col("n"), F.col("m"), F.col("w")
-    even = nn.cast("long") % 2 == 0
-    ew = F.when(even, n * (nn + 2.0) / 4.0).otherwise(
-        n * (nn + 1.0) * (nn + 1.0) / (4.0 * nn)
-    )
-    vw = F.when(
-        even, n * m * (nn + 2.0) * (nn - 2.0) / (48.0 * (nn - 1.0))
-    ).otherwise(n * m * (nn + 1.0) * (3.0 + nn * nn) / (48.0 * nn * nn))
-    return ag.select(
-        m.cast("long").alias("n_weekday_days"),
-        n.cast("long").alias("n_weekend_days"),
-        F.round(w + 1e-9, 6).alias("ab_stat"),
-        F.round(ew + 1e-9, 6).alias("ab_mean"),
-        F.round((w - ew) / F.sqrt(vw) + 1e-9, 6).alias("ab_z"),
-    )
-
-
 # ---------------------------------------------------------------------------
-# Wave 13: rank change point, iterative outlier removal, spatial K,
-# post-hoc rank comparisons, decision stump
+# Rank change point, iterative outlier removal
 # ---------------------------------------------------------------------------
 
 
@@ -6853,404 +1865,3 @@ def generalized_esd_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").cast("long").alias("day"),
         F.round(F.col("r") + 1e-9, 6).alias("r_stat"),
     ).orderBy("esd_round")
-
-
-_RIPLEY_RS = (1, 2, 4)
-
-
-def _ripley_oracle() -> str:
-    rows = []
-    for r in _RIPLEY_RS:
-        rows.append(
-            f"""SELECT {r} AS r, tot.n AS n, tot.a AS a,
-             sum(CASE WHEN pp.d2 <= {r * r} THEN pp.w ELSE 0 END) AS pr
-      FROM pp CROSS JOIN tot GROUP BY tot.n, tot.a"""
-        )
-    un = "\n      UNION ALL ".join(rows)
-    return f"""
-    WITH pts AS (
-      SELECT ((user_id % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 1")}) - 0.5) * 0.8 AS x,
-             ((user_id % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-               + (({_lehmer_u_sql("event_id * 2 + 2")}) - 0.5) * 0.8 AS y
-      FROM events),
-    cnt AS (
-      SELECT least(CAST(floor((x + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gx,
-             least(CAST(floor((y + 4.0) / 8.0 * {_GRID}) AS BIGINT),
-                   {_GRID - 1}) AS gy,
-             CAST(count(*) AS DOUBLE) AS c
-      FROM pts GROUP BY 1, 2),
-    pp AS (
-      SELECT (a.gx - b.gx) * (a.gx - b.gx)
-               + (a.gy - b.gy) * (a.gy - b.gy) AS d2,
-             CASE WHEN a.gx = b.gx AND a.gy = b.gy
-                  THEN a.c * (a.c - 1.0) ELSE a.c * b.c END AS w
-      FROM cnt a JOIN cnt b
-        ON (a.gx - b.gx) * (a.gx - b.gx)
-           + (a.gy - b.gy) * (a.gy - b.gy) <= {max(_RIPLEY_RS) ** 2}),
-    tot AS (
-      SELECT sum(c) AS n, CAST({_GRID * _GRID} AS DOUBLE) AS a FROM cnt),
-    allr AS ({un})
-    SELECT CAST(r AS BIGINT) AS r,
-           CAST(n AS BIGINT) AS n_points,
-           CAST(pr AS BIGINT) AS pairs_le_r,
-           round(a * pr / (n * (n - 1.0)) + 1e-9, 6) AS k_hat,
-           round(sqrt(a * pr / (n * (n - 1.0)) / pi()) + 1e-9, 6) AS l_hat,
-           round(pi() * r * r + 1e-9, 6) AS csr_k
-    FROM allr ORDER BY r
-    """
-
-
-@staged("ripley_k_quantized_plane", oracle=_ripley_oracle())
-def ripley_k_quantized_plane(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ripley's K function of the planted 7-blob plane at cell
-    resolution: points quantize to the same 32x32 grid as
-    ``morans_i_planted_plane``, and K-hat(r) = A / (n(n-1)) x
-    #[ordered point pairs with cell-center distance <= r] for r in
-    {1, 2, 4} cell units (within-cell pairs enter at distance 0 as
-    c(c-1)), with L(r) = sqrt(K/pi) against the CSR expectation
-    K = pi r^2. K >> pi r^2 at small r quantifies the clustering that
-    Moran's I only sign-tests — the second-moment spatial statistic
-    on the SAME one-pass cell aggregate.
-
-    Scale shape: one data-sized cell count, then a radius-bounded
-    self-join of the <=1024-row cell frame (d^2 <= 16 prunes to the
-    local neighborhood — this is exactly the grid-blocked pair join
-    the geo k-NN family uses, never an all-points pair join)."""
-    ev = Tables(spark, sf_dir).events.select("event_id", "user_id")
-    cx = ((F.col("user_id") % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-    cy = ((F.col("user_id") % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-    pts = ev.select(
-        (cx + (_lehmer_u(F.col("event_id") * 2 + 1) - 0.5) * 0.8).alias("x"),
-        (cy + (_lehmer_u(F.col("event_id") * 2 + 2) - 0.5) * 0.8).alias("y"),
-    )
-    cnt = (
-        pts.groupBy(
-            F.least(
-                F.floor((F.col("x") + 4.0) / 8.0 * _GRID).cast("long"),
-                F.lit(_GRID - 1).cast("long"),
-            ).alias("gx"),
-            F.least(
-                F.floor((F.col("y") + 4.0) / 8.0 * _GRID).cast("long"),
-                F.lit(_GRID - 1).cast("long"),
-            ).alias("gy"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    a_ = cnt.select(
-        F.col("gx").alias("ax"), F.col("gy").alias("ay"), F.col("c").alias("ac")
-    )
-    b_ = cnt.select(
-        F.col("gx").alias("bx"), F.col("gy").alias("by"), F.col("c").alias("bc")
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    pp = a_.join(b_, d2 <= max(_RIPLEY_RS) ** 2).select(
-        d2.alias("d2"),
-        F.when(
-            (F.col("ax") == F.col("bx")) & (F.col("ay") == F.col("by")),
-            F.col("ac") * (F.col("ac") - 1.0),
-        )
-        .otherwise(F.col("ac") * F.col("bc"))
-        .alias("w"),
-    )
-    tot = cnt.agg(
-        F.sum("c").alias("n"),
-        F.lit(float(_GRID * _GRID)).alias("a"),
-    )
-    parts = []
-    for r in _RIPLEY_RS:
-        pr = (
-            pp.crossJoin(F.broadcast(tot))
-            .groupBy("n", "a")
-            .agg(
-                F.sum(
-                    F.when(F.col("d2") <= r * r, F.col("w")).otherwise(0.0)
-                ).alias("pr")
-            )
-            .select(
-                F.lit(r).cast("long").alias("r"),
-                F.col("n").cast("long").alias("n_points"),
-                F.col("pr").cast("long").alias("pairs_le_r"),
-                F.round(
-                    F.col("a") * F.col("pr") / (F.col("n") * (F.col("n") - 1.0))
-                    + 1e-9,
-                    6,
-                ).alias("k_hat"),
-                F.round(
-                    F.sqrt(
-                        F.col("a")
-                        * F.col("pr")
-                        / (F.col("n") * (F.col("n") - 1.0))
-                        / math.pi
-                    )
-                    + 1e-9,
-                    6,
-                ).alias("l_hat"),
-                F.round(F.lit(math.pi * r * r) + 1e-9, 6).alias("csr_k"),
-            )
-        )
-        parts.append(pr)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out.orderBy("r")
-
-
-@staged(
-    "dunn_posthoc_ship_delay_priority",
-    oracle="""
-    WITH del AS (
-      SELECT o.o_orderpriority AS g,
-             CAST(date_diff('day', o.o_orderdate, l.l_shipdate)
-                  AS BIGINT) AS d
-      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey),
-    dc AS (
-      SELECT d, CAST(count(*) AS DOUBLE) AS c FROM del GROUP BY d),
-    mrk AS (
-      SELECT d, c,
-             coalesce(sum(c) OVER (ORDER BY d
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0)
-               + (c + 1.0) / 2.0 AS mr
-      FROM dc),
-    gc AS (
-      SELECT g, d, CAST(count(*) AS DOUBLE) AS cg FROM del GROUP BY g, d),
-    gr AS (
-      SELECT gc.g, sum(gc.cg) AS ng, sum(gc.cg * mrk.mr) AS rg
-      FROM gc JOIN mrk ON mrk.d = gc.d GROUP BY gc.g),
-    gstats AS (
-      SELECT (SELECT sum(c) FROM dc) AS n,
-             (SELECT sum(c * c * c - c) FROM dc) AS tie),
-    pairs AS (
-      SELECT a.g AS g1, b.g AS g2, a.ng AS n1, b.ng AS n2,
-             a.rg / a.ng AS mr1, b.rg / b.ng AS mr2,
-             gstats.n AS n, gstats.tie AS tie
-      FROM gr a JOIN gr b ON a.g < b.g CROSS JOIN gstats)
-    SELECT g1, g2,
-           CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-           round(mr1 + 1e-9, 6) AS mean_rank_1,
-           round(mr2 + 1e-9, 6) AS mean_rank_2,
-           round((mr1 - mr2)
-                 / sqrt((n * (n + 1.0) / 12.0
-                         - tie / (12.0 * (n - 1.0)))
-                        * (1.0 / n1 + 1.0 / n2)) + 1e-9, 6) AS dunn_z,
-           CAST(abs((mr1 - mr2)
-                 / sqrt((n * (n + 1.0) / 12.0
-                         - tie / (12.0 * (n - 1.0)))
-                        * (1.0 / n1 + 1.0 / n2))) > 2.807 AS BOOLEAN)
-             AS significant
-    FROM pairs ORDER BY g1, g2
-    """,
-)
-def dunn_posthoc_ship_delay_priority(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dunn's post-hoc pairwise rank comparison of ship delay (days
-    from order to line shipment) across the 5 order priorities — the
-    follow-up that says WHICH priority pairs differ after an omnibus
-    Kruskal-Wallis fires: z = (Rbar_i - Rbar_j) / sqrt[(N(N+1)/12 -
-    sum(t^3-t)/(12(N-1))) (1/n_i + 1/n_j)] with midranks and the tie
-    correction, flagged at the Bonferroni 0.05/10 two-sided critical
-    value 2.807. Delays are integers, so ranks come EXACTLY from the
-    bounded distinct-delay frame (no data-sized sort).
-
-    Scale shape: two data-sized groupBys ((delay) and (group, delay));
-    midranks are a cumulative scan over the ~120-row delay domain;
-    rank sums are a bounded join; the pair frame is 10 rows."""
-    t = Tables(spark, sf_dir)
-    delay = (
-        t.lineitem.join(
-            t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .select(
-            F.col("o_orderpriority").alias("g"),
-            F.datediff(
-                F.col("l_shipdate").cast("date"),
-                F.col("o_orderdate").cast("date"),
-            )
-            .cast("long")
-            .alias("d"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    )
-    dc = delay.groupBy("d").agg(F.count(F.lit(1)).cast("double").alias("c"))
-    wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
-    mrk = dc.select(
-        "d",
-        "c",
-        (
-            F.coalesce(F.sum("c").over(wd), F.lit(0.0))
-            + (F.col("c") + 1.0) / 2.0
-        ).alias("mr"),
-    )
-    gc = delay.groupBy("g", "d").agg(
-        F.count(F.lit(1)).cast("double").alias("cg")
-    )
-    gr = (
-        gc.join(F.broadcast(mrk.select("d", "mr")), "d")
-        .groupBy("g")
-        .agg(
-            F.sum("cg").alias("ng"),
-            F.sum(F.col("cg") * F.col("mr")).alias("rg"),
-        )
-    )
-    glob = dc.agg(
-        F.sum("c").alias("n"),
-        F.sum(F.col("c") * F.col("c") * F.col("c") - F.col("c")).alias("tie"),
-    )
-    a_ = gr.select(
-        F.col("g").alias("g1"), F.col("ng").alias("n1d"),
-        (F.col("rg") / F.col("ng")).alias("mr1"),
-    )
-    b_ = gr.select(
-        F.col("g").alias("g2"), F.col("ng").alias("n2d"),
-        (F.col("rg") / F.col("ng")).alias("mr2"),
-    )
-    pairs = a_.join(b_, F.col("g1") < F.col("g2")).crossJoin(
-        F.broadcast(glob)
-    )
-    se = F.sqrt(
-        (
-            F.col("n") * (F.col("n") + 1.0) / 12.0
-            - F.col("tie") / (12.0 * (F.col("n") - 1.0))
-        )
-        * (1.0 / F.col("n1d") + 1.0 / F.col("n2d"))
-    )
-    z = (F.col("mr1") - F.col("mr2")) / se
-    return pairs.select(
-        "g1",
-        "g2",
-        F.col("n1d").cast("long").alias("n1"),
-        F.col("n2d").cast("long").alias("n2"),
-        F.round(F.col("mr1") + 1e-9, 6).alias("mean_rank_1"),
-        F.round(F.col("mr2") + 1e-9, 6).alias("mean_rank_2"),
-        F.round(z + 1e-9, 6).alias("dunn_z"),
-        (F.abs(z) > 2.807).alias("significant"),
-    ).orderBy("g1", "g2")
-
-
-@staged(
-    "decision_stump_purchase_hour",
-    oracle="""
-    WITH hc AS (
-      SELECT CAST(date_part('hour', ts) AS BIGINT) AS h,
-             CAST(count(*) AS DOUBLE) AS n,
-             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                  AS DOUBLE) AS y
-      FROM events WHERE event_type IN ('click', 'purchase')
-      GROUP BY 1),
-    cum AS (
-      SELECT h,
-             sum(n) OVER (ORDER BY h) AS nl,
-             sum(y) OVER (ORDER BY h) AS yl
-      FROM hc),
-    tot AS (SELECT sum(n) AS nt, sum(y) AS yt FROM hc),
-    splits AS (
-      SELECT cum.h + 1 AS thr, cum.nl, cum.yl,
-             tot.nt - cum.nl AS nr, tot.yt - cum.yl AS yr,
-             tot.nt, tot.yt
-      FROM cum CROSS JOIN tot
-      WHERE cum.nl > 0 AND tot.nt - cum.nl > 0),
-    scored AS (
-      SELECT thr, nl, nr,
-             yl / nl AS pl, yr / nr AS pr,
-             round((nl / nt) * 2.0 * (yl / nl) * (1.0 - yl / nl)
-                   + (nr / nt) * 2.0 * (yr / nr) * (1.0 - yr / nr)
-                   + 1e-12, 10) AS gsplit,
-             2.0 * (yt / nt) * (1.0 - yt / nt) AS groot
-      FROM splits),
-    best AS (
-      SELECT * FROM scored ORDER BY gsplit, thr LIMIT 1)
-    SELECT CAST(thr AS BIGINT) AS split_hour,
-           CAST(nl AS BIGINT) AS n_left,
-           CAST(nr AS BIGINT) AS n_right,
-           round(pl + 1e-9, 6) AS p_left,
-           round(pr + 1e-9, 6) AS p_right,
-           round(groot + 1e-9, 6) AS gini_root,
-           round(gsplit + 1e-9, 6) AS gini_split,
-           round(groot - gsplit + 1e-9, 6) AS gini_gain
-    FROM best
-    """,
-)
-def decision_stump_purchase_hour(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Optimal depth-1 decision tree (stump) for P(purchase | hour):
-    scan all 23 'hour < thr' splits, score each by weighted Gini
-    impurity (nL/N)·2 pL(1-pL) + (nR/N)·2 pR(1-pR), and return the
-    minimizer with its leaves — the CART split-finding kernel reduced
-    to its distributed essence (split scores come entirely from
-    cumulative sufficient statistics, never from re-scanning data per
-    candidate; this is exactly how XGBoost/LightGBM histogram split
-    finding works at scale). Split score quantized to 10 dp before
-    the argmin (selection rule), earliest-threshold tiebreak;
-    continuous complement to ``logistic_irls_purchase_hour`` on the
-    identical 24-cell frame.
-
-    Scale shape: ONE data-sized conditional aggregate to 24 cells;
-    candidate scoring is a window cumsum + 24-row scalar algebra."""
-    e = Tables(spark, sf_dir).events.filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    hc = e.groupBy(F.hour("ts").cast("long").alias("h")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("double")
-        .alias("y"),
-    )
-    wh = Window.orderBy("h")
-    cum = hc.select(
-        "h",
-        F.sum("n").over(wh).alias("nl"),
-        F.sum("y").over(wh).alias("yl"),
-    )
-    tot = hc.agg(F.sum("n").alias("nt"), F.sum("y").alias("yt"))
-    sp = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter((F.col("nl") > 0) & (F.col("nt") - F.col("nl") > 0))
-        .select(
-            (F.col("h") + 1).alias("thr"),
-            "nl",
-            "yl",
-            (F.col("nt") - F.col("nl")).alias("nr"),
-            (F.col("yt") - F.col("yl")).alias("yr"),
-            "nt",
-            "yt",
-        )
-    )
-    pl = F.col("yl") / F.col("nl")
-    pr = F.col("yr") / F.col("nr")
-    gsplit = F.round(
-        (F.col("nl") / F.col("nt")) * 2.0 * pl * (1.0 - pl)
-        + (F.col("nr") / F.col("nt")) * 2.0 * pr * (1.0 - pr)
-        + 1e-12,
-        10,
-    )
-    groot = 2.0 * (F.col("yt") / F.col("nt")) * (
-        1.0 - F.col("yt") / F.col("nt")
-    )
-    scored = sp.select(
-        "thr",
-        "nl",
-        "nr",
-        pl.alias("pl"),
-        pr.alias("pr"),
-        gsplit.alias("gsplit"),
-        groot.alias("groot"),
-    )
-    best = scored.orderBy("gsplit", "thr").limit(1)
-    return best.select(
-        F.col("thr").cast("long").alias("split_hour"),
-        F.col("nl").cast("long").alias("n_left"),
-        F.col("nr").cast("long").alias("n_right"),
-        F.round(F.col("pl") + 1e-9, 6).alias("p_left"),
-        F.round(F.col("pr") + 1e-9, 6).alias("p_right"),
-        F.round(F.col("groot") + 1e-9, 6).alias("gini_root"),
-        F.round(F.col("gsplit") + 1e-9, 6).alias("gini_split"),
-        F.round(F.col("groot") - F.col("gsplit") + 1e-9, 6).alias(
-            "gini_gain"
-        ),
-    )

@@ -1,9 +1,9 @@
-"""Operators staged during the r8 registry freeze, LIVE since round 9:
-CORRECTNESS_r08 landed 50/50 green, so ``register()`` is now invoked from
-``ror_etl_spark.queries.load()`` (VERDICT r8 item 1) and every entry here
-is a first-class registry query. They stay in this module (rather than
-being scattered into their natural homes) to preserve the r8 diff-review
-paper trail; the registry name is the contract, not the file.
+"""Statistics, graph and sketch operators: Good-Turing word smoothing,
+seasonal-naive backtests, Theil-Sen and Mann-Kendall trend tests, the
+Wald-Wolfowitz runs test, ACF, Cramér's V and Levene's test, Gini and
+Herfindahl concentration, hierarchy depth layers, label-propagation
+communities and k-core on the trade graph, HLL sketch intersection, and
+Johnson-Lindenstrauss projection distortion.
 
 Each entry follows the registry discipline (registry.py module
 docstring): aliases identical on both sides, epsilon-rounded floats,
@@ -12,8 +12,6 @@ Spark-vs-DuckDB comparison the driver gate does.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -30,32 +28,10 @@ _DISK_ONLY = StorageLevel.DISK_ONLY
 from ror_etl_spark.operators.util import spread
 from ror_etl_spark.queries.corpusops import _TOKS_SQL
 from ror_etl_spark.functions.text import tokens
+from ror_etl_spark.registry import query
 from ror_etl_spark.tables import Tables
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-STAGED: dict[str, tuple[QueryFn, str | None]] = {}
-
-
-def staged(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query: {name}")
-        STAGED[name] = (fn, " ".join(oracle.split()) if oracle else None)
-        return fn
-
-    return deco
-
-
-def register() -> None:
-    """r9 switch: move every staged query into the live registry."""
-    from ror_etl_spark.registry import query
-
-    for name, (fn, oracle) in STAGED.items():
-        query(name, oracle=oracle)(fn)
-
-
-@staged(
+@query(
     "good_turing_word_smoothing",
     oracle=f"""
     WITH wc AS (
@@ -106,7 +82,7 @@ def good_turing_word_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "seasonal_naive_backtest",
     oracle="""
     WITH daily AS (
@@ -209,7 +185,7 @@ def _theil_sen_median_udf():
 
 
 
-@staged(
+@query(
     "theil_sen_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -275,7 +251,7 @@ def theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "hierarchy_depth_layers",
     oracle="""
     SELECT CAST(o_orderkey + 1 AS BIGINT) AS id,
@@ -373,7 +349,7 @@ def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
     )
 
 
-@staged("label_propagation_communities", oracle=_lpa_oracle())
+@query("label_propagation_communities", oracle=_lpa_oracle())
 def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (community detection) on the
     undirected nation trade graph: every node starts as its own label;
@@ -429,7 +405,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     ).orderBy("nationkey")
 
 
-@staged(
+@query(
     "runs_test_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -612,7 +588,7 @@ def _kcore_udf(k: int, rounds: int):
     return kcore.asNondeterministic()
 
 
-@staged("kcore_trade_graph", oracle=_kcore_oracle())
+@query("kcore_trade_graph", oracle=_kcore_oracle())
 def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition peel (k=2) of the HEAVY nation trade graph:
     keep only edges with weight strictly above the median edge weight
@@ -664,7 +640,7 @@ _HLL_A = "click"
 _HLL_B = "purchase"
 
 
-@staged(
+@query(
     "hll_intersection_click_purchase",
     oracle=f"""
     WITH ev AS (
@@ -861,7 +837,7 @@ def _jl_oracle() -> str:
     """
 
 
-@staged("jl_projection_distortion", oracle=_jl_oracle())
+@query("jl_projection_distortion", oracle=_jl_oracle())
 def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson–Lindenstrauss dimensionality-reduction audit: project the
     64-dim embeddings to 16 dims with a deterministic ±1 matrix (md5
@@ -912,7 +888,7 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "gini_coefficient_customer_revenue",
     oracle="""
     WITH per AS (
@@ -959,7 +935,7 @@ def gini_coefficient_customer_revenue(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-@staged(
+@query(
     "herfindahl_concentration_by_region",
     oracle="""
     WITH sales AS (
@@ -1012,7 +988,7 @@ def herfindahl_concentration_by_region(
     )
 
 
-@staged(
+@query(
     "mann_kendall_daily_revenue",
     oracle="""
     WITH daily AS (
@@ -1111,7 +1087,7 @@ def _acf_oracle() -> str:
     """
 
 
-@staged("acf_daily_revenue", oracle=_acf_oracle())
+@query("acf_daily_revenue", oracle=_acf_oracle())
 def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of daily revenue at calendar lags 1/2/3/7/14 —
     the seasonality fingerprint a forecaster reads before choosing a
@@ -1149,7 +1125,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "cramers_v_priority_status",
     oracle="""
     WITH ct AS (
@@ -1223,7 +1199,7 @@ def cramers_v_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged(
+@query(
     "levene_test_value_by_event_type",
     oracle="""
     WITH med AS (

@@ -76,61 +76,12 @@ _DRIFT_SENSITIVE = [
 ]
 
 
-# r8: the judge asked (VERDICT r7, item 5) that the newest floating-point
-# kernels — the semdedup/ANN-recall family — land inside the driver's
-# 50-slot window this round. 52 queries are tier-0 (driver-unverified), so
-# without a bump the last two registered (which are two of these) would
-# miss the window. Bumped within tier 0 only; already-green queries are
-# unaffected (tier 2 sorts after all tier 0 regardless of priority).
-_R8_WINDOW_PRIORITY = [
-    "embedding_semdedup_prune",
-    "embedding_semdedup_prune_tuned",
-    "embedding_ann_recall",
-    "embedding_pq_recall",
-    "embedding_ivf_nprobe_sweep",
-    "embedding_semdedup_sweep",
-    "embedding_dim_truncation_sweep",
-]
-
-# Queries whose IMPLEMENTATION changed in r9 (LANE_POOL cap on the tuned
-# minhash banding): already driver-green, but the change must be
-# re-proven, so they lead the re-confirmation tier of the r9 window.
-_R9_CHANGED = [
-    "dedup_minhash_lsh_tuned",
-    "dedup_funnel_keep_tuned",
-]
-
-# Queries whose IMPLEMENTATION changed in r10 (loop-internal checkpoints
-# moved to DISK_ONLY per the r9 endurance rule, now pinned by
-# tests/test_checkpoint_discipline.py): already driver-green, but the
-# change must be re-proven, so they lead the re-confirmation tier of the
-# r10 window — right after the 28 newly registered staged_r10 names.
-_R10_CHANGED = [
-    "hierarchy_depth_layers",
-    "kcore_trade_graph",
-    "cheapest_path_bounded_hops",
-    "hierarchy_subtree_totals",
-    "bfs_levels_trade_graph",
-]
-
-# Queries whose IMPLEMENTATION changed in r12 (trade-graph family
-# re-based from the vacuous complete K25 onto the sparsified top-90
-# graph — VERDICT r11 item 2): already driver-green, but the new graph
-# changes their hashes, so they lead the re-confirmation tier of the
-# r12 window — right after the 44 tier-0 names (44 + 3 = 47 <= 50).
-_R12_CHANGED = [
-    "hits_nation_trade",
-    "degree_assortativity_trade",
-    "modularity_lpa_communities",
-]
-
-# Queries whose IMPLEMENTATION changed in r13 (optimization round 2 —
-# results identical, shapes changed): jaccard_verify's single shingle
-# materialization (all eight consumers), lsh_near_dup_pairs' pinned
-# verify-group exchange (three twins), and the wide rollup's lag-window
-# edge derivation. Already driver-green, but the changed paths must be
-# re-proven, so they lead the re-confirmation tier of the r13 window.
-_R13_CHANGED = [
+# Queries whose IMPLEMENTATION changed since the last driver verdict.
+# They may already be driver-green, but the changed path must be
+# re-proven, so they lead the re-confirmation tier of the driver's
+# 50-slot window. Add a name here when its query's code changes; drop it
+# after a later driver verdict has re-proven it.
+CHANGED = [
     "ultimate_parent_rollup_wide",
     "dedup_minhash_lsh",
     "dedup_minhash_lsh_tuned",
@@ -154,19 +105,7 @@ def load_all() -> None:
     for name in _DRIFT_SENSITIVE:
         if name in QUERIES:
             PRIORITY[name] = max(PRIORITY.get(name, 0), 4)
-    for name in _R8_WINDOW_PRIORITY:
-        if name in QUERIES:
-            PRIORITY[name] = max(PRIORITY.get(name, 0), 6)
-    for name in _R9_CHANGED:
-        if name in QUERIES:
-            PRIORITY[name] = max(PRIORITY.get(name, 0), 7)
-    for name in _R10_CHANGED:
-        if name in QUERIES:
-            PRIORITY[name] = max(PRIORITY.get(name, 0), 8)
-    for name in _R12_CHANGED:
-        if name in QUERIES:
-            PRIORITY[name] = max(PRIORITY.get(name, 0), 9)
-    for name in _R13_CHANGED:
+    for name in CHANGED:
         if name in QUERIES:
             PRIORITY[name] = max(PRIORITY.get(name, 0), 10)
 

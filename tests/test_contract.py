@@ -3,6 +3,8 @@ approximate aggregates stay within sketch error bounds."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import sys
 
@@ -154,3 +156,61 @@ def test_driver_window_prioritizes_unverified_oracle_queries():
         "a verified query occupies a window slot while "
         f"{len(tier0)} unverified oracle-bearing queries wait"
     )
+
+
+# Query modules that ``queries.load()`` never imports, kept until their
+# tests are retired (at most a few dozen tests per change). Remove a name
+# when its module is deleted; never add one.
+UNSERVED = ("staged_r13", "staged_r14")
+
+
+def test_every_query_module_is_served():
+    """Every module under ror_etl_spark/queries/ (bar the package init, the
+    ``util`` helpers and the UNSERVED modules still being retired) is
+    imported by ``queries.load()`` and registers at least one query, and
+    none keeps a private ``STAGED`` dict — so implemented-but-unserved
+    query code cannot pile up beside the registry. UNSERVED may only
+    shrink: its modules exist, stay out of ``load()`` and register
+    nothing."""
+    from ror_etl_spark import registry
+
+    registry.load_all()
+    qdir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "ror_etl_spark",
+        "queries",
+    )
+    trees = {}
+    for path in sorted(glob.glob(os.path.join(qdir, "*.py"))):
+        with open(path) as f:
+            trees[os.path.splitext(os.path.basename(path))[0]] = ast.parse(f.read())
+    assert "staged_r9" in trees, qdir
+
+    load_fn = next(
+        node
+        for node in trees["__init__"].body
+        if isinstance(node, ast.FunctionDef) and node.name == "load"
+    )
+    loaded = {
+        alias.name
+        for node in ast.walk(load_fn)
+        if isinstance(node, ast.ImportFrom) and node.module == "ror_etl_spark.queries"
+        for alias in node.names
+    }
+    registering = {fn.__module__.rsplit(".", 1)[-1] for fn in registry.QUERIES.values()}
+    assert [m for m in UNSERVED if m not in trees] == [], "drop deleted names"
+    assert [m for m in UNSERVED if m in loaded or m in registering] == []
+    served = [m for m in trees if m not in ("__init__", "util", *UNSERVED)]
+    assert [m for m in served if m not in loaded] == [], "not imported by load()"
+    assert [m for m in served if m not in registering] == [], "registers no query"
+
+    staged = [
+        m
+        for m, tree in trees.items()
+        if m not in UNSERVED
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and t.id == "STAGED"
+    ]
+    assert staged == [], "modules define a STAGED dict"

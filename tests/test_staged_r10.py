@@ -1,67 +1,29 @@
-"""Oracle checks for the r10-staged operators (queries/staged_r10.py) —
-the same Spark-vs-DuckDB comparison the driver gate runs, applied to
-queries that are implemented but deliberately NOT registered in round 9
-(the r9 driver window is committed to the 20 names registered this
-round; r10 flips ``staged_r10.register()`` after CORRECTNESS_r09 lands).
+"""Oracle checks for the distribution-statistics and survival/tail
+operators in queries/staged_r10.py — the same Spark-vs-DuckDB comparison
+the driver gate runs, plus independent invariants beyond the oracle.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r10 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_matches_oracle, module_queries
+
+REGISTERED = module_queries("staged_r10")
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(REGISTERED))
 def test_staged_query_matches_oracle(spark, con, name):
-    fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    got_cols, got_rows = _key(fn(spark, SF_SMALL).toPandas())
-    want_cols, want_rows = _key(con.execute(oracle).df())
-    assert got_cols == want_cols
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    fn, oracle = REGISTERED[name]
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_kaplan_meier_invariants(spark):
     """Beyond the oracle: survival is non-increasing, starts below 1,
     and the at-risk count is non-increasing in event time."""
-    fn, _ = STAGED["kaplan_meier_time_to_purchase"]
+    fn, _ = REGISTERED["kaplan_meier_time_to_purchase"]
     rows = fn(spark, SF_SMALL).collect()
     assert rows, "events corpus must produce at least one purchase"
     surv = [r["survival"] for r in rows]
@@ -76,7 +38,7 @@ def test_histogram_quantiles_bracket_exact(spark):
     exact quantiles — the sketch's accuracy contract."""
     import duckdb as d
 
-    fn, _ = STAGED["histogram_quantile_sketch"]
+    fn, _ = REGISTERED["histogram_quantile_sketch"]
     got = {r["p"]: r["est"] for r in fn(spark, SF_SMALL).collect()}
     con2 = d.connect()
     path = os.path.join(SF_SMALL, "lineitem.parquet")
@@ -91,7 +53,7 @@ def test_histogram_quantiles_bracket_exact(spark):
 
 
 def test_lorenz_deciles_are_monotone_and_sum_to_one(spark):
-    fn, _ = STAGED["lorenz_curve_deciles"]
+    fn, _ = REGISTERED["lorenz_curve_deciles"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) == 10
     shares = [r["revenue_share"] for r in rows]
@@ -109,7 +71,7 @@ def test_clustering_coeff_agrees_with_global_triangles(spark):
     from ror_etl_spark import registry
 
     registry.load_all()
-    fn, _ = STAGED["clustering_coefficient_nations"]
+    fn, _ = REGISTERED["clustering_coefficient_nations"]
     per_node = fn(spark, SF_SMALL).agg({"triangles": "sum"}).first()[0]
     glob = (
         registry.QUERIES["triangle_count_nations"](spark, SF_SMALL).first()[0]
@@ -142,7 +104,7 @@ def test_lorenz_ntile_closed_form_matches_ntile_for_uneven_n(spark, tmp_path):
         }
     )
     pq.write_table(tbl, str(tmp_path / "orders.parquet"))
-    fn, oracle = STAGED["lorenz_curve_deciles"]
+    fn, oracle = REGISTERED["lorenz_curve_deciles"]
     got = {r["decile"]: r["n_customers"] for r in fn(spark, str(tmp_path)).collect()}
     con2 = d.connect()
     con2.execute(

@@ -1,77 +1,27 @@
-"""Oracle checks for the r11-staged operators (queries/staged_r11.py) —
-the same Spark-vs-DuckDB comparison the driver gate runs, applied to
-queries that are implemented but deliberately NOT registered in round 10
-(the r10 driver window is committed to the 28 staged_r10 names flipped
-live this round; r11 flips ``staged_r11.register()`` after
-CORRECTNESS_r10 lands).
+"""Oracle checks for the model/data evaluation and calibration operators
+in queries/staged_r11.py — the same Spark-vs-DuckDB comparison the
+driver gate runs, plus independent invariants beyond the oracle.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r11 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_matches_oracle, module_queries
+
+REGISTERED = module_queries("staged_r11")
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(REGISTERED))
 def test_staged_query_matches_oracle(spark, con, name):
-    fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    sdf = fn(spark, SF_SMALL).toPandas()
-    odf = con.execute(oracle).df()
-    got_cols, got_rows = _key(sdf)
-    want_cols, want_rows = _key(odf)
-    assert got_cols == want_cols
-    # dtype check mirrors tools/check.py (and a maximally strict driver):
-    # the r11 flip found two staged queries green here but int32-vs-int64
-    # red under the replica — value normalization alone hides dtype drift.
-    dt_mismatch = [
-        (c, str(sdf[c].dtype), str(odf[c].dtype))
-        for c in got_cols
-        if str(sdf[c].dtype) != str(odf[c].dtype)
-    ]
-    assert not dt_mismatch, f"dtype mismatch {dt_mismatch}"
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    fn, oracle = REGISTERED[name]
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_roc_auc_in_unit_interval(spark):
-    fn, _ = STAGED["roc_auc_click_purchase"]
+    fn, _ = REGISTERED["roc_auc_click_purchase"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert 0.0 <= row["auc"] <= 1.0
     assert row["n_pos"] > 0 and row["n_neg"] > 0
@@ -79,7 +29,7 @@ def test_roc_auc_in_unit_interval(spark):
 
 def test_bh_fdr_rejections_are_a_prefix(spark):
     """Step-up property: the rejected set is exactly ranks 1..k."""
-    fn, _ = STAGED["bh_fdr_cohort_value"]
+    fn, _ = REGISTERED["bh_fdr_cohort_value"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["rank"])
     flags = [r["rejected"] for r in rows]
     k = sum(flags)
@@ -91,7 +41,7 @@ def test_bh_fdr_rejections_are_a_prefix(spark):
 def test_bfs_synthetic_reaches_whole_graph(spark):
     """The expander is connected: every node gets a finite distance and
     distances respect the depth cap."""
-    fn, _ = STAGED["bfs_distances_synthetic_10k"]
+    fn, _ = REGISTERED["bfs_distances_synthetic_10k"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) == 10007
     assert max(r["dist"] for r in rows) <= 15
@@ -99,7 +49,7 @@ def test_bfs_synthetic_reaches_whole_graph(spark):
 
 
 def test_lift_gains_monotone_cumgain(spark):
-    fn, _ = STAGED["lift_gains_deciles"]
+    fn, _ = REGISTERED["lift_gains_deciles"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["decile"])
     gains = [r["cum_gain"] for r in rows]
     assert all(a <= b + 1e-12 for a, b in zip(gains, gains[1:]))
@@ -111,7 +61,7 @@ def test_ares_sample_prefers_heavy_weights(spark):
     must exceed the population mean (w ~ totalprice, k=100 of 1500)."""
     import duckdb as d
 
-    fn, _ = STAGED["weighted_sample_ares"]
+    fn, _ = REGISTERED["weighted_sample_ares"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) == 100
     sample_mean = sum(r["weight"] for r in rows) / len(rows)
@@ -124,7 +74,7 @@ def test_ares_sample_prefers_heavy_weights(spark):
 def test_link_prediction_scores_bounded(spark):
     """Jaccard in (0,1]; AA positive; every common-neighbor count is at
     most min(deg u, deg v) implied by jaccard <= 1."""
-    fn, _ = STAGED["link_prediction_trade_graph"]
+    fn, _ = REGISTERED["link_prediction_trade_graph"]
     rows = fn(spark, SF_SMALL).collect()
     assert 0 < len(rows) <= 10
     for r in rows:
@@ -137,7 +87,7 @@ def test_link_prediction_scores_bounded(spark):
 
 
 def test_rich_club_phi_bounded_and_nodes_decreasing(spark):
-    fn, _ = STAGED["rich_club_trade_graph"]
+    fn, _ = REGISTERED["rich_club_trade_graph"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["k"])
     ns = [r["n_nodes"] for r in rows]
     assert ns == sorted(ns, reverse=True)
@@ -152,7 +102,7 @@ def test_isotropy_against_numpy(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    fn, _ = STAGED["embedding_isotropy_stats"]
+    fn, _ = REGISTERED["embedding_isotropy_stats"]
     row = fn(spark, SF_SMALL).collect()[0]
     emb = pq.read_table(os.path.join(SF_SMALL, "embeddings.parquet"))
     x = np.array(emb.column("embedding").to_pylist(), dtype=np.float64)
@@ -165,33 +115,20 @@ def test_isotropy_against_numpy(spark):
 
 
 def test_no_staged_name_collides_with_registry():
-    """The r11 flip calls ``query(name)`` for every staged entry, and
-    ``query`` raises on duplicates — so a staged name that already
-    exists in the live registry would CRASH the whole registry load at
-    flip time (caught in the r10 audit: wave-1 staged two names that
-    stats.py/sampling.py had registered in the meantime). Pin the
-    invariant for every staged module."""
+    """Every query here registers through ``registry.query``, which raises
+    on a duplicate name, so a collision fails ``load_all()`` itself. Pin
+    that guard: re-registering one of these names raises and leaves the
+    registered callable in place."""
     from ror_etl_spark import registry
-    from ror_etl_spark.queries.staged_r10 import STAGED as S10
-    from ror_etl_spark.queries.staged_r9 import STAGED as S9
 
-    registry.load_all()
-    live = set(registry.QUERIES)
-    for batch in (set(S9), set(S10), set(STAGED)):
-        # staged_r9/r10 are already flipped INTO the registry; a batch
-        # must be fully live (flipped) or fully pending (disjoint)
-        assert batch.isdisjoint(live) or batch <= live, (
-            "staged batch must be fully live or fully pending"
-        )
-    # r11 flip happened (queries.load() calls staged_r11.register()):
-    # the batch must now be FULLY live — a partial flip means a name
-    # collided and crashed registration halfway.
-    missing = set(STAGED) - live
-    assert not missing, f"staged_r11 names missing from registry: {missing}"
+    name = next(iter(REGISTERED))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.query(name)(lambda spark, sf_dir: None)
+    assert registry.QUERIES[name] is REGISTERED[name][0]
 
 
 def test_logrank_chi2_nonnegative(spark):
-    fn, _ = STAGED["logrank_time_to_purchase"]
+    fn, _ = REGISTERED["logrank_time_to_purchase"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["chi2"] >= 0.0
     assert 0 <= row["o1"] <= row["n_events"]
@@ -204,7 +141,7 @@ def test_energy_distance_against_numpy_brute(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    fn, _ = STAGED["energy_distance_value"]
+    fn, _ = REGISTERED["energy_distance_value"]
     row = fn(spark, SF_SMALL).collect()[0]
     t = pq.read_table(os.path.join(SF_SMALL, "events.parquet")).to_pandas()
     t = t[t.event_type.isin(["click", "purchase"])]
@@ -223,7 +160,7 @@ def test_mahalanobis_against_numpy(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    fn, _ = STAGED["mahalanobis_outlier_customers"]
+    fn, _ = REGISTERED["mahalanobis_outlier_customers"]
     rows = fn(spark, SF_SMALL).collect()
     o = pq.read_table(os.path.join(SF_SMALL, "orders.parquet")).to_pandas()
     g = o.groupby("o_custkey").agg(
@@ -244,7 +181,7 @@ def test_dft_matches_numpy_goertzel(spark):
     import numpy as np
     import pyarrow.parquet as pq
 
-    fn, _ = STAGED["dft_weekly_power"]
+    fn, _ = REGISTERED["dft_weekly_power"]
     row = fn(spark, SF_SMALL).collect()[0]
     li = pq.read_table(os.path.join(SF_SMALL, "lineitem.parquet")).to_pandas()
     d = (li.l_shipdate.dt.normalize() - np.datetime64("1992-01-01")).dt.days

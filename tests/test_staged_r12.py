@@ -1,91 +1,39 @@
-"""Oracle checks for the r12-staged operators (queries/staged_r12.py) —
-the same Spark-vs-DuckDB comparison the driver gate runs (including the
-strict dtype rule the r11 flip added), applied to queries implemented
-but deliberately NOT registered in round 11 (the r11 driver window is
-committed to the first 50 staged_r11 names flipped live this round;
-r12 flips ``staged_r12.register()`` after CORRECTNESS_r11 lands).
+"""Oracle checks for the governance and decision operators in
+queries/staged_r12.py — the same Spark-vs-DuckDB comparison the driver
+gate runs, plus independent invariants beyond the oracle.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r12 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_matches_oracle, module_queries
+
+REGISTERED = module_queries("staged_r12")
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(REGISTERED))
 def test_staged_query_matches_oracle(spark, con, name):
-    fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    sdf = fn(spark, SF_SMALL).toPandas()
-    odf = con.execute(oracle).df()
-    got_cols, got_rows = _key(sdf)
-    want_cols, want_rows = _key(odf)
-    assert got_cols == want_cols
-    dt_mismatch = [
-        (c, str(sdf[c].dtype), str(odf[c].dtype))
-        for c in got_cols
-        if str(sdf[c].dtype) != str(odf[c].dtype)
-    ]
-    assert not dt_mismatch, f"dtype mismatch {dt_mismatch}"
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    fn, oracle = REGISTERED[name]
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_no_staged_name_collides_with_registry():
-    """The r12 flip calls ``query(name)`` for every staged entry and
-    ``query`` raises on duplicates — a collision would crash the whole
-    registry load at flip time. The batch must stay fully pending until
-    the flip, then fully live (the r11 lesson: update this assert at
-    flip time)."""
+    """Every query here registers through ``registry.query``, which raises
+    on a duplicate name, so a collision fails ``load_all()`` itself. Pin
+    that guard: re-registering one of these names raises and leaves the
+    registered callable in place."""
     from ror_etl_spark import registry
 
-    registry.load_all()
-    live = set(registry.QUERIES)
-    batch = set(STAGED)
-    assert batch.isdisjoint(live) or batch <= live, (
-        "staged batch must be fully live or fully pending"
-    )
+    name = next(iter(REGISTERED))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        registry.query(name)(lambda spark, sf_dir: None)
+    assert registry.QUERIES[name] is REGISTERED[name][0]
 
 
 def test_k_anonymity_monotone_in_k(spark):
     """Raising k can only grow the at-risk set."""
-    fn, _ = STAGED["k_anonymity_customer_qi"]
+    fn, _ = REGISTERED["k_anonymity_customer_qi"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["k"])
     risk = [r["rows_at_risk"] for r in rows]
     grp = [r["groups_below"] for r in rows]
@@ -96,7 +44,7 @@ def test_k_anonymity_monotone_in_k(spark):
 
 
 def test_l_diversity_bounds(spark):
-    fn, _ = STAGED["l_diversity_order_priority"]
+    fn, _ = REGISTERED["l_diversity_order_priority"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert 1 <= row["min_l"] <= 5  # 5 distinct priorities exist
     assert row["groups_l_below_2"] <= row["groups_l_below_3"] <= row["n_groups"]
@@ -106,7 +54,7 @@ def test_l_diversity_bounds(spark):
 def test_dp_noise_is_laplace_shaped(spark):
     """Released counts differ from true counts by the deterministic
     Laplace draw; at b=1 the median |noise| is ln 2 over many groups."""
-    fn, _ = STAGED["dp_noisy_counts_laplace"]
+    fn, _ = REGISTERED["dp_noisy_counts_laplace"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) >= 100  # 30 days x 5 types
     noises = sorted(r["abs_noise"] for r in rows)
@@ -118,7 +66,7 @@ def test_dp_noise_is_laplace_shaped(spark):
 
 def test_target_encoding_shrinks_toward_global(spark):
     """|encoded - global| <= |raw - global| for every segment."""
-    fn, _ = STAGED["target_encoding_smoothed"]
+    fn, _ = REGISTERED["target_encoding_smoothed"]
     rows = fn(spark, SF_SMALL).collect()
     # recover global mean: encoded = (n*m + 50*g)/(n+50) -> g
     r0 = rows[0]
@@ -130,7 +78,7 @@ def test_target_encoding_shrinks_toward_global(spark):
 def test_woe_iv_consistency(spark):
     """WOE shares sum: sum over bands of pos-share minus neg-share = 0,
     IV total equals the recomputed sum of terms."""
-    fn, _ = STAGED["woe_iv_acctbal_band"]
+    fn, _ = REGISTERED["woe_iv_acctbal_band"]
     rows = fn(spark, SF_SMALL).collect()
     tg = sum(r["n_pos"] + 0.5 for r in rows)
     tb = sum(r["n_neg"] + 0.5 for r in rows)
@@ -144,7 +92,7 @@ def test_woe_iv_consistency(spark):
 
 def test_vif_at_least_one(spark):
     """VIF_i >= 1 always (R^2_i >= 0); det in (0, 1]."""
-    fn, _ = STAGED["vif_lineitem_factors"]
+    fn, _ = REGISTERED["vif_lineitem_factors"]
     row = fn(spark, SF_SMALL).collect()[0]
     for c in ("vif_quantity", "vif_extendedprice", "vif_discount"):
         assert row[c] >= 1.0 - 1e-9
@@ -152,7 +100,7 @@ def test_vif_at_least_one(spark):
 
 
 def test_partial_corr_in_unit_interval(spark):
-    fn, _ = STAGED["partial_corr_qty_price_disc"]
+    fn, _ = REGISTERED["partial_corr_qty_price_disc"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert -1.0 <= row["r_partial"] <= 1.0
     assert row["confounding_shift"] >= 0.0
@@ -161,7 +109,7 @@ def test_partial_corr_in_unit_interval(spark):
 def test_conformal_coverage_near_nominal(spark):
     """Split conformal at alpha=0.1 guarantees coverage >= 0.9 - O(1/n)
     in expectation; on a fixed split allow a slack band."""
-    fn, _ = STAGED["conformal_interval_totalprice"]
+    fn, _ = REGISTERED["conformal_interval_totalprice"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["qhat"] > 0
     assert 0.80 <= row["coverage"] <= 1.0
@@ -171,7 +119,7 @@ def test_conformal_coverage_near_nominal(spark):
 def test_iptw_weights_bounded_and_correcting(spark):
     """Max IPW weight is 1/min(ps) — finite given overlap; the ATE and
     naive difference are both finite."""
-    fn, _ = STAGED["iptw_ate_urgent_revenue"]
+    fn, _ = REGISTERED["iptw_ate_urgent_revenue"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["max_weight"] >= 1.0
     assert row["max_weight"] < 100.0  # positivity holds on TPC-H priorities
@@ -179,7 +127,7 @@ def test_iptw_weights_bounded_and_correcting(spark):
 
 
 def test_rdd_limits_consistent(spark):
-    fn, _ = STAGED["rdd_acctbal_threshold"]
+    fn, _ = REGISTERED["rdd_acctbal_threshold"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert abs(row["rd_effect"] - (row["right_limit"] - row["left_limit"])) < 1e-3
     assert row["n_window"] > 0
@@ -189,7 +137,7 @@ def test_its_pre_trend_plus_changes_reconstruct(spark):
     """The four coefficients must reproduce the post-period mean:
     checked loosely — level_change and slope_change are finite and the
     day count matches the calendar."""
-    fn, _ = STAGED["its_segmented_daily_revenue"]
+    fn, _ = REGISTERED["its_segmented_daily_revenue"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert 28 <= row["n_days"] <= 31
     for c in ("base_slope", "level_change", "slope_change", "intercept"):
@@ -197,7 +145,7 @@ def test_its_pre_trend_plus_changes_reconstruct(spark):
 
 
 def test_weibull_shape_positive(spark):
-    fn, _ = STAGED["weibull_fit_time_to_purchase"]
+    fn, _ = REGISTERED["weibull_fit_time_to_purchase"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["shape_k"] > 0
     assert row["scale_hours"] > 0
@@ -209,7 +157,7 @@ def test_weibull_shape_positive(spark):
 
 
 def test_spectral_entropy_normalized_in_unit(spark):
-    fn, _ = STAGED["spectral_entropy_daily_revenue"]
+    fn, _ = REGISTERED["spectral_entropy_daily_revenue"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert 0.0 <= row["normalized_entropy"] <= 1.0 + 1e-9
     assert row["n_freqs"] == 14
@@ -219,7 +167,7 @@ def test_yule_walker_stationarity_triangle(spark):
     """AR(2) from Yule-Walker on biased autocorrs always lands inside
     the stationarity triangle: |phi2| < 1, phi1 + phi2 < 1,
     phi2 - phi1 < 1."""
-    fn, _ = STAGED["yule_walker_ar2_daily"]
+    fn, _ = REGISTERED["yule_walker_ar2_daily"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert abs(row["phi2"]) < 1.0
     assert row["phi1"] + row["phi2"] < 1.0
@@ -228,14 +176,14 @@ def test_yule_walker_stationarity_triangle(spark):
 
 
 def test_poisson_rate_ratio_matches_rates(spark):
-    fn, _ = STAGED["poisson_two_rate_test"]
+    fn, _ = REGISTERED["poisson_two_rate_test"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert abs(row["rate_ratio"] - row["rate2"] / row["rate1"]) < 1e-2
     assert row["events_first_half"] + row["events_second_half"] > 0
 
 
 def test_anderson_darling_nonnegative(spark):
-    fn, _ = STAGED["anderson_darling_click_purchase"]
+    fn, _ = REGISTERED["anderson_darling_click_purchase"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["ad_statistic"] >= 0.0
     assert row["n_click"] > 0 and row["n_purchase"] > 0
@@ -243,7 +191,7 @@ def test_anderson_darling_nonnegative(spark):
 
 def test_eb_shrinkage_contracts_toward_pooled(spark):
     """Every shrunk rate sits between the raw rate and the pooled mean."""
-    fn, _ = STAGED["eb_shrunk_source_rates"]
+    fn, _ = REGISTERED["eb_shrunk_source_rates"]
     rows = fn(spark, SF_SMALL).collect()
     pbar = sum(r["raw_rate"] for r in rows) / len(rows)
     for r in rows:
@@ -253,7 +201,7 @@ def test_eb_shrinkage_contracts_toward_pooled(spark):
 
 def test_stickiness_bounds(spark):
     """avg DAU <= WAU always; stickiness in (0, 1]."""
-    fn, _ = STAGED["dau_wau_stickiness"]
+    fn, _ = REGISTERED["dau_wau_stickiness"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) >= 4
     for r in rows:
@@ -262,7 +210,7 @@ def test_stickiness_bounds(spark):
 
 
 def test_bounce_rate_and_depth_consistent(spark):
-    fn, _ = STAGED["session_bounce_depth"]
+    fn, _ = REGISTERED["session_bounce_depth"]
     rows = fn(spark, SF_SMALL).collect()
     for r in rows:
         assert 0.0 <= r["bounce_rate"] <= 1.0
@@ -273,7 +221,7 @@ def test_bounce_rate_and_depth_consistent(spark):
 def test_zorder_cells_cover_all_users(spark):
     """Cell counts sum to <= distinct users (top-25 cut) and every cell
     coordinate pair is on the 16x16 grid."""
-    fn, _ = STAGED["geo_zorder_cell_counts"]
+    fn, _ = REGISTERED["geo_zorder_cell_counts"]
     rows = fn(spark, SF_SMALL).collect()
     for r in rows:
         assert 0 <= r["gy"] <= 15 and 0 <= r["gx"] <= 15
@@ -281,7 +229,7 @@ def test_zorder_cells_cover_all_users(spark):
 
 
 def test_haversine_knn_shape_and_monotone(spark):
-    fn, _ = STAGED["geo_haversine_knn"]
+    fn, _ = REGISTERED["geo_haversine_knn"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) == 25 * 3
     from collections import defaultdict
@@ -297,7 +245,7 @@ def test_haversine_knn_shape_and_monotone(spark):
 
 
 def test_bbox_join_keeps_all_boxes(spark):
-    fn, _ = STAGED["geo_bbox_containment_join"]
+    fn, _ = REGISTERED["geo_bbox_containment_join"]
     rows = fn(spark, SF_SMALL).collect()
     assert len(rows) == 25  # every nation box present even if empty
     for r in rows:
@@ -307,7 +255,7 @@ def test_bbox_join_keeps_all_boxes(spark):
 def test_closeness_bounds(spark):
     """Closeness = reached/total_dist <= 1 (every distance >= 1), and
     total_dist >= n_reached."""
-    fn, _ = STAGED["closeness_centrality_trade"]
+    fn, _ = REGISTERED["closeness_centrality_trade"]
     rows = fn(spark, SF_SMALL).collect()
     # sf0.001's sparsified trade graph has ~10 nations with out-edges
     assert len(rows) >= 5
@@ -320,7 +268,7 @@ def test_closeness_bounds(spark):
 def test_cif_sum_bounded_and_monotone(spark):
     """Each CIF is nondecreasing and their sum never exceeds 1 — the
     property per-cause 1-KM famously violates under competing risks."""
-    fn, _ = STAGED["aalen_johansen_cif"]
+    fn, _ = REGISTERED["aalen_johansen_cif"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["duration_h"])
     prev_p = prev_e = 0.0
     for r in rows:
@@ -333,7 +281,7 @@ def test_cif_sum_bounded_and_monotone(spark):
 def test_entropy_rate_below_joint_and_cap(spark):
     """Conditioning can't raise entropy: rate <= joint <= ... and the
     normalized rate sits in [0, 1]."""
-    fn, _ = STAGED["entropy_rate_markov"]
+    fn, _ = REGISTERED["entropy_rate_markov"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert 0.0 <= row["entropy_rate_nats"] <= row["joint_entropy_nats"] + 1e-9
     assert 0.0 <= row["normalized_rate"] <= 1.0 + 1e-9
@@ -342,7 +290,7 @@ def test_entropy_rate_below_joint_and_cap(spark):
 def test_growth_accounting_identity(spark):
     """Week-1 actives decompose exactly: every active user is new,
     retained, or resurrected; week 0 has no retained/resurrected."""
-    fn, _ = STAGED["growth_accounting_weekly"]
+    fn, _ = REGISTERED["growth_accounting_weekly"]
     rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["week_idx"])
     w0 = rows[0]
     assert w0["week_idx"] == 0
@@ -352,7 +300,7 @@ def test_growth_accounting_identity(spark):
 
 
 def test_cmh_chi2_nonnegative_and_or_positive(spark):
-    fn, _ = STAGED["cmh_test_segment_strata"]
+    fn, _ = REGISTERED["cmh_test_segment_strata"]
     row = fn(spark, SF_SMALL).collect()[0]
     assert row["cmh_chi2"] >= 0.0
     assert row["mh_odds_ratio"] > 0.0

@@ -1,85 +1,34 @@
-"""Oracle checks for the r13-staged operators (queries/staged_r13.py) —
+"""Oracle checks for the unserved operators in ``queries/staged_r13.py`` —
 the same Spark-vs-DuckDB comparison the driver gate runs (including the
-strict dtype rule), applied to queries implemented but deliberately NOT
-registered in round 12 (the r12 driver window is committed to the 44
-previously-unverified names plus the 3 re-based trade-graph ops; r13
-flips ``staged_r13.register()`` after CORRECTNESS_r12 lands).
+strict dtype rule) — plus independent invariants beyond the oracle.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r13 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from ror_etl_spark import registry
+from tests.conftest import SF_SMALL, assert_matches_oracle
 
+# staged_r13 imports helpers from live modules, which register on import:
+# load the registry first so this import cannot change registration order.
+registry.load_all()
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
+from ror_etl_spark.queries.staged_r13 import STAGED  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(STAGED))
 def test_staged_query_matches_oracle(spark, con, name):
     fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    sdf = fn(spark, SF_SMALL).toPandas()
-    odf = con.execute(oracle).df()
-    got_cols, got_rows = _key(sdf)
-    want_cols, want_rows = _key(odf)
-    assert got_cols == want_cols
-    dt_mismatch = [
-        (c, str(sdf[c].dtype), str(odf[c].dtype))
-        for c in got_cols
-        if str(sdf[c].dtype) != str(odf[c].dtype)
-    ]
-    assert not dt_mismatch, f"dtype mismatch {dt_mismatch}"
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_no_staged_name_collides_with_registry():
-    """The r13 flip calls ``query(name)`` for every staged entry and
-    ``query`` raises on duplicates — a collision would crash the whole
-    registry load at flip time. The batch must stay fully pending until
-    the flip, then fully live."""
-    from ror_etl_spark import registry
-
+    """Nothing here is registered, and no name is taken by a live query."""
     registry.load_all()
-    live = set(registry.QUERIES)
-    batch = set(STAGED)
-    assert batch.isdisjoint(live) or batch <= live, (
-        "staged batch must be fully live or fully pending"
-    )
+    assert set(STAGED).isdisjoint(set(registry.QUERIES))
 
 
 # --------------------------- property pins ---------------------------
@@ -271,10 +220,8 @@ def test_cell_blocked_knn_recall_vs_brute(spark):
     recall against the registered brute k-NN is measured and must be
     substantial (the 3x3 ring covers most true neighbors on a 16-cell
     grid)."""
-    from ror_etl_spark.queries.staged_r12 import STAGED as S12
-
     blocked = STAGED["geo_knn_cell_blocked"][0](spark, SF_SMALL).collect()
-    brute = S12["geo_haversine_knn"][0](spark, SF_SMALL).collect()
+    brute = registry.QUERIES["geo_haversine_knn"](spark, SF_SMALL).collect()
     bset = {(r["qid"], r["user_id"]) for r in brute}
     hits = sum(1 for r in blocked if (r["qid"], r["user_id"]) in bset)
     recall = hits / len(bset)

@@ -1,7 +1,7 @@
-"""Staging gate for the r14 batch (``queries/staged_r14.py``): every
-staged op matches its DuckDB oracle at sf0.001 under the driver-replica
-comparison (columns + dtypes + order-insensitive values), names collide
-with nothing live or staged, and each op carries an independent
+"""Checks for the unserved operators in ``queries/staged_r14.py``: every
+op matches its DuckDB oracle at sf0.001 under the driver-replica
+comparison (columns + dtypes + order-insensitive values), no name is
+live or shared with ``staged_r13``, and each op carries an independent
 property pin (numpy/pure-Python replays, recombination identities,
 convergence checks)."""
 
@@ -10,112 +10,35 @@ from __future__ import annotations
 import math
 import os
 
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r13 import STAGED as STAGED_R13
-from ror_etl_spark.queries.staged_r14 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from ror_etl_spark import registry
+from tests.conftest import SF_SMALL, assert_matches_oracle
 
+# staged_r14 imports helpers from live modules, which register on import:
+# load the registry first so this import cannot change registration order.
+registry.load_all()
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
+from ror_etl_spark.queries.staged_r13 import STAGED as STAGED_R13  # noqa: E402
+from ror_etl_spark.queries.staged_r14 import STAGED  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(STAGED))
 def test_staged_r14_matches_oracle(spark, con, name):
     fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    sdf = fn(spark, SF_SMALL).toPandas()
-    odf = con.execute(oracle).df()
-    got_cols, got_rows = _key(sdf)
-    want_cols, want_rows = _key(odf)
-    assert got_cols == want_cols
-    dt_mismatch = [
-        (c, str(sdf[c].dtype), str(odf[c].dtype))
-        for c in got_cols
-        if str(sdf[c].dtype) != str(odf[c].dtype)
-    ]
-    assert not dt_mismatch, f"dtype mismatch {dt_mismatch}"
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_no_r14_name_collides_with_registry_or_r13():
-    """The r14 flip calls query(name) for every staged entry; a
-    collision with the live registry OR the r13 batch (which flips
-    first) would crash the load."""
-    from ror_etl_spark import registry
-
+    """Nothing here is registered: no name is live, and none is shared
+    with the ``staged_r13`` batch."""
     registry.load_all()
-    live = set(registry.QUERIES)
     batch = set(STAGED)
-    assert batch.isdisjoint(live) or batch <= live
+    assert batch.isdisjoint(set(registry.QUERIES))
     assert batch.isdisjoint(set(STAGED_R13))
 
 
 # --------------------------- property pins ---------------------------
-
-
-def test_fisher_exact_scipy_free_replay(spark):
-    """Exact hypergeometric replay in pure Python (fractions-free,
-    same lfact algebra) — pins both p-values."""
-    fn, _ = STAGED["fisher_exact_nation_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    a, b, c, d = r["a"], r["b"], r["c"], r["d"]
-    r1, c1, n = a + b, a + c, a + b + c + d
-
-    def lfact(x):
-        return sum(math.log(i) for i in range(2, x + 1))
-
-    def p(k):
-        lp = (
-            lfact(r1)
-            - lfact(k)
-            - lfact(r1 - k)
-            + lfact(n - r1)
-            - lfact(c1 - k)
-            - lfact(n - r1 - c1 + k)
-            - (lfact(n) - lfact(c1) - lfact(n - c1))
-        )
-        return round(math.exp(lp) + 1e-12, 10)
-
-    lo, hi = max(0, r1 + c1 - n), min(r1, c1)
-    po = p(a)
-    p_two = min(
-        1.0,
-        sum(p(k) for k in range(lo, hi + 1) if p(k) <= po * (1 + 1e-7)),
-    )
-    p_one = min(1.0, sum(p(k) for k in range(a, hi + 1)))
-    assert abs(r["p_two_sided"] - p_two) < 1e-5
-    assert abs(r["p_one_sided"] - p_one) < 1e-5
-    assert 0.0 <= r["p_two_sided"] <= 1.0
 
 
 def test_kuiper_dominates_ks_and_bounds(spark):
@@ -139,20 +62,6 @@ def test_kendall_w_bounds_and_chi2_identity(spark):
         )
         < 1e-2
     )
-
-
-def test_breslow_day_expected_cells_valid(spark):
-    """Every expected a-cell lies inside its margin box and the BD
-    statistic is nonnegative; the common OR brackets the stratum ORs."""
-    fn, _ = STAGED["breslow_day_or_homogeneity"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert len(rows) == 5
-    ors = [r["or_stratum"] for r in rows]
-    psi = rows[0]["psi_cmh"]
-    assert min(ors) - 1e-9 <= psi <= max(ors) + 1e-9
-    for r in rows:
-        assert r["expected_a"] > 0 and r["var_a"] > 0
-        assert r["bd_stat"] >= 0
 
 
 def test_logistic_irls_against_numpy(spark):
@@ -199,105 +108,6 @@ def test_hosmer_lemeshow_nonnegative_and_df(spark):
     assert 0.0 <= r["max_cell_gap"] <= 1.0
 
 
-def test_kalman_numpy_replay_and_gain_decay(spark):
-    """Sequential numpy replay; the Kalman gain must end BELOW its
-    t=1 value (it adapts down toward the Riccati fixed point) and
-    above the fixed-point lower bound."""
-    from ror_etl_spark.queries.staged_r13 import _daily_df
-    from ror_etl_spark.queries.staged_r14 import _KF_Q, _KF_R
-
-    fn, _ = STAGED["kalman_local_level_daily"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    d = _daily_df(spark, SF_SMALL).orderBy("t").toPandas()
-    ys = d["y"].tolist()
-
-    def q6(x):
-        v = x + 1e-9
-        s = 1.0 if v >= 0 else -1.0
-        return s * math.floor(abs(v) * 1e6 + 0.5) / 1e6
-
-    level, pvar, sse = ys[0], _KF_R, 0.0
-    for y in ys[1:]:
-        pp = pvar + _KF_Q
-        k = pp / (pp + _KF_R)
-        sse = q6(sse + (y - level) ** 2)
-        level = q6(level + k * (y - level))
-        pvar = q6((1 - k) * pp)
-    assert abs(r["level"] - level) < 1e-4
-    assert abs(r["p_var"] - pvar) < 1e-4
-    # fixed point of P = (1-K)(P+q): K* = (sqrt(q^2+4qr)-q)/(2r)
-    kstar = (math.sqrt(_KF_Q**2 + 4 * _KF_Q * _KF_R) - _KF_Q) / (2 * _KF_R)
-    assert kstar - 1e-3 <= r["k_gain"] <= 0.5
-    assert r["innov_rmse"] > 0
-
-
-def test_backoff_shares_partition_and_score_negative(spark):
-    fn, _ = STAGED["stupid_backoff_trigram_score"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert rows
-    for r in rows:
-        tot = r["share_trigram"] + r["share_bigram"] + r["share_unigram"]
-        assert abs(tot - 1.0) < 1e-4
-        assert r["avg_log10_score"] < 0
-        assert r["share_trigram"] > 0  # held-out split still overlaps
-
-
-def test_textrank_scores_are_distribution_like(spark):
-    """Ranks positive with real variance; stopwords never rank."""
-    from ror_etl_spark.queries.staged_r13 import _RAKE_STOPS
-
-    fn, _ = STAGED["textrank_keywords"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert len(rows) == 15
-    scores = [r["textrank"] for r in rows]
-    assert all(s > 0 for s in scores)
-    assert len(set(scores)) > 1
-    assert not any(r["tok"] in set(_RAKE_STOPS) for r in rows)
-
-
-def test_cka_in_unit_interval_and_cauchy_schwarz(spark):
-    """0 <= CKA <= 1 (Cauchy-Schwarz on the centered cross-block)."""
-    fn, _ = STAGED["embedding_cka_halves"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert -1e-9 <= r["cka_linear"] <= 1.0 + 1e-9
-    assert r["fro_xx"] > 0 and r["fro_yy"] > 0
-    assert r["fro_xy_sq"] >= 0
-
-
-def test_grid_dbscan_converged_and_partitions(spark):
-    """One extra propagation round must not change the labels (the
-    convergence pin the 10-round unroll relies on), and the point
-    partition must add up."""
-    from ror_etl_spark.queries import staged_r14 as m
-
-    fn, _ = STAGED["grid_dbscan_user_clusters"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["n_clusters"] >= 2
-    assert r["largest_cluster_cells"] <= r["n_dense_cells"]
-    old_rounds = m._DB_ROUNDS
-    try:
-        m._DB_ROUNDS = old_rounds + 1
-        r2 = fn(spark, SF_SMALL).collect()[0]
-    finally:
-        m._DB_ROUNDS = old_rounds
-    assert r == r2
-    ev_n = (
-        spark.read.parquet(os.path.join(SF_SMALL, "events.parquet")).count()
-    )
-    assert (
-        r["largest_cluster_points"] <= ev_n - r["n_noise_points"]
-    )
-
-
-def test_aipw_between_arm_means_and_se_positive(spark):
-    """With discrete covariates AIPW equals the stratified estimator,
-    which must lie between the per-arm extremes; SE > 0."""
-    fn, _ = STAGED["causal_aipw_ate"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["se_aipw"] > 0
-    assert abs(r["ate_aipw"] - r["ate_naive"]) < 10 * r["se_aipw"]
-
-
 def test_misra_gries_exact_vs_full_count(spark):
     """The MG candidate pass + exact recount must equal the plain
     full groupBy heavy-hitter set (the guarantee the op's determinism
@@ -342,47 +152,6 @@ def test_knn_outliers_are_k5_and_ordered(spark):
     assert all(r["vec_id"] % 2 == 0 for r in rows)
 
 
-def test_cox_newton_converged_and_lifelines_free_replay(spark):
-    """Pure-Python Newton replay on the same (d_h, observed, x)
-    frame; the |U| score residual must witness convergence."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["cox_ph_time_to_purchase"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    e = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    pu = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.max("ts").alias("tmax"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("tp"),
-    )
-    dur = pu.selectExpr(
-        "timestampdiff(MICROSECOND, t0, coalesce(tp, tmax))"
-        " div 3600000000 AS d_h",
-        "CAST(tp IS NOT NULL AS INT) AS observed",
-        "CAST(user_id % 2 AS DOUBLE) AS x",
-    ).toPandas()
-    ts = np.sort(dur[dur.observed == 1].d_h.unique())
-    beta = 0.0
-    for _ in range(3):
-        u = ii = 0.0
-        for t in ts:
-            ev = dur[(dur.d_h == t) & (dur.observed == 1)]
-            risk = dur[dur.d_h >= t]
-            r1 = float((risk.x == 1).sum())
-            r0 = float((risk.x == 0).sum())
-            frac = np.exp(beta) * r1 / (r0 + np.exp(beta) * r1)
-            u += ev.x.sum() - len(ev) * frac
-            ii += len(ev) * frac * (1 - frac)
-        beta = round(beta + u / ii + 1e-12, 8)
-    assert abs(r["beta"] - beta) < 1e-5
-    assert abs(r["hazard_ratio"] - math.exp(beta)) < 1e-4
-    assert r["se_beta"] > 0
-    assert r["score_residual"] < 0.05 * max(1.0, r["n_events"] ** 0.5)
-
-
 def test_isotonic_is_monotone_and_pava_equivalent(spark):
     """The minimax fit must be nondecreasing, mean-preserving on
     pooled blocks, and equal to an independent PAVA implementation."""
@@ -416,213 +185,11 @@ def test_isotonic_is_monotone_and_pava_equivalent(spark):
         assert abs(got - want) < 1e-4
 
 
-def test_dtw_bounds_and_numpy_replay(spark):
-    """DTW <= L1 diagonal (the diagonal is one admissible path) and a
-    numpy DP replay agrees."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["dtw_weekday_weekend_profiles"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["dtw_distance"] <= r["l1_diagonal"] + 1e-6
-    assert 0.0 < r["warp_gain"] <= 1.0 + 1e-9
-    e = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    raw = (
-        e.groupBy(
-            F.hour("ts").alias("h"),
-            F.dayofweek("ts").isin(1, 7).cast("int").alias("we"),
-        )
-        .agg(F.round(F.avg("value") + 1e-9, 6).alias("v"))
-        .toPandas()
-    )
-    a = np.zeros(24)
-    b = np.zeros(24)
-    for _, row in raw.iterrows():
-        (b if row.we else a)[int(row.h)] = row.v
-    n = 24
-    d = np.full((n, n), np.inf)
-    for i in range(n):
-        for j in range(n):
-            c = abs(a[i] - b[j])
-            if i == 0 and j == 0:
-                d[i, j] = c
-            else:
-                prev = min(
-                    d[i - 1, j] if i > 0 else np.inf,
-                    d[i, j - 1] if j > 0 else np.inf,
-                    d[i - 1, j - 1] if i > 0 and j > 0 else np.inf,
-                )
-                d[i, j] = c + prev
-    assert abs(r["dtw_distance"] - d[-1, -1]) < 1e-3
-
-
-def test_morans_i_detects_planted_clustering(spark):
-    """The planted blobs must yield strongly positive I (far above
-    E[I] ~ -1/(N-1)); the adjacency pair count is the exact rook
-    lattice constant 2*2*G*(G-1)."""
-    fn, _ = STAGED["morans_i_planted_plane"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    g = int(round(math.sqrt(r["n_cells"])))
-    assert g * g == r["n_cells"]
-    assert r["w_pairs"] == 4 * g * (g - 1)
-    assert abs(r["expected_i"] - (-1.0 / (r["n_cells"] - 1))) < 1e-6
-    assert r["morans_i"] > 0.05
-    assert r["morans_i"] <= 1.0 + 1e-6
-
-
-def test_bradley_terry_mm_replay_and_simplex(spark):
-    """Strengths live on the simplex; a pure-Python Zermelo replay on
-    the win matrix reproduces them; more wins => higher strength is
-    NOT guaranteed in general BT, but total wins and strengths must
-    co-rank on this near-balanced design."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["bradley_terry_event_types"]
-    rows = fn(spark, SF_SMALL).collect()
-    s_sum = sum(r["bt_strength"] for r in rows)
-    assert abs(s_sum - 1.0) < 1e-4
-    dc = (
-        spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-        .groupBy(F.col("ts").cast("date").alias("d"), "event_type")
-        .count()
-        .toPandas()
-    )
-    piv = dc.pivot_table(
-        index="d", columns="event_type", values="count", fill_value=0
-    )
-    types = sorted(piv.columns)
-    w = {
-        (i, j): int((piv[i] > piv[j]).sum())
-        for i in types
-        for j in types
-        if i != j
-    }
-    s = {t: 1.0 / len(types) for t in types}
-    for _ in range(3):
-        raw = {}
-        for i in types:
-            wi = sum(w[(i, j)] for j in types if j != i)
-            den = sum(
-                (w[(i, j)] + w[(j, i)]) / (s[i] + s[j])
-                for j in types
-                if j != i
-            )
-            raw[i] = wi / den
-        tot = sum(raw.values())
-        s = {t: round(raw[t] / tot + 1e-12, 8) for t in types}
-    for r in rows:
-        assert abs(r["bt_strength"] - s[r["event_type"]]) < 1e-4
-
-
-def test_obf_boundary_shape_and_welch_agreement(spark):
-    """The OBF boundary at the last look must equal the constant
-    (k = K => c/1); max|z| never exceeds what a crossing would imply
-    when crossed is false."""
-    fn, _ = STAGED["obrien_fleming_daily_monitor"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["n_looks"] >= 2
-    if not r["crossed"]:
-        assert r["first_crossing_day"] is None
-        assert r["max_abs_z"] <= 2.24 / math.sqrt(1.0 / r["n_looks"])
-    else:
-        assert r["first_crossing_day"] is not None
-
-
-def test_ucb1_replay_pure_python(spark):
-    """Full pure-Python replay of the UCB1 trajectory from the
-    (day, type) count frame; pulls must sum to the day count and
-    regret must equal best-fixed-arm minus collected."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["ucb1_bandit_replay_event_types"]
-    rows = fn(spark, SF_SMALL).collect()
-    dc = (
-        spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-        .groupBy(
-            F.expr(
-                "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01')"
-                " AS LONG)"
-            ).alias("d"),
-            F.col("event_type").alias("arm"),
-        )
-        .count()
-        .toPandas()
-    )
-    piv = dc.pivot_table(
-        index="d", columns="arm", values="count", fill_value=0
-    )
-    days = sorted(piv.index)
-    arms = sorted(piv.columns)
-    lut = {}
-    for d in days:
-        mx = float(piv.loc[d].max())
-        for a in arms:
-            v = float(piv.loc[d, a]) / mx
-            if piv.loc[d, a] > 0:
-                lut[(d, a)] = math.floor((v + 1e-9) * 1e6 + 0.5) / 1e6
-    n = {a: 0 for a in arms}
-    s = {a: 0.0 for a in arms}
-    for step, d in enumerate(days, start=1):
-        if step <= len(arms):
-            pick = arms[step - 1]
-        else:
-
-            def ucb(a):
-                v = s[a] / n[a] + math.sqrt(2 * math.log(step) / n[a]) + 1e-12
-                return math.floor(v * 1e6 + 0.5) / 1e6
-
-            best = max(ucb(a) for a in arms)
-            pick = min(a for a in arms if ucb(a) == best)
-        n[pick] += 1
-        s[pick] += lut.get((d, pick), 0.0)
-    got = {r["event_type"]: r for r in rows}
-    assert sum(r["pulls"] for r in rows) == len(days)
-    for a in arms:
-        assert got[a]["pulls"] == n[a]
-        assert abs(got[a]["arm_reward"] - s[a]) < 1e-3
-    btot = max(
-        sum(lut.get((d, a), 0.0) for d in days) for a in arms
-    )
-    assert abs(
-        rows[0]["regret_vs_best"] - (btot - sum(s.values()))
-    ) < 1e-3
-
-
 def test_cochran_armitage_chi2_is_z_squared(spark):
     fn, _ = STAGED["cochran_armitage_trend_priority"]
     r = fn(spark, SF_SMALL).collect()[0]
     assert abs(r["chi2_trend"] - r["z_stat"] ** 2) < 1e-2
     assert 0.0 <= r["p_overall"] <= 1.0
-
-
-def test_sobel_paths_recombine_to_total_effect(spark):
-    """Total effect c = c' + a*b must equal the simple OLS slope of
-    Y on X (the Baron-Kenny identity) — replayed with numpy."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["sobel_mediation_urgent_items_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    o = spark.read.parquet(os.path.join(SF_SMALL, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(SF_SMALL, "lineitem.parquet"))
-    base = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderpriority")
-        .agg(
-            F.count("l_orderkey").cast("double").alias("m"),
-            F.max("o_totalprice").alias("y"),
-        )
-        .selectExpr(
-            "CAST(o_orderpriority = '1-URGENT' AS INT) AS x", "m", "y"
-        )
-        .toPandas()
-    )
-    x = base.x.to_numpy(dtype=float)
-    y = base.y.to_numpy(dtype=float)
-    c_total = np.cov(x, y, ddof=0)[0, 1] / np.var(x)
-    assert abs((r["direct_effect"] + r["indirect_effect"]) - c_total) < max(
-        1.0, abs(c_total) * 1e-3
-    )
 
 
 def test_iv_wald_equals_reduced_over_first_stage(spark):
@@ -676,123 +243,6 @@ def test_smr_ci_brackets_point_and_additivity(spark):
     assert r["n_study"] >= r["observed_urgent"]
 
 
-def test_holt_winters_python_replay(spark):
-    """Sequential pure-Python replay of the three-equation recursion
-    (same quantizer); the seasonal band must bracket zero-ish
-    deviations around the level."""
-    from ror_etl_spark.queries.staged_r13 import _daily_df
-    from ror_etl_spark.queries.staged_r14 import _HW_A, _HW_B, _HW_G
-
-    fn, _ = STAGED["holt_winters_weekday_daily"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    ys = [
-        row["y"]
-        for row in _daily_df(spark, SF_SMALL).orderBy("t").collect()
-    ]
-
-    def q(x):
-        v = x + 1e-9
-        s = 1.0 if v >= 0 else -1.0
-        return s * math.floor(abs(v) * 1e6 + 0.5) / 1e6
-
-    n = len(ys)
-    level = q(sum(ys[:7]) / 7.0)
-    trend = q((sum(ys[7:14]) / 7.0 - sum(ys[:7]) / 7.0) / 7.0)
-    sl = [q(ys[i] - level) for i in range(7)]
-    for k in range(8, n + 1):
-        y = ys[k - 1]
-        si = (k - 1) % 7
-        prev_l = level
-        level = q(_HW_A * (y - sl[si]) + (1 - _HW_A) * (prev_l + trend))
-        trend = q(_HW_B * (level - prev_l) + (1 - _HW_B) * trend)
-        sl[si] = q(_HW_G * (y - level) + (1 - _HW_G) * sl[si])
-    assert abs(r["level"] - level) < 1e-4
-    assert abs(r["trend"] - trend) < 1e-4
-    assert r["seasonal_min"] <= r["seasonal_max"]
-    assert abs(r["forecast_1"] - q(level + trend + sl[n % 7])) < 1e-4
-
-
-def test_oaxaca_parts_sum_to_gap(spark):
-    fn, _ = STAGED["blinder_oaxaca_region_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert abs(
-        r["total_gap"] - (r["explained"] + r["unexplained"])
-    ) < 1e-2
-    assert r["n_asia"] > 0 and r["n_rest"] > 0
-
-
-def test_qini_ranking_is_by_uplift(spark):
-    fn, _ = STAGED["uplift_qini_by_segment"]
-    rows = fn(spark, SF_SMALL).collect()
-    ups = [r["uplift"] for r in rows]
-    assert ups == sorted(ups, reverse=True)
-    assert [r["targeting_rank"] for r in rows] == list(
-        range(1, len(rows) + 1)
-    )
-    import statistics
-
-    assert abs(
-        rows[0]["qini_auc"]
-        - round(statistics.mean(r["qini_value"] for r in rows) + 1e-9, 4)
-    ) < 5e-4
-
-
-def test_linear_shapley_shares_sum_to_one(spark):
-    fn, _ = STAGED["linear_shapley_attribution"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert len(rows) == 2
-    assert abs(sum(r["phi_share"] for r in rows) - 1.0) < 1e-4
-    assert all(r["mean_abs_phi"] >= 0 for r in rows)
-    assert len({r["model_r2"] for r in rows}) == 1
-    assert 0.0 <= rows[0]["model_r2"] <= 1.0
-
-
-def test_garch_filter_python_replay_and_mean_reversion(spark):
-    from ror_etl_spark.queries.staged_r13 import _daily_df
-    from ror_etl_spark.queries.staged_r14 import (
-        _GARCH_A,
-        _GARCH_B,
-        _GARCH_W,
-    )
-
-    fn, _ = STAGED["garch11_filter_daily"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    ys = [
-        row["y"]
-        for row in _daily_df(spark, SF_SMALL).orderBy("t").collect()
-    ]
-    rs = [math.log(ys[i] / ys[i - 1]) for i in range(1, len(ys))]
-    mr = sum(rs) / len(rs)
-    vr = sum((x - mr) ** 2 for x in rs) / len(rs)
-
-    def q8(x):
-        v = x + 1e-11
-        s = 1.0 if v >= 0 else -1.0
-        return s * math.floor(abs(v) * 1e8 + 0.5) / 1e8
-
-    s2 = q8(vr)
-    mx = s2
-    om = _GARCH_W * vr
-    for k in range(1, len(rs)):
-        s2 = q8(om + _GARCH_A * (rs[k - 1] - mr) ** 2 + _GARCH_B * s2)
-        mx = max(mx, s2)
-    assert abs(r["final_sigma2"] - s2) < 1e-6
-    assert abs(r["max_sigma2"] - mx) < 1e-6
-    assert r["max_sigma2"] >= r["final_sigma2"]
-    assert abs(r["persistence"] - 0.9) < 1e-9
-    assert r["unconditional_var"] > 0
-
-
-def test_hmm_viterbi_counts_consistent(spark):
-    fn, _ = STAGED["hmm_viterbi_daily_regimes"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert 0 <= r["n_high_days"] <= r["n_days"]
-    assert 0 <= r["n_switches"] < r["n_days"]
-    assert r["viterbi_logprob"] < 0
-    if r["n_high_days"] > 0:
-        assert 1 <= r["first_high_day"] <= r["n_days"]
-
-
 def test_sssp_distances_positive_and_triangle(spark):
     """All reported costs positive; the farthest top-10 is sorted;
     source excluded (it has dist 0 but ranks last, so top-10 farthest
@@ -820,82 +270,6 @@ def test_mst_is_acyclic_spanning_forest(spark):
     assert rows[0]["total_weight"] == sum(r["w"] for r in rows)
 
 
-def test_sinkhorn_mass_and_w1_bound(spark):
-    """Plan mass ~ 1, marginal error small after 6 rounds, and the
-    exact W1 lower-bounds the entropic cost on this cost metric."""
-    fn, _ = STAGED["sinkhorn_ot_priority_mix"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert abs(r["plan_mass"] - 1.0) < 0.05
-    assert r["max_marginal_err"] < 0.05
-    assert r["exact_w1"] >= 0
-    assert r["sinkhorn_cost"] >= 0
-    # entropic smoothing spreads mass, so cost >= the exact OT cost
-    assert r["sinkhorn_cost"] >= r["exact_w1"] - 1e-6
-
-
-def test_spectral_bisection_is_nontrivial_cut(spark):
-    """Both sides nonempty (the mean-deflation worked — a constant
-    vector would put everyone on one side) and the cut weight is less
-    than the total graph weight."""
-    import pyspark.sql.functions as F
-
-    from ror_etl_spark.queries.staged_r11 import _trade_edges
-    from ror_etl_spark.tables import Tables
-
-    fn, _ = STAGED["spectral_bisection_trade"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["n_side_a"] > 0 and r["n_side_b"] > 0
-    e0, _, _ = _trade_edges(Tables(spark, SF_SMALL))
-    tot = e0.agg(F.sum("w")).collect()[0][0]
-    assert 0 < r["cut_weight"] < tot
-
-
-def test_homophily_bounds_and_share_consistency(spark):
-    fn, _ = STAGED["region_homophily_trade"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert -1.0 <= r["homophily_r"] <= 1.0
-    assert 0.0 <= r["same_region_share"] <= 1.0
-    assert 0.0 <= r["expected_share"] <= 1.0
-    want = (r["same_region_share"] - r["expected_share"]) / (
-        1.0 - r["expected_share"]
-    )
-    assert abs(r["homophily_r"] - want) < 1e-4
-
-
-def test_percolation_monotone_in_threshold(spark):
-    """Raising the threshold can only remove edges/nodes and split
-    components; the q=0 row keeps every edge."""
-    fn, _ = STAGED["trade_percolation_sweep"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert [r["quantile"] for r in rows] == [0.0, 0.25, 0.5, 0.75]
-    for a, b in zip(rows, rows[1:]):
-        assert b["n_edges"] <= a["n_edges"]
-        assert b["n_nodes"] <= a["n_nodes"]
-        assert b["giant_size"] <= a["giant_size"]
-    for r in rows:
-        assert r["giant_size"] <= r["n_nodes"]
-        assert r["n_components"] >= 1
-
-
-def test_period_jaccard_bounds(spark):
-    fn, _ = STAGED["trade_graph_period_jaccard"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["edge_jaccard"] <= 1.0
-    assert r["edges_shared"] <= min(r["edges_pre"], r["edges_post"])
-    if r["weight_corr_shared"] is not None:
-        assert -1.0 <= r["weight_corr_shared"] <= 1.0
-
-
-def test_pca2_orthogonal_and_positive(spark):
-    """Deflation must produce a v2 orthogonal to v1 (cos ~ 0) with a
-    positive Rayleigh quotient; explained ratios live in (0, 1)."""
-    fn, _ = STAGED["embedding_pca2_deflation"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["v1_v2_cos"] < 0.01
-    assert r["lambda1"] > 0 and r["lambda2"] > 0
-    assert 0.0 < r["evr1"] < 1.0 and 0.0 < r["evr2"] < 1.0
-
-
 def test_zip_moments_recombine(spark):
     """ZIP MoM identities: lambda = m + v/m - 1, pi = 1 - m/lambda,
     and implied zero mass >= the Poisson-alone zero mass."""
@@ -910,41 +284,6 @@ def test_zip_moments_recombine(spark):
         ) < 1e-3
         assert r["zip_p0_implied"] >= math.exp(-r["zip_lambda"]) - 1e-6
     assert 0.0 <= r["zero_share"] <= 1.0
-
-
-def test_twfe_within_kills_group_means(spark):
-    """After the op's demeaning recipe the residual group means must
-    be ~0 for BOTH factors (the alternating projection converged),
-    verified independently with pandas."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["twfe_price_qty_elasticity"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    li = spark.read.parquet(os.path.join(SF_SMALL, "lineitem.parquet"))
-    pdf = li.select(
-        F.col("l_partkey").alias("pk"),
-        F.date_trunc("month", "l_shipdate").cast("date").alias("mo"),
-        F.log("l_quantity").alias("y"),
-        (F.log(F.col("l_extendedprice") / F.col("l_quantity"))).alias("x"),
-    ).toPandas()
-    for _ in range(3):
-        for col in ("y", "x"):
-            pdf[col] = pdf[col] - pdf.groupby("pk")[col].transform(
-                "mean"
-            ).round(8)
-        for col in ("y", "x"):
-            pdf[col] = pdf[col] - pdf.groupby("mo")[col].transform(
-                "mean"
-            ).round(8)
-    beta = (pdf.x * pdf.y).sum() / (pdf.x * pdf.x).sum()
-    assert abs(r["beta_within"] - beta) < 1e-3
-    assert abs(pdf.groupby("mo")["x"].mean().abs().max()) < 1e-6
-    assert r["n_rows"] == len(pdf)
-
-
-# ---------------------------------------------------------------------------
-# Wave 11 pins
-# ---------------------------------------------------------------------------
 
 
 def _daily_pdf(spark):
@@ -963,50 +302,6 @@ def _daily_pdf(spark):
         .agg(F.sum("value").alias("y"))
         .toPandas()
     )
-
-
-def test_dagostino_k2_matches_numpy_replay(spark):
-    """Full independent replay of the skew/kurtosis transforms
-    (scipy.stats.normaltest formulas) in pure Python on the same daily
-    series."""
-    fn, _ = STAGED["dagostino_k2_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    y = _daily_pdf(spark)["y"].to_numpy()
-    import numpy as np
-
-    n = float(len(y))
-    m = y.mean()
-    m2 = ((y - m) ** 2).mean()
-    m3 = ((y - m) ** 3).mean()
-    m4 = ((y - m) ** 4).mean()
-    g1, b2 = m3 / m2**1.5, m4 / m2**2
-    yy = g1 * math.sqrt((n + 1) * (n + 3) / (6 * (n - 2)))
-    beta2 = (
-        3.0 * (n * n + 27 * n - 70) * (n + 1) * (n + 3)
-        / ((n - 2) * (n + 5) * (n + 7) * (n + 9))
-    )
-    w2 = math.sqrt(2 * (beta2 - 1)) - 1
-    delta = 1 / math.sqrt(0.5 * math.log(w2))
-    alpha = math.sqrt(2 / (w2 - 1))
-    zs = delta * math.log(yy / alpha + math.sqrt((yy / alpha) ** 2 + 1))
-    x = (b2 - 3 * (n - 1) / (n + 1)) / math.sqrt(
-        24 * n * (n - 2) * (n - 3) / ((n + 1) ** 2 * (n + 3) * (n + 5))
-    )
-    sb1 = (
-        6.0 * (n * n - 5 * n + 2) / ((n + 7) * (n + 9))
-        * math.sqrt(6.0 * (n + 3) * (n + 5) / (n * (n - 2) * (n - 3)))
-    )
-    a = 6 + 8 / sb1 * (2 / sb1 + math.sqrt(1 + 4 / sb1**2))
-    den = 1 + x * math.sqrt(2 / (a - 4))
-    zk = (
-        1 - 2 / (9 * a) - math.copysign(1, den)
-        * abs((1 - 2 / a) / abs(den)) ** (1 / 3)
-    ) / math.sqrt(2 / (9 * a))
-    assert r["n_days"] == int(n)
-    assert abs(r["z_skew"] - zs) < 1e-4
-    assert abs(r["z_kurt"] - zk) < 1e-4
-    assert abs(r["k2_stat"] - (zs * zs + zk * zk)) < 1e-3
-    assert np is not None
 
 
 def test_yule_k_matches_counter_replay(spark):
@@ -1089,68 +384,6 @@ def test_katz_matches_numpy_power_series(spark):
     assert np is not None and pos
 
 
-def test_prr_matches_pandas_recount(spark):
-    """Pandas 2x2 recount for every event type; PRR/ROR/chi2
-    recombine."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["prr_disproportionality_events"]
-    rows = {r["event_type"]: r for r in fn(spark, SF_SMALL).collect()}
-    e = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    pdf = e.select(
-        "event_type",
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-        ).alias("idx"),
-    ).toPandas()
-    pdf["wknd"] = (pdf["idx"] % 7 + 7) % 7 >= 5
-    tw = int(pdf["wknd"].sum())
-    td = len(pdf) - tw
-    for et, r in rows.items():
-        sub = pdf[pdf.event_type == et]
-        a = int(sub["wknd"].sum())
-        c = len(sub) - a
-        b, d = tw - a, td - c
-        assert r["n_weekend"] == a and r["n_weekday"] == c
-        prr = (a / (a + b)) / (c / (c + d))
-        assert abs(r["prr"] - prr) < 1e-5
-        ror = ((a + 0.5) * (d + 0.5)) / ((b + 0.5) * (c + 0.5))
-        assert abs(r["ror_haldane"] - ror) < 1e-5
-        n = a + b + c + d
-        chi2 = n * (a * d - b * c) ** 2 / (
-            (a + b) * (c + d) * (a + c) * (b + d)
-        )
-        assert abs(r["chi2"] - chi2) < 1e-3
-        assert r["signal"] == bool(prr > 1.2 and chi2 > 4.0 and a >= 3)
-
-
-# ---------------------------------------------------------------------------
-# Wave 12 pins
-# ---------------------------------------------------------------------------
-
-
-def test_variance_ratio_matches_numpy_replay(spark):
-    """Numpy replay of overlapping-sum variance ratios for each q."""
-    import numpy as np
-
-    fn, _ = STAGED["variance_ratio_daily_revenue"]
-    rows = {r["q"]: r for r in fn(spark, SF_SMALL).collect()}
-    pdf = _daily_pdf(spark).sort_values("t")
-    ly = np.log(np.round(pdf["y"].to_numpy() + 1e-9, 4))
-    r = np.diff(ly)
-    t = float(len(r))
-    m, v1 = r.mean(), r.var()
-    assert set(rows) == {2, 4, 8}
-    for q, row in rows.items():
-        s = np.convolve(r, np.ones(q), mode="valid")
-        vq = ((s - q * m) ** 2).mean()
-        vr = vq / (q * v1)
-        assert row["n_returns"] == int(t)
-        assert abs(row["vr"] - vr) < 1e-4
-        z = (vr - 1.0) / math.sqrt(2 * (2 * q - 1) * (q - 1) / (3 * q * t))
-        assert abs(row["z_stat"] - z) < 1e-3
-
-
 def test_taylor_law_matches_pandas_grid(spark):
     """Pandas replay with the zero cells MATERIALIZED (pivot grid) —
     proves the sufficient-statistics shortcut equals the explicit
@@ -1183,129 +416,6 @@ def test_taylor_law_matches_pandas_grid(spark):
     assert abs(r["taylor_intercept"] - a) < 1e-4
     assert abs(r["r2"] - r2) < 1e-4
     assert 0.0 <= r["r2"] <= 1.0
-
-
-def test_poisson_glm_matches_numpy_irls(spark):
-    """Numpy IRLS replay with identical quantization; deviance is
-    non-negative and the slope reproduces the fitted trend."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from ror_etl_spark.queries.staged_r14 import _PGLM_Q, _PGLM_ROUNDS
-
-    fn, _ = STAGED["poisson_glm_irls_daily"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    e = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    pdf = (
-        e.filter(F.col("event_type") == "error")
-        .groupBy(
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            )
-            .cast("long")
-            .alias("t")
-        )
-        .count()
-        .toPandas()
-    )
-    x = pdf["t"].to_numpy() / 100.0
-    y = pdf["count"].to_numpy().astype(float)
-
-    def wls(w, z):
-        sw, sx, sxx = w.sum(), (w * x).sum(), (w * x * x).sum()
-        sz, sxz = (w * z).sum(), (w * x * z).sum()
-        det = sw * sxx - sx * sx
-        return (
-            round((sxx * sz - sx * sxz) / det + 1e-12, _PGLM_Q),
-            round((sw * sxz - sx * sz) / det + 1e-12, _PGLM_Q),
-        )
-
-    w0 = y + 0.5
-    b0, b1 = wls(w0, np.log(w0) + (y - w0) / w0)
-    for _ in range(_PGLM_ROUNDS):
-        mu = np.exp(b0 + b1 * x)
-        b0, b1 = wls(mu, (b0 + b1 * x) + (y - mu) / mu)
-    mu = np.exp(b0 + b1 * x)
-    dev = 2.0 * (
-        np.where(y > 0, y * np.log(np.where(y > 0, y, 1.0) / mu), 0.0)
-        - (y - mu)
-    ).sum()
-    assert r["n_days"] == len(y)
-    assert r["n_errors"] == int(y.sum())
-    assert abs(r["beta0"] - b0) < 1e-5
-    assert abs(r["beta1"] - b1) < 1e-5
-    assert abs(r["deviance"] - dev) < 1e-3
-    assert r["deviance"] >= 0.0
-
-
-def test_bhattacharyya_identities_and_recount(spark):
-    """Metric identities (H = sqrt(1-BC), H^2 <= TV <= sqrt(2) H,
-    JS <= ln 2) plus a pandas recount."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["bhattacharyya_hellinger_regions"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["bhattacharyya_coef"] <= 1.0
-    assert abs(r["hellinger"] - math.sqrt(1 - r["bhattacharyya_coef"])) < 1e-5
-    assert r["hellinger"] ** 2 - 1e-6 <= r["tv_distance"]
-    assert r["tv_distance"] <= math.sqrt(2) * r["hellinger"] + 1e-6
-    assert 0.0 <= r["js_divergence"] <= math.log(2) + 1e-9
-    o = spark.read.parquet(os.path.join(SF_SMALL, "orders.parquet"))
-    c = spark.read.parquet(os.path.join(SF_SMALL, "customer.parquet"))
-    n = spark.read.parquet(os.path.join(SF_SMALL, "nation.parquet"))
-    g = spark.read.parquet(os.path.join(SF_SMALL, "region.parquet"))
-    pdf = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(n, c.c_nationkey == n.n_nationkey)
-        .join(g, n.n_regionkey == g.r_regionkey)
-        .filter(F.col("r_name").isin("ASIA", "AMERICA"))
-        .select("r_name", "o_totalprice")
-        .toPandas()
-    )
-    pdf["b"] = np.floor(4.0 * np.log(pdf["o_totalprice"])).astype(int)
-    ct = pdf.pivot_table(
-        index="b", columns="r_name", values="o_totalprice",
-        aggfunc="count", fill_value=0,
-    )
-    pa = ct["ASIA"] / ct["ASIA"].sum()
-    pb = ct["AMERICA"] / ct["AMERICA"].sum()
-    assert r["n_bins"] == len(ct)
-    assert r["n_asia"] == int(ct["ASIA"].sum())
-    assert abs(r["bhattacharyya_coef"] - np.sqrt(pa * pb).sum()) < 1e-5
-    assert abs(r["tv_distance"] - 0.5 * np.abs(pa - pb).sum()) < 1e-5
-
-
-def test_ansari_bradley_matches_python_scores(spark):
-    """Pure-Python replay of the end-ranked scores and the exact null
-    moments."""
-    fn, _ = STAGED["ansari_bradley_weekend_scale"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    pdf = _daily_pdf(spark)
-    y = (pdf["y"] + 1e-9).round(4)
-    wk = ((pdf["t"] % 7) + 7) % 7 >= 5
-    order = sorted(range(len(y)), key=lambda i: (y.iloc[i], pdf["t"].iloc[i]))
-    nn = len(order)
-    w = 0.0
-    for pos, i in enumerate(order, start=1):
-        if wk.iloc[i]:
-            w += min(pos, nn + 1 - pos)
-    n, m = int(wk.sum()), nn - int(wk.sum())
-    assert r["n_weekend_days"] == n and r["n_weekday_days"] == m
-    assert abs(r["ab_stat"] - w) < 1e-6
-    if nn % 2 == 0:
-        ew = n * (nn + 2.0) / 4.0
-        vw = n * m * (nn + 2.0) * (nn - 2.0) / (48.0 * (nn - 1.0))
-    else:
-        ew = n * (nn + 1.0) ** 2 / (4.0 * nn)
-        vw = n * m * (nn + 1.0) * (3.0 + nn * nn) / (48.0 * nn * nn)
-    assert abs(r["ab_mean"] - ew) < 1e-6
-    assert abs(r["ab_z"] - (w - ew) / math.sqrt(vw)) < 1e-5
-
-
-# ---------------------------------------------------------------------------
-# Wave 13 pins
-# ---------------------------------------------------------------------------
 
 
 def test_pettitt_matches_bruteforce_sgn(spark):
@@ -1358,138 +468,3 @@ def test_generalized_esd_matches_python_removal(spark):
         removed.append(ts[best])
         del vals[ts[best]]
     assert len(set(removed)) == 5
-
-
-def test_ripley_k_monotone_and_bruteforce(spark):
-    """Brute-force cell-pair recount; K and pair counts are monotone
-    in r and L = sqrt(K/pi)."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from ror_etl_spark.queries.staged_r12 import _lehmer_u
-    from ror_etl_spark.queries.staged_r14 import _GRID
-
-    fn, _ = STAGED["ripley_k_quantized_plane"]
-    rows = sorted(fn(spark, SF_SMALL).collect(), key=lambda r: r["r"])
-    ev = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    cx = ((F.col("user_id") % 7) * 37 % 100) / 100.0 * 6.0 - 3.0
-    cy = ((F.col("user_id") % 7) * 53 % 100) / 100.0 * 6.0 - 3.0
-    pts = ev.select(
-        (cx + (_lehmer_u(F.col("event_id") * 2 + 1) - 0.5) * 0.8).alias("x"),
-        (cy + (_lehmer_u(F.col("event_id") * 2 + 2) - 0.5) * 0.8).alias("y"),
-    ).toPandas()
-    gx = np.minimum(
-        np.floor((pts["x"] + 4.0) / 8.0 * _GRID).astype(int), _GRID - 1
-    )
-    gy = np.minimum(
-        np.floor((pts["y"] + 4.0) / 8.0 * _GRID).astype(int), _GRID - 1
-    )
-    from collections import Counter
-
-    cells = Counter(zip(gx, gy))
-    n = sum(cells.values())
-    ks = sorted(cells)
-    prev_pairs = -1
-    for row in rows:
-        r = row["r"]
-        pairs = 0
-        for (ax, ay), ca in cells.items():
-            for (bx, by), cb in cells.items():
-                d2 = (ax - bx) ** 2 + (ay - by) ** 2
-                if d2 <= r * r:
-                    pairs += ca * (ca - 1) if (ax, ay) == (bx, by) else ca * cb
-        assert row["n_points"] == n
-        assert row["pairs_le_r"] == pairs
-        k = _GRID * _GRID * pairs / (n * (n - 1.0))
-        assert abs(row["k_hat"] - k) < 1e-4
-        assert abs(row["l_hat"] - math.sqrt(k / math.pi)) < 1e-4
-        assert pairs >= prev_pairs
-        prev_pairs = pairs
-    assert ks
-
-
-def test_dunn_matches_pandas_midranks(spark):
-    """Pandas rank(method='average') on the RAW delays reproduces the
-    bounded distinct-value midrank construction and every pair z."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["dunn_posthoc_ship_delay_priority"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert len(rows) == 10
-    li = spark.read.parquet(os.path.join(SF_SMALL, "lineitem.parquet"))
-    o = spark.read.parquet(os.path.join(SF_SMALL, "orders.parquet"))
-    pdf = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            F.col("o_orderpriority").alias("g"),
-            F.datediff(
-                F.col("l_shipdate").cast("date"),
-                F.col("o_orderdate").cast("date"),
-            ).alias("d"),
-        )
-        .toPandas()
-    )
-    pdf["rank"] = pdf["d"].rank(method="average")
-    nn = len(pdf)
-    vc = pdf["d"].value_counts()
-    tie = float((vc**3 - vc).sum())
-    gstats = pdf.groupby("g")["rank"].agg(["count", "mean"])
-    for r in rows:
-        n1, m1 = gstats.loc[r["g1"]]
-        n2, m2 = gstats.loc[r["g2"]]
-        assert r["n1"] == int(n1) and r["n2"] == int(n2)
-        assert abs(r["mean_rank_1"] - m1) < 1e-4
-        assert abs(r["mean_rank_2"] - m2) < 1e-4
-        se = math.sqrt(
-            (nn * (nn + 1) / 12.0 - tie / (12.0 * (nn - 1)))
-            * (1.0 / n1 + 1.0 / n2)
-        )
-        z = (m1 - m2) / se
-        assert abs(r["dunn_z"] - z) < 1e-4
-        assert r["significant"] == (abs(z) > 2.807)
-
-
-def test_stump_matches_bruteforce_splits(spark):
-    """Brute-force all 23 thresholds in pandas; gain >= 0 and leaves
-    are probabilities."""
-    import pyspark.sql.functions as F
-
-    fn, _ = STAGED["decision_stump_purchase_hour"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    e = spark.read.parquet(os.path.join(SF_SMALL, "events.parquet"))
-    pdf = (
-        e.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy(F.hour("ts").alias("h"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).alias("y"),
-        )
-        .toPandas()
-        .sort_values("h")
-    )
-    nt, yt = pdf["n"].sum(), pdf["y"].sum()
-    best = None
-    for thr in sorted(pdf["h"] + 1):
-        nl = pdf[pdf.h < thr]["n"].sum()
-        yl = pdf[pdf.h < thr]["y"].sum()
-        nr, yr = nt - nl, yt - yl
-        if nl == 0 or nr == 0:
-            continue
-        pl, pr = yl / nl, yr / nr
-        g = round(
-            (nl / nt) * 2 * pl * (1 - pl) + (nr / nt) * 2 * pr * (1 - pr)
-            + 1e-12,
-            10,
-        )
-        if best is None or (g, thr) < best[:2]:
-            best = (g, thr, nl, nr, pl, pr)
-    g, thr, nl, nr, pl, pr = best
-    assert r["split_hour"] == thr
-    assert r["n_left"] == nl and r["n_right"] == nr
-    assert abs(r["p_left"] - pl) < 1e-5 and abs(r["p_right"] - pr) < 1e-5
-    groot = 2 * (yt / nt) * (1 - yt / nt)
-    assert abs(r["gini_gain"] - (groot - g)) < 1e-5
-    assert r["gini_gain"] >= 0.0
-    assert 0.0 <= r["p_left"] <= 1.0 and 0.0 <= r["p_right"] <= 1.0

@@ -1,60 +1,21 @@
-"""Oracle checks for the r9-staged operators (queries/staged_r9.py) —
-the same Spark-vs-DuckDB comparison the driver gate runs, applied to
-queries that are implemented but deliberately NOT registered this round
-(VERDICT r7 item 1 froze the registry until the verdict window drains).
+"""Oracle checks for the statistics, graph and sketch operators in
+queries/staged_r9.py — the same Spark-vs-DuckDB comparison the driver
+gate runs, plus independent invariants beyond the oracle.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 
-from ror_etl_spark.queries.staged_r9 import STAGED
-from ror_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, assert_matches_oracle, module_queries
+
+REGISTERED = module_queries("staged_r9")
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.10g}"
-    return repr(v)
-
-
-def _key(pdf):
-    cols = sorted(pdf.columns)
-    pdf = pdf[cols]
-    rows = sorted(
-        tuple(_norm_cell(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    )
-    return cols, rows
-
-
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLE_NAMES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF_SMALL, t + '.parquet')}'"
-        )
-    return c
-
-
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(REGISTERED))
 def test_staged_query_matches_oracle(spark, con, name):
-    fn, oracle = STAGED[name]
-    assert oracle, f"staged query {name} must carry an oracle"
-    got_cols, got_rows = _key(fn(spark, SF_SMALL).toPandas())
-    want_cols, want_rows = _key(con.execute(oracle).df())
-    assert got_cols == want_cols
-    assert len(got_rows) == len(want_rows)
-    assert got_rows == want_rows
+    fn, oracle = REGISTERED[name]
+    assert_matches_oracle(spark, con, name, fn, oracle)
 
 
 def test_depth_layers_match_closed_form(spark):

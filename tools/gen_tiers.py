@@ -1,8 +1,9 @@
-"""Regenerate the /tmp decade tier dirs used by the staged tier
-runners (``staged_r12_tiers.py`` / ``staged_r13_tiers.py``) and several
-SCALING.md tables. The /tmp dirs do NOT survive between driver
-sessions, and earlier rounds rebuilt them with ad-hoc inline snippets —
-this commits the recipe so tier rows stay comparable across rounds.
+"""Regenerate the /tmp decade tier dirs behind several SCALING.md
+tables. The tier runner for registered queries is
+``tools/measure.py --sf-dir <tier dir> --queries a,b,c``. The /tmp dirs
+do NOT survive between sessions, and earlier rounds rebuilt them with
+ad-hoc inline snippets — this commits the recipe so tier rows stay
+comparable across rounds.
 
 Shapes mirror the real testdata (documented in SCALING.md r11):
 

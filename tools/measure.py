@@ -1,12 +1,14 @@
-"""Round-12 optimization measurement harness.
+"""Per-query measurement harness for registered queries.
 
 For each query: time DataFrame construction (Python+analysis), first noop
 write (includes optimization+codegen), and best-of-N steady-state noop
-writes; optionally dump .explain("formatted") to plans/r12/<name>_<tag>.txt.
+writes; with ``--plans DIR``, also dump .explain("formatted") to
+DIR/<name>_<tag>.txt. ``--sf-dir`` points it at any testdata dir,
+including the decade tiers that gen_tiers builds.
 
 Usage:
-  python tools/measure_r12.py --tag before [--queries a,b,c] [--repeat 3]
-                              [--plans] [--conf k=v ...]
+  python tools/measure.py --tag before [--queries a,b,c] [--repeat 3]
+                          [--sf-dir DIR] [--plans DIR] [--conf k=v ...]
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from ror_etl_spark import registry  # noqa: E402
 from ror_etl_spark.session import get_spark  # noqa: E402
 
+_CKPT_CONF = "spark.ror.ordered.checkpoint"
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -31,7 +35,8 @@ def main() -> None:
     ap.add_argument("--tag", default="before")
     ap.add_argument("--queries", default="")
     ap.add_argument("--repeat", type=int, default=3)
-    ap.add_argument("--plans", action="store_true")
+    ap.add_argument("--plans", metavar="DIR", default="",
+                    help="write each query's formatted plan to DIR")
     ap.add_argument("--conf", action="append", default=[])
     args = ap.parse_args()
 
@@ -41,10 +46,9 @@ def main() -> None:
     names = args.queries.split(",") if args.queries else list(bench.HEADLINE)
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
-    spark = get_spark("measure_r12", extra_conf=extra)
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    plans_dir = os.path.join(repo, "plans", "r12")
-    os.makedirs(plans_dir, exist_ok=True)
+    spark = get_spark("measure", extra_conf=extra)
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
 
     # warm up
     spark.read.parquet(os.path.join(args.sf_dir, "nation.parquet")).count()
@@ -71,12 +75,21 @@ def main() -> None:
             "best_s": round(best, 3),
         }
         if args.plans:
-            spark.conf.set("spark.ror.ordered.checkpoint", "false")
+            # ordered()'s checkpoint would hide the upstream plan behind an
+            # RDD scan; turn it off for explain(), then restore the
+            # caller's setting even if explain() raises.
+            prev = spark.conf.get(_CKPT_CONF, None)
+            spark.conf.set(_CKPT_CONF, "false")
             buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                fn(spark, args.sf_dir).explain("formatted")
-            spark.conf.set("spark.ror.ordered.checkpoint", "true")
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
+            try:
+                with contextlib.redirect_stdout(buf):
+                    fn(spark, args.sf_dir).explain("formatted")
+            finally:
+                if prev is None:
+                    spark.conf.unset(_CKPT_CONF)
+                else:
+                    spark.conf.set(_CKPT_CONF, prev)
+            with open(os.path.join(args.plans, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(buf.getvalue())
         spark.sparkContext.setJobDescription(None)
         print(json.dumps({name: out[name]}), flush=True)

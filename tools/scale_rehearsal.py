@@ -744,7 +744,7 @@ def graph_r10_scale() -> None:
         for e, s in (
             x.split(":")
             for x in os.environ.get(
-                "GRAPH_R10_TIERS", "10000000:8,100000000:2"
+                "GRAPH_SCALE_TIERS", "10000000:8,100000000:2"
             ).split(",")
         )
     ]
