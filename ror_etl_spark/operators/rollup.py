@@ -45,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass
@@ -54,6 +55,7 @@ class RollupResult:
     strategy: str = "doubling"  # "doubling" | "single-task" (adaptive routing)
     _m0: DataFrame | None = None  # checkpointed input edges, for cycle analysis
     _n_in_cycle: int | None = None
+    _flags: DataFrame | None = None  # single-task checkpoint with in_cycle
 
     @property
     def n_unconverged(self) -> int:
@@ -66,16 +68,18 @@ class RollupResult:
         the loop's last ``n_changed`` scalar (which needs a wasted extra
         no-op round to read 0, and still misses even-length cycles that
         collapse to stable self-maps). Lazy — only alert consumers pay
-        the two semi/anti joins."""
+        for it."""
         return self.n_in_cycle
 
     @property
     def n_in_cycle(self) -> int:
         """Rows whose resolved ancestor is not a true root (any cycle).
 
-        Computed lazily on first access (two semi/anti joins + a count):
-        alert consumers (the pipeline) pay for it; mapping-only consumers
-        don't run the extra jobs.
+        Computed lazily on first access: alert consumers (the pipeline)
+        pay for it; mapping-only consumers don't run the extra jobs. The
+        single-task strategy flags each id inside its kernel, so this is
+        one sum over that checkpoint; the doubling strategy runs two
+        semi/anti joins and a count.
 
         Cycle detection beyond non-convergence: even-length cycles collapse
         to stable self-maps under doubling (X→Y,Y→X resolves to X→X,Y→Y in
@@ -85,19 +89,23 @@ class RollupResult:
         in/under a cycle → the reference's alert case
         (get_ultimate_parent.py:25-39)."""
         if self._n_in_cycle is None:
-            m0 = self._m0
-            assert m0 is not None
-            roots = m0.filter(F.col("anc") == F.col("id")).select(
-                F.col("id").alias("r_id")
-            )
-            all_ids = m0.select(F.col("id").alias("e_id"))
-            non_terminal = self.mapping.join(
-                all_ids, self.mapping["ultimate_parent"] == all_ids["e_id"], "left_semi"
-            )
-            self._n_in_cycle = non_terminal.join(
-                roots, non_terminal["ultimate_parent"] == roots["r_id"], "left_anti"
-            ).count()
+            self._n_in_cycle = self._count_in_cycle()
         return self._n_in_cycle
+
+    def _count_in_cycle(self) -> int:
+        if self._flags is not None:
+            total = self._flags.agg(F.sum(F.col("in_cycle").cast("long"))).collect()[0][0]
+            return int(total or 0)
+        m0 = self._m0
+        assert m0 is not None
+        roots = m0.filter(F.col("anc") == F.col("id")).select(F.col("id").alias("r_id"))
+        all_ids = m0.select(F.col("id").alias("e_id"))
+        non_terminal = self.mapping.join(
+            all_ids, self.mapping["ultimate_parent"] == all_ids["e_id"], "left_semi"
+        )
+        return non_terminal.join(
+            roots, non_terminal["ultimate_parent"] == roots["r_id"], "left_anti"
+        ).count()
 
 
 class DuplicateIdError(ValueError):
@@ -133,6 +141,15 @@ def extract_parent_edges(
     wins, parentless ids map to themselves. Runs entirely JVM-side
     (higher-order array functions; no Python UDF).
     """
+    return ror.select(
+        F.col(id_col).alias("id"),
+        _parent_col(id_col, relationships_col).alias("parent"),
+    )
+
+
+def _parent_col(id_col: str = "id", relationships_col: str = "relationships"):
+    """The ``parent`` expression of :func:`extract_parent_edges`, for
+    callers that project it next to other columns in one scan."""
     parents = F.filter(
         F.col(relationships_col),
         lambda r: F.lower(F.coalesce(r["type"], F.lit(""))) == "parent",
@@ -140,10 +157,7 @@ def extract_parent_edges(
     # try_element_at: null (→ coalesce to self) when no parent relationship
     # exists — plain element_at(-1) throws on empty arrays under ANSI mode
     last_parent = F.try_element_at(parents, F.lit(-1))["id"]
-    return ror.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(last_parent, F.col(id_col)).alias("parent"),
-    )
+    return F.coalesce(last_parent, F.col(id_col))
 
 
 LOCAL_THRESHOLD_CONF = "spark.ror.rollup.localThreshold"
@@ -199,19 +213,11 @@ def ultimate_parent(
     pick the physical strategy from the observed input size, never from
     hope.
     """
-    n_iters = max(1, math.ceil(math.log2(max(2, max_depth))))
-    check_every = max(1, check_every)
     m = edges.select(F.col(id_col).alias("id"), F.col(parent_col).alias("anc"))
     m = _materialize(m, use_local_checkpoint)
-    m0 = m  # checkpointed input copy — reused for root/cycle analysis
-    # so the (possibly expensive) upstream edge lineage never re-executes
-
     if local_threshold is None:
-        local_threshold = int(
-            edges.sparkSession.conf.get(
-                LOCAL_THRESHOLD_CONF, str(DEFAULT_LOCAL_THRESHOLD)
-            )
-        )
+        local_threshold = _conf_local_threshold(m)
+    counts = None
     if local_threshold > 0:
         # one routing job: materializes the lazy checkpoint (work the
         # first iteration's aggregate would have done anyway) and computes
@@ -229,19 +235,65 @@ def ultimate_parent(
         stats = m.agg(
             F.count(F.lit(1)).alias("n"), F.count_distinct("id").alias("n_ids")
         ).collect()[0]
-        if stats["n"] > stats["n_ids"]:
-            sample = [
-                r["id"]
-                for r in m.groupBy("id")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .filter(F.col("c") > 1)
-                .limit(5)
-                .collect()
-            ]
-            raise DuplicateIdError(f"Duplicate ID(s): {sample}")
-        if stats["n"] <= local_threshold:
-            return _ultimate_parent_single_task(m, m0, n_iters)
-        n_rows = int(stats["n_ids"])  # routing job already counted — reuse
+        counts = (stats["n"], stats["n_ids"])
+    return _rollup_edges(
+        m,
+        counts,
+        max_depth=max_depth,
+        use_local_checkpoint=use_local_checkpoint,
+        check_every=check_every,
+        local_threshold=local_threshold,
+    )
+
+
+def _conf_local_threshold(df: DataFrame) -> int:
+    return int(
+        df.sparkSession.conf.get(LOCAL_THRESHOLD_CONF, str(DEFAULT_LOCAL_THRESHOLD))
+    )
+
+
+def _raise_if_duplicate_ids(m: DataFrame, n: int, n_ids: int) -> None:
+    """``n`` rows over ``n_ids`` distinct ids: raise the driver-side
+    ``DuplicateIdError`` (with a sample of the repeated ids) when they
+    differ."""
+    if n > n_ids:
+        sample = [
+            r["id"]
+            for r in m.groupBy("id")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") > 1)
+            .limit(5)
+            .collect()
+        ]
+        raise DuplicateIdError(f"Duplicate ID(s): {sample}")
+
+
+def _rollup_edges(
+    m: DataFrame,
+    counts: tuple[int, int] | None,
+    max_depth: int = 200,
+    use_local_checkpoint: bool = True,
+    check_every: int = 1,
+    local_threshold: int | None = None,
+) -> RollupResult:
+    """Route and run the rollup over ``m``: (id, anc) edges, already
+    (lazily) checkpointed. ``counts`` is (rows, distinct ids) when the
+    caller has them — :func:`ultimate_parent`'s routing job, or a scan the
+    caller ran anyway, such as the pipeline's input gate — so routing
+    costs no job here. ``None`` pins the distributed loop, whose first
+    convergence check then counts the ids."""
+    n_iters = max(1, math.ceil(math.log2(max(2, max_depth))))
+    check_every = max(1, check_every)
+    if local_threshold is None:
+        local_threshold = _conf_local_threshold(m)
+    m0 = m  # checkpointed input copy — reused for root/cycle analysis
+    # so the (possibly expensive) upstream edge lineage never re-executes
+    if counts is not None:
+        n, n_ids = counts
+        _raise_if_duplicate_ids(m, n, n_ids)
+        if local_threshold > 0 and n <= local_threshold:
+            return _ultimate_parent_single_task(m, n_iters)
+        n_rows = int(n_ids)  # already counted — reuse
     else:
         # No dedicated input-count job when the distributed path is pinned:
         # the first convergence check also computes count_distinct(id),
@@ -304,9 +356,7 @@ def ultimate_parent(
     )
 
 
-def _ultimate_parent_single_task(
-    m: DataFrame, m0: DataFrame, n_iters: int
-) -> RollupResult:
+def _ultimate_parent_single_task(m: DataFrame, n_iters: int) -> RollupResult:
     """Small-input strategy: the identical pointer-doubling recurrence,
     vectorized in numpy inside ONE executor task.
 
@@ -330,12 +380,21 @@ def _ultimate_parent_single_task(
     never touches the driver — ``mapInPandas`` runs the
     resolve on an executor, Arrow-batched, and the result is lazily
     checkpointed for its two consumers (attach join, cycle analysis).
+
+    The kernel also flags each id ``in_cycle`` exactly as the doubling
+    strategy's :attr:`RollupResult.n_in_cycle` joins count it: the resolved
+    ancestor has an edge of its own that is not a self-loop (a null parent
+    is not one). An id that itself resolves to null is never flagged —
+    the joins cannot match a null ancestor — so ``n_in_cycle`` is one sum
+    over the checkpoint.
     """
     import numpy as np
     import pandas as pd
 
     k = n_iters
-    out_schema = m.schema
+    out_schema = T.StructType(
+        [*m.schema.fields, T.StructField("in_cycle", T.BooleanType(), False)]
+    )
 
     def resolve(batches):
         pdfs = list(batches)
@@ -363,15 +422,22 @@ def _ultimate_parent_single_task(
         anc[id_codes] = parent_codes
         for _ in range(k):
             anc = anc[anc]
-        uniq = np.asarray(uniques)
-        roots = uniq[anc[id_codes]].astype(object)
+        resolved = anc[id_codes]
+        has_edge = np.zeros(len(uniques), dtype=bool)
+        has_edge[id_codes] = True
+        rooted = np.zeros(len(uniques), dtype=bool)
+        rooted[id_codes] = (parent_codes == id_codes) & ~null_parent
+        in_cycle = has_edge[resolved] & ~rooted[resolved] & ~null_parent
+        roots = np.asarray(uniques)[resolved].astype(object)
         roots[null_parent] = None
-        yield pd.DataFrame({"id": ids, "anc": roots})
+        yield pd.DataFrame({"id": ids, "anc": roots, "in_cycle": in_cycle})
 
     out = m.coalesce(1).mapInPandas(resolve, schema=out_schema)
     out = out.localCheckpoint(eager=False)
     mapping = out.select(F.col("id"), F.col("anc").alias("ultimate_parent"))
-    return RollupResult(mapping=mapping, iterations=k, strategy="single-task", _m0=m0)
+    return RollupResult(
+        mapping=mapping, iterations=k, strategy="single-task", _flags=out
+    )
 
 
 def attach_ultimate_parent(

@@ -4,15 +4,19 @@ DataFrame stages (reference: ror_dag.py task chain :228-238).
 Stage map (reference → here):
 - clear_tmp_dir (ror_dag.py:53-55)            → ``clear_tmp``
 - download (GKE pod running fetch.py)          → sources.fetch (driver-side)
+- load (ror_dag.py:166-175)                    → ``load_input``: schema-FAILFAST
+                                                 read + one gate scan (REQUIRED
+                                                 nulls, duplicate ids, edges)
 - add_ultimate_parent (get_ultimate_parent.py) → rollup operators (distributed)
-- load_staging (ror_dag.py:166-175)            → schema-FAILFAST read + REQUIRED
-                                                 null-scan + overwrite parquet
+- load_staging (ror_dag.py:166-175)            → overwrite parquet with inline
+                                                 row/null metrics
 - checks (ror_dag.py:178-192)                  → ``check_unique_ids`` +
                                                  ``check_monotonic_count``; any
                                                  failure stops before promote,
                                                  staging keeps the bad data for
                                                  inspection (comment :51-52)
-- load_production (ror_dag.py:194-200)         → staging → prod overwrite copy
+- load_production (ror_dag.py:194-200)         → staging → prod copy, swapped
+                                                 in by rename (crash-safe)
 - update descriptions (ror_dag.py:203-213)     → TBLPROPERTIES-style metadata
                                                  written alongside prod
 - backup (ror_dag.py:216-223)                  → dated snapshot ``ror_YYYYMMDD``
@@ -20,9 +24,12 @@ Stage map (reference → here):
 
 Write semantics are the reference's: every table write is full replace
 (WRITE_TRUNCATE ≙ mode="overwrite"), snapshots are name-versioned by run
-date. At 100 TB the staging/prod/backup materializations stay Parquet
-directory writes (partition by a stable key upstream if needed); the
-intermediate rollup never materializes outside the fixpoint loop.
+date. Prod and backups are replaced by copying to a sibling directory and
+renaming it into place, so a crash never leaves a half-copied or missing
+prod for the next week's monotonic check to pass against. At 100 TB the
+staging/prod/backup materializations stay Parquet directory writes
+(partition by a stable key upstream if needed); the intermediate rollup
+never materializes outside the fixpoint loop.
 """
 
 from __future__ import annotations
@@ -36,17 +43,20 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ror_etl_spark.operators.rollup import (
-    assert_unique_ids,
+    RollupResult,
+    _parent_col,
+    _raise_if_duplicate_ids,
+    _rollup_edges,
     attach_ultimate_parent,
-    extract_parent_edges,
-    ultimate_parent,
 )
 from ror_etl_spark.sources.ror_schema import (
     ROR_INPUT_SCHEMA,
     TABLE_DESCRIPTION,
-    validate_required,
+    raise_required_nulls,
+    required_null_flags,
 )
 
 
@@ -55,12 +65,58 @@ class CheckFailed(RuntimeError):
     (BigQueryCheckOperator semantics, ror_dag.py:178-192)."""
 
 
+@dataclass(frozen=True)
+class _Gate:
+    """What the input gate's one scan of the feed established."""
+
+    edges: DataFrame  # (id, anc): lazily checkpointed parent edges
+    n: int  # rows
+    n_ids: int  # distinct ids
+
+
+def _swap_paths(dest: str) -> tuple[str, str]:
+    """The sibling paths a swap of ``dest`` uses: the new copy, and the
+    previous table while it is being replaced."""
+    return dest + ".incoming", dest + ".previous"
+
+
+def _recover_swap(dest: str) -> None:
+    """Undo or finish a swap that a crash interrupted: a missing ``dest``
+    gets its previous table back, and no sibling survives."""
+    incoming, previous = _swap_paths(dest)
+    if not os.path.exists(dest) and os.path.exists(previous):
+        os.rename(previous, dest)
+    shutil.rmtree(previous, ignore_errors=True)
+    shutil.rmtree(incoming, ignore_errors=True)
+
+
+def _copy_swap(src: str, dest: str) -> None:
+    """Replace ``dest`` with a file copy of ``src``. The copy goes to a
+    sibling first and is renamed into place, so at every instant ``dest``
+    is either the old table or the whole new one, or (between the two
+    renames) absent with the old table parked beside it, which
+    ``_recover_swap`` puts back."""
+    _recover_swap(dest)
+    incoming, previous = _swap_paths(dest)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    shutil.copytree(src, incoming)
+    if os.path.exists(dest):
+        os.rename(dest, previous)
+    os.rename(incoming, dest)
+    shutil.rmtree(previous, ignore_errors=True)
+
+
 @dataclass
 class RorPipeline:
     spark: SparkSession
     root: str  # warehouse root: {root}/tmp, /staging, /prod, /backups
     alert: Callable[[str], None] = field(default=lambda msg: None)
     run_date: datetime | None = None
+    # per-run state handed from stage to stage
+    _gate: tuple[DataFrame, _Gate] | None = field(default=None, init=False, repr=False)
+    _rollup: RollupResult | None = field(default=None, init=False, repr=False)
+    _staging_metrics: dict | None = field(default=None, init=False, repr=False)
+    _staging_schema: T.StructType | None = field(default=None, init=False, repr=False)
 
     @property
     def tmp_dir(self) -> str:
@@ -88,23 +144,54 @@ class RorPipeline:
 
     def load_input(self, jsonl_path: str) -> DataFrame:
         """Schema-enforced read: FAILFAST rejects shape/type mismatches the
-        way the BigQuery load does; REQUIRED nulls are checked by
-        validate_required (Spark's reader can't — SURVEY §4.2)."""
+        way the BigQuery load does. The gate (``_scan_gate``) then rejects
+        REQUIRED nulls (Spark's reader can't — SURVEY §4.2) and duplicate
+        ids, in that order, from one scan; ``add_ultimate_parent`` reuses
+        what it found when handed the frame returned here."""
         df = (
             self.spark.read.schema(ROR_INPUT_SCHEMA)
             .option("mode", "FAILFAST")
             .json(jsonl_path)
         )
-        validate_required(df)
+        self._gate = (df, self._scan_gate(df))
         return df
+
+    def _scan_gate(self, ror: DataFrame) -> _Gate:
+        """One narrow scan of ``ror``: (id, parent, one flag per REQUIRED
+        path), lazily checkpointed, and one aggregate over that
+        checkpoint for the null counts, the row count and the distinct-id
+        count. The aggregate materializes the checkpoint, so the rollup
+        reads its edges without parsing the feed again. Raises
+        ``RequiredFieldViolation`` first, then ``DuplicateIdError`` (the
+        reference's load-then-rollup order)."""
+        flags = required_null_flags()
+        cols = [f"null{i}" for i in range(len(flags))]
+        narrow = ror.select(
+            F.col("id"),
+            _parent_col().alias("anc"),
+            *[flag.alias(c) for flag, c in zip(flags.values(), cols)],
+        ).localCheckpoint(eager=False)
+        row = narrow.agg(
+            *[F.sum(F.col(c).cast("long")).alias(c) for c in cols],
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("id").alias("n_ids"),
+        ).collect()[0]
+        raise_required_nulls({name: row[c] for name, c in zip(flags, cols)})
+        _raise_if_duplicate_ids(narrow, row["n"], row["n_ids"])
+        return _Gate(narrow.select("id", "anc"), row["n"], row["n_ids"])
 
     def add_ultimate_parent(self, ror: DataFrame) -> DataFrame:
         """The rollup kernel: duplicate-id hard gate → adaptive rollup
         (single-task doubling at registry scale, distributed pointer-
         doubling fixpoint above the size threshold) → broadcast join-back;
         cycles alert but don't fail (get_ultimate_parent.py semantics,
-        SURVEY §2.2)."""
-        assert_unique_ids(ror)
+        SURVEY §2.2). The gate's edges and counts feed the router, so
+        routing runs no job of its own; a frame other than the one
+        ``load_input`` returned is gated here first."""
+        if self._gate is not None and self._gate[0] is ror:
+            gate = self._gate[1]
+        else:
+            gate = self._scan_gate(ror)
         # check_every=2 halves the convergence-aggregate jobs (each is a
         # fixed ~0.3 s shuffle round locally); results are identical and
         # the duplicate-explosion guard still fires at the first check.
@@ -114,7 +201,8 @@ class RorPipeline:
         # kernel 2.04 s vs 2.94 s = 0.69x; the END-TO-END gated run is
         # near-parity, 3.07-3.57 s vs 2.91-3.13 s — see NOTES round 6);
         # a 100 TB input routes to the fixpoint.
-        result = ultimate_parent(extract_parent_edges(ror), check_every=2)
+        result = _rollup_edges(gate.edges, (gate.n, gate.n_ids), check_every=2)
+        self._rollup = result
         if result.n_in_cycle:
             self.alert(
                 f"rollup: {result.n_in_cycle} id(s) did not converge to a "
@@ -141,6 +229,7 @@ class RorPipeline:
         observed.write.mode("overwrite").parquet(self.staging_path)
         metrics = obs.get
         self._staging_metrics = metrics
+        self._staging_schema = df.schema
         if metrics["null_up"]:
             raise CheckFailed(
                 f"staging ror: {metrics['null_up']} row(s) with NULL "
@@ -150,7 +239,8 @@ class RorPipeline:
     def check_unique_ids(self) -> None:
         """Q1: select count(distinct id) = count(id) (ror_dag.py:179-183)."""
         row = (
-            self.spark.read.parquet(self.staging_path)
+            self.spark.read.schema("id string")
+            .parquet(self.staging_path)
             .agg(
                 (F.count_distinct(F.col("id")) == F.count("id")).alias("ok"),
             )
@@ -162,16 +252,21 @@ class RorPipeline:
     def check_monotonic_count(self) -> None:
         """Q2: staging rowcount must be >= current prod rowcount
         (ror_dag.py:184-191); trivially passes when prod doesn't exist.
+        A prod left mid-swap by a crashed promote is restored first, so a
+        crash can never make this pass trivially.
         Uses the count observed during the staging write when available
         (no staging re-scan); falls back to a read for standalone use."""
-        metrics = getattr(self, "_staging_metrics", None)
+        _recover_swap(self.prod_path)
+        metrics = self._staging_metrics
         if metrics is not None:
             staging_n = metrics["n"]
         else:
-            staging_n = self.spark.read.parquet(self.staging_path).count()
+            staging_n = (
+                self.spark.read.schema("id string").parquet(self.staging_path).count()
+            )
         if not os.path.exists(self.prod_path):
             return
-        prod_n = self.spark.read.parquet(self.prod_path).count()
+        prod_n = self.spark.read.schema("id string").parquet(self.prod_path).count()
         if staging_n < prod_n:
             raise CheckFailed(
                 f"staging count {staging_n} < prod count {prod_n} (shrinking table)"
@@ -184,35 +279,32 @@ class RorPipeline:
         reference's BigQuery copy job (server-side, no decode/re-encode).
         A Spark read+rewrite would pay a full parquet codec round-trip to
         produce identical content; at 100 TB this operation is a distcp
-        /object-store server-side copy, not a compute job."""
-        if os.path.exists(self.prod_path):
-            shutil.rmtree(self.prod_path)
-        os.makedirs(os.path.dirname(self.prod_path), exist_ok=True)
-        shutil.copytree(self.staging_path, self.prod_path)
+        /object-store server-side copy, not a compute job. The copy is
+        swapped in by rename (``_copy_swap``), never over a deleted prod."""
+        _copy_swap(self.staging_path, self.prod_path)
         self._write_descriptions()
 
     def _write_descriptions(self) -> None:
         """Metadata propagation (ror_dag.py:203-213): without a metastore,
         descriptions land next to the table as JSON (with one, this becomes
-        ALTER TABLE ... SET TBLPROPERTIES)."""
+        ALTER TABLE ... SET TBLPROPERTIES). Prod is a file copy of what
+        ``load_staging`` wrote, so that frame's schema carries prod's
+        column comments; only a standalone ``promote()`` reads prod's."""
+        schema = self._staging_schema
+        if schema is None:
+            schema = self.spark.read.parquet(self.prod_path).schema
         meta = {
             "table_description": TABLE_DESCRIPTION["ror"],
-            "columns": {
-                f.name: f.metadata.get("comment", "")
-                for f in self.spark.read.parquet(self.prod_path).schema.fields
-            },
+            "columns": {f.name: f.metadata.get("comment", "") for f in schema.fields},
         }
         with open(os.path.join(self.root, "prod", "ror_descriptions.json"), "w") as f:
             json.dump(meta, f, indent=2)
 
     def backup(self) -> str:
         """Dated snapshot prod → backups/ror_YYYYMMDD (ror_dag.py:216-223),
-        as a file-level copy like ``promote`` (same reference analogue)."""
+        as a file-level copy swapped in like ``promote``'s."""
         path = self.backup_path()
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        shutil.copytree(self.prod_path, path)
+        _copy_swap(self.prod_path, path)
         return path
 
     # --- orchestration ----------------------------------------------------
@@ -221,15 +313,24 @@ class RorPipeline:
         """Full gated chain. Check failures raise BEFORE promotion; staging
         keeps the failed data (reference comment ror_dag.py:51-52).
 
-        The parsed input is deliberately NOT cached across its four
-        consumers (REQUIRED null-scan, uniqueness gate, edge extraction,
-        join-back + staging write): an end-to-end A/B at the shootout's
-        110k-org tier measured persist() SLOWER (3.59 vs 3.16 s warm
-        best-of-3) — materializing the nested record cache costs more
-        than the three extra JSONL re-parses it saves. At 100 TB the
-        answer changes shape, not flags: land the raw feed as parquet
-        once and run the chain off that (the staging write IS that
-        materialization here)."""
+        The feed is parsed twice per run. The first parse is the gate's
+        narrow scan: id, parent and the REQUIRED-null flags, lazily
+        checkpointed and materialized by the one aggregate that runs the
+        null, row and distinct-id checks. The rollup reads its edges and
+        its routing counts from that checkpoint. The second parse is the
+        staging write, which joins the full records with the broadcast
+        mapping. The full records are deliberately not cached: an
+        end-to-end A/B at the shootout's 110k-org tier measured persist()
+        slower (3.59 vs 3.16 s warm best-of-3), since materializing the
+        nested record cache costs more than the re-parse it saves. At
+        100 TB the answer changes shape, not flags: land the raw feed as
+        parquet once and run the chain off that (the staging write IS
+        that materialization here).
+
+        Returns a report built from values the stages already computed
+        (no extra Spark job) and passes it to ``alert`` as JSON: rows
+        promoted, the backup path, the gate's row and distinct-id counts,
+        and the rollup's strategy, iterations and ``n_in_cycle``."""
         self.clear_tmp()
         ror = self.load_input(jsonl_path)
         with_up = self.add_ultimate_parent(ror)
@@ -238,9 +339,17 @@ class RorPipeline:
         self.check_monotonic_count()
         self.promote()
         backup = self.backup()
-        # prod == staging by construction (file-level copy), so the row
-        # count observed DURING the staging write is the prod count — no
-        # extra scan job for the success report
-        n = int(self._staging_metrics["n"])
-        self.alert(f"ROR pipeline succeeded: {n} rows promoted; backup at {backup}")
-        return {"rows": n, "backup": backup}
+        gate, rollup = self._gate[1], self._rollup
+        report = {
+            # prod == staging by construction (file-level copy), so the row
+            # count observed DURING the staging write is the prod count
+            "rows": int(self._staging_metrics["n"]),
+            "backup": backup,
+            "n": gate.n,
+            "n_ids": gate.n_ids,
+            "strategy": rollup.strategy,
+            "iterations": rollup.iterations,
+            "n_in_cycle": rollup.n_in_cycle,
+        }
+        self.alert(f"ROR pipeline succeeded: {json.dumps(report)}")
+        return report

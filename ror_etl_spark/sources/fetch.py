@@ -13,10 +13,13 @@ Spark-first restatement: the URL discovery is a driver-side scalar (there
 is nothing to distribute); the payload lands as a local file and is
 then read by ``spark.read.schema(...).json`` — JSONL is line-splittable so
 a 100 TB dump would parallelize across executors, which the reference's
-whole-array ``json.loads`` (fetch.py:37) cannot. The array→JSONL rewrite
-is therefore OPTIONAL here: Spark reads the raw array directly with
-``multiLine=true`` (single-task per file) or the converted JSONL in
-parallel; we convert, matching the reference's wire format.
+whole-array ``json.loads`` (fetch.py:37) cannot. We convert, matching the
+reference's wire format, but without its decode/re-encode round trip:
+``json_array_to_jsonl`` walks the array with ``JSONDecoder.raw_decode``
+(every element is still fully validated) and writes each element's own
+source text as one line. No list of records is ever built, and the
+output is byte-identical to the reference's ``json.dumps`` per record
+whenever the dump itself is compact ``json.dumps`` output.
 
 Network access is isolated behind ``ZenodoClient`` so tests (and this
 offline build environment) use ``LocalDumpClient`` with a file fixture.
@@ -92,15 +95,59 @@ def pick_data_json(extract_dir: str) -> str:
     return os.path.join(extract_dir, candidates[0])
 
 
+def _array_elements(text: str):
+    """Yield the source text of each element of the JSON array ``text``.
+    Each element is parsed by ``raw_decode``, so malformed input raises
+    ``json.JSONDecodeError`` where ``json.load`` would; a top level that is
+    not an array, a truncated array and trailing data are rejected too."""
+    decode = json.JSONDecoder().raw_decode
+    skip_ws = json.decoder.WHITESPACE.match
+    pos = skip_ws(text, 0).end()
+    if text[pos : pos + 1] != "[":
+        raise json.JSONDecodeError("Expecting '['", text, pos)
+    pos = skip_ws(text, pos + 1).end()
+    if text[pos : pos + 1] == "]":
+        pos = skip_ws(text, pos + 1).end()
+    else:
+        while True:
+            _, end = decode(text, pos)
+            yield text[pos:end]
+            pos = skip_ws(text, end).end()
+            delim = text[pos : pos + 1]
+            if delim == "]":
+                pos = skip_ws(text, pos + 1).end()
+                break
+            if delim != ",":
+                raise json.JSONDecodeError("Expecting ',' delimiter", text, pos)
+            pos = skip_ws(text, pos + 1).end()
+    if pos != len(text):
+        raise json.JSONDecodeError("Extra data", text, pos)
+
+
 def json_array_to_jsonl(src: str, dest: str) -> int:
-    """Whole-file JSON array → JSONL, one object per line (fetch.py:36-41).
-    Returns the record count."""
-    with open(src) as f:
-        records = json.load(f)
-    with open(dest, "w") as out:
-        for rec in records:
-            out.write(json.dumps(rec) + "\n")
-    return len(records)
+    """Whole-file JSON array → JSONL, one element per line (fetch.py:36-41).
+    Returns the record count.
+
+    Each element's source text is written through unchanged, except that
+    ``\\n``/``\\r`` become spaces so it stays on one line (strict JSON
+    strings cannot hold them raw, so they are always whitespace between
+    tokens). The lines go to a sibling file that replaces ``dest`` only
+    once the whole array has been read, so a bad dump never leaves a
+    truncated feed behind."""
+    with open(src, encoding="utf-8") as f:
+        text = f.read()
+    part = dest + ".part"
+    n = 0
+    try:
+        with open(part, "w", encoding="utf-8") as out:
+            for element in _array_elements(text):
+                out.write(element.replace("\n", " ").replace("\r", " ") + "\n")
+                n += 1
+        os.replace(part, dest)
+    finally:
+        if os.path.exists(part):
+            os.remove(part)
+    return n
 
 
 def fetch_to_jsonl(client: DumpClient, output_path: str) -> int:

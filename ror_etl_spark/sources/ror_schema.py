@@ -15,7 +15,7 @@ them post-load via update_table_descriptions, ror_dag.py:203-213).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -168,12 +168,14 @@ def _nested(elem, path: str):
     return cur
 
 
-def validate_required(df: DataFrame, extra_scalars: list[str] | None = None) -> None:
-    """Reject the load when any REQUIRED path is null — the BigQuery
-    load-time behavior (SURVEY §4.2), done as one aggregate pass."""
-    checks = {}
+def required_null_flags(extra_scalars: list[str] | None = None) -> dict[str, Column]:
+    """One boolean per REQUIRED path, true on a row that violates it,
+    keyed by the name ``RequiredFieldViolation`` reports. Top-level scalars
+    test the column; array elements test ``exists(arr, elem-null)``."""
+    flags = {}
     for col in REQUIRED_SCALARS + (extra_scalars or []):
-        checks[f"null:{col}"] = F.sum(F.col(col).isNull().cast("long"))
+        flags[f"null:{col}"] = F.col(col).isNull()
+
     def make_pred(p: str):
         # factory keeps the lambda unary (pyspark treats default-arg
         # lambdas as its multi-arg higher-order-function form)
@@ -181,12 +183,25 @@ def validate_required(df: DataFrame, extra_scalars: list[str] | None = None) -> 
 
     for arr, paths in REQUIRED_IN_ARRAYS.items():
         for path in paths:
-            checks[f"null:{arr}[].{path}"] = F.sum(
-                F.when(
-                    F.col(arr).isNotNull() & F.exists(F.col(arr), make_pred(path)), 1
-                ).otherwise(0)
+            flags[f"null:{arr}[].{path}"] = F.col(arr).isNotNull() & F.exists(
+                F.col(arr), make_pred(path)
             )
-    row = df.agg(*[c.alias(k) for k, c in checks.items()]).collect()[0]
-    bad = {k: v for k, v in row.asDict().items() if v}
+    return flags
+
+
+def raise_required_nulls(null_counts: dict[str, int | None]) -> None:
+    """Raise ``RequiredFieldViolation`` naming every path with a nonzero
+    count (sums of :func:`required_null_flags`)."""
+    bad = {k: v for k, v in null_counts.items() if v}
     if bad:
         raise RequiredFieldViolation(f"REQUIRED fields with nulls: {bad}")
+
+
+def validate_required(df: DataFrame, extra_scalars: list[str] | None = None) -> None:
+    """Reject the load when any REQUIRED path is null — the BigQuery
+    load-time behavior (SURVEY §4.2), done as one aggregate pass."""
+    flags = required_null_flags(extra_scalars)
+    row = df.agg(
+        *[F.sum(F.when(flag, 1).otherwise(0)).alias(k) for k, flag in flags.items()]
+    ).collect()[0]
+    raise_required_nulls(row.asDict())

@@ -102,8 +102,11 @@ def test_null_parent_matches_distributed_semantics(spark, lt):
         [("A", None), ("B", "A"), ("C", "B"), ("D", "D")],
         "id string, parent string",
     )
-    m = _mapping(ultimate_parent(edges, local_threshold=lt))
-    assert m == {"A": None, "B": "A", "C": "A", "D": "D"}
+    res = ultimate_parent(edges, local_threshold=lt)
+    assert _mapping(res) == {"A": None, "B": "A", "C": "A", "D": "D"}
+    # B and C resolve to A, whose own parent is null: not a root. A itself
+    # resolves to null, which no edge matches, so it is not counted.
+    assert res.n_in_cycle == 2
 
 
 ROR_SCHEMA = (
@@ -199,9 +202,13 @@ def test_strategies_produce_identical_mappings(spark):
            ("R", "P"), ("A", "GHOST"), ("lone", "lone")]
     )
     edges = spark.createDataFrame(rows, "id string, parent string")
-    dist = _mapping(ultimate_parent(edges, max_depth=64, local_threshold=0))
-    local = _mapping(ultimate_parent(edges, max_depth=64, local_threshold=10**6))
-    assert dist == local
+    dist = ultimate_parent(edges, max_depth=64, local_threshold=0)
+    local = ultimate_parent(edges, max_depth=64, local_threshold=10**6)
+    assert (dist.strategy, local.strategy) == ("doubling", "single-task")
+    assert _mapping(dist) == _mapping(local)
+    # the kernel's per-id flags count what the doubling path's joins count:
+    # the 2-cycle and the 3-cycle, not the chain or the ghost terminal
+    assert dist.n_in_cycle == local.n_in_cycle == 5
 
 
 def test_small_input_routes_to_single_task(spark):
