@@ -17,7 +17,6 @@ Layout
                    vector math) built from pyspark.sql.functions.
 - ``plans/``     : the reference-parity ROR pipeline (staging → checks →
                    promote → snapshot) expressed as gated DataFrame stages.
-- ``streaming/`` : Structured Streaming demos over the events table.
 - ``queries/``   : the driver-contract query registry; every entry has a
                    DuckDB oracle where SQL-expressible.
 

@@ -124,12 +124,6 @@ def fingerprint_md5(col: Column) -> Column:
     return F.md5(normalize_text(col))
 
 
-def fingerprint_xxhash(col: Column) -> Column:
-    """64-bit engine-internal fingerprint (xxhash64) — faster than md5,
-    used for shuffling/bucketing keys rather than portable identity."""
-    return F.xxhash64(normalize_text(col))
-
-
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
     """Fraction of tokens that are stopwords of ``lang``."""
     toks = tokens(col)

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ror_etl_spark.functions.text import normalize_text, fingerprint_md5
-from ror_etl_spark.operators.util import spread
+from ror_etl_spark.operators.util import _splitmix64, spread
 
 
 def shingles(text_col, k: int = 3):
@@ -86,14 +86,6 @@ def exact_dedup(
 
 
 MERSENNE31 = 2147483647  # 2^31 - 1, prime modulus for the lane remixes
-
-
-def _splitmix64(state: int) -> tuple[int, int]:
-    state = (state + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    z = state
-    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-    return state, z ^ (z >> 31)
 
 
 def lane_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
@@ -568,11 +560,6 @@ def _md5_half(s, hi: bool):
     return F.conv(F.substring(F.md5(s), 1 if hi else 9, 8), 16, 10).cast("long")
 
 
-def _half_bit(half_col, j: int):
-    """Bit j (0-31) of a 32-bit half as 0/1."""
-    return F.shiftright(half_col, j).bitwiseAND(F.lit(1))
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", shingle_k: int = 2
 ) -> DataFrame:
@@ -699,7 +686,6 @@ def _doc_gram_arrays(
         normalize_text,
         winnow_fp_set_udf,
     )
-    from ror_etl_spark.operators.util import spread
 
     d = spread(df)
     kernel = gram_hash_seq_udf(k=k) if positional else winnow_fp_set_udf(k=k, w=1)

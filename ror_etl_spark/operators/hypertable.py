@@ -11,8 +11,7 @@ final step); non-decomposable aggregates (exact percentiles) must query
 raw data or store sketches.
 
 At 100 TB the hourly rollup materializes incrementally (append per
-streaming window from streaming/events.py) and is partitioned by bucket
-date for pruning.
+closed hour) and is partitioned by bucket date for pruning.
 """
 
 from __future__ import annotations

@@ -25,15 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ror_etl_spark.functions.vectors import as_double, cosine
-from ror_etl_spark.operators.util import spread
-
-
-def _splitmix64(state: int) -> tuple[int, int]:
-    state = (state + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
-    z = state
-    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-    return state, z ^ (z >> 31)
+from ror_etl_spark.operators.util import _splitmix64, spread
 
 
 def tuned_lsh_params(
@@ -221,15 +213,6 @@ def _probe_sequence(
     return [base ^ mask for mask in ranked[: max(1, nprobe)]]
 
 
-def _query_bucket(query_vec: list[float], planes: list[list[float]]) -> int:
-    b = 0
-    for i, plane in enumerate(planes):
-        d = math.fsum(x * y for x, y in zip(query_vec, plane))
-        if d >= 0:
-            b |= 1 << i
-    return b
-
-
 def _table_buckets_udf(tables: list[list[list[float]]]):
     """Arrow-batched bucket assignment: one (n_tables·n_planes × dim)
     matrix multiply per batch in numpy, returning the per-table bucket
@@ -264,21 +247,6 @@ def _table_buckets_udf(tables: list[list[list[float]]]):
     # IVF plans, 4 in the recall evals). The marker forbids that rewrite;
     # results are unchanged.
     return buckets.asNondeterministic()
-
-
-def _round6_half_up(a):
-    """numpy HALF_UP rounding to 6 dp (ties away from zero) — r6's kernel
-    rounding. Kept for tests, but NO LONGER on the query path:
-    floor(a·1e6 + 0.5) can land 1 ulp off Spark's BigDecimal
-    ROUND_HALF_UP / DuckDB's round when a·1e6 sits on an exact .5
-    boundary in binary, so the kernel now emits RAW cosines and the
-    final rounding is a Spark-side ``F.round`` — one rounding definition
-    shared with the oracle engine."""
-    import numpy as np
-
-    return np.where(
-        a >= 0, np.floor(a * 1e6 + 0.5) / 1e6, np.ceil(a * 1e6 - 0.5) / 1e6
-    )
 
 
 def lsh_near_dup_pairs(
@@ -451,40 +419,18 @@ def all_pairs_above(
     )
 
 
-def _nearest_cell(vec_col, centroids: list[list[float]]):
-    """Column expr: index of the closest centroid (squared L2, ties to the
-    lower index). Kept as the reference formulation and for tests; the
-    hot paths use ``_nearest_cell_udf`` — Catalyst higher-order functions
-    are CodegenFallback (interpreted per element), so k centroids × dim
-    dims of fold per row made centroid assignment the dominant constant
-    of the IVF queries (r5 full-registry bench: 5.04 s, worst of 168)."""
-
-    def centroid_dist_struct(i: int, c: list[float]):
-        lits = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(as_double(vec_col), lits, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.struct(d.alias("d"), F.lit(i).alias("cell"))
-
-    return F.array_min(
-        F.array(*[centroid_dist_struct(i, c) for i, c in enumerate(centroids)])
-    )["cell"]
-
-
 def _nearest_cell_udf(centroids: list[list[float]]):
     """Arrow-batched nearest-centroid assignment: one (batch × k × dim)
     numpy broadcast per batch, argmin per row (numpy argmin returns the
-    FIRST minimum — the same lower-index tie-break as the struct-min
-    expression and the oracle's ``ORDER BY list_distance, cell``).
+    FIRST minimum — the same lower-index tie-break as the oracle's
+    ``ORDER BY list_distance, cell``).
 
-    Same rationale as ``_table_buckets_udf``: the HOF argmin is
-    interpreted per element, the numpy form is one vectorized pass. The
-    output is an integer cell id — no rounding is involved, so the only
-    cross-engine divergence risk is a near-exact distance tie between
-    two distinct centroids at float64 resolution, which the quantized
-    (round_means) training trajectory makes measure-zero.
+    Same rationale as ``_table_buckets_udf``: a Catalyst higher-order
+    argmin is interpreted per element, the numpy form is one vectorized
+    pass. The output is an integer cell id — no rounding is involved, so
+    the only cross-engine divergence risk is a near-exact distance tie
+    between two distinct centroids at float64 resolution, which the
+    quantized (round_means) training trajectory makes measure-zero.
 
     The distance is computed in the GEMM form ``‖c‖² − 2·V·Cᵀ``
     (argmin-equivalent: ‖x‖² is constant per row): the naive

@@ -5,6 +5,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def _splitmix64(state: int) -> tuple[int, int]:
+    """One SplitMix64 step, (next state, 64-bit output): the seeded
+    generator behind the minhash lane params and the LSH hyperplanes."""
+    state = (state + 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF
+    z = state
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
+    return state, z ^ (z >> 31)
+
+
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
     """Repartition small inputs up to the session's default parallelism.
 

@@ -1085,7 +1085,7 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned, no skew (keys unique per side) — then a row-level
     classification and a bounded summary. At 100 TB both snapshots
     bucket by key and the join is zero-exchange under co-located
-    layouts (see tests/test_bucketing.py); diffing is exactly as
+    layouts; diffing is exactly as
     expensive as one co-partitioned join, which is why lakehouse MERGE
     logs exist to avoid re-diffing full snapshots."""
     o = Tables(spark, sf_dir).orders

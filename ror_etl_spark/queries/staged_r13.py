@@ -2,8 +2,7 @@
 pytest (``tests/test_staged_r13.py``), but never imported by
 ``queries.load()``, so neither the registry nor the driver reaches them.
 The module is kept only while its tests are retired a batch at a time;
-nothing may register from it. ``staged_r14`` reuses its daily frame and
-text helpers.
+nothing may register from it.
 
 Contents: the DIAGNOSTIC & ROBUSTNESS layer — residual diagnostics
 for the regression closures the registry already carries (Jarque-Bera

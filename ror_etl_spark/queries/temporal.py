@@ -1,9 +1,7 @@
-"""Time-window aggregation (batch twins of the streaming demos) and the
-as-of join operator.
+"""Time-window aggregation and the as-of join operator.
 
-``F.window`` works identically on batch and streaming DataFrames — the
-batch queries here are oracle-checked against DuckDB ``time_bucket``; the
-same plans run under readStream in ror_etl_spark.streaming.
+The ``F.window`` queries here are oracle-checked against DuckDB
+``time_bucket``.
 """
 
 from __future__ import annotations
@@ -231,7 +229,7 @@ def sketch_distinct_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, then a per-day row_number window keeps only the bottom k
     BEFORE any collect — no single aggregation row ever holds a full
     day's distinct set, so per-day state is bounded at k regardless of
-    daily cardinality (matching the capped streaming KMV twin)."""
+    daily cardinality."""
     from pyspark.sql import Window as W
 
     e = Tables(spark, sf_dir).events

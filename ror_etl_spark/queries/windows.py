@@ -191,11 +191,8 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity): lag + cumulative sum.
-
-    This is the batch twin of the streaming ``session_window`` demo in
-    ``ror_etl_spark.streaming``; both shuffle once on user_id.
-    """
+    """Gap-based sessionization (30-min inactivity): lag + cumulative sum,
+    one shuffle on user_id."""
     e = Tables(spark, sf_dir).events
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     # microsecond precision on both sides (events.ts has sub-second values;

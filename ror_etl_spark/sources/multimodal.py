@@ -7,8 +7,8 @@ Design (the part that matters at 100 TB):
   asset, columnar at rest, so metadata predicates prune without touching
   payload bytes (Parquet column pruning skips the binary column entirely
   for metadata-only queries).
-- ingest path: ``spark.read.format("binaryFile")`` for asset directories,
-  or any table carrying bytes.
+- ingest path: any table carrying bytes (Spark's own ``binaryFile``
+  source reads an asset directory into that shape).
 - compute path: ``mapInPandas`` — the payload crosses to Python ONCE per
   Arrow batch, not per row; batch size is controlled by
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` so executor memory is
@@ -66,14 +66,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def read_binary_dir(spark, path: str, glob: str = "*") -> DataFrame:
-    """Directory-of-assets source: Spark's binaryFile format yields
-    (path, modificationTime, length, content)."""
-    return (
-        spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    )
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

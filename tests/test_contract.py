@@ -158,56 +158,85 @@ def test_driver_window_prioritizes_unverified_oracle_queries():
     )
 
 
-# Query modules that ``queries.load()`` never imports, kept until their
-# tests are retired (at most a few dozen tests per change). Remove a name
-# when its module is deleted; never add one.
-UNSERVED = ("staged_r13", "staged_r14")
+# Package modules (relative to ``ror_etl_spark``) that no served entry point
+# imports, kept until their tests are retired (at most a few dozen tests per
+# change). Remove a name when its module is deleted; never add one.
+UNSERVED = ("queries.staged_r13",)
+
+# What serves the package: the query contract, the headline bench, the
+# benchmark harness (which runs the paper's weekly pipeline and the rollup)
+# and the weekly pipeline itself. ``queries.load()`` is reached through
+# ``registry.load_all``.
+ENTRY_FILES = ("__spark_entry__.py", "bench.py", "perfbench/*.py")
+ENTRY_MODULES = ("ror_etl_spark.plans.ror_pipeline", "ror_etl_spark.sources.fetch")
+
+
+def _package_imports(tree: ast.AST, modules: set[str]) -> set[str]:
+    """Package modules an AST imports anywhere (function-level imports
+    included), plus the package ``__init__``s that importing them runs."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    out = set()
+    for name in names:
+        parts = name.split(".")
+        out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return out & modules
 
 
 def test_every_query_module_is_served():
-    """Every module under ror_etl_spark/queries/ (bar the package init, the
-    ``util`` helpers and the UNSERVED modules still being retired) is
-    imported by ``queries.load()`` and registers at least one query, and
-    none keeps a private ``STAGED`` dict — so implemented-but-unserved
-    query code cannot pile up beside the registry. UNSERVED may only
-    shrink: its modules exist, stay out of ``load()`` and register
-    nothing."""
+    """Every module under ror_etl_spark/ (bar the UNSERVED ones still being
+    retired) is reached by a static import walk from the served entry
+    points; every query module but ``util`` registers at least one query;
+    and no module keeps a private ``STAGED`` dict — so code that nothing
+    serves cannot pile up beside the registry. UNSERVED may only shrink:
+    its modules exist, are not reached and register nothing."""
     from ror_etl_spark import registry
 
     registry.load_all()
-    qdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "ror_etl_spark",
-        "queries",
-    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     trees = {}
-    for path in sorted(glob.glob(os.path.join(qdir, "*.py"))):
+    for path in glob.glob(os.path.join(root, "ror_etl_spark", "**", "*.py"), recursive=True):
+        name = os.path.relpath(path, root)[: -len(".py")].replace(os.sep, ".")
         with open(path) as f:
-            trees[os.path.splitext(os.path.basename(path))[0]] = ast.parse(f.read())
-    assert "staged_r9" in trees, qdir
+            trees[name.removesuffix(".__init__")] = ast.parse(f.read())
+    assert "ror_etl_spark.queries.staged_r9" in trees, root
 
-    load_fn = next(
-        node
-        for node in trees["__init__"].body
-        if isinstance(node, ast.FunctionDef) and node.name == "load"
-    )
-    loaded = {
-        alias.name
-        for node in ast.walk(load_fn)
-        if isinstance(node, ast.ImportFrom) and node.module == "ror_etl_spark.queries"
-        for alias in node.names
-    }
-    registering = {fn.__module__.rsplit(".", 1)[-1] for fn in registry.QUERIES.values()}
-    assert [m for m in UNSERVED if m not in trees] == [], "drop deleted names"
-    assert [m for m in UNSERVED if m in loaded or m in registering] == []
-    served = [m for m in trees if m not in ("__init__", "util", *UNSERVED)]
-    assert [m for m in served if m not in loaded] == [], "not imported by load()"
-    assert [m for m in served if m not in registering] == [], "registers no query"
+    frontier = set(ENTRY_MODULES)
+    for pattern in ENTRY_FILES:
+        paths = glob.glob(os.path.join(root, pattern))
+        assert paths, pattern
+        for path in paths:
+            with open(path) as f:
+                frontier |= _package_imports(ast.parse(f.read()), set(trees))
+    reached = set()
+    while frontier:
+        name = frontier.pop()
+        reached.add(name)
+        frontier |= _package_imports(trees[name], set(trees)) - reached
+
+    unserved = {f"ror_etl_spark.{m}" for m in UNSERVED}
+    registering = {fn.__module__ for fn in registry.QUERIES.values()}
+    assert sorted(unserved - set(trees)) == [], "drop deleted names"
+    assert sorted(unserved & (reached | registering)) == [], "drop served names"
+    assert sorted(set(trees) - reached - unserved) == [], "no entry point reaches"
+    query_modules = [
+        m
+        for m in trees
+        if m.startswith("ror_etl_spark.queries.")
+        and m != "ror_etl_spark.queries.util"
+        and m not in unserved
+    ]
+    assert [m for m in query_modules if m not in registering] == [], "registers no query"
 
     staged = [
         m
         for m, tree in trees.items()
-        if m not in UNSERVED
+        if m not in unserved
         for node in ast.walk(tree)
         if isinstance(node, (ast.Assign, ast.AnnAssign))
         for t in (node.targets if isinstance(node, ast.Assign) else [node.target])

@@ -1,53 +1,12 @@
-"""Source/sink round-trips, salted skew join equivalence, stateful
-streaming operator."""
+"""Salted skew join equivalence (`operators/skew.py`)."""
 
 from __future__ import annotations
-
-import pandas as pd
-import pytest
 
 from pyspark.sql import functions as F
 
 from ror_etl_spark.operators.skew import salted_join
-from ror_etl_spark.sources.io import (
-    read_csv,
-    read_jsonl,
-    write_csv,
-    write_jsonl,
-    write_partitioned,
-)
 from ror_etl_spark.tables import Tables
 from tests.conftest import SF_SMALL
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    src = Tables(spark, SF_SMALL).nation
-    path = str(tmp_path / "nation_jsonl")
-    write_jsonl(src, path)
-    back = read_jsonl(spark, path, src.schema)
-    assert sorted(r["n_nationkey"] for r in back.collect()) == list(range(25))
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    src = Tables(spark, SF_SMALL).region
-    path = str(tmp_path / "region_csv")
-    write_csv(src, path)
-    back = read_csv(spark, path, src.schema)
-    assert {(r["r_regionkey"], r["r_name"]) for r in back.collect()} == {
-        (r["r_regionkey"], r["r_name"]) for r in src.collect()
-    }
-
-
-def test_partitioned_write_prunes_layout(spark, tmp_path):
-    import os
-
-    src = Tables(spark, SF_SMALL).nation
-    path = str(tmp_path / "nation_part")
-    write_partitioned(src, path, "n_regionkey")
-    dirs = {d for d in os.listdir(path) if d.startswith("n_regionkey=")}
-    assert dirs == {f"n_regionkey={i}" for i in range(5)}
-    pruned = spark.read.parquet(path).filter(F.col("n_regionkey") == 3)
-    assert pruned.count() == 5
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -60,384 +19,3 @@ def test_salted_join_matches_plain_join(spark):
     a = {tuple(r) for r in plain.select("o_orderkey", "c_mktsegment").collect()}
     b = {tuple(r) for r in salted.select("o_orderkey", "c_mktsegment").collect()}
     assert a == b
-
-
-def test_stateful_running_user_stats(spark):
-    from ror_etl_spark.streaming.events import read_events_stream, run_to_memory
-    from ror_etl_spark.streaming.stateful import running_user_stats
-
-    stream = read_events_stream(spark, SF_SMALL)
-    out = run_to_memory(
-        spark, running_user_stats(stream), "t_stateful", mode="update"
-    )
-    # with availableNow the whole fixture arrives; the last update per user
-    # must equal the batch aggregate
-    from pyspark.sql import Window as W
-
-    latest = (
-        out.withColumn(
-            "rn", F.row_number().over(W.partitionBy("user_id").orderBy(F.desc("n_events")))
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    got = {r["user_id"]: (r["n_events"], r["total"]) for r in latest.collect()}
-    batch = (
-        Tables(spark, SF_SMALL)
-        .events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("s"))
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in batch.collect()}
-    assert got == want
-
-
-def _has_working_protobuf() -> bool:
-    """transformWithStateInPandas spawns a driver worker that imports
-    google.protobuf.descriptor; probe the exact import it needs."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_working_protobuf(),
-    reason="transformWithStateInPandas driver worker requires google.protobuf",
-)
-def test_transform_with_state_matches_batch(spark):
-    from ror_etl_spark.streaming.events import read_events_stream, run_to_memory
-    from ror_etl_spark.streaming.tws import running_user_stats_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = read_events_stream(spark, SF_SMALL)
-    out = run_to_memory(
-        spark, running_user_stats_tws(stream), "t_tws", mode="update"
-    )
-    from pyspark.sql import Window as W
-
-    latest = (
-        out.withColumn(
-            "rn", F.row_number().over(W.partitionBy("user_id").orderBy(F.desc("n_events")))
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    got = {r["user_id"]: (r["n_events"], r["total"]) for r in latest.collect()}
-    batch = (
-        Tables(spark, SF_SMALL)
-        .events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("s"))
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in batch.collect()}
-    assert got == want
-
-
-def test_orc_roundtrip(spark, tmp_path):
-    from ror_etl_spark.sources.io import read_orc, write_orc
-
-    src = Tables(spark, SF_SMALL).nation
-    path = str(tmp_path / "nation_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path)
-    assert back.schema == src.schema
-    assert sorted(r["n_name"] for r in back.collect()) == sorted(
-        r["n_name"] for r in src.collect()
-    )
-
-
-def test_text_roundtrip_and_filter_pushdown(spark, tmp_path):
-    from ror_etl_spark.sources.io import read_text, write_text
-
-    docs = Tables(spark, SF_SMALL).documents.select("text").limit(50)
-    path = str(tmp_path / "docs_txt")
-    write_text(docs, path)
-    back = read_text(spark, path)
-    assert back.columns == ["value"]
-    assert back.count() == 50
-
-
-def test_jsonl_quarantine_splits_good_and_bad(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from ror_etl_spark.sources.io import read_jsonl_quarantine
-
-    p = tmp_path / "mixed.jsonl"
-    p.write_text(
-        '{"id": "a", "n": 1}\n'
-        "this is not json at all\n"
-        '{"id": "b", "n": 2}\n'
-        '{"id": "c", "n": "not-a-number"}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("n", T.LongType())]
-    )
-    good, bad = read_jsonl_quarantine(spark, str(p), schema)
-    assert {(r["id"], r["n"]) for r in good.collect()} == {("a", 1), ("b", 2)}
-    bad_rows = bad.collect()
-    assert len(bad_rows) == 2  # the non-json line and the type violation
-    assert all(r["raw"] for r in bad_rows)
-    assert all(r["src_file"].endswith("mixed.jsonl") for r in bad_rows)
-
-
-def test_streaming_kmv_sketch_equals_batch_sketch(spark):
-    """The stateful KMV sketch must converge to EXACTLY the batch KMV
-    answer on the same data — the sketch is a pure function of the
-    distinct ids, so micro-batching cannot change it."""
-    from ror_etl_spark.streaming.events import read_events_stream, run_to_memory
-    from ror_etl_spark.streaming.stateful import KMV_K, kmv_distinct_users_stream
-    from ror_etl_spark.queries.temporal import _kmv_hash
-
-    stream = read_events_stream(spark, SF_SMALL)
-    out = run_to_memory(spark, kmv_distinct_users_stream(stream), "t_kmv", mode="update")
-    from pyspark.sql import Window as W
-
-    latest = (
-        out.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("event_type").orderBy(F.desc("sketch_size"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    got = {r["event_type"]: r["distinct_users"] for r in latest.collect()}
-
-    e = Tables(spark, SF_SMALL).events
-    bk = (
-        e.select("event_type", _kmv_hash(F.col("user_id")).alias("h"))
-        .distinct()
-        .withColumn(
-            "rn", F.row_number().over(W.partitionBy("event_type").orderBy("h"))
-        )
-        .filter(F.col("rn") <= KMV_K)
-    )
-    want = {
-        r["event_type"]: (
-            float(r["m"]) if r["m"] < KMV_K else round((KMV_K - 1) / r["mx"], 4)
-        )
-        for r in bk.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("m"), F.max("h").alias("mx"))
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_first_seen_dedup_across_batches(spark, tmp_path):
-    """Two micro-batches (maxFilesPerTrigger=1): a duplicate arriving in
-    a LATER batch must be flagged against the first batch's canonical —
-    i.e. the fingerprint state survives between batches — and with
-    id-ordered arrival the final keep set equals the batch exact dedup."""
-    import os
-    import time as _t
-
-    from ror_etl_spark.operators.dedup import exact_dedup
-    from ror_etl_spark.streaming.stateful import first_seen_docs_stream
-
-    b0 = [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"), (3, "unique one")]
-    b1 = [(4, "ALPHA  beta gamma delta"), (5, "unique two"), (6, "unique one")]
-    d = tmp_path / "docs"
-    d.mkdir()
-    # the file source needs FLAT parquet files (a write.parquet output
-    # directory would be mistaken for a partition layout) — write each
-    # batch via pyarrow directly
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for name, batch in (("b0.parquet", b0), ("b1.parquet", b1)):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([i for i, _ in batch], type=pa.int64()),
-                    "text": pa.array([t for _, t in batch]),
-                }
-            ),
-            str(d / name),
-        )
-    # file source orders batches by modification time — force b0 first
-    now = _t.time()
-    os.utime(d / "b0.parquet", (now - 60, now - 60))
-    os.utime(d / "b1.parquet", (now, now))
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(str(d))
-    )
-    from ror_etl_spark.streaming.events import run_to_memory
-
-    out = run_to_memory(spark, first_seen_docs_stream(stream), "t_first_seen")
-    rows = {r["doc_id"]: (r["keep"], r["canonical_id"]) for r in out.collect()}
-    assert rows == {
-        1: (True, 1),
-        2: (False, 1),
-        3: (True, 3),
-        4: (False, 1),   # later batch, normalization collapses case — dup of 1
-        5: (True, 5),
-        6: (False, 3),   # later batch, exact text of 3
-    }
-    # id-ordered arrival ⇒ streaming keepers == batch exact-dedup keepers
-    batch = exact_dedup(
-        spark.createDataFrame(b0 + b1, "doc_id long, text string")
-    )
-    batch_keepers = {r["keep_id"] for r in batch.collect()}
-    assert {i for i, (k, _) in rows.items() if k} == batch_keepers
-
-
-def test_streaming_cms_equals_batch_sketch(spark):
-    """The sharded streaming CMS partials, merged (columnwise sum over
-    shards — increments are associative, hashes identical), must
-    converge to EXACTLY the Python-built reference sketch: per-depth
-    totals equal the event count, n_buckets and max_count match."""
-    from collections import Counter
-
-    from ror_etl_spark.streaming.events import read_events_stream, run_to_memory
-    from ror_etl_spark.streaming.stateful import (
-        CMS_D,
-        _cms_bucket_py,
-        cms_counters_stream,
-        merge_cms_partials,
-    )
-
-    stream = read_events_stream(spark, SF_SMALL)
-    out = run_to_memory(spark, cms_counters_stream(stream), "t_cms", mode="update")
-    from pyspark.sql import Window as W
-
-    # latest snapshot per (shard, d): counters only grow, so max total wins
-    latest = (
-        out.withColumn("snap_total", F.aggregate("counts", F.lit(0).cast("long"), lambda a, x: a + x))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("shard", "d").orderBy(F.desc("snap_total"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    merged = merge_cms_partials(latest)
-    got = {
-        r["d"]: (r["n_buckets"], r["total"], r["max_count"])
-        for r in merged.groupBy("d")
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum("count").alias("total"),
-            F.max("count").alias("max_count"),
-        )
-        .collect()
-    }
-    assert sorted(got) == list(range(CMS_D))
-
-    users = [r["user_id"] for r in
-             Tables(spark, SF_SMALL).events.select("user_id").collect()]
-    for d in range(CMS_D):
-        ref = Counter(_cms_bucket_py(d, u) for u in users)
-        assert got[d] == (len(ref), sum(ref.values()), max(ref.values()))
-
-
-def test_tws_processor_contract_vs_stateful_twin(spark):
-    """Pinned-twin contract for the protobuf-gated operator (VERDICT r8
-    item 5): where the env can't run transformWithStateInPandas (no
-    google.protobuf for its driver worker), drive the SAME
-    ``RunningUserStats`` StatefulProcessor the operator would mount,
-    through a duck-typed StatefulProcessorHandle/ValueState, across
-    multiple micro-batches — and require its per-batch outputs to be
-    IDENTICAL to the applyInPandasWithState twin's update function run
-    through an equally-faked GroupState on the same batch split. This
-    pins everything the streaming engine doesn't own: state-tuple
-    round-trip, multi-batch accumulation, output schema/rounding, and
-    the two APIs' semantic equivalence. The env-gated end-to-end test
-    above takes over wherever protobuf exists."""
-    from ror_etl_spark.streaming.stateful import _update_user_stats
-    from ror_etl_spark.streaming import tws
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            assert schema == tws.STATE_SCHEMA
-            return self.states.setdefault(name, FakeValueState())
-
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    events = (
-        Tables(spark, SF_SMALL)
-        .events.select("user_id", "value")
-        .toPandas()
-        .sort_index()
-    )
-    users = sorted(events["user_id"].unique())[:20]
-    proc = tws.RunningUserStats()
-    handle = FakeHandle()
-    proc.init(handle)
-    for uid in users:
-        rows = events[events["user_id"] == uid].reset_index(drop=True)
-        # split into 3 micro-batches, one of them empty (edge the engine
-        # can deliver on watermark-only triggers)
-        cut = max(1, len(rows) // 2)
-        batches = [rows.iloc[:cut], rows.iloc[0:0], rows.iloc[cut:]]
-        gs = FakeGroupState()
-        # fresh per-key cell like the engine provides (keyed state store)
-        handle.states.clear()
-        proc.init(handle)
-        for batch in batches:
-            out_tws = pd.concat(
-                list(proc.handleInputRows((uid,), iter([batch]), None)),
-                ignore_index=True,
-            )
-            out_twin = pd.concat(
-                list(_update_user_stats((uid,), iter([batch]), gs)),
-                ignore_index=True,
-            )
-            pd.testing.assert_frame_equal(out_tws, out_twin)
-            assert list(out_tws.columns) == [
-                "user_id",
-                "n_events",
-                "total",
-                "max_value",
-            ]
-        # state cells agree after the full batch sequence
-        assert handle.states["stats"].get() == gs.get
-        # and the final emitted row equals the batch-engine aggregate
-        want = (
-            spark.createDataFrame(events[events["user_id"] == uid])
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 4).alias("s"),
-                F.max("value").alias("m"),
-            )
-            .first()
-        )
-        assert int(out_tws["n_events"].iloc[0]) == want["n"]
-        assert float(out_tws["total"].iloc[0]) == pytest.approx(want["s"], abs=1e-4)
-        assert float(out_tws["max_value"].iloc[0]) == pytest.approx(want["m"])

@@ -139,7 +139,7 @@ def test_winnow_shared_substring_property(spark, pair):
 def test_kmv_bottomk_merge_is_distributive(values, n_batches):
     """KMV merge law: splitting a stream into arbitrary micro-batches and
     merging per-batch bottom-k sketches must equal the bottom-k of the
-    whole — the exact property the streaming KMV operator relies on."""
+    whole — the property the per-day KMV sketch union relies on."""
     import hashlib
 
     k = 16
@@ -491,46 +491,3 @@ def test_skyline_matches_dominance_scan(spark, pts):
         )
     }
     assert got == want
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=10_000), min_size=1, max_size=400),
-    st.integers(min_value=1, max_value=8),
-    st.integers(min_value=1, max_value=4),
-)
-@settings(max_examples=150, deadline=None)
-def test_cms_shard_partials_merge_to_global_sketch(users, n_shards, n_batches):
-    """The r8 streaming-CMS shape rests on one law: hash-partitioning the
-    stream into shards, each accumulating its OWN d×w counter block
-    across arbitrary micro-batch splits, then summing columnwise, must
-    equal the sketch built from the whole stream in one pass. Replays
-    the exact kernel arithmetic (md5 buckets, per-shard np.int64 blocks)
-    over arbitrary shardings — associativity is what lets the operator
-    trade the old ×d crossJoin for 1× shuffle."""
-    import numpy as np
-
-    from ror_etl_spark.streaming.stateful import CMS_D, CMS_W, _cms_bucket_py
-
-    def accumulate(counters, vals):
-        arr = np.asarray(vals, dtype=np.int64)
-        uq, mult = np.unique(arr, return_counts=True)
-        for d in range(CMS_D):
-            idx = np.fromiter(
-                (_cms_bucket_py(d, v) for v in uq), dtype=np.int64, count=len(uq)
-            )
-            np.add.at(counters, d * CMS_W + idx, mult)
-
-    whole = np.zeros(CMS_D * CMS_W, dtype=np.int64)
-    accumulate(whole, users)
-
-    shards = {}
-    for b in range(n_batches):
-        batch = users[b::n_batches]
-        for s in range(n_shards):
-            part = [u for u in batch if u % n_shards == s]
-            if not part:
-                continue
-            counters = shards.setdefault(s, np.zeros(CMS_D * CMS_W, dtype=np.int64))
-            accumulate(counters, part)
-    merged = sum(shards.values(), np.zeros(CMS_D * CMS_W, dtype=np.int64))
-    assert np.array_equal(merged, whole)

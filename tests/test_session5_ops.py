@@ -364,66 +364,6 @@ def test_benford_digits_and_frequencies(spark):
     assert abs(sum(r["observed"] for r in rows) - 1.0) < 1e-3
 
 
-# ------------------------------------------------------ streaming twin
-
-
-def test_streaming_debounce_equals_batch_across_batches(spark, tmp_path):
-    """Three ts-ordered micro-batches (maxFilesPerTrigger=1): the
-    refractory chain must continue across batch boundaries via the
-    (last_kept, armed) state, and the final kept set must equal the
-    batch query's greedy walk on the concatenated data."""
-    import os
-    import time as _t
-
-    import pandas as pd
-
-    from ror_etl_spark.streaming.stateful import debounce_stream
-
-    # one user/type: chain 0s,300s,700s,1250s,1300s -> kept 0,700,1300
-    # second key entirely inside one batch -> kept first only
-    rows = [
-        (1, "x", 10, 0),
-        (1, "x", 11, 300),
-        (1, "x", 12, 700),
-        (1, "x", 13, 1250),
-        (1, "x", 14, 1300),
-        (2, "y", 20, 100),
-        (2, "y", 21, 200),
-    ]
-    d = tmp_path / "ev"
-    d.mkdir()
-    chunks = [rows[:2], rows[2:4], rows[4:]]
-    for i, ch in enumerate(chunks):
-        pdf = pd.DataFrame(
-            {
-                "user_id": [r[0] for r in ch],
-                "event_type": [r[1] for r in ch],
-                "event_id": [r[2] for r in ch],
-                "ts": pd.to_datetime([r[3] * 10**9 for r in ch]),
-            }
-        )
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(
-            str(d / f"b{i}.parquet")
-        )
-        _t.sleep(0.05)  # distinct mtimes -> deterministic file order
-
-    schema = spark.read.parquet(str(d / "b0.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .format("parquet")
-        .load(str(d) + "/*/")
-    )
-    from ror_etl_spark.streaming.events import run_to_memory
-
-    out = run_to_memory(spark, debounce_stream(stream), "t_debounce_s5")
-    got = {(r["user_id"], r["event_type"], r["event_id"]) for r in out.collect()}
-    # greedy: key(1,x): 0 kept; 300<600 drop; 700>=600 kept; 1250<1300
-    # drop; 1300>=700+600 kept. key(2,y): 100 kept; 200 drop.
-    assert got == {(1, "x", 10), (1, "x", 12), (1, "x", 14), (2, "y", 20)}
-
-
 # --------------------------------------------------------- components
 
 

@@ -340,43 +340,6 @@ def gen_part(out_dir: str, n: int, seed: int) -> None:
     print(f"gen_part: {out_dir} n={n}")
 
 
-def cms_stream() -> None:
-    """Stateful streaming CMS decade (VERDICT r7 item 4): drive the r8
-    shard-partitioned sketch (streaming/stateful.py:cms_counters_stream)
-    over the events decade — one availableNow pass per tier to a noop
-    sink, fresh checkpoint each. Correctness rides the pytest equality
-    (merged shard partials == batch sketch); this measures the scaling
-    shape: state is fixed (SHARDS×D×W longs total), the stream shuffles
-    once at 1× volume, and hashing is per UNIQUE user per shard-batch —
-    so wall-clock should grow ~linearly in events."""
-    import shutil
-    import tempfile
-
-    from ror_etl_spark.session import get_spark
-    from ror_etl_spark.streaming.events import read_events_stream
-    from ror_etl_spark.streaming.stateful import cms_counters_stream
-
-    spark = get_spark("cms-stream-decade")
-    # one unmeasured warmup pass so the 1m tier isn't billed JVM/codegen
-    # startup (same policy as bench.py)
-    tiers = [("warmup", EV_TIERS[0][1])] + list(EV_TIERS)
-    for lbl, d in tiers:
-        ckpt = tempfile.mkdtemp(prefix="cms_ckpt_")
-        t0 = time.perf_counter()
-        q = (
-            cms_counters_stream(read_events_stream(spark, d))
-            .writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.perf_counter() - t0
-        shutil.rmtree(ckpt, ignore_errors=True)
-        print(f"cms-stream: {lbl} wall={wall:.1f}s", flush=True)
-
-
 def run_cold(queries: list[str], tiers: list[tuple[str, str]]) -> None:
     """COLD-first timing (the honest one-shot-pass number): clear the
     cache before the first rep, report cold and the warm best-of-2."""
@@ -1349,8 +1312,6 @@ if __name__ == "__main__":
     ap.add_argument("--run", action="store_true")
     ap.add_argument("--kernel", action="store_true")
     ap.add_argument("--sn", action="store_true")
-    ap.add_argument("--cms-stream", action="store_true",
-                    help="stateful streaming CMS decade over ev-1m/10m/100m (r8)")
     ap.add_argument("--kernel-n", type=int, default=20_000_000)
     ap.add_argument("--kernel-depth", type=int, default=100)
     ap.add_argument("--sn-n", type=int, default=5_000_000)
@@ -1502,10 +1463,8 @@ if __name__ == "__main__":
         kernel(args.kernel_n, args.kernel_depth)
     if args.sn:
         sn(args.sn_n)
-    if args.cms_stream:
-        cms_stream()
     if not (args.gen or args.gen10 or args.gen_ov or args.run or args.run10
-            or args.run_ov or args.kernel or args.sn or args.cms_stream
+            or args.run_ov or args.kernel or args.sn
             or args.gen_r7
             or args.run_r7 or args.run_boiler or args.run_r7b
             or args.run_semdedup or args.run_r7c or args.run_r7d or args.run_r7e or args.gen_s5 or args.run_s5
