@@ -24,18 +24,20 @@ Scale notes (100 TB design):
   shuffle moves keys only, never record payload; the full-record join
   happens once at the end (``attach_ultimate_parent``) and broadcasts when
   the mapping is small.
-- ``localCheckpoint`` after each iteration truncates lineage
+- ``localCheckpoint`` after each checked iteration truncates lineage
   (otherwise the plan doubles per round and Catalyst analysis blows up)
-  and materializes the ~2-column frame. On a real cluster with flaky
-  executors prefer ``spark.sparkContext.setCheckpointDir`` + ``checkpoint``;
-  the ``use_local_checkpoint`` flag switches.
+  and materializes the ~2-column frame in executor storage. It is always
+  local: the loop runs at most ⌈log2 max_depth⌉ rounds over two narrow
+  columns, so an executor lost mid-rollup fails one short job that is
+  rerun whole, which costs less than writing every round to a reliable
+  checkpoint directory the job would also have to configure.
 - convergence is measured inside the same pass that computes the new
   mapping (count of rows whose ancestor changed), so each iteration is
   one shuffle join + one cheap aggregate over the checkpointed result.
 - cycles can never converge under doubling (ancestors rotate) — the
   bounded iteration count is the termination guarantee, and in-cycle rows
   end at an arbitrary in-cycle node, exactly the reference's alert-and-
-  continue behavior. ``RollupResult.n_unconverged`` is the alert signal.
+  continue behavior. ``RollupResult.n_in_cycle`` is the alert signal.
 """
 
 from __future__ import annotations
@@ -58,22 +60,11 @@ class RollupResult:
     _flags: DataFrame | None = None  # single-task checkpoint with in_cycle
 
     @property
-    def n_unconverged(self) -> int:
-        """Rows that did not resolve to a true root — cycles or chains
-        deeper than the iteration budget. Alert, don't fail (reference
-        get_ultimate_parent.py:25-39).
-
-        Alias of :attr:`n_in_cycle`: "final ancestor is not a root" is the
-        authoritative non-convergence test, strictly more accurate than
-        the loop's last ``n_changed`` scalar (which needs a wasted extra
-        no-op round to read 0, and still misses even-length cycles that
-        collapse to stable self-maps). Lazy — only alert consumers pay
-        for it."""
-        return self.n_in_cycle
-
-    @property
     def n_in_cycle(self) -> int:
         """Rows whose resolved ancestor is not a true root (any cycle).
+        This is the non-convergence alert: testing the final state is
+        more accurate than the loop's last ``n_changed`` scalar, which
+        needs an extra no-op round to read 0.
 
         Computed lazily on first access: alert consumers (the pipeline)
         pay for it; mapping-only consumers don't run the extra jobs. The
@@ -112,16 +103,16 @@ class DuplicateIdError(ValueError):
     """Raised when the input has duplicate ids (get_ultimate_parent.py:80-81)."""
 
 
-def assert_unique_ids(df: DataFrame, id_col: str = "id") -> None:
+def assert_unique_ids(df: DataFrame) -> None:
     """Hard-fail on duplicate ids, mirroring the reference's assert.
 
     Distributed check: groupBy + having instead of a driver-side dict probe.
     """
     dup = (
-        df.groupBy(id_col)
+        df.groupBy("id")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
-        .select(id_col)
+        .select("id")
         .limit(5)
         .collect()
     )
@@ -129,11 +120,7 @@ def assert_unique_ids(df: DataFrame, id_col: str = "id") -> None:
         raise DuplicateIdError(f"Duplicate ID(s): {[r[0] for r in dup]}")
 
 
-def extract_parent_edges(
-    ror: DataFrame,
-    id_col: str = "id",
-    relationships_col: str = "relationships",
-) -> DataFrame:
+def extract_parent_edges(ror: DataFrame) -> DataFrame:
     """(id, parent) edges from nested ROR records — P1/P2/P3 of SURVEY §2.
 
     Preserves the reference's exact semantics (get_ultimate_parent.py:74-79):
@@ -141,23 +128,20 @@ def extract_parent_edges(
     wins, parentless ids map to themselves. Runs entirely JVM-side
     (higher-order array functions; no Python UDF).
     """
-    return ror.select(
-        F.col(id_col).alias("id"),
-        _parent_col(id_col, relationships_col).alias("parent"),
-    )
+    return ror.select(F.col("id"), _parent_col().alias("parent"))
 
 
-def _parent_col(id_col: str = "id", relationships_col: str = "relationships"):
+def _parent_col():
     """The ``parent`` expression of :func:`extract_parent_edges`, for
     callers that project it next to other columns in one scan."""
     parents = F.filter(
-        F.col(relationships_col),
+        F.col("relationships"),
         lambda r: F.lower(F.coalesce(r["type"], F.lit(""))) == "parent",
     )
     # try_element_at: null (→ coalesce to self) when no parent relationship
     # exists — plain element_at(-1) throws on empty arrays under ANSI mode
     last_parent = F.try_element_at(parents, F.lit(-1))["id"]
-    return F.coalesce(last_parent, F.col(id_col))
+    return F.coalesce(last_parent, F.col("id"))
 
 
 LOCAL_THRESHOLD_CONF = "spark.ror.rollup.localThreshold"
@@ -166,10 +150,7 @@ DEFAULT_LOCAL_THRESHOLD = 2_000_000
 
 def ultimate_parent(
     edges: DataFrame,
-    id_col: str = "id",
-    parent_col: str = "parent",
     max_depth: int = 200,
-    use_local_checkpoint: bool = True,
     check_every: int = 1,
     local_threshold: int | None = None,
 ) -> RollupResult:
@@ -213,8 +194,7 @@ def ultimate_parent(
     pick the physical strategy from the observed input size, never from
     hope.
     """
-    m = edges.select(F.col(id_col).alias("id"), F.col(parent_col).alias("anc"))
-    m = _materialize(m, use_local_checkpoint)
+    m = _materialize(edges.select(F.col("id"), F.col("parent").alias("anc")))
     if local_threshold is None:
         local_threshold = _conf_local_threshold(m)
     counts = None
@@ -240,7 +220,6 @@ def ultimate_parent(
         m,
         counts,
         max_depth=max_depth,
-        use_local_checkpoint=use_local_checkpoint,
         check_every=check_every,
         local_threshold=local_threshold,
     )
@@ -272,7 +251,6 @@ def _rollup_edges(
     m: DataFrame,
     counts: tuple[int, int] | None,
     max_depth: int = 200,
-    use_local_checkpoint: bool = True,
     check_every: int = 1,
     local_threshold: int | None = None,
 ) -> RollupResult:
@@ -324,7 +302,7 @@ def _rollup_edges(
             # bounded by check_every, so analysis cost stays flat.
             m = stepped.select("id", "anc")
             continue
-        stepped = _materialize(stepped, use_local_checkpoint)
+        stepped = _materialize(stepped)
         m = stepped.select("id", "anc")
         aggs = [
             F.sum((F.col("prev_anc") != F.col("anc")).cast("long")).alias("changed"),
@@ -440,32 +418,26 @@ def _ultimate_parent_single_task(m: DataFrame, n_iters: int) -> RollupResult:
     )
 
 
-def attach_ultimate_parent(
-    ror: DataFrame,
-    mapping: DataFrame,
-    id_col: str = "id",
-    broadcast_mapping: bool = True,
-) -> DataFrame:
+def attach_ultimate_parent(ror: DataFrame, mapping: DataFrame) -> DataFrame:
     """Append the derived ``ultimate_parent`` column to full records (T1).
 
     The mapping is two narrow columns — broadcast it so the full-payload
     side never shuffles (the reference does the same thing as a driver-side
     dict lookup, get_ultimate_parent.py:84-88).
     """
-    right = F.broadcast(mapping) if broadcast_mapping else mapping
-    joined = ror.join(right, ror[id_col] == mapping["id"], "left").drop(mapping["id"])
+    joined = ror.join(
+        F.broadcast(mapping), ror["id"] == mapping["id"], "left"
+    ).drop(mapping["id"])
     # REQUIRED semantics (schemas/ror.json:215-220): never null — ids missing
     # from the mapping (shouldn't happen; every input id is mapped) fall back
     # to self.
     return joined.withColumn(
-        "ultimate_parent", F.coalesce(F.col("ultimate_parent"), F.col(id_col))
+        "ultimate_parent", F.coalesce(F.col("ultimate_parent"), F.col("id"))
     )
 
 
-def _materialize(df: DataFrame, use_local: bool) -> DataFrame:
+def _materialize(df: DataFrame) -> DataFrame:
     # lazy: the convergence aggregate that follows each checkpoint is the
     # materializing action, so every iteration runs ONE job instead of an
     # eager-checkpoint job plus an aggregate job (~20% faster fixpoint)
-    if use_local:
-        return df.localCheckpoint(eager=False)
-    return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)

@@ -4,31 +4,19 @@ pytest (``tests/test_staged_r13.py``), but never imported by
 The module is kept only while its tests are retired a batch at a time;
 nothing may register from it.
 
-Contents: the DIAGNOSTIC & ROBUSTNESS layer — residual diagnostics
-for the regression closures the registry already carries (Jarque-Bera
-normality, Durbin-Watson autocorrelation, Breusch-Pagan
-heteroskedasticity, Grubbs max-outlier), long-memory and complexity
-screens for the daily series (rescaled-range Hurst exponent, ordinal
-permutation entropy, Haar wavelet energy ladder, max drawdown,
-single-split binary-segmentation changepoint, Theil's U forecast
-skill), heteroscedasticity-robust group comparisons (Welch ANOVA,
-Bartlett, Tukey q statistics, Epps-Singleton characteristic-function
-two-sample test), privacy closures completing the k-anon/l-div family
-(t-closeness via ordered EMD, DP exponential mechanism over the Lehmer
-stream), spectral embedding diagnostics (top principal component via
-quantized power iteration, k-means elbow inertia ladder), sparse-graph
-kernels (personalized PageRank, k-truss), the cell-blocked geo k-NN
-scale path whose recall the registered broadcast k-NN oracles, and
-incremental product-state closures (two-batch sessionize merge proven
-against the full-corpus sessionizer, session-depth half-life fit,
-BPE tokenizer fertility by language), plus revenue-weighted quantiles
-over the discrete quantity domain and a Simpson's-paradox reversal
-screen; inequality/association/unit-root closures, exact
-1-Wasserstein, centrality and robust-regression kernels; Chao1
-unseen-vocabulary richness, Cronbach's alpha
-(zero-cell-free sufficient statistics), Page-Hinkley drift,
-Hotelling's T-squared two-sample test, and the Calinski-Harabasz
-variance-ratio index completing the clustering-validity triad.
+Contents: unit-root and causality closures for the daily series
+(Dickey-Fuller, lag-1 Granger causality between daily click and
+purchase counts), exact
+1-Wasserstein between click and purchase values, term burstiness,
+trade-graph centrality (harmonic centrality, spectral radius by power
+iteration), embedding diagnostics (k-occurrence hubness, participation
+ratio, the Calinski-Harabasz variance-ratio index), forecasting and
+robust-regression kernels (Holt linear smoothing, ridge and Huber-IRLS
+price elasticity, pinball loss), a two-component Gaussian mixture by
+EM, Markov absorption time to purchase, RAKE keyphrases, Chao1
+unseen-vocabulary richness, Cronbach's alpha (zero-cell-free
+sufficient statistics), Page-Hinkley drift, and Hotelling's T-squared
+two-sample test.
 
 Every entry follows the registry discipline (registry.py module
 docstring): identical aliases both sides, epsilon-shifted rounding on
@@ -46,6 +34,7 @@ from pyspark.sql import functions as F
 
 from pyspark.storagelevel import StorageLevel
 
+from ror_etl_spark.queries.staged_r11 import _TRADE_EDGE_CTES, _trade_edges
 from ror_etl_spark.tables import Tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -90,2674 +79,8 @@ def _daily_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Residual & distribution diagnostics on the daily series
+# Unit-root, causality and two-sample closures
 # ---------------------------------------------------------------------------
-
-
-@staged(
-    "jarque_bera_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mu AS (SELECT avg(y) AS m, count(*) AS n FROM daily),
-    cm AS (
-      SELECT max(mu.n) AS n,
-             sum((d.y - mu.m) * (d.y - mu.m)) / max(mu.n) AS m2,
-             sum((d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m)) / max(mu.n)
-               AS m3,
-             sum((d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m) * (d.y - mu.m))
-               / max(mu.n) AS m4
-      FROM daily d CROSS JOIN mu)
-    SELECT CAST(n AS BIGINT) AS n_days,
-           round(m3 / (m2 ^ 1.5) + 1e-9, 6) AS skewness,
-           round(m4 / (m2 * m2) - 3.0 + 1e-9, 6) AS excess_kurtosis,
-           round(n / 6.0 * ((m3 / (m2 ^ 1.5)) * (m3 / (m2 ^ 1.5))
-                 + (m4 / (m2 * m2) - 3.0) * (m4 / (m2 * m2) - 3.0) / 4.0)
-                 + 1e-9, 6) AS jb_stat
-    FROM cm
-    """,
-)
-def jarque_bera_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jarque-Bera normality test of the daily purchase-revenue series:
-    JB = n/6·(g1² + g2²/4) from sample skewness g1 = m3/m2^1.5 and
-    excess kurtosis g2 = m4/m2² − 3. The residual-normality companion
-    to the registered OLS/AR closures — a large JB says prediction
-    intervals built on normal quantiles are lying.
-
-    Scale shape: central moments are computed TWO-PASS (mean first,
-    then centered power sums) rather than from raw moments E[y⁴] —
-    the raw-moment identity cancels catastrophically at revenue scale
-    (y⁴ ~ 1e24) and would let summation order flip the 6th decimal
-    between engines. Both passes are partial-agg friendly; only the
-    daily rollup sees data."""
-    daily = _daily_df(spark, sf_dir)
-    mu = daily.agg(F.avg("y").alias("m"), F.count(F.lit(1)).alias("n"))
-    d = F.col("y") - F.col("m")
-    cm = (
-        daily.crossJoin(F.broadcast(mu))
-        .agg(
-            F.max("n").alias("n"),
-            (F.sum(d * d) / F.max("n")).alias("m2"),
-            (F.sum(d * d * d) / F.max("n")).alias("m3"),
-            (F.sum(d * d * d * d) / F.max("n")).alias("m4"),
-        )
-    )
-    g1 = F.col("m3") / F.pow(F.col("m2"), 1.5)
-    g2 = F.col("m4") / (F.col("m2") * F.col("m2")) - 3.0
-    return cm.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.round(g1 + 1e-9, 6).alias("skewness"),
-        F.round(g2 + 1e-9, 6).alias("excess_kurtosis"),
-        F.round(
-            F.col("n") / 6.0 * (g1 * g1 + g2 * g2 / 4.0) + 1e-9, 6
-        ).alias("jb_stat"),
-    )
-
-
-@staged(
-    "durbin_watson_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mo AS (
-      SELECT count(*) AS n, avg(t) AS mt, avg(y) AS my,
-             covar_pop(t, y) AS sxy, var_pop(t) AS sxx
-      FROM daily),
-    res AS (
-      SELECT d.t,
-             d.y - (mo.my + (mo.sxy / mo.sxx) * (d.t - mo.mt)) AS e
-      FROM daily d CROSS JOIN mo),
-    lagged AS (
-      SELECT e, lag(e) OVER (ORDER BY t) AS ep FROM res),
-    dw AS (
-      SELECT sum(CASE WHEN ep IS NOT NULL
-                      THEN (e - ep) * (e - ep) END) AS num,
-             sum(e * e) AS den
-      FROM lagged)
-    SELECT CAST(mo.n AS BIGINT) AS n_days,
-           round(mo.sxy / mo.sxx + 1e-9, 6) AS trend_slope,
-           round(dw.num / dw.den + 1e-9, 6) AS dw_stat
-    FROM dw CROSS JOIN mo
-    """,
-)
-def durbin_watson_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durbin-Watson first-order autocorrelation test on the residuals
-    of the daily-revenue-vs-time OLS trend: DW = Σ(e_t − e_{t−1})² /
-    Σe² — near 2 for independent residuals, toward 0 under positive
-    serial correlation (the trend line is missing seasonal structure).
-    Companion diagnostic to the registered ``ols_log_elasticity`` /
-    ``ar1_forecast_backtest`` closures.
-
-    Scale shape: the OLS fit is closed-form streaming co-moments (one
-    aggregate), residuals a broadcast-scalar projection; the lag
-    window runs on the bounded daily frame (~366 rows), documented
-    single-partition per the bounded-frame rule."""
-    daily = _daily_df(spark, sf_dir)
-    mo = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("t").alias("mt"),
-        F.avg("y").alias("my"),
-        F.covar_pop("t", "y").alias("sxy"),
-        F.var_pop("t").alias("sxx"),
-    )
-    res = daily.crossJoin(F.broadcast(mo)).select(
-        "t",
-        "n",
-        (F.col("sxy") / F.col("sxx")).alias("slope"),
-        (
-            F.col("y")
-            - (
-                F.col("my")
-                + (F.col("sxy") / F.col("sxx")) * (F.col("t") - F.col("mt"))
-            )
-        ).alias("e"),
-    )
-    lagged = res.select(
-        "n",
-        "slope",
-        "e",
-        F.lag("e").over(Window.orderBy("t")).alias("ep"),
-    )
-    dw = lagged.agg(
-        F.max("n").alias("n"),
-        F.max("slope").alias("slope"),
-        F.sum(
-            F.when(
-                F.col("ep").isNotNull(),
-                (F.col("e") - F.col("ep")) * (F.col("e") - F.col("ep")),
-            )
-        ).alias("num"),
-        F.sum(F.col("e") * F.col("e")).alias("den"),
-    )
-    return dw.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.round(F.col("slope") + 1e-9, 6).alias("trend_slope"),
-        F.round(F.col("num") / F.col("den") + 1e-9, 6).alias("dw_stat"),
-    )
-
-
-@staged(
-    "breusch_pagan_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mo AS (
-      SELECT count(*) AS n, avg(t) AS mt, avg(y) AS my,
-             covar_pop(t, y) AS sxy, var_pop(t) AS sxx
-      FROM daily),
-    res AS (
-      SELECT d.t,
-             d.y - (mo.my + (mo.sxy / mo.sxx) * (d.t - mo.mt)) AS e
-      FROM daily d CROSS JOIN mo),
-    bp AS (
-      SELECT count(*) AS n, corr(e * e, t) AS r
-      FROM res)
-    SELECT CAST(n AS BIGINT) AS n_days,
-           round(r + 1e-9, 6) AS esq_t_corr,
-           round(n * r * r + 1e-9, 6) AS lm_stat
-    FROM bp
-    """,
-)
-def breusch_pagan_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breusch-Pagan heteroskedasticity test on the daily-revenue
-    trend residuals: regress e² on t and report LM = n·R² (one
-    regressor, so R² = corr(e², t)²) — a large LM means residual
-    variance itself trends, and the OLS standard errors understate
-    uncertainty early or late in the year.
-
-    Scale shape: two streaming-moment aggregates and one
-    broadcast-scalar projection — no windows at all; only the daily
-    rollup sees data."""
-    daily = _daily_df(spark, sf_dir)
-    mo = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("t").alias("mt"),
-        F.avg("y").alias("my"),
-        F.covar_pop("t", "y").alias("sxy"),
-        F.var_pop("t").alias("sxx"),
-    )
-    res = daily.crossJoin(F.broadcast(mo)).select(
-        "t",
-        (
-            F.col("y")
-            - (
-                F.col("my")
-                + (F.col("sxy") / F.col("sxx")) * (F.col("t") - F.col("mt"))
-            )
-        ).alias("e"),
-    )
-    bp = res.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.corr(F.col("e") * F.col("e"), F.col("t")).alias("r"),
-    )
-    return bp.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.round(F.col("r") + 1e-9, 6).alias("esq_t_corr"),
-        F.round(F.col("n") * F.col("r") * F.col("r") + 1e-9, 6).alias("lm_stat"),
-    )
-
-
-@staged(
-    "grubbs_outlier_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mo AS (SELECT count(*) AS n, avg(y) AS mu, stddev_pop(y) AS sd
-           FROM daily),
-    dev AS (
-      SELECT d.t, d.y, abs(d.y - mo.mu) / mo.sd AS g
-      FROM daily d CROSS JOIN mo),
-    top AS (
-      SELECT t, y, g FROM dev ORDER BY g DESC, t ASC LIMIT 1)
-    SELECT CAST(mo.n AS BIGINT) AS n_days,
-           CAST(top.t AS BIGINT) AS outlier_t,
-           round(top.y + 1e-9, 2) AS outlier_y,
-           round(top.g + 1e-9, 6) AS g_stat
-    FROM top CROSS JOIN mo
-    """,
-)
-def grubbs_outlier_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grubbs (two-sided) max-outlier statistic on daily revenue:
-    G = max|y − ȳ|/s with the offending day reported — the single-
-    most-suspect-observation screen that complements the registered
-    IQR/MAD streamers (those flag many, Grubbs ranks the worst one
-    with a test statistic).
-
-    Scale shape: one moment aggregate, one broadcast-scalar
-    projection, and a top-1 (TakeOrderedAndProject) with a
-    deterministic (g desc, t asc) tiebreak."""
-    daily = _daily_df(spark, sf_dir)
-    mo = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("y").alias("mu"),
-        F.stddev_pop("y").alias("sd"),
-    )
-    dev = daily.crossJoin(F.broadcast(mo)).select(
-        "t",
-        "y",
-        "n",
-        (F.abs(F.col("y") - F.col("mu")) / F.col("sd")).alias("g"),
-    )
-    top = dev.orderBy(F.desc("g"), F.asc("t")).limit(1)
-    return top.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("t").cast("long").alias("outlier_t"),
-        F.round(F.col("y") + 1e-9, 2).alias("outlier_y"),
-        F.round(F.col("g") + 1e-9, 6).alias("g_stat"),
-    )
-
-
-@staged(
-    "max_drawdown_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    mu AS (SELECT avg(y) AS m FROM daily),
-    curve AS (
-      SELECT d.t,
-             sum(d.y - mu.m) OVER (ORDER BY d.t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-      FROM daily d CROSS JOIN mu),
-    dd AS (
-      SELECT t, c,
-             max(c) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c
-               AS draw
-      FROM curve),
-    worst AS (SELECT t, draw FROM dd ORDER BY draw DESC, t ASC LIMIT 1)
-    SELECT CAST((SELECT count(*) FROM daily) AS BIGINT) AS n_days,
-           CAST(worst.t AS BIGINT) AS trough_t,
-           round(worst.draw + 1e-9, 2) AS max_drawdown
-    FROM worst
-    """,
-)
-def max_drawdown_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown of the cumulative ABNORMAL revenue curve
-    (running sum of y − ȳ): the deepest peak-to-trough fall, with the
-    trough day — 'what is the worst sustained under-performance run
-    this series ever had', the cumulative counterpart of the
-    registered CUSUM changepoint (same curve, worst excursion instead
-    of first crossing).
-
-    Scale shape: both windows (running sum, running max) run on the
-    bounded daily frame; the data-sized work is only the daily
-    rollup. Top-1 with (draw desc, t asc) tiebreak."""
-    daily = _daily_df(spark, sf_dir)
-    mu = daily.agg(F.avg("y").alias("m"), F.count(F.lit(1)).alias("n"))
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    curve = daily.crossJoin(F.broadcast(mu)).select(
-        "t", "n", F.sum(F.col("y") - F.col("m")).over(w).alias("c")
-    )
-    dd = curve.select(
-        "t", "n", (F.max("c").over(w) - F.col("c")).alias("draw")
-    )
-    worst = dd.orderBy(F.desc("draw"), F.asc("t")).limit(1)
-    return worst.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("t").cast("long").alias("trough_t"),
-        F.round(F.col("draw") + 1e-9, 2).alias("max_drawdown"),
-    )
-
-
-@staged(
-    "changepoint_binseg_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    tot AS (SELECT count(*) AS n, sum(y) AS s1, sum(y * y) AS s2
-            FROM daily),
-    pre AS (
-      SELECT t,
-             row_number() OVER (ORDER BY t) AS k,
-             sum(y) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p1,
-             sum(y * y) OVER (ORDER BY t
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p2
-      FROM daily),
-    cost AS (
-      SELECT pre.t, pre.k,
-             (pre.p2 - pre.p1 * pre.p1 / pre.k)
-             + ((tot.s2 - pre.p2)
-                - (tot.s1 - pre.p1) * (tot.s1 - pre.p1) / (tot.n - pre.k))
-               AS sse,
-             pre.p1 / pre.k AS mean_left,
-             (tot.s1 - pre.p1) / (tot.n - pre.k) AS mean_right,
-             (tot.s2 - tot.s1 * tot.s1 / tot.n) AS sse0
-      FROM pre CROSS JOIN tot
-      WHERE pre.k < tot.n),
-    best AS (SELECT * FROM cost ORDER BY sse ASC, t ASC LIMIT 1)
-    SELECT CAST(tot.n AS BIGINT) AS n_days,
-           CAST(best.t AS BIGINT) AS split_t,
-           CAST(best.k AS BIGINT) AS n_left,
-           round(best.mean_left + 1e-9, 2) AS mean_left,
-           round(best.mean_right + 1e-9, 2) AS mean_right,
-           round(best.sse0 - best.sse + 1e-9, 2) AS sse_gain
-    FROM best CROSS JOIN tot
-    """,
-)
-def changepoint_binseg_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-split binary-segmentation changepoint on daily revenue:
-    the split day minimizing SSE_left + SSE_right (computed from
-    prefix sums, so every candidate split is scored in one pass), with
-    the two segment means and the SSE gain over the unsplit series.
-    The mean-shift counterpart of the registered drift CUSUM (which
-    detects crossings; this one LOCATES the best single break).
-
-    Scale shape: prefix sums are two windows over the bounded daily
-    frame; candidate scoring is a broadcast-scalar projection; top-1
-    with (sse asc, t asc) tiebreak."""
-    daily = _daily_df(spark, sf_dir)
-    tot = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("y").alias("s1"),
-        F.sum(F.col("y") * F.col("y")).alias("s2"),
-    )
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    pre = daily.select(
-        "t",
-        F.row_number().over(Window.orderBy("t")).alias("k"),
-        F.sum("y").over(w).alias("p1"),
-        F.sum(F.col("y") * F.col("y")).over(w).alias("p2"),
-    )
-    cost = (
-        pre.crossJoin(F.broadcast(tot))
-        .where(F.col("k") < F.col("n"))
-        .select(
-            "t",
-            "k",
-            "n",
-            (
-                (F.col("p2") - F.col("p1") * F.col("p1") / F.col("k"))
-                + (
-                    (F.col("s2") - F.col("p2"))
-                    - (F.col("s1") - F.col("p1"))
-                    * (F.col("s1") - F.col("p1"))
-                    / (F.col("n") - F.col("k"))
-                )
-            ).alias("sse"),
-            (F.col("p1") / F.col("k")).alias("mean_left"),
-            ((F.col("s1") - F.col("p1")) / (F.col("n") - F.col("k"))).alias(
-                "mean_right"
-            ),
-            (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")).alias("sse0"),
-        )
-    )
-    best = cost.orderBy(F.asc("sse"), F.asc("t")).limit(1)
-    return best.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("t").cast("long").alias("split_t"),
-        F.col("k").cast("long").alias("n_left"),
-        F.round(F.col("mean_left") + 1e-9, 2).alias("mean_left"),
-        F.round(F.col("mean_right") + 1e-9, 2).alias("mean_right"),
-        F.round(F.col("sse0") - F.col("sse") + 1e-9, 2).alias("sse_gain"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Long-memory / complexity screens on the daily series
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "hurst_rs_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    idx AS (
-      SELECT y, row_number() OVER (ORDER BY t) - 1 AS rn FROM daily),
-    ws AS (SELECT unnest([8, 16, 32, 64]) AS w),
-    blocks AS (
-      SELECT ws.w, CAST(floor(idx.rn / ws.w) AS BIGINT) AS b,
-             idx.rn, idx.y
-      FROM idx CROSS JOIN ws),
-    sized AS (
-      SELECT w, b, avg(y) AS mu, stddev_pop(y) AS sd
-      FROM blocks GROUP BY w, b
-      HAVING count(*) = w AND stddev_pop(y) > 0),
-    dev AS (
-      SELECT bl.w, bl.b, s.sd,
-             sum(bl.y - s.mu) OVER (PARTITION BY bl.w, bl.b ORDER BY bl.rn
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-      FROM blocks bl JOIN sized s ON s.w = bl.w AND s.b = bl.b),
-    rsb AS (
-      SELECT w, b, (max(c) - min(c)) / max(sd) AS rs
-      FROM dev GROUP BY w, b),
-    rsw AS (
-      SELECT w, count(*) AS n_blocks, avg(rs) AS rs FROM rsb GROUP BY w),
-    fit AS (
-      SELECT covar_pop(ln(CAST(w AS DOUBLE)), ln(rs))
-               / var_pop(ln(CAST(w AS DOUBLE))) AS h
-      FROM rsw)
-    SELECT CAST(rsw.w AS BIGINT) AS w,
-           CAST(rsw.n_blocks AS BIGINT) AS n_blocks,
-           round(rsw.rs + 1e-9, 6) AS rs_avg,
-           round(fit.h + 1e-9, 6) AS hurst
-    FROM rsw CROSS JOIN fit ORDER BY w
-    """,
-)
-def hurst_rs_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rescaled-range (R/S) Hurst exponent of daily revenue: for block
-    sizes w in {8,16,32,64}, each complete block's range of the
-    mean-centered cumulative sum over its stddev, averaged per w; H is
-    the log-log OLS slope across the four sizes. H ~ 0.5 for a
-    memoryless series, > 0.5 for persistent (trending) revenue — the
-    long-memory screen behind 'will a bigger training window help'.
-
-    Scale shape: blocks partition the bounded daily frame, so the
-    per-block cumulative window is parallel across (w, block); the
-    final fit is a 4-row aggregate."""
-    daily = _daily_df(spark, sf_dir)
-    idx = daily.select(
-        "y", (F.row_number().over(Window.orderBy("t")) - 1).alias("rn")
-    )
-    ws = spark.range(3, 7).select(F.pow(F.lit(2.0), F.col("id")).cast("long").alias("w"))
-    blocks = idx.crossJoin(F.broadcast(ws)).select(
-        "w", F.floor(F.col("rn") / F.col("w")).alias("b"), "rn", "y"
-    )
-    sized = (
-        blocks.groupBy("w", "b")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.avg("y").alias("mu"),
-            F.stddev_pop("y").alias("sd"),
-        )
-        .where((F.col("cnt") == F.col("w")) & (F.col("sd") > 0))
-        .select("w", "b", "mu", "sd")
-    )
-    wc = Window.partitionBy("w", "b").orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dev = blocks.join(sized, ["w", "b"]).select(
-        "w", "b", "sd", F.sum(F.col("y") - F.col("mu")).over(wc).alias("c")
-    )
-    rsb = dev.groupBy("w", "b").agg(
-        ((F.max("c") - F.min("c")) / F.max("sd")).alias("rs")
-    )
-    rsw = rsb.groupBy("w").agg(
-        F.count(F.lit(1)).alias("n_blocks"), F.avg("rs").alias("rs")
-    )
-    fit = rsw.agg(
-        (
-            F.covar_pop(F.log(F.col("w").cast("double")), F.log("rs"))
-            / F.var_pop(F.log(F.col("w").cast("double")))
-        ).alias("h")
-    )
-    return (
-        rsw.crossJoin(F.broadcast(fit))
-        .select(
-            F.col("w").cast("long").alias("w"),
-            F.col("n_blocks").cast("long").alias("n_blocks"),
-            F.round(F.col("rs") + 1e-9, 6).alias("rs_avg"),
-            F.round(F.col("h") + 1e-9, 6).alias("hurst"),
-        )
-        .orderBy("w")
-    )
-
-
-@staged(
-    "permutation_entropy_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    idx AS (
-      SELECT y, row_number() OVER (ORDER BY t) AS rn FROM daily),
-    tri AS (
-      SELECT y AS a,
-             lead(y, 1) OVER (ORDER BY rn) AS b,
-             lead(y, 2) OVER (ORDER BY rn) AS c
-      FROM idx),
-    pat AS (
-      SELECT 4 * (CASE WHEN a > b THEN 1 ELSE 0 END)
-             + 2 * (CASE WHEN b > c THEN 1 ELSE 0 END)
-             + (CASE WHEN a > c THEN 1 ELSE 0 END) AS p
-      FROM tri WHERE c IS NOT NULL),
-    hist AS (SELECT p, count(*) AS n FROM pat GROUP BY p),
-    tot AS (SELECT CAST(sum(n) AS DOUBLE) AS nt, count(*) AS np FROM hist),
-    ent AS (
-      SELECT -sum((h.n / tot.nt) * ln(h.n / tot.nt)) AS h, max(tot.np) AS np,
-             max(tot.nt) AS nt
-      FROM hist h CROSS JOIN tot)
-    SELECT CAST(nt AS BIGINT) AS n_windows,
-           CAST(np AS BIGINT) AS n_patterns,
-           round(h + 1e-9, 6) AS perm_entropy,
-           round(h / ln(6.0) + 1e-9, 6) AS normalized
-    FROM ent
-    """,
-)
-def permutation_entropy_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-3 permutation entropy of daily revenue: slide a 3-day
-    window over the series, encode each window's ordinal pattern by
-    its three strict pairwise comparisons (6 realizable codes of the
-    8-way encoding), and take the Shannon entropy of the pattern
-    histogram normalized by ln 3! = ln 6. Near 1 for structureless
-    dynamics, low when a few motifs (e.g. weekly ramps) dominate —
-    the complexity twin of ``spectral_entropy_daily_revenue`` that is
-    robust to monotone transforms of y.
-
-    Scale shape: two lead windows over the bounded daily frame, then a
-    6-bucket histogram — only the daily rollup sees data."""
-    daily = _daily_df(spark, sf_dir)
-    idx = daily.select("y", F.row_number().over(Window.orderBy("t")).alias("rn"))
-    w = Window.orderBy("rn")
-    tri = idx.select(
-        F.col("y").alias("a"),
-        F.lead("y", 1).over(w).alias("b"),
-        F.lead("y", 2).over(w).alias("c"),
-    )
-    pat = tri.where(F.col("c").isNotNull()).select(
-        (
-            4 * F.when(F.col("a") > F.col("b"), 1).otherwise(0)
-            + 2 * F.when(F.col("b") > F.col("c"), 1).otherwise(0)
-            + F.when(F.col("a") > F.col("c"), 1).otherwise(0)
-        ).alias("p")
-    )
-    hist = pat.groupBy("p").agg(F.count(F.lit(1)).alias("n"))
-    tot = hist.agg(
-        F.sum("n").cast("double").alias("nt"), F.count(F.lit(1)).alias("np")
-    )
-    ent = hist.crossJoin(F.broadcast(tot)).agg(
-        (-F.sum((F.col("n") / F.col("nt")) * F.log(F.col("n") / F.col("nt"))))
-        .alias("h"),
-        F.max("np").alias("np"),
-        F.max("nt").alias("nt"),
-    )
-    import math as _math
-
-    return ent.select(
-        F.col("nt").cast("long").alias("n_windows"),
-        F.col("np").cast("long").alias("n_patterns"),
-        F.round(F.col("h") + 1e-9, 6).alias("perm_entropy"),
-        F.round(F.col("h") / _math.log(6.0) + 1e-9, 6).alias("normalized"),
-    )
-
-
-def _haar_oracle() -> str:
-    """Three unrolled Haar analysis levels: at each level pair up the
-    current approximation coefficients (complete pairs only), detail
-    d = (even − odd)/2 carries the level's energy, approximation
-    a = (even + odd)/2 feeds the next level."""
-    ctes = [
-        _DAILY_SQL,
-        """l0 AS (
-      SELECT row_number() OVER (ORDER BY t) - 1 AS i, y AS v FROM daily)""",
-    ]
-    for lv in (1, 2, 3):
-        prev = f"l{lv - 1}"
-        ctes.append(
-            f"""p{lv} AS (
-      SELECT CAST(floor(i / 2) AS BIGINT) AS g,
-             sum(CASE WHEN i % 2 = 0 THEN v END) AS ev,
-             sum(CASE WHEN i % 2 = 1 THEN v END) AS od,
-             count(*) AS cnt
-      FROM {prev} GROUP BY g)""",
-        )
-        ctes.append(
-            f"""d{lv} AS (
-      SELECT g, (ev - od) / 2.0 AS d FROM p{lv} WHERE cnt = 2)""",
-        )
-        ctes.append(
-            f"""l{lv} AS (
-      SELECT g AS i, (ev + od) / 2.0 AS v FROM p{lv} WHERE cnt = 2)""",
-        )
-    ctes.append(
-        """en AS (
-      SELECT 1 AS level, count(*) AS n_coeffs, sum(d * d) AS energy FROM d1
-      UNION ALL
-      SELECT 2, count(*), sum(d * d) FROM d2
-      UNION ALL
-      SELECT 3, count(*), sum(d * d) FROM d3)""",
-    )
-    ctes.append("""tot AS (SELECT sum(energy) AS te FROM en)""")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
-    SELECT CAST(en.level AS BIGINT) AS level,
-           CAST(en.n_coeffs AS BIGINT) AS n_coeffs,
-           round(en.energy + 1e-9, 2) AS energy,
-           round(en.energy / tot.te + 1e-9, 6) AS energy_share
-    FROM en CROSS JOIN tot ORDER BY level
-    """
-    )
-
-
-@staged("haar_energy_daily_revenue", oracle=_haar_oracle())
-def haar_energy_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haar wavelet detail-energy ladder of daily revenue, levels 1-3:
-    each level pairs consecutive approximation coefficients into a
-    detail (difference/2, whose squared sum is the level's energy) and
-    an approximation (average) that feeds the next level — a
-    multi-resolution 'where does the variance live' decomposition
-    (level 1 = 2-day churn, level 3 = 8-day swings) that complements
-    the registered DFT ops with a time-localized basis.
-
-    Scale shape: three unrolled rounds of a groupBy on floor(i/2) over
-    the bounded daily frame — each round halves the frame; only the
-    daily rollup sees data."""
-    daily = _daily_df(spark, sf_dir)
-    cur = daily.select(
-        (F.row_number().over(Window.orderBy("t")) - 1).alias("i"),
-        F.col("y").alias("v"),
-    )
-    energies = []
-    for lv in (1, 2, 3):
-        p = cur.groupBy(F.floor(F.col("i") / 2).alias("g")).agg(
-            F.sum(F.when(F.col("i") % 2 == 0, F.col("v"))).alias("ev"),
-            F.sum(F.when(F.col("i") % 2 == 1, F.col("v"))).alias("od"),
-            F.count(F.lit(1)).alias("cnt"),
-        ).where(F.col("cnt") == 2)
-        d = p.select(((F.col("ev") - F.col("od")) / 2.0).alias("d"))
-        energies.append(
-            d.agg(
-                F.lit(lv).cast("long").alias("level"),
-                F.count(F.lit(1)).alias("n_coeffs"),
-                F.sum(F.col("d") * F.col("d")).alias("energy"),
-            )
-        )
-        cur = p.select(
-            F.col("g").alias("i"), ((F.col("ev") + F.col("od")) / 2.0).alias("v")
-        )
-    en = energies[0].unionByName(energies[1]).unionByName(energies[2])
-    tot = en.agg(F.sum("energy").alias("te"))
-    return (
-        en.crossJoin(F.broadcast(tot))
-        .select(
-            F.col("level"),
-            F.col("n_coeffs").cast("long").alias("n_coeffs"),
-            F.round(F.col("energy") + 1e-9, 2).alias("energy"),
-            F.round(F.col("energy") / F.col("te") + 1e-9, 6).alias(
-                "energy_share"
-            ),
-        )
-        .orderBy("level")
-    )
-
-
-@staged(
-    "theil_u_forecast_daily_revenue",
-    oracle=f"""
-    WITH {_DAILY_SQL},
-    idx AS (
-      SELECT y, row_number() OVER (ORDER BY t) AS rn FROM daily),
-    fc AS (
-      SELECT y,
-             lag(y, 1) OVER (ORDER BY rn) AS naive,
-             lag(y, 7) OVER (ORDER BY rn) AS snaive
-      FROM idx),
-    sc AS (
-      SELECT count(*) AS n,
-             sqrt(avg((y - naive) * (y - naive))) AS rmse_naive,
-             sqrt(avg((y - snaive) * (y - snaive))) AS rmse_snaive
-      FROM fc WHERE snaive IS NOT NULL)
-    SELECT CAST(n AS BIGINT) AS n_scored,
-           round(rmse_naive + 1e-9, 2) AS rmse_naive,
-           round(rmse_snaive + 1e-9, 2) AS rmse_snaive,
-           round(rmse_snaive / rmse_naive + 1e-9, 6) AS theil_u
-    FROM sc
-    """,
-)
-def theil_u_forecast_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil's U forecast-skill ratio on daily revenue: RMSE of the
-    seasonal-naive forecast (y_{t-7}, 'same weekday last week') over
-    RMSE of the plain naive forecast (y_{t-1}), scored on the days
-    where both are defined. U < 1 means weekly seasonality carries
-    real predictive signal beyond persistence — the model-free skill
-    gate to run before shipping any fancier forecaster.
-
-    Scale shape: two lag windows over the bounded daily frame and one
-    aggregate; only the daily rollup sees data."""
-    daily = _daily_df(spark, sf_dir)
-    idx = daily.select("y", F.row_number().over(Window.orderBy("t")).alias("rn"))
-    w = Window.orderBy("rn")
-    fc = idx.select(
-        "y",
-        F.lag("y", 1).over(w).alias("naive"),
-        F.lag("y", 7).over(w).alias("snaive"),
-    )
-    sc = fc.where(F.col("snaive").isNotNull()).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sqrt(
-            F.avg((F.col("y") - F.col("naive")) * (F.col("y") - F.col("naive")))
-        ).alias("rmse_naive"),
-        F.sqrt(
-            F.avg(
-                (F.col("y") - F.col("snaive")) * (F.col("y") - F.col("snaive"))
-            )
-        ).alias("rmse_snaive"),
-    )
-    return sc.select(
-        F.col("n").cast("long").alias("n_scored"),
-        F.round(F.col("rmse_naive") + 1e-9, 2).alias("rmse_naive"),
-        F.round(F.col("rmse_snaive") + 1e-9, 2).alias("rmse_snaive"),
-        F.round(F.col("rmse_snaive") / F.col("rmse_naive") + 1e-9, 6).alias(
-            "theil_u"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Heteroscedasticity-robust group comparisons
-# ---------------------------------------------------------------------------
-
-_GRP_SQL = """grp AS (
-      SELECT o_orderpriority AS g, count(*) AS n,
-             avg(o_totalprice) AS m, var_samp(o_totalprice) AS s2
-      FROM orders GROUP BY g)"""
-
-
-def _grp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-priority (n, mean, sample variance) of order value — the
-    sufficient statistics every test in this family needs; ONE
-    data-sized aggregate, everything downstream is a ≤5-row frame."""
-    return Tables(spark, sf_dir).orders.groupBy(
-        F.col("o_orderpriority").alias("g")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("o_totalprice").alias("m"),
-        F.var_samp("o_totalprice").alias("s2"),
-    )
-
-
-@staged(
-    "welch_anova_value_by_priority",
-    oracle=f"""
-    WITH {_GRP_SQL},
-    w AS (
-      SELECT g, n, m, s2, n / s2 AS wi FROM grp),
-    tot AS (
-      SELECT count(*) AS k, sum(wi) AS sw,
-             sum(wi * m) / sum(wi) AS mw
-      FROM w),
-    parts AS (
-      SELECT sum(w.wi * (w.m - tot.mw) * (w.m - tot.mw)) / (max(tot.k) - 1)
-               AS num,
-             sum((1 - w.wi / tot.sw) * (1 - w.wi / tot.sw) / (w.n - 1))
-               AS lam,
-             max(tot.k) AS k
-      FROM w CROSS JOIN tot)
-    SELECT CAST(k AS BIGINT) AS n_groups,
-           round(num / (1 + 2.0 * (k - 2) / (k * k - 1.0) * lam) + 1e-9, 6)
-             AS welch_f,
-           round((k * k - 1.0) / (3.0 * lam) + 1e-9, 4) AS df2
-    FROM parts
-    """,
-)
-def welch_anova_value_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's heteroscedastic one-way ANOVA of order value across the
-    five priorities: precision weights w_i = n_i/s_i², weighted grand
-    mean, F* with the Welch correction term and its Satterthwaite
-    denominator df. The unequal-variance companion to the registered
-    ``anova_f_value_by_event_type`` (classic F assumes equal group
-    variances; priority value variances are not equal).
-
-    Scale shape: one data-sized sufficient-statistics aggregate, then
-    scalar algebra on the 5-row group frame."""
-    grp = _grp_df(spark, sf_dir)
-    w = grp.select("g", "n", "m", "s2", (F.col("n") / F.col("s2")).alias("wi"))
-    tot = w.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("wi").alias("sw"),
-        (F.sum(F.col("wi") * F.col("m")) / F.sum("wi")).alias("mw"),
-    )
-    parts = w.crossJoin(F.broadcast(tot)).agg(
-        (
-            F.sum(
-                F.col("wi")
-                * (F.col("m") - F.col("mw"))
-                * (F.col("m") - F.col("mw"))
-            )
-            / (F.max("k") - 1)
-        ).alias("num"),
-        F.sum(
-            (1 - F.col("wi") / F.col("sw"))
-            * (1 - F.col("wi") / F.col("sw"))
-            / (F.col("n") - 1)
-        ).alias("lam"),
-        F.max("k").alias("k"),
-    )
-    k = F.col("k")
-    return parts.select(
-        k.cast("long").alias("n_groups"),
-        F.round(
-            F.col("num")
-            / (1 + 2.0 * (k - 2) / (k * k - F.lit(1.0)) * F.col("lam"))
-            + 1e-9,
-            6,
-        ).alias("welch_f"),
-        F.round((k * k - F.lit(1.0)) / (3.0 * F.col("lam")) + 1e-9, 4).alias(
-            "df2"
-        ),
-    )
-
-
-@staged(
-    "bartlett_value_by_priority",
-    oracle=f"""
-    WITH {_GRP_SQL},
-    tot AS (
-      SELECT count(*) AS k, sum(n) AS nn,
-             sum((n - 1) * s2) / sum(n - 1) AS sp2,
-             sum((n - 1) * ln(s2)) AS slns,
-             sum(1.0 / (n - 1)) AS sinv
-      FROM grp)
-    SELECT CAST(k AS BIGINT) AS n_groups,
-           CAST(nn AS BIGINT) AS n_total,
-           round(sp2 + 1e-9, 2) AS pooled_var,
-           round(((nn - k) * ln(sp2) - slns)
-                 / (1 + (sinv - 1.0 / (nn - k)) / (3.0 * (k - 1)))
-                 + 1e-9, 6) AS bartlett_stat
-    FROM tot
-    """,
-)
-def bartlett_value_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett's test of equal order-value variances across the five
-    priorities: T = [(N−k)·ln s_p² − Σ(n_i−1)·ln s_i²] over the
-    Bartlett correction, chi-square(k−1) under homogeneity — the
-    formal gate in front of classic pooled-variance ANOVA (the
-    registered Levene op is its robust cousin; Bartlett is the
-    powerful-under-normality one).
-
-    Scale shape: the same one-pass sufficient statistics as the Welch
-    op, then a single 5-row aggregate."""
-    grp = _grp_df(spark, sf_dir)
-    tot = grp.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n").alias("nn"),
-        (
-            F.sum((F.col("n") - 1) * F.col("s2")) / F.sum(F.col("n") - 1)
-        ).alias("sp2"),
-        F.sum((F.col("n") - 1) * F.log("s2")).alias("slns"),
-        F.sum(1.0 / (F.col("n") - 1)).alias("sinv"),
-    )
-    return tot.select(
-        F.col("k").cast("long").alias("n_groups"),
-        F.col("nn").cast("long").alias("n_total"),
-        F.round(F.col("sp2") + 1e-9, 2).alias("pooled_var"),
-        F.round(
-            (
-                (F.col("nn") - F.col("k")) * F.log("sp2") - F.col("slns")
-            )
-            / (
-                1
-                + (F.col("sinv") - 1.0 / (F.col("nn") - F.col("k")))
-                / (3.0 * (F.col("k") - 1))
-            )
-            + 1e-9,
-            6,
-        ).alias("bartlett_stat"),
-    )
-
-
-@staged(
-    "tukey_q_pairwise_priority",
-    oracle=f"""
-    WITH {_GRP_SQL},
-    mse AS (
-      SELECT sum((n - 1) * s2) / sum(n - 1) AS sp2 FROM grp)
-    SELECT a.g AS g_lo, b.g AS g_hi,
-           round(b.m - a.m + 1e-9, 4) AS mean_diff,
-           round(abs(b.m - a.m)
-                 / sqrt(mse.sp2 / 2.0 * (1.0 / a.n + 1.0 / b.n))
-                 + 1e-9, 6) AS q_stat
-    FROM grp a JOIN grp b ON a.g < b.g CROSS JOIN mse
-    ORDER BY g_lo, g_hi
-    """,
-)
-def tukey_q_pairwise_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey HSD studentized-range q statistics for all 10 priority
-    pairs: |x̄_i − x̄_j| / sqrt(MSE/2·(1/n_i + 1/n_j)) with the pooled
-    within-group variance as MSE — the post-hoc that says WHICH
-    priorities differ after an ANOVA says something does. Statistics
-    only (critical q values are table lookups, not data).
-
-    Scale shape: the pairwise join is a self-join of the 5-row group
-    frame — 10 rows; only the sufficient-statistics pass sees data."""
-    grp = _grp_df(spark, sf_dir)
-    mse = grp.agg(
-        (F.sum((F.col("n") - 1) * F.col("s2")) / F.sum(F.col("n") - 1)).alias(
-            "sp2"
-        )
-    )
-    a = grp.select(
-        F.col("g").alias("g_lo"), F.col("n").alias("na"), F.col("m").alias("ma")
-    )
-    b = grp.select(
-        F.col("g").alias("g_hi"), F.col("n").alias("nb"), F.col("m").alias("mb")
-    )
-    return (
-        a.join(b, F.col("g_lo") < F.col("g_hi"))
-        .crossJoin(F.broadcast(mse))
-        .select(
-            "g_lo",
-            "g_hi",
-            F.round(F.col("mb") - F.col("ma") + 1e-9, 4).alias("mean_diff"),
-            F.round(
-                F.abs(F.col("mb") - F.col("ma"))
-                / F.sqrt(
-                    F.col("sp2") / 2.0 * (1.0 / F.col("na") + 1.0 / F.col("nb"))
-                )
-                + 1e-9,
-                6,
-            ).alias("q_stat"),
-        )
-        .orderBy("g_lo", "g_hi")
-    )
-
-
-@staged(
-    "cf_distance_click_purchase",
-    oracle="""
-    WITH s AS (
-      SELECT value AS x, CASE WHEN event_type = 'click' THEN 0 ELSE 1 END
-               AS grp
-      FROM events WHERE event_type IN ('click', 'purchase')),
-    sc AS (
-      SELECT quantile_disc(x, 0.75) - quantile_disc(x, 0.25) AS iqr
-      FROM s),
-    cf AS (
-      SELECT s.grp, count(*) AS n,
-             avg(cos(0.4 * s.x / (sc.iqr / 2.0))) AS c1,
-             avg(sin(0.4 * s.x / (sc.iqr / 2.0))) AS s1,
-             avg(cos(0.8 * s.x / (sc.iqr / 2.0))) AS c2,
-             avg(sin(0.8 * s.x / (sc.iqr / 2.0))) AS s2
-      FROM s CROSS JOIN sc GROUP BY s.grp),
-    d AS (
-      SELECT a.n AS n0, b.n AS n1,
-             (a.c1 - b.c1) * (a.c1 - b.c1) + (a.s1 - b.s1) * (a.s1 - b.s1)
-             + (a.c2 - b.c2) * (a.c2 - b.c2)
-             + (a.s2 - b.s2) * (a.s2 - b.s2) AS dsq
-      FROM cf a JOIN cf b ON a.grp = 0 AND b.grp = 1)
-    SELECT CAST(n0 AS BIGINT) AS n_click,
-           CAST(n1 AS BIGINT) AS n_purchase,
-           round(dsq + 1e-9, 8) AS cf_dist_sq,
-           round(dsq * (n0 * 1.0 * n1) / (n0 + n1) + 1e-9, 6) AS cf_stat
-    FROM d
-    """,
-)
-def cf_distance_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epps-Singleton-style characteristic-function distance between
-    click and purchase value distributions: each sample's empirical CF
-    is evaluated at two frequencies (0.4 and 0.8 over a robust pooled
-    scale, the semi-IQR — exact discrete quantiles so both engines
-    agree), and the statistic is the squared CF difference scaled by
-    the harmonic sample size. Unlike KS/CvM (registered), the CF
-    distance sees distributions with identical CDFs on a grid but
-    different fine structure, and needs NO ranks — it is pure
-    streaming aggregation, the cheapest two-sample test at 100 TB.
-
-    Scale shape: one exact-quantile pass and one grouped trig-moment
-    pass — no windows, no ranks, no sort; everything partial-agg."""
-    e = Tables(spark, sf_dir).events.where(
-        F.col("event_type").isin("click", "purchase")
-    ).select(
-        F.col("value").alias("x"),
-        F.when(F.col("event_type") == "click", 0).otherwise(1).alias("grp"),
-    )
-    sc = e.agg(
-        (
-            F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY x)")
-            - F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY x)")
-        ).alias("iqr")
-    )
-    half = F.col("iqr") / 2.0
-    cf = (
-        e.crossJoin(F.broadcast(sc))
-        .groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.cos(0.4 * F.col("x") / half)).alias("c1"),
-            F.avg(F.sin(0.4 * F.col("x") / half)).alias("s1"),
-            F.avg(F.cos(0.8 * F.col("x") / half)).alias("c2"),
-            F.avg(F.sin(0.8 * F.col("x") / half)).alias("s2"),
-        )
-    )
-    a = cf.where(F.col("grp") == 0).select(
-        F.col("n").alias("n0"),
-        F.col("c1").alias("ac1"),
-        F.col("s1").alias("as1"),
-        F.col("c2").alias("ac2"),
-        F.col("s2").alias("as2"),
-    )
-    b = cf.where(F.col("grp") == 1).select(
-        F.col("n").alias("n1"),
-        F.col("c1").alias("bc1"),
-        F.col("s1").alias("bs1"),
-        F.col("c2").alias("bc2"),
-        F.col("s2").alias("bs2"),
-    )
-    dsq = (
-        (F.col("ac1") - F.col("bc1")) * (F.col("ac1") - F.col("bc1"))
-        + (F.col("as1") - F.col("bs1")) * (F.col("as1") - F.col("bs1"))
-        + (F.col("ac2") - F.col("bc2")) * (F.col("ac2") - F.col("bc2"))
-        + (F.col("as2") - F.col("bs2")) * (F.col("as2") - F.col("bs2"))
-    )
-    return a.crossJoin(F.broadcast(b)).select(
-        F.col("n0").cast("long").alias("n_click"),
-        F.col("n1").cast("long").alias("n_purchase"),
-        F.round(dsq + 1e-9, 8).alias("cf_dist_sq"),
-        F.round(
-            dsq * (F.col("n0") * 1.0 * F.col("n1")) / (F.col("n0") + F.col("n1"))
-            + 1e-9,
-            6,
-        ).alias("cf_stat"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Privacy closures: t-closeness, DP exponential mechanism
-# ---------------------------------------------------------------------------
-
-# Engine-portable two-step Lehmer stream shared with staged_r12's DP
-# Laplace op (same constants, same rationale — see its docstring).
-from ror_etl_spark.queries.staged_r12 import _lehmer_u, _lehmer_u_sql  # noqa: E402
-
-
-@staged(
-    "t_closeness_order_priority",
-    oracle="""
-    WITH cell AS (
-      SELECT c.c_nationkey AS nat, c.c_mktsegment AS seg,
-             o.o_orderpriority AS pri, count(*) AS n
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY nat, seg, pri),
-    grp AS (SELECT nat, seg, sum(n) AS gn FROM cell GROUP BY nat, seg),
-    pris AS (SELECT DISTINCT pri FROM cell),
-    gdist AS (
-      SELECT pri, sum(n) * 1.0 / (SELECT sum(n) FROM cell) AS q
-      FROM cell GROUP BY pri),
-    grid AS (
-      SELECT g.nat, g.seg, p.pri, g.gn,
-             coalesce(c.n, 0) * 1.0 / g.gn AS p, gl.q
-      FROM grp g CROSS JOIN pris p
-      JOIN gdist gl ON gl.pri = p.pri
-      LEFT JOIN cell c ON c.nat = g.nat AND c.seg = g.seg
-        AND c.pri = p.pri),
-    cum AS (
-      SELECT nat, seg, gn, pri,
-             sum(p - q) OVER (PARTITION BY nat, seg ORDER BY pri
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS r
-      FROM grid),
-    emd AS (
-      SELECT nat, seg, max(gn) AS gn,
-             sum(abs(r)) / (count(*) - 1.0) AS d
-      FROM cum GROUP BY nat, seg),
-    ths AS (SELECT unnest([0.05, 0.1, 0.2, 0.3]) AS t)
-    SELECT ths.t AS t,
-           CAST(count(CASE WHEN emd.d > ths.t THEN 1 END) AS BIGINT)
-             AS n_violating,
-           CAST(sum(CASE WHEN emd.d > ths.t THEN emd.gn ELSE 0 END)
-                AS BIGINT) AS rows_violating,
-           round(max(emd.d) + 1e-9, 6) AS max_emd
-    FROM ths CROSS JOIN emd
-    GROUP BY ths.t ORDER BY t
-    """,
-)
-def t_closeness_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit of the (nation, segment) quasi-identifier
-    groups against the ORDERED sensitive attribute order priority:
-    each group's Earth-Mover distance to the global priority
-    distribution (for an ordered domain, EMD = mean |cumulative
-    difference|), reported as a threshold ladder — how many QI groups
-    (and how many underlying rows) exceed t for t in {.05,.1,.2,.3}.
-    Completes the registered privacy family: k-anonymity bounds
-    re-identification, l-diversity bounds attribute disclosure by
-    COUNT, t-closeness bounds it by DISTRIBUTION distance.
-
-    Scale shape: one fact-join aggregate to the QI×priority cell
-    table, a dense-grid left join (|QI| × 5 rows), a per-group cumsum
-    window over the 5-value ordered domain, and a 4-row ladder."""
-    t = Tables(spark, sf_dir)
-    cell = (
-        t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(
-            F.col("c_nationkey").alias("nat"),
-            F.col("c_mktsegment").alias("seg"),
-            F.col("o_orderpriority").alias("pri"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    grp = cell.groupBy("nat", "seg").agg(F.sum("n").alias("gn"))
-    pris = cell.select("pri").distinct()
-    tot = cell.agg(F.sum("n").alias("nt"))
-    glob = (
-        cell.groupBy("pri")
-        .agg(F.sum("n").alias("gnp"))
-        .crossJoin(F.broadcast(tot))
-        .select("pri", (F.col("gnp") * 1.0 / F.col("nt")).alias("q"))
-    )
-    grid = (
-        grp.crossJoin(F.broadcast(pris))
-        .join(F.broadcast(glob), "pri")
-        .join(cell, ["nat", "seg", "pri"], "left")
-        .select(
-            "nat",
-            "seg",
-            "pri",
-            "gn",
-            (F.coalesce(F.col("n"), F.lit(0)) * 1.0 / F.col("gn")).alias("p"),
-            "q",
-        )
-    )
-    wc = Window.partitionBy("nat", "seg").orderBy("pri").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        "nat", "seg", "gn", F.sum(F.col("p") - F.col("q")).over(wc).alias("r")
-    )
-    emd = cum.groupBy("nat", "seg").agg(
-        F.max("gn").alias("gn"),
-        (F.sum(F.abs(F.col("r"))) / (F.count(F.lit(1)) - 1.0)).alias("d"),
-    )
-    ths = spark.createDataFrame(
-        [(0.05,), (0.1,), (0.2,), (0.3,)], "t double"
-    )
-    return (
-        F.broadcast(ths)
-        .crossJoin(emd)
-        .groupBy("t")
-        .agg(
-            F.count(F.when(F.col("d") > F.col("t"), 1)).alias("n_violating"),
-            F.sum(
-                F.when(F.col("d") > F.col("t"), F.col("gn")).otherwise(0)
-            ).alias("rows_violating"),
-            F.round(F.max("d") + 1e-9, 6).alias("max_emd"),
-        )
-        .orderBy("t")
-    )
-
-
-@staged(
-    "dp_exponential_topk_nations",
-    oracle=f"""
-    WITH u AS (
-      SELECT c.c_nationkey AS nat, sum(o.o_totalprice) AS rev
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY nat),
-    mx AS (SELECT max(rev) AS mr FROM u),
-    sc AS (
-      SELECT u.nat, u.rev, u.rev / mx.mr AS util,
-             row_number() OVER (ORDER BY u.rev DESC, u.nat) AS true_rank,
-             -ln(-ln({_lehmer_u_sql("CAST(u.nat AS BIGINT) * 13 + 5")}))
-               AS gumbel
-      FROM u CROSS JOIN mx),
-    noisy AS (
-      SELECT nat, rev, true_rank,
-             4.0 * util / 2.0 + gumbel AS noisy_score,
-             row_number() OVER (
-               ORDER BY 4.0 * util / 2.0 + gumbel DESC, nat) AS noisy_rank
-      FROM sc)
-    SELECT CAST(nat AS BIGINT) AS nationkey,
-           CAST(true_rank AS BIGINT) AS true_rank,
-           CAST(noisy_rank AS BIGINT) AS noisy_rank,
-           round(noisy_score + 1e-9, 6) AS noisy_score
-    FROM noisy WHERE noisy_rank <= 5 ORDER BY noisy_rank
-    """,
-)
-def dp_exponential_topk_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private top-5 nations by revenue via the
-    exponential mechanism in its Gumbel-max form: utility = revenue
-    normalized to [0,1] (sensitivity 1), score = ε·u/2 + Gumbel noise
-    with ε = 4, winner-take-the-ranks by noisy score. The Gumbel draws
-    come from the SAME two-step Lehmer stream as the registered DP
-    Laplace op, keyed by nation — engine-portable, exactly
-    reproducible, and −ln(−ln U) is the textbook Gumbel inverse-CDF.
-    Reporting both ranks exposes how much privacy noise perturbs the
-    leaderboard at this ε.
-
-    Scale shape: one fact-join aggregate to the 25-row nation frame;
-    ranks are windows over that bounded frame."""
-    t = Tables(spark, sf_dir)
-    u = (
-        t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy(F.col("c_nationkey").alias("nat"))
-        .agg(F.sum("o_totalprice").alias("rev"))
-    )
-    mx = u.agg(F.max("rev").alias("mr"))
-    sc = u.crossJoin(F.broadcast(mx)).select(
-        "nat",
-        "rev",
-        (F.col("rev") / F.col("mr")).alias("util"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("rev"), F.asc("nat")))
-        .alias("true_rank"),
-        (-F.log(-F.log(_lehmer_u(F.col("nat").cast("long") * 13 + 5)))).alias("gumbel"),
-    )
-    noisy = sc.select(
-        "nat",
-        "true_rank",
-        (4.0 * F.col("util") / 2.0 + F.col("gumbel")).alias("noisy_score"),
-        F.row_number()
-        .over(
-            Window.orderBy(
-                F.desc(4.0 * F.col("util") / 2.0 + F.col("gumbel")), F.asc("nat")
-            )
-        )
-        .alias("noisy_rank"),
-    )
-    return (
-        noisy.where(F.col("noisy_rank") <= 5)
-        .select(
-            F.col("nat").cast("long").alias("nationkey"),
-            F.col("true_rank").cast("long").alias("true_rank"),
-            F.col("noisy_rank").cast("long").alias("noisy_rank"),
-            F.round(F.col("noisy_score") + 1e-9, 6).alias("noisy_score"),
-        )
-        .orderBy("noisy_rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Embedding spectral diagnostics: top PC via power iteration, k-means elbow
-# ---------------------------------------------------------------------------
-
-_PCA_ITERS = 3
-_PCA_ROUND = 8
-_PCA_DIM = 64
-
-
-def _pca_oracle() -> str:
-    """Unrolled power iteration on the centered covariance action:
-    v <- Xc'(Xc v), max-abs-normalized and quantized to 8 dp each round
-    (the HITS trajectory trick), so the DuckDB replay lands on the
-    bit-identical direction."""
-    ctes = [
-        """ex AS (
-      SELECT vec_id, idx.i AS i,
-             CAST(embedding AS DOUBLE[])[idx.i] AS val
-      FROM embeddings, (SELECT unnest(range(1, 65)) AS i) idx)""",
-        """mu AS (SELECT i, avg(val) AS m FROM ex GROUP BY i)""",
-        """xc AS (
-      SELECT ex.vec_id, ex.i, ex.val - mu.m AS x
-      FROM ex JOIN mu ON mu.i = ex.i)""",
-        """v0 AS (SELECT unnest(range(1, 65)) AS i, 0.125 AS v)""",
-    ]
-    for k in range(_PCA_ITERS):
-        ctes.append(
-            f"""s{k} AS (
-      SELECT xc.vec_id, sum(xc.x * v{k}.v) AS s
-      FROM xc JOIN v{k} ON v{k}.i = xc.i GROUP BY xc.vec_id)"""
-        )
-        ctes.append(
-            f"""w{k} AS (
-      SELECT xc.i, sum(xc.x * s{k}.s) AS w
-      FROM xc JOIN s{k} ON s{k}.vec_id = xc.vec_id GROUP BY xc.i)"""
-        )
-        ctes.append(
-            f"""v{k + 1} AS (
-      SELECT i, round(w / max(abs(w)) OVER () + 1e-12, {_PCA_ROUND}) AS v
-      FROM w{k})"""
-        )
-    final = f"v{_PCA_ITERS}"
-    ctes.append(
-        f"""sf AS (
-      SELECT xc.vec_id, sum(xc.x * f.v) AS s
-      FROM xc JOIN {final} f ON f.i = xc.i GROUP BY xc.vec_id)"""
-    )
-    ctes.append(
-        f"""lam AS (
-      SELECT (SELECT sum(s * s) / count(*) FROM sf)
-             / (SELECT sum(v * v) FROM {final}) AS l)"""
-    )
-    ctes.append(
-        """tv AS (SELECT sum(x * x) / (SELECT count(DISTINCT vec_id) FROM xc)
-                    AS t FROM xc)"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT CAST(rnk AS BIGINT) AS rank, CAST(i AS BIGINT) AS dim,
-           round(v + 1e-9, 6) AS loading,
-           round(lam.l + 1e-9, 4) AS top_eigenvalue,
-           round(lam.l / tv.t + 1e-9, 6) AS explained_var_ratio
-    FROM (
-      SELECT i, v, row_number() OVER (ORDER BY abs(v) DESC, i) AS rnk
-      FROM {final}) CROSS JOIN lam CROSS JOIN tv
-    WHERE rnk <= 8 ORDER BY rank
-    """
-    )
-
-
-@staged("embedding_pca_power_iteration", oracle=_pca_oracle())
-def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal component of the embedding corpus by THREE
-    distributed power iterations on the centered covariance action
-    v <- Xc'(Xc v): each half-step is one narrow join-aggregate over
-    the posexploded (vec_id, dim, value) grid, the direction is
-    max-abs-normalized and quantized to 8 dp per round (the registered
-    HITS/PageRank trajectory trick), and the report is the top-8
-    loadings plus the Rayleigh eigenvalue and its explained-variance
-    ratio. The 'is one direction eating my embedding space'
-    diagnostic that pairs with ``embedding_isotropy_stats`` (which
-    measures the mean direction; this finds the dominant VARIANCE
-    direction, mean removed).
-
-    Scale shape: state is the 64-row direction vector; per iteration
-    one vec-keyed and one dim-keyed aggregate — O(n·dim) narrow rows
-    shuffled as partial sums, never a gram matrix."""
-    emb = Tables(spark, sf_dir).embeddings
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("i0", "valf")
-    ).select(
-        "vec_id",
-        (F.col("i0") + 1).alias("i"),
-        F.col("valf").cast("double").alias("val"),
-    )
-    mu = ex.groupBy("i").agg(F.avg("val").alias("m"))
-    xc = ex.join(F.broadcast(mu), "i").select(
-        "vec_id", "i", (F.col("val") - F.col("m")).alias("x")
-    ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    v = spark.range(1, _PCA_DIM + 1).select(
-        F.col("id").alias("i"), F.lit(0.125).alias("v")
-    )
-    wall = Window.partitionBy()
-    for _ in range(_PCA_ITERS):
-        s = (
-            xc.join(F.broadcast(v), "i")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("x") * F.col("v")).alias("s"))
-        )
-        w = (
-            xc.join(F.broadcast(s), "vec_id")
-            .groupBy("i")
-            .agg(F.sum(F.col("x") * F.col("s")).alias("w"))
-        )
-        v = w.select(
-            "i",
-            F.round(
-                F.col("w") / F.max(F.abs(F.col("w"))).over(wall) + 1e-12,
-                _PCA_ROUND,
-            ).alias("v"),
-        ).localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    sf = (
-        xc.join(F.broadcast(v), "i")
-        .groupBy("vec_id")
-        .agg(F.sum(F.col("x") * F.col("v")).alias("s"))
-    )
-    n = xc.select("vec_id").distinct().count()
-    lam = sf.agg((F.sum(F.col("s") * F.col("s")) / F.lit(n)).alias("num"))
-    vsq = v.agg(F.sum(F.col("v") * F.col("v")).alias("vv"))
-    tv = xc.agg((F.sum(F.col("x") * F.col("x")) / F.lit(n)).alias("t"))
-    ranked = v.select(
-        "i",
-        "v",
-        F.row_number()
-        .over(Window.orderBy(F.desc(F.abs(F.col("v"))), F.asc("i")))
-        .alias("rnk"),
-    ).where(F.col("rnk") <= 8)
-    return (
-        ranked.crossJoin(F.broadcast(lam))
-        .crossJoin(F.broadcast(vsq))
-        .crossJoin(F.broadcast(tv))
-        .select(
-            F.col("rnk").cast("long").alias("rank"),
-            F.col("i").cast("long").alias("dim"),
-            F.round(F.col("v") + 1e-9, 6).alias("loading"),
-            F.round(F.col("num") / F.col("vv") + 1e-9, 4).alias(
-                "top_eigenvalue"
-            ),
-            F.round(
-                F.col("num") / F.col("vv") / F.col("t") + 1e-9, 6
-            ).alias("explained_var_ratio"),
-        )
-        .orderBy("rank")
-    )
-
-
-def _elbow_oracle() -> str:
-    """Three independent k-means chains (k = 2, 4, 8; the registered
-    IVF ops own k = 16) — prefix-namespaced ``_kmeans_ctes`` chains in
-    one WITH, each closed by a min-distance inertia aggregate."""
-    from ror_etl_spark.queries.vector import _kmeans_ctes
-
-    src = "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings"
-    ctes: list[str] = []
-    selects = []
-    for k in (2, 4, 8):
-        ctes.extend(_kmeans_ctes(src, k, 3, 64, 6, prefix=f"k{k}_"))
-        ctes.append(
-            f"""in{k} AS (
-      SELECT {k} AS k, count(*) AS n_vectors,
-             sum(md) AS inertia
-      FROM (
-        SELECT e.vec_id,
-               min(list_distance(e.v, c.c) * list_distance(e.v, c.c)) AS md
-        FROM k{k}_e e, k{k}_c3 c GROUP BY e.vec_id))"""
-        )
-        selects.append(f"SELECT * FROM in{k}")
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
-    SELECT CAST(k AS BIGINT) AS k, CAST(n_vectors AS BIGINT) AS n_vectors,
-           round(inertia + 1e-9, 4) AS inertia
-    FROM ("""
-        + " UNION ALL ".join(selects)
-        + """) ORDER BY k
-    """
-    )
-
-
-@staged("embedding_kmeans_elbow", oracle=_elbow_oracle())
-def embedding_kmeans_elbow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-means elbow ladder over the embedding corpus: total inertia
-    (sum of squared Euclidean distance to the nearest trained centroid)
-    for k in {2, 4, 8}, each trained with the registered deterministic
-    Lloyd recipe (id-ordered init, 3 iterations, means quantized to
-    6 dp) so the DuckDB oracle replays all three trainings
-    bit-identically. Read with ``embedding_knn_ivf_trained`` (k = 16):
-    where inertia stops falling is the right IVF cell count.
-
-    Scale shape: training shuffles ~k×dim partial sums per iteration
-    (see ``kmeans_centroids``); the inertia pass is a broadcast argmin
-    over k centroid literals inside codegen — one scan per k."""
-    from ror_etl_spark.operators.similarity import kmeans_centroids
-    from ror_etl_spark.functions.vectors import as_double
-
-    emb = Tables(spark, sf_dir).embeddings
-    vecs = emb.select(as_double(F.col("embedding")).alias("v"))
-    outs = []
-    for k in (2, 4, 8):
-        cents = kmeans_centroids(emb, n_centroids=k, n_iters=3, round_means=6)
-        dists = [
-            F.aggregate(
-                F.zip_with(
-                    F.col("v"),
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in cents
-        ]
-        md = F.least(*dists) if len(dists) > 1 else dists[0]
-        outs.append(
-            vecs.agg(
-                F.lit(k).cast("long").alias("k"),
-                F.count(F.lit(1)).alias("n_vectors"),
-                F.sum(md).alias("inertia"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.select(
-        "k",
-        F.col("n_vectors").cast("long").alias("n_vectors"),
-        F.round(F.col("inertia") + 1e-9, 4).alias("inertia"),
-    ).orderBy("k")
-
-
-# ---------------------------------------------------------------------------
-# Sparse-graph kernels: personalized PageRank, k-truss
-# ---------------------------------------------------------------------------
-
-# Shared sparsified trade graph (top-90 nation pairs by volume) — the
-# r12 re-base of the staged_r11 family; reusing its builders keeps the
-# graph definition identical across rounds.
-from ror_etl_spark.queries.staged_r11 import (  # noqa: E402
-    _TRADE_EDGE_CTES,
-    _trade_edges,
-)
-
-_PPR_ITERS = 5
-_PPR_ALPHA = 0.15
-_PPR_ROUND = 8
-
-
-def _ppr_oracle() -> str:
-    """Unrolled personalized PageRank replay on the sparsified trade
-    graph: source = max-degree node (smallest-id tiebreak), 5 rounds of
-    r <- alpha·e_src + (1-alpha)·A'D^{-1} r, each quantized to 8 dp."""
-    ctes = [
-        _TRADE_EDGE_CTES.strip(),
-        """src AS (SELECT n AS s FROM deg ORDER BY d DESC, n LIMIT 1)""",
-        """r0 AS (
-      SELECT deg.n AS id,
-             CASE WHEN deg.n = src.s THEN 1.0 ELSE 0.0 END AS r
-      FROM deg CROSS JOIN src)""",
-    ]
-    for k in range(_PPR_ITERS):
-        ctes.append(
-            f"""f{k} AS (
-      SELECT und.v AS id, sum(r{k}.r / deg.d) AS fin
-      FROM und JOIN r{k} ON r{k}.id = und.u JOIN deg ON deg.n = und.u
-      GROUP BY und.v)"""
-        )
-        ctes.append(
-            f"""r{k + 1} AS (
-      SELECT deg.n AS id,
-             round({_PPR_ALPHA} * (CASE WHEN deg.n = src.s THEN 1.0
-                                        ELSE 0.0 END)
-                   + {1 - _PPR_ALPHA} * coalesce(f{k}.fin, 0.0)
-                   + 1e-12, {_PPR_ROUND}) AS r
-      FROM deg CROSS JOIN src LEFT JOIN f{k} ON f{k}.id = deg.n)"""
-        )
-    final = f"r{_PPR_ITERS}"
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT CAST(id AS BIGINT) AS nationkey,
-           round(r + 1e-9, 6) AS ppr,
-           CAST(CASE WHEN id = src.s THEN 1 ELSE 0 END AS BIGINT) AS is_source
-    FROM {final} CROSS JOIN src
-    ORDER BY round(r + 1e-9, 6) DESC, nationkey LIMIT 10
-    """
-    )
-
-
-@staged("personalized_pagerank_trade", oracle=_ppr_oracle())
-def personalized_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank on the sparsified trade graph, teleporting
-    to the max-degree nation (deterministic smallest-id tiebreak): 5
-    synchronous rounds of r <- 0.15·e_src + 0.85·A'D⁻¹r, each round's
-    scores quantized to 8 dp so the DuckDB oracle replays the exact
-    trajectory (the registered PageRank/HITS discipline). PPR is the
-    seed-centric relevance primitive — 'which nations sit in THIS
-    hub's trade neighborhood' — complementing the global
-    ``pagerank_nation_trade``.
-
-    Scale shape: one shuffle per round keyed by node (rank flow joins
-    the edge list); ranks are node-sized; top-10 with rounded-score
-    tiebreak (round-before-rank)."""
-    _, und, deg = _trade_edges(Tables(spark, sf_dir))
-    deg = deg.localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    src = deg.orderBy(F.desc("d"), F.asc("n")).limit(1).select(
-        F.col("n").alias("s")
-    )
-    r = deg.crossJoin(F.broadcast(src)).select(
-        F.col("n").alias("id"),
-        F.when(F.col("n") == F.col("s"), 1.0).otherwise(0.0).alias("r"),
-    )
-    for _ in range(_PPR_ITERS):
-        flow = (
-            und.join(r.withColumnRenamed("id", "u"), "u")
-            .join(deg.withColumnRenamed("n", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum(F.col("r") / F.col("d")).alias("fin"))
-        )
-        r = (
-            deg.crossJoin(F.broadcast(src))
-            .join(flow, deg["n"] == flow["id"], "left")
-            .select(
-                deg["n"].alias("id"),
-                F.round(
-                    _PPR_ALPHA
-                    * F.when(deg["n"] == F.col("s"), 1.0).otherwise(0.0)
-                    + (1 - _PPR_ALPHA) * F.coalesce(F.col("fin"), F.lit(0.0))
-                    + 1e-12,
-                    _PPR_ROUND,
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-        )
-    out = r.crossJoin(F.broadcast(src)).select(
-        F.col("id").cast("long").alias("nationkey"),
-        F.round(F.col("r") + 1e-9, 6).alias("ppr"),
-        F.when(F.col("id") == F.col("s"), 1).otherwise(0).cast("long").alias(
-            "is_source"
-        ),
-    )
-    return out.orderBy(F.desc("ppr"), F.asc("nationkey")).limit(10)
-
-
-_TRUSS_ROUNDS = 2
-_TRUSS_K = 4
-
-
-def _ktruss_oracle() -> str:
-    """Two unrolled support-prune rounds toward the 4-truss: per round,
-    each surviving edge's triangle support (common neighbors within the
-    surviving set), then keep support >= k-2 = 2."""
-    ctes = [_TRADE_EDGE_CTES.strip(), "e1 AS (SELECT a, b FROM e0)"]
-    cur = "e1"
-    for r in range(_TRUSS_ROUNDS):
-        ctes.append(
-            f"""u{r} AS (
-      SELECT a AS u, b AS v FROM {cur}
-      UNION ALL SELECT b AS u, a AS v FROM {cur})"""
-        )
-        ctes.append(
-            f"""s{r} AS (
-      SELECT e.a, e.b, count(*) AS sup
-      FROM {cur} e
-      JOIN u{r} x ON x.u = e.a
-      JOIN u{r} y ON y.u = e.b AND y.v = x.v
-      GROUP BY e.a, e.b)"""
-        )
-        ctes.append(
-            f"""e{r + 2} AS (
-      SELECT a, b FROM s{r} WHERE sup >= {_TRUSS_K - 2})"""
-        )
-        cur = f"e{r + 2}"
-    ctes.append(
-        f"""uf AS (
-      SELECT a AS u, b AS v FROM {cur}
-      UNION ALL SELECT b AS u, a AS v FROM {cur})"""
-    )
-    ctes.append(
-        f"""sf AS (
-      SELECT e.a, e.b, count(*) AS sup
-      FROM {cur} e
-      JOIN uf x ON x.u = e.a
-      JOIN uf y ON y.u = e.b AND y.v = x.v
-      GROUP BY e.a, e.b)"""
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + """
-    SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-           CAST(sup AS BIGINT) AS support
-    FROM sf ORDER BY a, b
-    """
-    )
-
-
-@staged("ktruss_trade_graph", oracle=_ktruss_oracle())
-def ktruss_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Toward the 4-truss of the sparsified trade graph: two
-    synchronous support-prune rounds (drop every edge in fewer than
-    k−2 = 2 triangles, recompute support on the survivors), reporting
-    the surviving edges with their final triangle support. The truss
-    is the standard cohesive-core generalization of triangle counting
-    — a fixed unrolled round count keeps both engines on the identical
-    trajectory (the LPA discipline) while real convergence at scale
-    just raises the round count.
-
-    Scale shape: support is ONE wedge self-join of the surviving edge
-    list per round (bounded by sum of squared degrees), never an
-    all-pairs product; the edge state is edge-sized."""
-    e, _, _ = _trade_edges(Tables(spark, sf_dir))
-    cur = e.select("a", "b")
-    for _ in range(_TRUSS_ROUNDS + 1):
-        und2 = cur.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        x = und2.select(F.col("u").alias("a"), F.col("v").alias("w"))
-        y = und2.select(F.col("u").alias("b"), F.col("v").alias("w"))
-        sup = (
-            cur.join(x, "a")
-            .join(y, ["b", "w"])
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("sup"))
-        )
-        nxt = sup.where(F.col("sup") >= _TRUSS_K - 2).select("a", "b")
-        last_sup = sup
-        cur = nxt.localCheckpoint(eager=False, storageLevel=_DISK_ONLY)
-    return last_sup.select(
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        F.col("sup").cast("long").alias("support"),
-    ).orderBy("a", "b")
-
-
-# ---------------------------------------------------------------------------
-# Geo scale path, incremental sessionization, retention, fertility
-# ---------------------------------------------------------------------------
-
-from ror_etl_spark.queries.staged_r12 import _geo_df, _geo_sql  # noqa: E402
-
-
-@staged(
-    "geo_knn_cell_blocked",
-    oracle=f"""
-    WITH pts AS ({_geo_sql()}),
-    cells AS (
-      SELECT user_id, lat, lon,
-             least(CAST(floor((lat + 90.0) / 180.0 * 16.0) AS BIGINT), 15)
-               AS gy,
-             least(CAST(floor((lon + 180.0) / 360.0 * 16.0) AS BIGINT), 15)
-               AS gx
-      FROM pts),
-    q AS (
-      SELECT n_nationkey AS qid,
-             (CAST(n_nationkey AS DOUBLE) * 7.0) - 84.0 AS qlat,
-             (CAST(n_nationkey AS DOUBLE) * 14.3) - 170.0 AS qlon
-      FROM nation),
-    qc AS (
-      SELECT qid, qlat, qlon,
-             least(CAST(floor((qlat + 90.0) / 180.0 * 16.0) AS BIGINT), 15)
-               AS qgy,
-             least(CAST(floor((qlon + 180.0) / 360.0 * 16.0) AS BIGINT), 15)
-               AS qgx
-      FROM q),
-    probe AS (
-      SELECT qc.qid, qc.qlat, qc.qlon,
-             qc.qgy + dy.d AS gy, qc.qgx + dx.d AS gx
-      FROM qc
-      CROSS JOIN (SELECT unnest([-1, 0, 1]) AS d) dy
-      CROSS JOIN (SELECT unnest([-1, 0, 1]) AS d) dx),
-    d AS (
-      SELECT p.qid, c.user_id,
-             2.0 * 6371.0 * asin(sqrt(
-               pow(sin(radians(c.lat - p.qlat) / 2), 2)
-               + cos(radians(p.qlat)) * cos(radians(c.lat))
-                 * pow(sin(radians(c.lon - p.qlon) / 2), 2))) AS km
-      FROM probe p JOIN cells c ON c.gy = p.gy AND c.gx = p.gx),
-    r AS (
-      SELECT qid, user_id, km,
-             row_number() OVER (PARTITION BY qid ORDER BY km, user_id) AS rn
-      FROM d)
-    SELECT qid, CAST(rn AS BIGINT) AS rn, user_id,
-           round(km + 1e-9, 3) AS km
-    FROM r WHERE rn <= 3 ORDER BY qid, rn
-    """,
-)
-def geo_knn_cell_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-blocked haversine k-NN — the 100 TB scale path the
-    registered brute ``geo_haversine_knn`` is the recall oracle for:
-    points land in the same 16×16 lat/lon grid as
-    ``geo_zorder_cell_counts``, each query probes its 3×3 cell
-    neighborhood, and the trig distance runs only on those candidates.
-    The cross join is GONE — candidates arrive through an equi-join on
-    the cell key, which scales as |points in probed cells|, not
-    |points|·|queries|. Deliberately approximate at the probe
-    boundary (a neighbor outside the 3×3 ring is missed); the staging
-    test measures recall against the brute op.
-
-    Scale shape: one map-side cell assignment, a broadcast of 225
-    (query, probe-cell) rows, an equi-join on the cell key, and a
-    k-bounded per-query window (WindowGroupLimit)."""
-    pts = _geo_df(spark, sf_dir)
-    cells = pts.select(
-        "user_id",
-        "lat",
-        "lon",
-        F.least(
-            F.floor((F.col("lat") + 90.0) / 180.0 * 16.0).cast("long"),
-            F.lit(15).cast("long"),
-        ).alias("gy"),
-        F.least(
-            F.floor((F.col("lon") + 180.0) / 360.0 * 16.0).cast("long"),
-            F.lit(15).cast("long"),
-        ).alias("gx"),
-    )
-    n = Tables(spark, sf_dir).nation
-    q = n.select(
-        F.col("n_nationkey").alias("qid"),
-        (F.col("n_nationkey").cast("double") * 7.0 - 84.0).alias("qlat"),
-        (F.col("n_nationkey").cast("double") * 14.3 - 170.0).alias("qlon"),
-    )
-    qc = q.select(
-        "qid",
-        "qlat",
-        "qlon",
-        F.least(
-            F.floor((F.col("qlat") + 90.0) / 180.0 * 16.0).cast("long"),
-            F.lit(15).cast("long"),
-        ).alias("qgy"),
-        F.least(
-            F.floor((F.col("qlon") + 180.0) / 360.0 * 16.0).cast("long"),
-            F.lit(15).cast("long"),
-        ).alias("qgx"),
-    )
-    ring = spark.createDataFrame([(-1,), (0,), (1,)], "d long")
-    probe = (
-        qc.crossJoin(ring.select(F.col("d").alias("dy")))
-        .crossJoin(ring.select(F.col("d").alias("dx")))
-        .select(
-            "qid",
-            "qlat",
-            "qlon",
-            (F.col("qgy") + F.col("dy")).alias("gy"),
-            (F.col("qgx") + F.col("dx")).alias("gx"),
-        )
-    )
-    km = (
-        2.0
-        * 6371.0
-        * F.asin(
-            F.sqrt(
-                F.pow(F.sin(F.radians(F.col("lat") - F.col("qlat")) / 2), 2)
-                + F.cos(F.radians("qlat"))
-                * F.cos(F.radians("lat"))
-                * F.pow(F.sin(F.radians(F.col("lon") - F.col("qlon")) / 2), 2)
-            )
-        )
-    )
-    d = F.broadcast(probe).join(cells, ["gy", "gx"]).select(
-        "qid", "user_id", km.alias("km")
-    )
-    r = d.select(
-        "qid",
-        "user_id",
-        "km",
-        F.row_number()
-        .over(Window.partitionBy("qid").orderBy("km", "user_id"))
-        .alias("rn"),
-    )
-    return (
-        r.where(F.col("rn") <= 3)
-        .select(
-            "qid",
-            F.col("rn").cast("long").alias("rn"),
-            "user_id",
-            F.round(F.col("km") + 1e-9, 3).alias("km"),
-        )
-        .orderBy("qid", "rn")
-    )
-
-
-_SESS_CUT = "2024-01-15"
-_SESS_GAP_US = 1_800_000_000
-
-
-@staged(
-    "incremental_sessionize_merge",
-    oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN epoch_us(ts)
-                    - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                              ORDER BY ts, event_id)
-                  > {_SESS_GAP_US} OR
-                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id)
-                  IS NULL
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events),
-    sess AS (
-      SELECT user_id, ts,
-             sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM marked),
-    per AS (
-      SELECT user_id, sid, count(*) AS depth,
-             max(CASE WHEN ts < TIMESTAMP '{_SESS_CUT}' THEN 1 ELSE 0 END)
-               AS has_a,
-             max(CASE WHEN ts >= TIMESTAMP '{_SESS_CUT}' THEN 1 ELSE 0 END)
-               AS has_b
-      FROM sess GROUP BY user_id, sid)
-    SELECT CAST(count(*) AS BIGINT) AS n_sessions,
-           CAST(sum(CASE WHEN has_a = 1 AND has_b = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_boundary_sessions,
-           CAST(sum(depth) AS BIGINT) AS total_events,
-           CAST(max(depth) AS BIGINT) AS max_depth
-    FROM per
-    """,
-)
-def incremental_sessionize_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental sessionization with boundary stitching, PROVEN
-    equivalent to the full-corpus sessionizer: the Spark side
-    sessionizes the pre-cut batch (2024-01-15) and the post-cut batch
-    INDEPENDENTLY (the nightly-increment reality — yesterday's
-    sessions are already closed and stored), then merges each user's
-    last pre-cut session with their first post-cut session when the
-    boundary gap is within the 30-minute timeout. The DuckDB oracle
-    sessionizes the WHOLE corpus in one pass — a hash match is an
-    equivalence proof that the incremental path loses nothing at the
-    batch seam, the property every incremental pipeline claims and
-    few test.
-
-    Scale shape: each batch sessionizes with the standard
-    user-partitioned windows; the stitch is one per-user aggregate of
-    batch tails and heads (user-sized), and the final report is a
-    scalar aggregate."""
-    e = Tables(spark, sf_dir).events
-    cut = F.lit(_SESS_CUT).cast("timestamp_ntz")
-    from ror_etl_spark.queries.util import epoch_us as _eus
-
-    def _sessionize(batch: DataFrame) -> DataFrame:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        us = _eus(F.col("ts"))
-        marked = batch.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(
-                (us - F.lag(us).over(w) > _SESS_GAP_US)
-                | F.lag(us).over(w).isNull(),
-                1,
-            )
-            .otherwise(0)
-            .alias("is_start"),
-        )
-        sid = marked.select(
-            "user_id",
-            "ts",
-            F.sum("is_start")
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .alias("sid"),
-        )
-        return sid.groupBy("user_id", "sid").agg(
-            F.count(F.lit(1)).alias("depth"),
-            F.min(_eus(F.col("ts"))).alias("start_us"),
-            F.max(_eus(F.col("ts"))).alias("end_us"),
-        )
-    a = _sessionize(e.filter(F.col("ts") < cut))
-    b = _sessionize(e.filter(F.col("ts") >= cut))
-    a_tail = a.groupBy("user_id").agg(
-        F.max_by(F.struct("depth", "end_us"), "end_us").alias("t")
-    ).select("user_id", F.col("t.depth").alias("a_depth"),
-             F.col("t.end_us").alias("a_end"))
-    b_head = b.groupBy("user_id").agg(
-        F.min_by(F.struct("depth", "start_us"), "start_us").alias("h")
-    ).select("user_id", F.col("h.depth").alias("b_depth"),
-             F.col("h.start_us").alias("b_start"))
-    stitch = a_tail.join(b_head, "user_id").select(
-        "user_id",
-        (F.col("b_start") - F.col("a_end") <= _SESS_GAP_US).alias("merged"),
-        (F.col("a_depth") + F.col("b_depth")).alias("merged_depth"),
-    )
-    counts_a = a.agg(
-        F.count(F.lit(1)).alias("na"),
-        F.coalesce(F.sum("depth"), F.lit(0)).alias("ea"),
-        F.coalesce(F.max("depth"), F.lit(0)).alias("ma"),
-    )
-    counts_b = b.agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.coalesce(F.sum("depth"), F.lit(0)).alias("eb"),
-        F.coalesce(F.max("depth"), F.lit(0)).alias("mb"),
-    )
-    counts_m = stitch.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("merged"), 1).otherwise(0)), F.lit(0)
-        ).alias("nm"),
-        F.coalesce(
-            F.max(F.when(F.col("merged"), F.col("merged_depth"))), F.lit(0)
-        ).alias("mm"),
-    )
-    return (
-        counts_a.crossJoin(F.broadcast(counts_b))
-        .crossJoin(F.broadcast(counts_m))
-        .select(
-            (F.col("na") + F.col("nb") - F.col("nm"))
-            .cast("long")
-            .alias("n_sessions"),
-            F.col("nm").cast("long").alias("n_boundary_sessions"),
-            (F.col("ea") + F.col("eb")).cast("long").alias("total_events"),
-            F.greatest("ma", "mb", "mm").cast("long").alias("max_depth"),
-        )
-    )
-
-
-@staged(
-    "session_depth_halflife_fit",
-    oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN epoch_us(ts)
-                    - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                              ORDER BY ts, event_id)
-                  > {_SESS_GAP_US} OR
-                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id)
-                  IS NULL
-                  THEN 1 ELSE 0 END AS is_start
-      FROM events),
-    sess AS (
-      SELECT user_id,
-             sum(is_start) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM marked),
-    per AS (SELECT count(*) AS depth FROM sess GROUP BY user_id, sid),
-    tot AS (SELECT CAST(count(*) AS DOUBLE) AS n0 FROM per),
-    grid AS (SELECT unnest(range(1, 9)) AS d),
-    surv AS (
-      SELECT grid.d AS x,
-             ln(count(CASE WHEN per.depth >= grid.d THEN 1 END) / tot.n0)
-               AS ly
-      FROM grid CROSS JOIN per CROSS JOIN tot
-      GROUP BY grid.d, tot.n0
-      HAVING count(CASE WHEN per.depth >= grid.d THEN 1 END) > 0),
-    fit AS (
-      SELECT count(*) AS np, covar_pop(x, ly) AS sxy,
-             var_pop(x) AS sxx, var_pop(ly) AS syy
-      FROM surv)
-    SELECT CAST(np AS BIGINT) AS n_depths,
-           CASE WHEN sxx > 0 THEN round(sxy / sxx + 1e-9, 6)
-                ELSE NULL END AS decay_slope,
-           CASE WHEN sxx > 0 AND sxy < 0
-                THEN round(-ln(2.0) * sxx / sxy + 1e-9, 4)
-                ELSE NULL END AS halflife_depth,
-           CASE WHEN sxx > 0 AND syy > 0
-                THEN round(sxy * sxy / (sxx * syy) + 1e-9, 6)
-                ELSE NULL END AS r2
-    FROM fit
-    """,
-)
-def session_depth_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-depth half-life: the survival curve P(depth >= d) of
-    30-minute sessions over d = 1..8, fit log-linearly — halflife =
-    -ln2/slope is 'every H extra events, half the sessions have
-    dropped off', with R² as the geometric-decay fit quality. Session
-    depth genuinely decays on this corpus (unlike weekly user
-    retention, which is flat because the synthetic users never churn),
-    so the fit is exercised with real variance at every SF. The decay
-    constant compresses the registered ``sessionize_events`` depth
-    distribution into the single number a product review quotes.
-
-    Scale shape: the sessionizer is the standard user-partitioned
-    window pair; the survival ladder is an 8-row broadcast grid joined
-    against the session-depth aggregate, and the fit is closed-form
-    moments over <= 8 points."""
-    e = Tables(spark, sf_dir).events
-    from ror_etl_spark.queries.util import epoch_us as _eus
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = _eus(F.col("ts"))
-    marked = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            (us - F.lag(us).over(w) > _SESS_GAP_US)
-            | F.lag(us).over(w).isNull(),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_start"),
-    )
-    sess = marked.select(
-        "user_id",
-        F.sum("is_start")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("sid"),
-    )
-    per = sess.groupBy("user_id", "sid").agg(F.count(F.lit(1)).alias("depth"))
-    tot = per.agg(F.count(F.lit(1)).cast("double").alias("n0"))
-    grid = spark.range(1, 9).select(F.col("id").alias("d"))
-    surv = (
-        F.broadcast(grid)
-        .crossJoin(per)
-        .crossJoin(F.broadcast(tot))
-        .groupBy("d", "n0")
-        .agg(
-            F.count(F.when(F.col("depth") >= F.col("d"), 1)).alias("nk")
-        )
-        .where(F.col("nk") > 0)
-        .select(
-            F.col("d").cast("double").alias("x"),
-            F.log(F.col("nk") / F.col("n0")).alias("ly"),
-        )
-    )
-    fit = surv.agg(
-        F.count(F.lit(1)).alias("np"),
-        F.covar_pop("x", "ly").alias("sxy"),
-        F.var_pop("x").alias("sxx"),
-        F.var_pop("ly").alias("syy"),
-    )
-    import math as _math
-
-    ok_x = F.col("sxx") > 0
-    return fit.select(
-        F.col("np").cast("long").alias("n_depths"),
-        F.when(
-            ok_x, F.round(F.col("sxy") / F.col("sxx") + 1e-9, 6)
-        ).alias("decay_slope"),
-        F.when(
-            ok_x & (F.col("sxy") < 0),
-            F.round(
-                -_math.log(2.0) * F.col("sxx") / F.col("sxy") + 1e-9, 4
-            ),
-        ).alias("halflife_depth"),
-        F.when(
-            ok_x & (F.col("syy") > 0),
-            F.round(
-                F.col("sxy") * F.col("sxy") / (F.col("sxx") * F.col("syy"))
-                + 1e-9,
-                6,
-            ),
-        ).alias("r2"),
-    )
-
-
-@staged(
-    "tokenizer_fertility_by_language",
-    oracle="""
-    WITH tok AS (
-      SELECT lang,
-             CAST(length(list_filter(
-               regexp_extract_all(text,
-                 '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n]'),
-               x -> x <> '')) AS BIGINT) AS bpe,
-             CAST(length(list_filter(
-               string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '),
-               x -> x <> '')) AS BIGINT) AS words,
-             n_chars
-      FROM documents),
-    agg AS (
-      SELECT lang, count(*) AS n_docs, sum(bpe) AS t, sum(words) AS w,
-             sum(n_chars) AS ch
-      FROM tok GROUP BY lang)
-    SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(t AS BIGINT) AS n_tokens,
-           CAST(w AS BIGINT) AS n_words,
-           round(t * 1.0 / w + 1e-9, 4) AS fertility,
-           round(ch * 1.0 / t + 1e-9, 4) AS chars_per_token
-    FROM agg ORDER BY lang
-    """,
-)
-def tokenizer_fertility_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility by language: BPE-ish tokens per whitespace
-    word and characters per token, per document language — the
-    tokenizer-equity report (languages with fertility ≫ English pay
-    more context budget per word, the standard multilingual-corpus
-    health check). Uses the registered deterministic BPE-ish token
-    estimator so the number is comparable with
-    ``llm_bpe_token_counts``.
-
-    Scale shape: one map-side regex pass per document and one tiny
-    per-language aggregate — no shuffle beyond the groupBy."""
-    from ror_etl_spark.functions.text import bpe_ish_token_count
-
-    d = Tables(spark, sf_dir).documents
-    words = F.size(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " "
-            ),
-            lambda x: x != "",
-        )
-    )
-    tok = d.select(
-        "lang",
-        bpe_ish_token_count(F.col("text")).cast("long").alias("bpe"),
-        words.cast("long").alias("words"),
-        "n_chars",
-    )
-    agg = tok.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("bpe").alias("t"),
-        F.sum("words").alias("w"),
-        F.sum("n_chars").alias("ch"),
-    )
-    return agg.select(
-        "lang",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("t").cast("long").alias("n_tokens"),
-        F.col("w").cast("long").alias("n_words"),
-        F.round(F.col("t") * 1.0 / F.col("w") + 1e-9, 4).alias("fertility"),
-        F.round(F.col("ch") * 1.0 / F.col("t") + 1e-9, 4).alias(
-            "chars_per_token"
-        ),
-    ).orderBy("lang")
-
-
-# ---------------------------------------------------------------------------
-# Wave 8: weighted quantiles, Simpson-paradox screen
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "weighted_quantiles_quantity",
-    oracle="""
-    WITH wv AS (
-      SELECT l_quantity AS q, sum(l_extendedprice) AS w
-      FROM lineitem GROUP BY q),
-    cum AS (
-      SELECT q, w,
-             sum(w) OVER (ORDER BY q
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-             sum(w) OVER () AS tw
-      FROM wv),
-    taus AS (SELECT unnest([0.25, 0.5, 0.75]) AS tau),
-    pick AS (
-      SELECT taus.tau, min(cum.q) AS value
-      FROM taus JOIN cum ON cum.cw >= taus.tau * cum.tw
-      GROUP BY taus.tau)
-    SELECT pick.tau AS tau,
-           round(pick.value + 1e-9, 2) AS value,
-           round(c2.cw / c2.tw + 1e-9, 6) AS cum_weight_share
-    FROM pick JOIN cum c2 ON c2.q = pick.value
-    ORDER BY tau
-    """,
-)
-def weighted_quantiles_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue-weighted quantiles of order quantity (tau = .25/.5/.75):
-    the smallest quantity whose cumulative revenue weight reaches
-    tau·W — 'half the revenue ships in lines of quantity <= X', the
-    weighted-median primitive every mixture-reweighting pipeline needs
-    (plain medians answer the row question; weighted medians answer
-    the MASS question).
-
-    Scale shape: l_quantity is a small discrete domain (1..50), so ONE
-    value-keyed aggregate reduces the fact table to a domain-bounded
-    frame and the cumulative scan is a 50-row window — at 100 TB only
-    the first aggregate sees data. For continuous weight columns the
-    same op runs on ``equidepth_bin_assign``'s binned domain."""
-    li = Tables(spark, sf_dir).lineitem
-    wv = li.groupBy(F.col("l_quantity").alias("q")).agg(
-        F.sum("l_extendedprice").alias("w")
-    )
-    wall = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
-    # lazy checkpoint: cum feeds BOTH the tau pick and the share
-    # lookup; without it Catalyst re-derives the aggregate from a
-    # second full lineitem scan (verified in the r12 plan audit)
-    cum = wv.select(
-        "q",
-        F.sum("w").over(wall).alias("cw"),
-        F.sum("w").over(Window.partitionBy()).alias("tw"),
-    ).localCheckpoint(eager=False)
-    taus = spark.createDataFrame([(0.25,), (0.5,), (0.75,)], "tau double")
-    pick = (
-        F.broadcast(taus)
-        .join(cum, F.col("cw") >= F.col("tau") * F.col("tw"))
-        .groupBy("tau")
-        .agg(F.min("q").alias("value"))
-    )
-    c2 = cum.select(F.col("q").alias("value"), "cw", "tw")
-    return (
-        pick.join(c2, "value")
-        .select(
-            "tau",
-            F.round(F.col("value") + 1e-9, 2).alias("value"),
-            F.round(F.col("cw") / F.col("tw") + 1e-9, 6).alias(
-                "cum_weight_share"
-            ),
-        )
-        .orderBy("tau")
-    )
-
-
-@staged(
-    "simpson_paradox_screen",
-    oracle="""
-    WITH med AS (
-      SELECT quantile_disc(o_totalprice, 0.5) AS m FROM orders),
-    base AS (
-      SELECT c.c_mktsegment AS seg,
-             CASE WHEN o.o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END
-               AS x,
-             CASE WHEN o.o_totalprice > med.m THEN 1 ELSE 0 END AS y
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      CROSS JOIN med),
-    strat AS (
-      SELECT seg,
-             avg(CASE WHEN x = 1 THEN CAST(y AS DOUBLE) END)
-             - avg(CASE WHEN x = 0 THEN CAST(y AS DOUBLE) END) AS d
-      FROM base GROUP BY seg),
-    agg AS (
-      SELECT avg(CASE WHEN x = 1 THEN CAST(y AS DOUBLE) END)
-             - avg(CASE WHEN x = 0 THEN CAST(y AS DOUBLE) END) AS d
-      FROM base),
-    sm AS (
-      SELECT count(*) AS n_strata,
-             sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS n_pos,
-             sum(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS n_neg,
-             round(avg(d) + 1e-9, 6) AS mean_stratum_diff
-      FROM strat)
-    SELECT CAST(sm.n_strata AS BIGINT) AS n_strata,
-           CAST(sm.n_pos AS BIGINT) AS n_pos,
-           CAST(sm.n_neg AS BIGINT) AS n_neg,
-           sm.mean_stratum_diff,
-           round(agg.d + 1e-9, 6) AS aggregate_diff,
-           CAST(CASE WHEN (agg.d > 0 AND sm.n_neg > sm.n_pos)
-                       OR (agg.d < 0 AND sm.n_pos > sm.n_neg)
-                     THEN 1 ELSE 0 END AS BIGINT) AS reversal_flag
-    FROM sm CROSS JOIN agg
-    """,
-)
-def simpson_paradox_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox screen for the URGENT-priority -> high-value
-    association: the aggregate risk difference P(high|urgent) −
-    P(high|other) next to the per-market-segment differences, with a
-    reversal flag when the aggregate sign contradicts the stratum
-    majority — the confounding tripwire to run before quoting ANY
-    aggregate uplift (companion to the registered CMH test, which
-    assumes you already knew to stratify).
-
-    Scale shape: one exact-median pass, one fact-join aggregate to
-    (segment, x) sufficient statistics, then scalar algebra on the
-    5-row stratum frame."""
-    t = Tables(spark, sf_dir)
-    med = t.orders.agg(
-        F.expr(
-            "percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)"
-        ).alias("m")
-    )
-    base = (
-        t.orders.join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .crossJoin(F.broadcast(med))
-        .select(
-            F.col("c_mktsegment").alias("seg"),
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1)
-            .otherwise(0)
-            .alias("x"),
-            F.when(F.col("o_totalprice") > F.col("m"), 1)
-            .otherwise(0)
-            .alias("y"),
-        )
-    )
-    d_expr = F.avg(
-        F.when(F.col("x") == 1, F.col("y").cast("double"))
-    ) - F.avg(F.when(F.col("x") == 0, F.col("y").cast("double")))
-    strat = base.groupBy("seg").agg(d_expr.alias("d"))
-    agg = base.agg(d_expr.alias("da"))
-    sm = strat.agg(
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum(F.when(F.col("d") > 0, 1).otherwise(0)).alias("n_pos"),
-        F.sum(F.when(F.col("d") < 0, 1).otherwise(0)).alias("n_neg"),
-        F.round(F.avg("d") + 1e-9, 6).alias("mean_stratum_diff"),
-    )
-    rev = (
-        ((F.col("da") > 0) & (F.col("n_neg") > F.col("n_pos")))
-        | ((F.col("da") < 0) & (F.col("n_pos") > F.col("n_neg")))
-    )
-    return sm.crossJoin(F.broadcast(agg)).select(
-        F.col("n_strata").cast("long").alias("n_strata"),
-        F.col("n_pos").cast("long").alias("n_pos"),
-        F.col("n_neg").cast("long").alias("n_neg"),
-        "mean_stratum_diff",
-        F.round(F.col("da") + 1e-9, 6).alias("aggregate_diff"),
-        F.when(rev, 1).otherwise(0).cast("long").alias("reversal_flag"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wave 9: inequality indices, 2x2/ordinal association, unit-root and
-# Granger diagnostics, exact Wasserstein, burstiness, graph centrality,
-# hubness, Holt smoothing
-# ---------------------------------------------------------------------------
-
-
-@staged(
-    "atkinson_index_customer_revenue",
-    oracle="""
-    WITH rev AS (
-      SELECT o_custkey, sum(o_totalprice) AS y FROM orders GROUP BY 1),
-    m AS (
-      SELECT count(*) AS n, avg(y) AS mu,
-             avg(sqrt(y)) AS mh, sum(1.0 / y) AS sinv
-      FROM rev)
-    SELECT CAST(n AS BIGINT) AS n_customers,
-           round(mu + 1e-9, 2) AS mean_revenue,
-           round(1.0 - (mh * mh) / mu + 1e-9, 6) AS atkinson_e05,
-           round(1.0 - (n / sinv) / mu + 1e-9, 6) AS atkinson_e2
-    FROM m
-    """,
-)
-def atkinson_index_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Atkinson inequality indices of per-customer revenue at aversion
-    epsilon = 0.5 (A = 1 - (mean sqrt y)^2 / mean y) and epsilon = 2
-    (A = 1 - harmonic_mean / mean). Welfare-weighted complements to the
-    registered Gini/Theil/Lorenz family: epsilon picks WHERE on the
-    distribution inequality hurts (eps=2 is dominated by the poorest
-    customers, eps=0.5 by the bulk), so the pair localizes which tail
-    drives a Gini move.
-
-    Scale shape: one custkey-keyed aggregate then one scalar aggregate
-    — all-row statistics from sums of y^p, never a sort."""
-    o = Tables(spark, sf_dir).orders
-    rev = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("y"))
-    m = rev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("y").alias("mu"),
-        F.avg(F.sqrt("y")).alias("mh"),
-        F.sum(F.lit(1.0) / F.col("y")).alias("sinv"),
-    )
-    return m.select(
-        F.col("n").cast("long").alias("n_customers"),
-        F.round(F.col("mu") + 1e-9, 2).alias("mean_revenue"),
-        F.round(
-            1.0 - (F.col("mh") * F.col("mh")) / F.col("mu") + 1e-9, 6
-        ).alias("atkinson_e05"),
-        F.round(
-            1.0 - (F.col("n") / F.col("sinv")) / F.col("mu") + 1e-9, 6
-        ).alias("atkinson_e2"),
-    )
-
-
-@staged(
-    "income_share_ratios_revenue",
-    oracle="""
-    WITH rev AS (
-      SELECT o_custkey, sum(o_totalprice) AS y FROM orders GROUP BY 1),
-    rk AS (
-      SELECT o_custkey, y,
-             row_number() OVER (ORDER BY y, o_custkey) AS r
-      FROM rev),
-    tot AS (SELECT count(*) AS n, sum(y) AS ty FROM rev),
-    seg AS (
-      SELECT 'q' || CAST(((r - 1) * 5) // n + 1 AS VARCHAR) AS segment,
-             count(*) AS nc, sum(y) AS sy
-      FROM rk CROSS JOIN tot GROUP BY 1
-      UNION ALL
-      SELECT 'bottom40', count(*), sum(y)
-      FROM rk CROSS JOIN tot WHERE r <= (n * 2) // 5
-      UNION ALL
-      SELECT 'top10', count(*), sum(y)
-      FROM rk CROSS JOIN tot WHERE r > n - n // 10),
-    palma AS (
-      SELECT (SELECT sum(y) FROM rk CROSS JOIN tot WHERE r > n - n // 10)
-             / (SELECT sum(y) FROM rk CROSS JOIN tot
-                WHERE r <= (n * 2) // 5) AS p)
-    SELECT seg.segment,
-           CAST(seg.nc AS BIGINT) AS n_customers,
-           round(seg.sy / tot.ty + 1e-9, 6) AS revenue_share,
-           round(palma.p + 1e-9, 6) AS palma_ratio
-    FROM seg CROSS JOIN tot CROSS JOIN palma
-    ORDER BY segment
-    """,
-)
-def income_share_ratios_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue concentration shares: exact quintile shares of
-    per-customer revenue plus the bottom-40% and top-10% segments and
-    the Palma ratio (top-10 share / bottom-40 share) — the
-    concentration summary regulators and data-mixture owners actually
-    quote, complementing the registered Lorenz/Gini curve with named
-    cut points. Cutoffs are exact integer ranks (floor arithmetic on
-    row_number over (revenue, custkey)), so no percentile
-    interpolation rule crosses the engine boundary.
-
-    Scale shape: ranks over the customer-sized frame route through
-    ``global_cumsum`` (range shuffle + carry), never a single-task
-    global window; segments then aggregate to <= 7 rows."""
-    from ror_etl_spark.operators.util import global_cumsum
-
-    o = Tables(spark, sf_dir).orders
-    rev = (
-        o.groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("y"))
-        .withColumn("one", F.lit(1).cast("long"))
-    )
-    rk = global_cumsum(rev, ["y", "o_custkey"], "one", out="prior").select(
-        "o_custkey", "y", (F.col("prior") + 1).alias("r")
-    )
-    tot = rev.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("ty")
-    )
-    j = rk.crossJoin(F.broadcast(tot)).localCheckpoint(
-        eager=False, storageLevel=_DISK_ONLY
-    )
-    # the oracle's ((r-1)*5)/n is DuckDB integer division; Spark's / is
-    # double division, so the same floor is spelled explicitly
-    quint = j.groupBy(
-        F.concat(
-            F.lit("q"),
-            (F.floor((F.col("r") - 1) * 5 / F.col("n")) + 1).cast("string"),
-        ).alias("segment")
-    ).agg(F.count(F.lit(1)).alias("nc"), F.sum("y").alias("sy"))
-    bottom = j.filter(
-        F.col("r") <= F.floor(F.col("n") * 2 / 5)
-    ).agg(
-        F.lit("bottom40").alias("segment"),
-        F.count(F.lit(1)).alias("nc"),
-        F.sum("y").alias("sy"),
-    )
-    top = j.filter(
-        F.col("r") > F.col("n") - F.floor(F.col("n") / 10)
-    ).agg(
-        F.lit("top10").alias("segment"),
-        F.count(F.lit(1)).alias("nc"),
-        F.sum("y").alias("sy"),
-    )
-    segs = quint.unionByName(bottom).unionByName(top)
-    palma = (
-        top.select(F.col("sy").alias("sy_top"))
-        .crossJoin(bottom.select(F.col("sy").alias("sy_bot")))
-        .select((F.col("sy_top") / F.col("sy_bot")).alias("p"))
-    )
-    return (
-        segs.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(palma))
-        .select(
-            "segment",
-            F.col("nc").cast("long").alias("n_customers"),
-            F.round(F.col("sy") / F.col("ty") + 1e-9, 6).alias(
-                "revenue_share"
-            ),
-            F.round(F.col("p") + 1e-9, 6).alias("palma_ratio"),
-        )
-        .orderBy("segment")
-    )
-
-
-@staged(
-    "odds_ratio_click_purchase",
-    oracle="""
-    WITH u AS (
-      SELECT user_id,
-             max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ck,
-             max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS pu
-      FROM events GROUP BY 1),
-    t AS (
-      SELECT count(*) AS n,
-             sum(CASE WHEN ck = 1 AND pu = 1 THEN 1 ELSE 0 END) AS a,
-             sum(CASE WHEN ck = 1 AND pu = 0 THEN 1 ELSE 0 END) AS b,
-             sum(CASE WHEN ck = 0 AND pu = 1 THEN 1 ELSE 0 END) AS c,
-             sum(CASE WHEN ck = 0 AND pu = 0 THEN 1 ELSE 0 END) AS d
-      FROM u),
-    s AS (
-      SELECT n, a, b, c, d,
-             ((a + 0.5) * (d + 0.5)) / ((b + 0.5) * (c + 0.5)) AS orr,
-             sqrt(1.0 / (a + 0.5) + 1.0 / (b + 0.5)
-                  + 1.0 / (c + 0.5) + 1.0 / (d + 0.5)) AS se
-      FROM t)
-    SELECT CAST(n AS BIGINT) AS n_users,
-           CAST(a AS BIGINT) AS n_both, CAST(b AS BIGINT) AS n_click_only,
-           CAST(c AS BIGINT) AS n_purchase_only,
-           CAST(d AS BIGINT) AS n_neither,
-           round(orr + 1e-9, 6) AS odds_ratio,
-           round(ln(orr) + 1e-9, 6) AS log_or,
-           round(exp(ln(orr) - 1.959964 * se) + 1e-9, 6) AS ci_low,
-           round(exp(ln(orr) + 1.959964 * se) + 1e-9, 6) AS ci_high
-    FROM s
-    """,
-)
-def odds_ratio_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-level click/purchase odds ratio with the Haldane-Anscombe
-    +0.5 correction (applied unconditionally so zero cells degrade
-    gracefully instead of producing inf) and the Woolf-logit 95% CI.
-    The effect-size-with-uncertainty companion to the registered
-    chi-square/McNemar family — a chi-square says the 2x2 is
-    dependent, the OR+CI says HOW MUCH and with what precision.
-
-    Scale shape: one user-keyed aggregate then one 4-cell scalar
-    aggregate; the CI is pure scalar algebra on one row."""
-    e = Tables(spark, sf_dir).events
-    u = e.groupBy("user_id").agg(
-        F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("ck"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "pu"
-        ),
-    )
-    t = u.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when((F.col("ck") == 1) & (F.col("pu") == 1), 1).otherwise(0)).alias("a"),
-        F.sum(F.when((F.col("ck") == 1) & (F.col("pu") == 0), 1).otherwise(0)).alias("b"),
-        F.sum(F.when((F.col("ck") == 0) & (F.col("pu") == 1), 1).otherwise(0)).alias("c"),
-        F.sum(F.when((F.col("ck") == 0) & (F.col("pu") == 0), 1).otherwise(0)).alias("d"),
-    )
-    orr = ((F.col("a") + 0.5) * (F.col("d") + 0.5)) / (
-        (F.col("b") + 0.5) * (F.col("c") + 0.5)
-    )
-    se = F.sqrt(
-        1.0 / (F.col("a") + 0.5)
-        + 1.0 / (F.col("b") + 0.5)
-        + 1.0 / (F.col("c") + 0.5)
-        + 1.0 / (F.col("d") + 0.5)
-    )
-    s = t.select("n", "a", "b", "c", "d", orr.alias("orr"), se.alias("se"))
-    return s.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.col("a").cast("long").alias("n_both"),
-        F.col("b").cast("long").alias("n_click_only"),
-        F.col("c").cast("long").alias("n_purchase_only"),
-        F.col("d").cast("long").alias("n_neither"),
-        F.round(F.col("orr") + 1e-9, 6).alias("odds_ratio"),
-        F.round(F.log(F.col("orr")) + 1e-9, 6).alias("log_or"),
-        F.round(
-            F.exp(F.log(F.col("orr")) - 1.959964 * F.col("se")) + 1e-9, 6
-        ).alias("ci_low"),
-        F.round(
-            F.exp(F.log(F.col("orr")) + 1.959964 * F.col("se")) + 1e-9, 6
-        ).alias("ci_high"),
-    )
-
-
-@staged(
-    "goodman_kruskal_gamma_priority_status",
-    oracle="""
-    WITH cells AS (
-      SELECT CAST(substring(o_orderpriority, 1, 1) AS INT) AS pr,
-             o_orderstatus AS st, count(*) AS n
-      FROM orders GROUP BY 1, 2),
-    pairs AS (
-      SELECT sum(CASE WHEN (a.pr < b.pr AND a.st < b.st) THEN a.n * b.n
-                      ELSE 0 END) AS conc,
-             sum(CASE WHEN (a.pr < b.pr AND a.st > b.st) THEN a.n * b.n
-                      ELSE 0 END) AS disc
-      FROM cells a CROSS JOIN cells b),
-    tot AS (SELECT sum(n) AS n_orders FROM cells)
-    SELECT CAST(tot.n_orders AS BIGINT) AS n_orders,
-           CAST(pairs.conc AS BIGINT) AS concordant,
-           CAST(pairs.disc AS BIGINT) AS discordant,
-           round((pairs.conc - pairs.disc) * 1.0
-                 / (pairs.conc + pairs.disc) + 1e-9, 6) AS gamma
-    FROM pairs CROSS JOIN tot
-    """,
-)
-def goodman_kruskal_gamma_priority_status(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Goodman-Kruskal gamma between order priority (ordinal 1-URGENT
-    .. 5-LOW by numeric prefix) and order status (ordinal by its
-    F < O < P string order): gamma = (C - D)/(C + D) over concordant /
-    discordant pairs, ties dropped. The ordinal-association companion
-    to the registered Cramer's V (nominal) and Kendall tau (numeric) —
-    gamma is the one that respects category ORDER without requiring
-    numeric scores.
-
-    Scale shape: the fact table reduces to a <= 15-cell contingency
-    aggregate; the pair double-sum is a bounded crossJoin of that cell
-    frame with itself (<= 225 rows) — exact integer counts, O(n) in the
-    fact table and O(cells^2) after."""
-    o = Tables(spark, sf_dir).orders
-    cells = o.groupBy(
-        F.substring("o_orderpriority", 1, 1).cast("int").alias("pr"),
-        F.col("o_orderstatus").alias("st"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    a = cells.select(
-        F.col("pr").alias("pa"), F.col("st").alias("sa"), F.col("n").alias("na")
-    )
-    b = cells.select(
-        F.col("pr").alias("pb"), F.col("st").alias("sb"), F.col("n").alias("nb")
-    )
-    pairs = (
-        a.crossJoin(F.broadcast(b))
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("pa") < F.col("pb")) & (F.col("sa") < F.col("sb")),
-                    F.col("na") * F.col("nb"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("conc"),
-            F.sum(
-                F.when(
-                    (F.col("pa") < F.col("pb")) & (F.col("sa") > F.col("sb")),
-                    F.col("na") * F.col("nb"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("disc"),
-        )
-    )
-    tot = cells.agg(F.sum("n").alias("n_orders"))
-    return pairs.crossJoin(F.broadcast(tot)).select(
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.col("conc").cast("long").alias("concordant"),
-        F.col("disc").cast("long").alias("discordant"),
-        F.round(
-            (F.col("conc") - F.col("disc"))
-            / (F.col("conc") + F.col("disc"))
-            + 1e-9,
-            6,
-        ).alias("gamma"),
-    )
 
 
 @staged(
@@ -4505,7 +1828,6 @@ def page_hinkley_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsum(d), PH_t = m_t - running-min(m); the reported PH_max with
     its day and the 3-sigma comparison is the standard data-stream
     mean-shift detector — the sequential complement to
-    ``changepoint_binseg_daily_revenue`` (offline SSE split) and
     ``cusum_changepoint_daily`` (known-target CUSUM): PH needs no
     reference mean, it tracks its own.
 

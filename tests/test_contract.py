@@ -6,6 +6,7 @@ from __future__ import annotations
 import ast
 import glob
 import os
+import re
 import sys
 
 from pyspark.sql import functions as F
@@ -243,3 +244,59 @@ def test_every_query_module_is_served():
         if isinstance(t, ast.Name) and t.id == "STAGED"
     ]
     assert staged == [], "modules define a STAGED dict"
+
+
+# A backticked ``path.py`` or ``path.py:name[/name...]`` in COVERAGE.md. The
+# path may be given from the repo root, from ``ror_etl_spark/`` or as a bare
+# file name; a name may be ``Class.member`` and may carry call arguments.
+_COVERAGE_REF = re.compile(r"`([\w./-]+\.py)(?::([\w.]+(?:/[\w.]+)*))?[^`]*`")
+
+
+def _defined_names(tree: ast.Module) -> set[str]:
+    """Module-level defs, classes and assignments, and each def or
+    assignment in a class body, both bare and as ``Class.member``."""
+    names = set()
+
+    def targets(node):
+        if isinstance(node, ast.Assign):
+            return [t.id for t in node.targets if isinstance(t, ast.Name)]
+        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            return [node.target.id]
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            return [node.name]
+        return []
+
+    for node in tree.body:
+        names.update(targets(node))
+        if isinstance(node, ast.ClassDef):
+            members = [m for sub in node.body for m in targets(sub)]
+            names.update(members)
+            names.update(f"{node.name}.{m}" for m in members)
+    return names
+
+
+def test_coverage_names_resolve():
+    """Every file COVERAGE.md names exists, and every name it pins to a
+    file is defined there — so the table cannot keep rows for deleted
+    code."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
+    ]
+    with open(os.path.join(root, "COVERAGE.md")) as f:
+        refs = sorted(set(_COVERAGE_REF.findall(f.read())))
+    assert refs, "COVERAGE.md names no file"
+
+    bad = []
+    for ref, names in refs:
+        matches = [p for p in files if p == ref or p.endswith("/" + ref)]
+        if not matches:
+            bad.append(f"{ref}:{names}" if names else ref)
+            continue
+        defined = set()
+        for path in matches:
+            with open(os.path.join(root, path)) as f:
+                defined |= _defined_names(ast.parse(f.read()))
+        bad += [f"{ref}:{n}" for n in names.split("/") if names and n not in defined]
+    assert bad == [], f"COVERAGE.md names code that does not exist: {bad}"

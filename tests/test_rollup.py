@@ -39,7 +39,7 @@ def test_reference_golden_chain(spark, lt):
     )
     res = ultimate_parent(edges, local_threshold=lt)
     assert _mapping(res) == {"A": "D", "B": "D", "C": "D", "D": "D", "E": "E"}
-    assert res.n_unconverged == 0
+    assert res.n_in_cycle == 0
 
 
 @BOTH_PATHS
@@ -64,7 +64,7 @@ def test_three_cycle_terminates(spark, lt):
     assert set(m) == {"X", "Y", "Z"}
     assert all(v in {"X", "Y", "Z"} for v in m.values())
     # cycles never converge under pointer doubling — the alert signal fires
-    assert res.n_unconverged > 0
+    assert res.n_in_cycle > 0
 
 
 @BOTH_PATHS
@@ -78,7 +78,7 @@ def test_deep_chain_beyond_reference_recursion_cap(spark, lt):
     m = _mapping(res)
     assert m["c0"] == f"c{n}"
     assert m[f"c{n}"] == f"c{n}"
-    assert res.n_unconverged == 0
+    assert res.n_in_cycle == 0
 
 
 @BOTH_PATHS

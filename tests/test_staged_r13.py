@@ -34,320 +34,6 @@ def test_no_staged_name_collides_with_registry():
 # --------------------------- property pins ---------------------------
 
 
-def test_jarque_bera_components_consistent(spark):
-    """JB must recombine exactly from its reported skew/kurtosis."""
-    fn, _ = STAGED["jarque_bera_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    jb = r["n_days"] / 6.0 * (
-        r["skewness"] ** 2 + r["excess_kurtosis"] ** 2 / 4.0
-    )
-    assert abs(jb - r["jb_stat"]) < 1e-2
-    assert r["jb_stat"] >= 0
-
-
-def test_durbin_watson_range(spark):
-    """DW lives in [0, 4] by construction."""
-    fn, _ = STAGED["durbin_watson_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["dw_stat"] <= 4.0
-
-
-def test_breusch_pagan_lm_bound(spark):
-    """LM = n·r² with |r| <= 1, so 0 <= LM <= n."""
-    fn, _ = STAGED["breusch_pagan_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert -1.0 <= r["esq_t_corr"] <= 1.0
-    assert 0.0 <= r["lm_stat"] <= r["n_days"]
-
-
-def test_grubbs_against_numpy(spark):
-    """Independent replay of G on the daily frame."""
-    import numpy as np
-    import duckdb as d
-
-    fn, _ = STAGED["grubbs_outlier_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    y = np.array(
-        d.sql(
-            "SELECT sum(value) FROM "
-            f"'{os.path.join(SF_SMALL, 'events.parquet')}'"
-            " WHERE event_type = 'purchase'"
-            " GROUP BY CAST(ts AS DATE) ORDER BY 1"
-        ).fetchnumpy()["sum(\"value\")"]
-    )
-    g = np.max(np.abs(y - y.mean())) / y.std()
-    assert abs(r["g_stat"] - g) < 1e-4
-
-
-def test_max_drawdown_nonnegative(spark):
-    fn, _ = STAGED["max_drawdown_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["max_drawdown"] >= 0.0
-    assert 0 <= r["trough_t"]
-
-
-def test_binseg_gain_nonnegative_and_means_bracket(spark):
-    """Splitting can only reduce SSE; segment sizes must partition n."""
-    fn, _ = STAGED["changepoint_binseg_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["sse_gain"] >= 0.0
-    assert 1 <= r["n_left"] < r["n_days"]
-
-
-def test_hurst_in_sane_range(spark):
-    fn, _ = STAGED["hurst_rs_daily_revenue"]
-    rows = fn(spark, SF_SMALL).collect()
-    hs = {r["hurst"] for r in rows}
-    assert len(hs) == 1
-    assert 0.0 < rows[0]["hurst"] < 1.5
-    for r in rows:
-        assert r["rs_avg"] > 0
-
-
-def test_permutation_entropy_bounds(spark):
-    fn, _ = STAGED["permutation_entropy_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["normalized"] <= 1.0 + 1e-9
-    assert 1 <= r["n_patterns"] <= 6
-
-
-def test_haar_energy_shares_sum_to_one(spark):
-    fn, _ = STAGED["haar_energy_daily_revenue"]
-    rows = fn(spark, SF_SMALL).collect()
-    assert len(rows) == 3
-    assert abs(sum(r["energy_share"] for r in rows) - 1.0) < 1e-4
-    ns = [r["n_coeffs"] for r in rows]
-    assert ns[0] >= ns[1] >= ns[2]
-
-
-def test_theil_u_is_rmse_ratio(spark):
-    fn, _ = STAGED["theil_u_forecast_daily_revenue"]
-    r = fn(spark, SF_SMALL).collect()[0]
-    assert r["rmse_naive"] > 0 and r["rmse_snaive"] > 0
-    assert abs(r["theil_u"] - r["rmse_snaive"] / r["rmse_naive"]) < 1e-3
-
-
-def test_welch_and_bartlett_nonnegative(spark):
-    r = STAGED["welch_anova_value_by_priority"][0](spark, SF_SMALL).collect()[0]
-    assert r["welch_f"] >= 0 and r["df2"] > 0
-    b = STAGED["bartlett_value_by_priority"][0](spark, SF_SMALL).collect()[0]
-    assert b["bartlett_stat"] >= 0 and b["pooled_var"] > 0
-
-
-def test_tukey_pairs_complete(spark):
-    rows = STAGED["tukey_q_pairwise_priority"][0](spark, SF_SMALL).collect()
-    assert len(rows) == 10  # C(5,2)
-    for r in rows:
-        assert r["g_lo"] < r["g_hi"]
-        assert r["q_stat"] >= 0
-        assert abs(r["mean_diff"]) > 0 or r["q_stat"] == 0
-
-
-def test_cf_distance_bounds(spark):
-    """Each CF component lives in [-1, 1], so the 4-dim squared
-    difference is bounded by 16."""
-    r = STAGED["cf_distance_click_purchase"][0](spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["cf_dist_sq"] <= 16.0
-    assert r["cf_stat"] >= 0
-    assert r["n_click"] > 0 and r["n_purchase"] > 0
-
-
-def test_t_closeness_ladder_monotone(spark):
-    """Raising t can only shrink the violating set; EMD <= 1."""
-    rows = sorted(
-        STAGED["t_closeness_order_priority"][0](spark, SF_SMALL).collect(),
-        key=lambda r: r["t"],
-    )
-    viol = [r["n_violating"] for r in rows]
-    assert viol == sorted(viol, reverse=True)
-    for r in rows:
-        assert 0.0 <= r["max_emd"] <= 1.0 + 1e-9
-
-
-def test_dp_exponential_ranks_are_permutation(spark):
-    rows = STAGED["dp_exponential_topk_nations"][0](spark, SF_SMALL).collect()
-    assert [r["noisy_rank"] for r in rows] == [1, 2, 3, 4, 5]
-    assert len({r["nationkey"] for r in rows}) == 5
-    for r in rows:
-        assert r["true_rank"] >= 1
-
-
-def test_pca_explained_variance_bounds(spark):
-    """The top PC explains a positive share of variance, at most all of
-    it; loadings are max-abs-normalized so |v| <= 1."""
-    rows = STAGED["embedding_pca_power_iteration"][0](spark, SF_SMALL).collect()
-    assert len(rows) == 8
-    evr = rows[0]["explained_var_ratio"]
-    assert 0.0 < evr <= 1.0 + 1e-6
-    assert rows[0]["top_eigenvalue"] > 0
-    for r in rows:
-        assert abs(r["loading"]) <= 1.0 + 1e-6
-    mags = [abs(r["loading"]) for r in rows]
-    assert mags == sorted(mags, reverse=True)
-
-
-def test_kmeans_elbow_inertia_nonincreasing(spark):
-    """More centroids can only lower (or hold) the optimal inertia —
-    with the deterministic id-ordered init this holds empirically on
-    this corpus and pins the elbow's direction."""
-    rows = sorted(
-        STAGED["embedding_kmeans_elbow"][0](spark, SF_SMALL).collect(),
-        key=lambda r: r["k"],
-    )
-    inert = [r["inertia"] for r in rows]
-    assert inert == sorted(inert, reverse=True)
-    assert all(i > 0 for i in inert)
-
-
-def test_ppr_source_leads_and_scores_proper(spark):
-    rows = STAGED["personalized_pagerank_trade"][0](spark, SF_SMALL).collect()
-    assert rows, "PPR must return rows"
-    assert rows[0]["is_source"] == 1, "teleport mass keeps the source on top"
-    scores = [r["ppr"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    assert all(s >= 0 for s in scores)
-
-
-def test_ktruss_supports_and_ordering(spark):
-    rows = STAGED["ktruss_trade_graph"][0](spark, SF_SMALL).collect()
-    for r in rows:
-        assert r["a"] < r["b"]
-        assert r["support"] >= 1
-
-
-def test_cell_blocked_knn_recall_vs_brute(spark):
-    """The blocked variant's hits are a subset of the candidate set; its
-    recall against the registered brute k-NN is measured and must be
-    substantial (the 3x3 ring covers most true neighbors on a 16-cell
-    grid)."""
-    blocked = STAGED["geo_knn_cell_blocked"][0](spark, SF_SMALL).collect()
-    brute = registry.QUERIES["geo_haversine_knn"](spark, SF_SMALL).collect()
-    bset = {(r["qid"], r["user_id"]) for r in brute}
-    hits = sum(1 for r in blocked if (r["qid"], r["user_id"]) in bset)
-    recall = hits / len(bset)
-    assert recall >= 0.5, f"recall {recall:.2f}"
-    for r in blocked:
-        assert r["km"] >= 0
-
-
-def test_incremental_sessionize_totals(spark):
-    """Total events must equal the raw event count — the stitch never
-    loses or duplicates an event."""
-    import duckdb as d
-
-    r = STAGED["incremental_sessionize_merge"][0](spark, SF_SMALL).collect()[0]
-    n_events = d.sql(
-        f"SELECT count(*) FROM '{os.path.join(SF_SMALL, 'events.parquet')}'"
-    ).fetchone()[0]
-    assert r["total_events"] == n_events
-    assert 0 <= r["n_boundary_sessions"] <= r["n_sessions"]
-    assert r["max_depth"] >= 1
-
-
-def test_session_depth_decay_is_real(spark):
-    """The depth survival curve must actually decay (negative slope,
-    positive half-life) — the vacuous-green guard this op replaced a
-    flat-retention variant over."""
-    r = STAGED["session_depth_halflife_fit"][0](spark, SF_SMALL).collect()[0]
-    assert r["n_depths"] >= 2
-    assert r["decay_slope"] < 0
-    assert r["halflife_depth"] > 0
-    assert 0.0 <= r["r2"] <= 1.0 + 1e-9
-
-
-def test_fertility_at_least_one_token_per_word(spark):
-    """The BPE-ish tokenizer never merges across whitespace, so tokens
-    >= words and fertility >= 1 for every language."""
-    rows = STAGED["tokenizer_fertility_by_language"][0](
-        spark, SF_SMALL
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r["n_tokens"] >= r["n_words"]
-        assert r["fertility"] >= 1.0
-        assert r["chars_per_token"] > 0
-
-
-def test_weighted_quantiles_monotone(spark):
-    """Weighted quantile values are nondecreasing in tau and each
-    cumulative share covers at least its tau."""
-    rows = sorted(
-        STAGED["weighted_quantiles_quantity"][0](spark, SF_SMALL).collect(),
-        key=lambda r: r["tau"],
-    )
-    assert len(rows) == 3
-    vals = [r["value"] for r in rows]
-    assert vals == sorted(vals)
-    for r in rows:
-        assert r["cum_weight_share"] >= r["tau"] - 1e-9
-
-
-def test_simpson_screen_counts_partition(spark):
-    r = STAGED["simpson_paradox_screen"][0](spark, SF_SMALL).collect()[0]
-    assert r["n_pos"] + r["n_neg"] <= r["n_strata"]
-    assert r["reversal_flag"] in (0, 1)
-    assert -1.0 <= r["aggregate_diff"] <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# Wave 9 property pins
-# ---------------------------------------------------------------------------
-
-
-def test_atkinson_indices_ordered_and_bounded(spark):
-    """0 <= A_0.5 <= A_2 < 1: Atkinson is in [0,1) and nondecreasing in
-    the aversion parameter (more aversion can only see more
-    inequality)."""
-    r = STAGED["atkinson_index_customer_revenue"][0](spark, SF_SMALL).collect()[0]
-    assert 0.0 <= r["atkinson_e05"] < 1.0
-    assert r["atkinson_e05"] <= r["atkinson_e2"] + 1e-9
-    assert r["atkinson_e2"] < 1.0
-
-
-def test_income_shares_partition_and_palma(spark):
-    """Quintile shares sum to 1, are nondecreasing q1->q5 (ranked by
-    revenue), and the Palma ratio equals top10/bottom40."""
-    rows = {r["segment"]: r for r in
-            STAGED["income_share_ratios_revenue"][0](spark, SF_SMALL).collect()}
-    qs = [rows[f"q{i}"]["revenue_share"] for i in range(1, 6)]
-    assert abs(sum(qs) - 1.0) < 1e-5
-    assert qs == sorted(qs)
-    palma = rows["q1"]["palma_ratio"]
-    assert abs(palma - rows["top10"]["revenue_share"]
-               / rows["bottom40"]["revenue_share"]) < 1e-4
-
-
-def test_odds_ratio_ci_brackets_point(spark):
-    r = STAGED["odds_ratio_click_purchase"][0](spark, SF_SMALL).collect()[0]
-    assert r["n_users"] == (r["n_both"] + r["n_click_only"]
-                            + r["n_purchase_only"] + r["n_neither"])
-    assert r["ci_low"] <= r["odds_ratio"] <= r["ci_high"]
-    assert r["odds_ratio"] > 0
-
-
-def test_gamma_against_reference(spark):
-    """Replay gamma from the raw contingency table in pure Python."""
-    import duckdb as d
-
-    cells = d.sql(
-        "SELECT CAST(substring(o_orderpriority,1,1) AS INT) pr, "
-        "o_orderstatus st, count(*) n FROM "
-        f"'{os.path.join(SF_SMALL, 'orders.parquet')}' GROUP BY 1,2"
-    ).fetchall()
-    conc = disc = 0
-    for pa, sa, na in cells:
-        for pb, sb, nb in cells:
-            if pa < pb and sa < sb:
-                conc += na * nb
-            elif pa < pb and sa > sb:
-                disc += na * nb
-    r = STAGED["goodman_kruskal_gamma_priority_status"][0](
-        spark, SF_SMALL
-    ).collect()[0]
-    assert r["concordant"] == conc and r["discordant"] == disc
-    assert abs(r["gamma"] - (conc - disc) / (conc + disc)) < 1e-5
-
-
 def test_dickey_fuller_halflife_consistent(spark):
     """If gamma is in the mean-reverting band the half-life must be
     positive and satisfy (1+gamma)^h = 0.5."""
