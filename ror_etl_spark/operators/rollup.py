@@ -14,20 +14,35 @@ Reference semantics (georgetown-cset/ror-etl, ``get_ultimate_parent.py``):
 
 The reference walks the chain per-id recursively on one machine with the
 whole dataset in a dict — O(n·depth) work, O(n) driver memory. This
-implementation is a distributed **pointer-doubling fixpoint**: each
-iteration substitutes every node's current ancestor with that ancestor's
-ancestor, so reachable depth doubles per round — ⌈log2(depth)⌉ shuffles
-instead of depth, no driver materialization, memoization implicit.
+implementation is **pointer doubling**: each round substitutes every
+node's current ancestor with that ancestor's ancestor, so reachable depth
+doubles per round — ⌈log2(depth)⌉ rounds instead of depth, no driver
+materialization, memoization implicit.
 
 Scale notes (100 TB design):
-- the iterated frame is exactly two string/long columns (id, anc) — each
-  shuffle moves keys only, never record payload; the full-record join
-  happens once at the end (``attach_ultimate_parent``) and broadcasts when
-  the mapping is small.
+- one route: distributed doubling rounds while the moving set is larger
+  than ``local_threshold``, then one task. A row whose ancestor did not
+  change in a round has reached a fixed point and never changes again,
+  so the rows still moving shrink fast (deep chains and cycles are the
+  long tail). Each convergence check already counts them; once the moving
+  rows plus the settled rows they point at (at most as many again) fit
+  ``local_threshold``, the remaining rounds run for just those rows in
+  ONE executor task (``_finish_in_one_task``) and its output is broadcast
+  back onto the checkpointed state. Every round after the switch costs
+  one task instead of a full two-column shuffle of every row — at 100 TB,
+  the billions of rows that settled in the first rounds are not
+  re-shuffled for the sake of a few long chains. An input that fits the
+  threshold outright runs every round in that task (``"single-task"``).
+- the iterated frame is two id columns (id, anc) and a static boolean
+  (the row's own edge is a non-null self-loop) — each shuffle moves keys only,
+  never record payload; the full-record join happens once at the end
+  (``attach_ultimate_parent``), which broadcasts only a single-task
+  mapping (at most ``local_threshold`` rows) and otherwise leaves the
+  join to the planner and AQE.
 - ``localCheckpoint`` after each checked iteration truncates lineage
   (otherwise the plan doubles per round and Catalyst analysis blows up)
-  and materializes the ~2-column frame in executor storage. It is always
-  local: the loop runs at most ⌈log2 max_depth⌉ rounds over two narrow
+  and materializes the narrow frame in executor storage. It is always
+  local: the loop runs at most ⌈log2 max_depth⌉ rounds over narrow
   columns, so an executor lost mid-rollup fails one short job that is
   rerun whole, which costs less than writing every round to a reliable
   checkpoint directory the job would also have to configure.
@@ -57,7 +72,7 @@ class RollupResult:
     strategy: str = "doubling"  # "doubling" | "single-task" (adaptive routing)
     _m0: DataFrame | None = None  # checkpointed input edges, for cycle analysis
     _n_in_cycle: int | None = None
-    _flags: DataFrame | None = None  # single-task checkpoint with in_cycle
+    _flags: DataFrame | None = None  # final checkpoint with in_cycle
 
     @property
     def n_in_cycle(self) -> int:
@@ -67,18 +82,25 @@ class RollupResult:
         needs an extra no-op round to read 0.
 
         Computed lazily on first access: alert consumers (the pipeline)
-        pay for it; mapping-only consumers don't run the extra jobs. The
-        single-task strategy flags each id inside its kernel, so this is
-        one sum over that checkpoint; the doubling strategy runs two
-        semi/anti joins and a count.
+        pay for it; mapping-only consumers don't run the extra jobs. Each
+        doubling round's join also reads the static root flag of the
+        ancestor it looks up, so a row that has settled carries its own
+        in-cycle flag, and the one-task finish flags the rows still
+        moving. So this is one sum over the final checkpoint on the
+        single-task route, after the one-task finish and at the
+        ``changed == 0`` early exit. Only a loop that runs out of rounds with
+        more than ``local_threshold`` rows still moving falls back to two
+        semi/anti joins over the input edges and a count.
 
         Cycle detection beyond non-convergence: even-length cycles collapse
         to stable self-maps under doubling (X→Y,Y→X resolves to X→X,Y→Y in
         one round), so "converged" alone doesn't mean "reached a real
-        root". A resolved ancestor is a true root iff its own parent edge
-        is a self-loop (or it has no edge — terminal). Everything else is
-        in/under a cycle → the reference's alert case
-        (get_ultimate_parent.py:25-39)."""
+        root" — and such rows stop moving, so the rows still moving at the
+        end are not the in-cycle set. A resolved ancestor is a true root
+        iff its own parent edge is a non-null self-loop (or it has no
+        edge — terminal). Everything else is in/under a cycle → the
+        reference's alert case (get_ultimate_parent.py:25-39). An id that
+        resolves to null (its own parent is null) is never counted."""
         if self._n_in_cycle is None:
             self._n_in_cycle = self._count_in_cycle()
         return self._n_in_cycle
@@ -164,9 +186,10 @@ def ultimate_parent(
     Depth covered after k iterations is 2^k, so ``ceil(log2(max_depth))``
     iterations dominate the reference's depth-200 recursion cap; the loop
     also exits early as soon as no ancestor changes. ``n_changed`` is used
-    only for that early exit (and the duplicate guard) — non-convergence
-    alerting is ``RollupResult.n_in_cycle``, which tests the final state
-    directly instead of burning a confirmation round.
+    only for that early exit, the switch to one task and the duplicate
+    guard — non-convergence alerting is ``RollupResult.n_in_cycle``,
+    which tests the final state directly instead of burning a
+    confirmation round.
 
     ``check_every``: run the convergence/duplicate-guard aggregate only on
     every k-th iteration (always on the last). Each check is a Spark job
@@ -178,21 +201,25 @@ def ultimate_parent(
     still bounded. Keep 1 when the depth is unknown and max_depth is a
     loose cap (early exit saves more than the checks cost).
 
-    ``local_threshold``: adaptive small-input strategy. When the edge set
-    has at most this many rows (counted once, off the checkpoint that the
-    first iteration would materialize anyway), the SAME ``n_iters``
-    doubling rounds run vectorized in numpy inside one executor task
-    (``coalesce(1).mapInPandas``) instead of as shuffle joins — row-for-row
-    identical output on every input, cycles and duplicates included (see
-    ``_ultimate_parent_single_task``), but without the ~⌈log2 depth⌉ fixed
-    shuffle-round costs that dominate wall time at registry scale (the
-    reference's real weekly workload is ~110k orgs). ``None`` reads
+    ``local_threshold``: how many rows one executor task may hold. The
+    rounds run as distributed shuffle joins only while more rows than
+    that are in play; the rest run vectorized in numpy inside one task
+    (``_finish_in_one_task``), row-for-row identical output on every
+    input, cycles and null parents included. An input of at most this
+    many rows (counted once, off the checkpoint that the first iteration
+    would materialize anyway) runs every round in that task (strategy
+    ``"single-task"``) — no ~⌈log2 depth⌉ fixed shuffle-round costs at
+    registry scale (the reference's real weekly workload is ~110k orgs).
+    A larger input runs doubling rounds until a convergence check finds
+    that twice the rows still moving fit, then finishes the remaining
+    rounds for just those rows in the one task (strategy ``"doubling"``).
+    Either way ``iterations`` is then the full round budget: the task
+    does not stop at an earlier fixpoint. ``None`` reads
     ``spark.ror.rollup.localThreshold`` (default 2M rows — ≲200 MB of id
-    strings in the one task); ``0`` pins the distributed fixpoint, which
-    the registered bench queries do so the scale path keeps hard evidence.
+    strings in the one task); ``0`` pins the pure distributed loop, which
+    the registered graph queries do so the scale path keeps hard evidence.
     This is the engine's AQE philosophy applied to an iterative operator:
-    pick the physical strategy from the observed input size, never from
-    hope.
+    pick the physical strategy from the observed sizes, never from hope.
     """
     m = _materialize(edges.select(F.col("id"), F.col("parent").alias("anc")))
     if local_threshold is None:
@@ -258,7 +285,7 @@ def _rollup_edges(
     (lazily) checkpointed. ``counts`` is (rows, distinct ids) when the
     caller has them — :func:`ultimate_parent`'s routing job, or a scan the
     caller ran anyway, such as the pipeline's input gate — so routing
-    costs no job here. ``None`` pins the distributed loop, whose first
+    costs no job here. ``None`` starts the distributed loop, whose first
     convergence check then counts the ids."""
     n_iters = max(1, math.ceil(math.log2(max(2, max_depth))))
     check_every = max(1, check_every)
@@ -270,7 +297,13 @@ def _rollup_edges(
         n, n_ids = counts
         _raise_if_duplicate_ids(m, n, n_ids)
         if local_threshold > 0 and n <= local_threshold:
-            return _ultimate_parent_single_task(m, n_iters)
+            # every row still to resolve at round 0, except the roots,
+            # which are settled and not in a cycle
+            rows = m.select(
+                "id", "anc", F.when(F.col("anc") == F.col("id"), False).alias("in_cycle")
+            )
+            out = _finish_in_one_task(rows, n_iters).localCheckpoint(eager=False)
+            return RollupResult(_mapping(out), n_iters, "single-task", _flags=out)
         n_rows = int(n_ids)  # already counted — reuse
     else:
         # No dedicated input-count job when the distributed path is pinned:
@@ -281,29 +314,36 @@ def _rollup_edges(
         # each job folded away is measurable at sf0.1 (and free at 100 TB).
         n_rows = None
 
-    iterations = 0
-    n_changed = -1
+    # the row's own edge is a non-null self-loop: static, carried so each
+    # round's join also reads the in-cycle flag of the ancestor it looks up
+    m = m.select(
+        "id", "anc", F.coalesce(F.col("anc") == F.col("id"), F.lit(False)).alias("root")
+    )
     for it in range(n_iters):
-        iterations += 1
-        hop = m.select(F.col("id").alias("h_id"), F.col("anc").alias("h_anc"))
+        done = it + 1
+        hop = m.select(
+            F.col("id").alias("h_id"), F.col("anc").alias("h_anc"), F.col("root").alias("h_root")
+        )
         stepped = (
             m.join(hop, m["anc"] == hop["h_id"], "left")
             .select(
                 m["id"],
                 m["anc"].alias("prev_anc"),
                 F.coalesce(hop["h_anc"], m["anc"]).alias("anc"),
+                m["root"],
+                F.coalesce(~hop["h_root"], F.lit(False)).alias("in_cycle"),
             )
         )
-        if (it + 1) % check_every != 0 and it + 1 < n_iters:
+        if done % check_every != 0 and done < n_iters:
             # no checkpoint between checks: the chained self-join plan
             # deduplicates at runtime (ReusedExchange computes each round's
             # shuffle once), and skipping the per-round block-store write
             # cuts ~40% off the loop. Lineage depth between checkpoints is
             # bounded by check_every, so analysis cost stays flat.
-            m = stepped.select("id", "anc")
+            m = stepped.select("id", "anc", "root")
             continue
         stepped = _materialize(stepped)
-        m = stepped.select("id", "anc")
+        m = stepped.select("id", "anc", "root")
         aggs = [
             F.sum((F.col("prev_anc") != F.col("anc")).cast("long")).alias("changed"),
             F.count(F.lit(1)).alias("n"),
@@ -324,54 +364,91 @@ def _rollup_edges(
                 f"input (reference hard-fails these too)"
             )
         if n_changed == 0:
-            break
+            # every row has settled, so every in_cycle flag is final
+            return RollupResult(_mapping(stepped), done, _flags=stepped)
+        if 2 * n_changed <= local_threshold:
+            final = _finish_moving_rows(stepped, n_iters - done)
+            return RollupResult(_mapping(final), n_iters, _flags=final)
 
-    mapping = m.select(F.col("id"), F.col("anc").alias("ultimate_parent"))
-    return RollupResult(
-        mapping=mapping,
-        iterations=iterations,
-        _m0=m0,
+    return RollupResult(_mapping(m), n_iters, _m0=m0)
+
+
+def _mapping(state: DataFrame) -> DataFrame:
+    return state.select(F.col("id"), F.col("anc").alias("ultimate_parent"))
+
+
+def _finish_moving_rows(state: DataFrame, k: int) -> DataFrame:
+    """The last ``k`` rounds for the rows of ``state`` (a checked round)
+    whose ancestor changed in that round, in one task: those rows plus
+    the settled rows they point at go to :func:`_finish_in_one_task`, and
+    its output replaces their state through a broadcast join — at most
+    ``local_threshold`` rows, by the caller's switch. The result is
+    checkpointed with ``in_cycle`` final on every row."""
+    moving = F.coalesce(F.col("prev_anc") != F.col("anc"), F.lit(False))
+    targets = state.filter(moving).select(F.col("anc").alias("t_id"))
+    rows = state.filter(moving).select(
+        "id", "anc", F.lit(None).cast("boolean").alias("in_cycle")
+    ).unionByName(
+        state.filter(~moving)
+        .join(F.broadcast(targets), F.col("id") == F.col("t_id"), "left_semi")
+        .select("id", "anc", "in_cycle")
     )
+    finished = _finish_in_one_task(rows, k).select(
+        F.col("id").alias("t_id"), F.col("anc").alias("t_anc"), F.col("in_cycle").alias("t_cyc")
+    )
+    final = state.join(F.broadcast(finished), state["id"] == finished["t_id"], "left").select(
+        "id",
+        F.coalesce("t_anc", "anc").alias("anc"),
+        F.coalesce("t_cyc", "in_cycle").alias("in_cycle"),
+    )
+    return _materialize(final)
 
 
-def _ultimate_parent_single_task(m: DataFrame, n_iters: int) -> RollupResult:
-    """Small-input strategy: the identical pointer-doubling recurrence,
-    vectorized in numpy inside ONE executor task.
+def _finish_in_one_task(rows: DataFrame, k: int) -> DataFrame:
+    """Run ``k`` more pointer-doubling rounds for ``rows`` vectorized in
+    numpy inside ONE executor task, and flag each row ``in_cycle``.
+
+    ``rows`` is (id, anc, in_cycle): every row still to resolve, with
+    ``in_cycle`` null, plus every row one of them points at. Those are
+    settled — their ancestor is a fixed point — and their ``in_cycle`` is
+    already the flag of that ancestor; they come back unchanged. The
+    single-task route passes every row at round 0, with only the roots
+    settled; the doubling route passes the rows still moving at a check.
 
     Equivalence to the distributed loop is by construction, not analogy:
-    the node space is ids ∪ parents with parent-only nodes as self-loops
-    (exactly the left-join's "absent parent is terminal" coalesce), and
-    the ancestor array steps ``anc = anc[anc]`` for the same
-    ``n_iters = ⌈log2 max_depth⌉`` rounds the distributed loop is
-    budgeted for. Doubling past a fixpoint is idempotent, so skipping the
-    early-exit changes nothing; cycle nodes rotate to the same
-    (2^n_iters mod cycle_len)-th successor either way. Null parents get
-    the distributed left-join's exact semantics: the node itself resolves
-    to null (a null anc joins nothing, so it can never change), while
-    chains running THROUGH the node stop at it (its children coalesce
-    back to their own anc). Duplicate ids raise the same
-    ``DuplicateIdError`` the distributed growth guard raises — as a
-    BACKSTOP only: the driver-side routing gate always runs first on
-    this path and raises a catchable DuplicateIdError; if the in-executor
-    check ever fired directly it would surface as a Spark task failure
-    wrapping the error, not as a driver-catchable exception. The data
-    never touches the driver — ``mapInPandas`` runs the
-    resolve on an executor, Arrow-batched, and the result is lazily
-    checkpointed for its two consumers (attach join, cycle analysis).
+    the node space is ids ∪ ancestors with every node outside ``rows`` a
+    self-loop (exactly the left-join's "absent id is terminal" coalesce,
+    and exact for the ids left out, since only a settled row points at
+    one, and settled rows point at fixed points), and the ancestor array
+    steps ``anc = anc[anc]`` ``k`` times. Doubling past a fixpoint is
+    idempotent, so skipping the early exit changes nothing; cycle nodes
+    rotate to the same (2^rounds mod cycle_len)-th successor either way.
+    Null ancestors get the distributed left-join's exact semantics: the
+    row itself resolves to null (a null anc joins nothing, so it can never
+    change), while chains running THROUGH the node stop at it (its
+    children coalesce back to their own anc).
 
-    The kernel also flags each id ``in_cycle`` exactly as the doubling
-    strategy's :attr:`RollupResult.n_in_cycle` joins count it: the resolved
-    ancestor has an edge of its own that is not a self-loop (a null parent
-    is not one). An id that itself resolves to null is never flagged —
-    the joins cannot match a null ancestor — so ``n_in_cycle`` is one sum
-    over the checkpoint.
+    ``in_cycle`` is :attr:`RollupResult.n_in_cycle`'s test: the resolved
+    ancestor is an id whose own edge is not a non-null self-loop. Every id
+    in ``rows`` is such a node (a root never moves), except a settled
+    self-map, whose flag is given — as is the flag of each settled row's
+    ancestor, inside ``rows`` or not. Any other node is not an id. A row
+    that resolves to null is never flagged.
+
+    Duplicate ids raise the same ``DuplicateIdError`` the distributed
+    growth guard raises — as a BACKSTOP only: the driver-side gate always
+    runs first and raises a catchable DuplicateIdError; if the
+    in-executor check ever fired directly it would surface as a Spark task
+    failure wrapping the error. The data never touches the driver —
+    ``mapInPandas`` runs on an executor, Arrow-batched; the output schema
+    follows the input's id type.
     """
     import numpy as np
     import pandas as pd
 
-    k = n_iters
     out_schema = T.StructType(
-        [*m.schema.fields, T.StructField("in_cycle", T.BooleanType(), False)]
+        [rows.schema["id"], rows.schema["anc"],
+         T.StructField("in_cycle", T.BooleanType(), False)]
     )
 
     def resolve(batches):
@@ -384,50 +461,47 @@ def _ultimate_parent_single_task(m: DataFrame, n_iters: int) -> RollupResult:
         if dup_mask.any():
             sample = ids[dup_mask].head(5).tolist()
             raise DuplicateIdError(f"Duplicate ID(s): {sample}")
-        both = pd.concat([ids, pdf["anc"]], ignore_index=True)
-        codes, uniques = pd.factorize(both)
+        codes, uniques = pd.factorize(pd.concat([ids, pdf["anc"]], ignore_index=True))
         n = len(pdf)
         id_codes = codes[:n]
-        parent_codes = codes[n:].copy()
-        # factorize codes null parents as -1, which numpy indexing would
-        # read as "last element" — an arbitrary unrelated node. Match the
-        # distributed left-join instead: a null-parent node acts as a
+        anc_codes = codes[n:].copy()
+        # factorize codes null as -1, which numpy indexing would read as
+        # "last element" — an arbitrary unrelated node. Match the
+        # distributed left-join instead: a null-anc node acts as a
         # terminal for chains passing through it (self-loop in the array)
         # and resolves to null itself (restored after the doubling).
-        null_parent = parent_codes < 0
-        parent_codes[null_parent] = id_codes[null_parent]
-        anc = np.arange(len(uniques), dtype=np.int64)  # terminals: self
-        anc[id_codes] = parent_codes
+        null_anc = anc_codes < 0
+        anc_codes[null_anc] = id_codes[null_anc]
+        anc = np.arange(len(uniques), dtype=np.int64)  # outside rows: self
+        anc[id_codes] = anc_codes
         for _ in range(k):
             anc = anc[anc]
         resolved = anc[id_codes]
-        has_edge = np.zeros(len(uniques), dtype=bool)
-        has_edge[id_codes] = True
-        rooted = np.zeros(len(uniques), dtype=bool)
-        rooted[id_codes] = (parent_codes == id_codes) & ~null_parent
-        in_cycle = has_edge[resolved] & ~rooted[resolved] & ~null_parent
+        flag = np.zeros(len(uniques), dtype=bool)
+        flag[id_codes] = True
+        given = pdf["in_cycle"].notna().to_numpy() & ~null_anc
+        flag[anc_codes[given]] = pdf["in_cycle"].to_numpy()[given].astype(bool)
         roots = np.asarray(uniques)[resolved].astype(object)
-        roots[null_parent] = None
-        yield pd.DataFrame({"id": ids, "anc": roots, "in_cycle": in_cycle})
+        roots[null_anc] = None
+        yield pd.DataFrame(
+            {"id": ids, "anc": roots, "in_cycle": flag[resolved] & ~null_anc}
+        )
 
-    out = m.coalesce(1).mapInPandas(resolve, schema=out_schema)
-    out = out.localCheckpoint(eager=False)
-    mapping = out.select(F.col("id"), F.col("anc").alias("ultimate_parent"))
-    return RollupResult(
-        mapping=mapping, iterations=k, strategy="single-task", _flags=out
-    )
+    return rows.coalesce(1).mapInPandas(resolve, schema=out_schema)
 
 
-def attach_ultimate_parent(ror: DataFrame, mapping: DataFrame) -> DataFrame:
+def attach_ultimate_parent(ror: DataFrame, result: RollupResult) -> DataFrame:
     """Append the derived ``ultimate_parent`` column to full records (T1).
 
-    The mapping is two narrow columns — broadcast it so the full-payload
-    side never shuffles (the reference does the same thing as a driver-side
-    dict lookup, get_ultimate_parent.py:84-88).
+    A single-task mapping holds at most ``local_threshold`` rows, so it is
+    broadcast and the full-payload side never shuffles (the reference does
+    the same thing as a driver-side dict lookup, get_ultimate_parent.py:
+    84-88). A doubling-route mapping has every id — past Spark's broadcast
+    limit at 100 TB — so the planner and AQE choose that join.
     """
-    joined = ror.join(
-        F.broadcast(mapping), ror["id"] == mapping["id"], "left"
-    ).drop(mapping["id"])
+    mapping = result.mapping
+    right = F.broadcast(mapping) if result.strategy == "single-task" else mapping
+    joined = ror.join(right, ror["id"] == mapping["id"], "left").drop(mapping["id"])
     # REQUIRED semantics (schemas/ror.json:215-220): never null — ids missing
     # from the mapping (shouldn't happen; every input id is mapped) fall back
     # to self.

@@ -183,7 +183,8 @@ class RorPipeline:
     def add_ultimate_parent(self, ror: DataFrame) -> DataFrame:
         """The rollup kernel: duplicate-id hard gate → adaptive rollup
         (single-task doubling at registry scale, distributed pointer-
-        doubling fixpoint above the size threshold) → broadcast join-back;
+        doubling rounds above the size threshold until the moving rows
+        fit one task) → join-back, broadcast for a single-task mapping;
         cycles alert but don't fail (get_ultimate_parent.py semantics,
         SURVEY §2.2). The gate's edges and counts feed the router, so
         routing runs no job of its own; a frame other than the one
@@ -208,7 +209,7 @@ class RorPipeline:
                 f"rollup: {result.n_in_cycle} id(s) did not converge to a "
                 f"root (cycle or depth cap) — kept an in-chain ancestor"
             )
-        return attach_ultimate_parent(ror, result.mapping)
+        return attach_ultimate_parent(ror, result)
 
     def load_staging(self, df: DataFrame) -> None:
         """Staging write with INLINE quality metrics: an Observation rides

@@ -6,6 +6,12 @@ duplicate ids."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+import math
+import os
+import random
+
 import pytest
 
 from ror_etl_spark.operators.rollup import (
@@ -24,7 +30,7 @@ def _mapping(result):
 # every kernel-semantics test runs on BOTH physical strategies: the
 # distributed pointer-doubling fixpoint (local_threshold=0) and the
 # adaptive single-task numpy path any input this small routes to by
-# default (see _ultimate_parent_single_task)
+# default (see _finish_in_one_task)
 BOTH_PATHS = pytest.mark.parametrize(
     "lt", [0, 1_000_000], ids=["distributed", "single-task"]
 )
@@ -143,8 +149,7 @@ def test_attach_ultimate_parent_required_nonnull(spark):
         [("A", [("B", "l", "parent")]), ("B", []), ("ORPHAN", [])], ROR_SCHEMA
     )
     edges = extract_parent_edges(ror)
-    mapping = ultimate_parent(edges).mapping
-    out = attach_ultimate_parent(ror, mapping)
+    out = attach_ultimate_parent(ror, ultimate_parent(edges))
     vals = {r["id"]: r["ultimate_parent"] for r in out.collect()}
     assert vals == {"A": "B", "B": "B", "ORPHAN": "ORPHAN"}
     # REQUIRED column semantics: never null (schemas/ror.json:215-220)
@@ -224,3 +229,214 @@ def test_small_input_routes_to_single_task(spark):
     assert _mapping(adaptive) == {"A": "B", "B": "B"}
     pinned = ultimate_parent(edges, local_threshold=0)
     assert pinned.strategy == "doubling"
+
+
+# --- the one-task finish of the doubling route ------------------------------
+#
+# Above local_threshold the doubling rounds run distributed until a check
+# finds that twice the rows still moving fit one task; the remaining rounds
+# then run in that task. The parity tests below compare it with the pinned
+# distributed loop (local_threshold=0) on the same input.
+
+
+def _changed_per_round(edges, rounds):
+    """The pinned loop's ``changed`` count after each doubling round,
+    replayed in Python: a row's ancestor steps to its ancestor's ancestor
+    when that is an id with a non-null ancestor (the left join's
+    coalesce)."""
+    anc = dict(edges)
+    changed = []
+    for _ in range(rounds):
+        prev = anc
+        anc = {
+            i: prev[a] if a in prev and prev[a] is not None else a
+            for i, a in prev.items()
+        }
+        changed.append(sum(anc[i] != prev[i] for i in anc))
+    return changed
+
+
+def _switch_round(edges, rounds, check_every, local_threshold):
+    """The check round at which the one-task finish takes over, or None."""
+    for r, c in enumerate(_changed_per_round(edges, rounds), start=1):
+        if (r % check_every == 0 or r == rounds) and 0 < 2 * c <= local_threshold:
+            return r
+    return None
+
+
+def _fuzz_edges(seed, long_ids):
+    """A seeded forest of 30-400 ids: a 2-cycle (it collapses to self-maps
+    after one round), a 3-cycle (it never settles, so the pinned loop
+    spends its whole budget), a chain 9-24 deep that is still moving at
+    the checks of rounds 1-3 and ends at a root, a null parent, a missing
+    parent or a cycle, and the rest roots, null parents, missing parents
+    and trees under any earlier row."""
+    rng = random.Random(seed)
+    n = rng.randint(30, 400)
+    parent = {0: 1, 1: 0, 2: 3, 3: 4, 4: 2}
+    depth = rng.randint(9, min(24, n - 6))
+    for i in range(5, 5 + depth):
+        parent[i] = i + 1
+    end = 5 + depth
+    parent[end] = rng.choice([end, None, n, 0, 2])
+    for i in range(end + 1, n):
+        u = rng.random()
+        if u < 0.3:
+            parent[i] = i
+        elif u < 0.35:
+            parent[i] = None
+        elif u < 0.4:
+            parent[i] = n + rng.randrange(3)  # not an id
+        else:
+            parent[i] = rng.randrange(i)
+    if long_ids:
+        name = lambda i: None if i is None else 1000 + i  # noqa: E731
+    else:
+        name = lambda i: None if i is None else f"https://ror.org/{i:05d}"  # noqa: E731
+    rows = [(name(i), name(p)) for i, p in parent.items()]
+    rng.shuffle(rows)
+    return rows
+
+
+def _tail_and_pinned(spark, rows, id_type, check_every, max_depth=200):
+    """Run the rollup with local_threshold just below the row count and
+    pinned; assert the one-task finish took over with rounds left and gave
+    the pinned loop's mapping (schema included) and n_in_cycle."""
+    rounds = math.ceil(math.log2(max_depth))
+    lt = len(rows) - 1
+    switch = _switch_round(rows, rounds, check_every, lt)
+    assert switch is not None and switch < rounds, (switch, rounds)
+    edges = spark.createDataFrame(rows, f"id {id_type}, parent {id_type}")
+    pinned = ultimate_parent(edges, max_depth, check_every, local_threshold=0)
+    tail = ultimate_parent(edges, max_depth, check_every, local_threshold=lt)
+    assert tail.strategy == pinned.strategy == "doubling"
+    assert tail.mapping.schema == pinned.mapping.schema
+    assert _mapping(tail) == _mapping(pinned)
+    assert tail.n_in_cycle == pinned.n_in_cycle
+    assert tail.iterations == rounds
+    return tail, pinned
+
+
+@pytest.mark.parametrize("check_every", [1, 2, 3])
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_one_task_finish_matches_pinned_loop(spark, id_type, check_every):
+    for seed in range(3):
+        rows = _fuzz_edges(100 * check_every + seed, id_type == "long")
+        tail, pinned = _tail_and_pinned(spark, rows, id_type, check_every)
+        # the 3-cycle never settles, so the pinned loop runs its whole
+        # budget too
+        assert tail.iterations == pinned.iterations
+
+
+def test_one_task_finish_through_null_parent(spark):
+    # c4 is still moving after round 1 and points at A, whose parent is
+    # null: the task must stop the chain at A (pd.factorize codes the null
+    # as -1, which numpy would read as the last node) and leave A null.
+    rows = [(f"c{i}", f"c{i + 1}") for i in range(5)] + [("c5", "A"), ("A", None)]
+    rows += [(f"r{i}", f"r{i}") for i in range(10)]
+    tail, pinned = _tail_and_pinned(spark, rows, "string", check_every=1)
+    m = _mapping(tail)
+    assert m["A"] is None and all(m[f"c{i}"] == "A" for i in range(6))
+    assert tail.n_in_cycle == 6
+    # nothing here cycles: the pinned loop stops at the first check that
+    # reads no change, while the one task runs out its rounds unchecked
+    # and reports the whole budget, as the single-task route does
+    assert (pinned.iterations, tail.iterations) == (4, 8)
+
+
+def test_one_task_finish_counts_collapsed_two_cycle(spark):
+    # X⇄Y resolves to X→X, Y→Y after one round and stops moving, yet both
+    # are in a cycle: the rows still moving at the end (the 3-cycle and
+    # the chain under Y) are not the n_in_cycle set.
+    rows = [("X", "Y"), ("Y", "X"), ("P", "Q"), ("Q", "R"), ("R", "P")]
+    rows += [(f"d{i}", f"d{i + 1}") for i in range(5)] + [("d5", "Y")]
+    rows += [(f"r{i}", f"r{i}") for i in range(20)]
+    tail, _ = _tail_and_pinned(spark, rows, "string", check_every=2)
+    m = _mapping(tail)
+    assert (m["X"], m["Y"]) == ("X", "Y")
+    assert tail.n_in_cycle == 11
+
+
+def test_one_task_finish_never_sees_duplicate_ids(spark):
+    # the routing job's counts raise the driver-side error before any
+    # round, so no one-task finish ever runs on duplicate ids
+    rows = [(f"c{i}", f"c{i + 1}") for i in range(20)] + [("c20", "c20"), ("c3", "c3")]
+    edges = spark.createDataFrame(rows, "id string, parent string")
+    with pytest.raises(DuplicateIdError, match="c3"):
+        ultimate_parent(edges, check_every=2, local_threshold=len(rows) - 1)
+
+
+def _jobs(spark, name, fn):
+    """Spark jobs that ``fn()`` runs, and its result."""
+    sc = spark.sparkContext
+    group = f"rollup-{name}-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_one_task_finish_job_count(spark):
+    """2k rows over local_threshold 1k: the moving rows fit at the first
+    check (after round 2), so the call and the mapping's first read run
+    in a fixed handful of jobs, not one shuffle round per doubling round,
+    and n_in_cycle is one sum over the final checkpoint."""
+    rng = random.Random(7)
+    n = 2000
+    parent = {i: i for i in range(0, n, 3)}  # roots
+    parent.update({i: rng.randrange(0, n, 3) for i in range(1, n, 3)})
+    parent.update({i: i - 1 for i in range(2, n, 3)})  # depth 2
+    parent.update({0: 3, 3: 6, 6: 0})  # a 3-cycle: the budget runs out
+    rows = [(f"o{i}", f"o{p}") for i, p in parent.items()]
+    assert _switch_round(rows, 8, 2, 1000) == 2
+    edges = spark.createDataFrame(rows, "id string, parent string")
+    jobs, res = _jobs(
+        spark, "call", lambda: ultimate_parent(edges, check_every=2, local_threshold=1000)
+    )
+    read_jobs, _ = _jobs(spark, "read", lambda: res.mapping.collect())
+    cycle_jobs, n_in_cycle = _jobs(spark, "n_in_cycle", lambda: res.n_in_cycle)
+    assert (res.strategy, res.iterations) == ("doubling", 8)
+    def under_cycle(i):
+        while parent[i] != i:
+            if i in (0, 3, 6):
+                return True
+            i = parent[i]
+        return False
+
+    assert n_in_cycle == sum(map(under_cycle, parent))
+    # measured 14 + 1: the routing count, two rounds and their check, the
+    # one-task finish; the pinned loop needs 37 + 2, and 9 for n_in_cycle
+    assert jobs + read_jobs <= 15, (jobs, read_jobs)
+    assert cycle_jobs <= 2, cycle_jobs
+
+
+def _plan(df):
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+@pytest.mark.parametrize(
+    "lt, broadcast", [(0, False), (10**6, True)], ids=["doubling", "single-task"]
+)
+def test_attach_broadcasts_only_a_single_task_mapping(spark, lt, broadcast):
+    # a doubling-route mapping holds every id, past what a broadcast can
+    # carry at scale: with size-based broadcasts off the planner must not
+    # get one forced; a single-task mapping (≤ local_threshold rows) keeps
+    # its broadcast hint
+    ror = spark.createDataFrame(
+        [("A", [("B", "l", "parent")]), ("B", [])], ROR_SCHEMA
+    )
+    res = ultimate_parent(extract_parent_edges(ror), local_threshold=lt)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _plan(attach_ultimate_parent(ror, res))
+    finally:
+        spark.conf.set(key, old)
+    assert ("BroadcastHashJoin" in plan) == broadcast, plan
+    assert ("BroadcastExchange" in plan) == broadcast, plan

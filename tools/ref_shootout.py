@@ -109,7 +109,7 @@ def spark_style(spark, jsonl_in: str, parquet_out: str) -> float:
         # depth bounds, and the shootout should measure the shipped
         # configuration, not the conservative default
         result = ultimate_parent(extract_parent_edges(ror), check_every=2)
-        out = attach_ultimate_parent(ror, result.mapping)
+        out = attach_ultimate_parent(ror, result)
         out.write.mode("overwrite").parquet(parquet_out)
     finally:
         ror.unpersist()
