@@ -16,8 +16,11 @@ The reference walks the chain per-id recursively on one machine with the
 whole dataset in a dict — O(n·depth) work, O(n) driver memory. This
 implementation is **pointer doubling**: each round substitutes every
 node's current ancestor with that ancestor's ancestor, so reachable depth
-doubles per round — ⌈log2(depth)⌉ rounds instead of depth, no driver
-materialization, memoization implicit.
+doubles per round — ⌈log2(depth)⌉ rounds instead of depth, memoization
+implicit. Only rows that fit ``local_threshold`` ever pass through the
+driver: the one task's output, which a broadcast join carries on (Spark
+builds a broadcast on the driver), and the single-task route run on
+edges the driver already holds (``rollup_on_driver``).
 
 Scale notes (100 TB design):
 - one route: distributed doubling rounds while the moving set is larger
@@ -58,11 +61,21 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import math
+import sys
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Spark pickles the one-task kernel into a Python worker, which may not
+# find this package on its path (nothing ships it there). By value, the
+# function travels with its code and needs only numpy and pyarrow.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 @dataclass
@@ -287,7 +300,7 @@ def _rollup_edges(
     caller ran anyway, such as the pipeline's input gate — so routing
     costs no job here. ``None`` starts the distributed loop, whose first
     convergence check then counts the ids."""
-    n_iters = max(1, math.ceil(math.log2(max(2, max_depth))))
+    n_iters = _rounds(max_depth)
     check_every = max(1, check_every)
     if local_threshold is None:
         local_threshold = _conf_local_threshold(m)
@@ -373,6 +386,11 @@ def _rollup_edges(
     return RollupResult(_mapping(m), n_iters, _m0=m0)
 
 
+def _rounds(max_depth: int) -> int:
+    """Doubling rounds that cover chains ``max_depth`` deep."""
+    return max(1, math.ceil(math.log2(max(2, max_depth))))
+
+
 def _mapping(state: DataFrame) -> DataFrame:
     return state.select(F.col("id"), F.col("anc").alias("ultimate_parent"))
 
@@ -405,8 +423,9 @@ def _finish_moving_rows(state: DataFrame, k: int) -> DataFrame:
 
 
 def _finish_in_one_task(rows: DataFrame, k: int) -> DataFrame:
-    """Run ``k`` more pointer-doubling rounds for ``rows`` vectorized in
-    numpy inside ONE executor task, and flag each row ``in_cycle``.
+    """Run ``k`` more pointer-doubling rounds for ``rows`` inside ONE
+    executor task (:func:`_double_pointers`), and flag each row
+    ``in_cycle``.
 
     ``rows`` is (id, anc, in_cycle): every row still to resolve, with
     ``in_cycle`` null, plus every row one of them points at. Those are
@@ -414,80 +433,118 @@ def _finish_in_one_task(rows: DataFrame, k: int) -> DataFrame:
     already the flag of that ancestor; they come back unchanged. The
     single-task route passes every row at round 0, with only the roots
     settled; the doubling route passes the rows still moving at a check.
-
-    Equivalence to the distributed loop is by construction, not analogy:
-    the node space is ids ∪ ancestors with every node outside ``rows`` a
-    self-loop (exactly the left-join's "absent id is terminal" coalesce,
-    and exact for the ids left out, since only a settled row points at
-    one, and settled rows point at fixed points), and the ancestor array
-    steps ``anc = anc[anc]`` ``k`` times. Doubling past a fixpoint is
-    idempotent, so skipping the early exit changes nothing; cycle nodes
-    rotate to the same (2^rounds mod cycle_len)-th successor either way.
-    Null ancestors get the distributed left-join's exact semantics: the
-    row itself resolves to null (a null anc joins nothing, so it can never
-    change), while chains running THROUGH the node stop at it (its
-    children coalesce back to their own anc).
-
-    ``in_cycle`` is :attr:`RollupResult.n_in_cycle`'s test: the resolved
-    ancestor is an id whose own edge is not a non-null self-loop. Every id
-    in ``rows`` is such a node (a root never moves), except a settled
-    self-map, whose flag is given — as is the flag of each settled row's
-    ancestor, inside ``rows`` or not. Any other node is not an id. A row
-    that resolves to null is never flagged.
-
-    Duplicate ids raise the same ``DuplicateIdError`` the distributed
-    growth guard raises — as a BACKSTOP only: the driver-side gate always
-    runs first and raises a catchable DuplicateIdError; if the
-    in-executor check ever fired directly it would surface as a Spark task
-    failure wrapping the error. The data never touches the driver —
-    ``mapInPandas`` runs on an executor, Arrow-batched; the output schema
-    follows the input's id type.
+    ``mapInArrow`` hands the task Arrow batches, so long ids stay exact
+    (a pandas batch would carry a nullable long column as float64); the
+    output schema follows the input's id type.
     """
-    import numpy as np
-    import pandas as pd
-
     out_schema = T.StructType(
         [rows.schema["id"], rows.schema["anc"],
          T.StructField("in_cycle", T.BooleanType(), False)]
     )
+    return rows.coalesce(1).mapInArrow(_one_task_fn(k), schema=out_schema)
+
+
+def _one_task_fn(k: int):
+    """The function ``mapInArrow`` ships to the one task: every batch of
+    (id, anc, in_cycle) in, one batch of the resolved rows out. This
+    module is pickled by value (see the top of the file), so the Python
+    worker needs numpy and pyarrow but never imports this package."""
 
     def resolve(batches):
-        pdfs = list(batches)
-        if not pdfs:
+        batches = list(batches)
+        if not batches:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        ids = pdf["id"]
-        dup_mask = ids.duplicated()
-        if dup_mask.any():
-            sample = ids[dup_mask].head(5).tolist()
-            raise DuplicateIdError(f"Duplicate ID(s): {sample}")
-        codes, uniques = pd.factorize(pd.concat([ids, pdf["anc"]], ignore_index=True))
-        n = len(pdf)
-        id_codes = codes[:n]
-        anc_codes = codes[n:].copy()
-        # factorize codes null as -1, which numpy indexing would read as
-        # "last element" — an arbitrary unrelated node. Match the
-        # distributed left-join instead: a null-anc node acts as a
-        # terminal for chains passing through it (self-loop in the array)
-        # and resolves to null itself (restored after the doubling).
-        null_anc = anc_codes < 0
-        anc_codes[null_anc] = id_codes[null_anc]
-        anc = np.arange(len(uniques), dtype=np.int64)  # outside rows: self
-        anc[id_codes] = anc_codes
-        for _ in range(k):
-            anc = anc[anc]
-        resolved = anc[id_codes]
-        flag = np.zeros(len(uniques), dtype=bool)
-        flag[id_codes] = True
-        given = pdf["in_cycle"].notna().to_numpy() & ~null_anc
-        flag[anc_codes[given]] = pdf["in_cycle"].to_numpy()[given].astype(bool)
-        roots = np.asarray(uniques)[resolved].astype(object)
-        roots[null_anc] = None
-        yield pd.DataFrame(
-            {"id": ids, "anc": roots, "in_cycle": flag[resolved] & ~null_anc}
+        table = pa.Table.from_batches(batches)
+        ids = table["id"].combine_chunks()
+        roots, in_cycle = _double_pointers(
+            ids, table["anc"].combine_chunks(), table["in_cycle"].combine_chunks(), k
         )
+        yield pa.RecordBatch.from_arrays([ids, roots, in_cycle], ["id", "anc", "in_cycle"])
 
-    return rows.coalesce(1).mapInPandas(resolve, schema=out_schema)
+    return resolve
+
+
+def _double_pointers(
+    ids: pa.Array, ancs: pa.Array, in_cycle: pa.Array, k: int
+) -> tuple[pa.Array, pa.Array]:
+    """``k`` pointer-doubling rounds over the edges ``ids`` → ``ancs``,
+    vectorized in numpy: the ancestor each id resolves to, and whether
+    that ancestor is in a cycle. The one kernel of both single-task
+    routes: an executor task runs it for ``_finish_in_one_task``, the
+    driver for ``rollup_on_driver``.
+
+    ``in_cycle`` is null for a row still to resolve and, for a settled
+    row (its ancestor is a fixed point), the flag of that ancestor.
+
+    Equivalence to the distributed loop is by construction, not analogy:
+    the node space is ids ∪ ancestors with every node outside the ids a
+    self-loop (exactly the left-join's "absent id is terminal" coalesce,
+    and exact for the ids a caller leaves out, since only a settled row
+    points at one, and settled rows point at fixed points), and the
+    ancestor array steps ``anc = anc[anc]`` ``k`` times. Doubling past a
+    fixpoint is idempotent, so skipping the early exit changes nothing;
+    cycle nodes rotate to the same (2^rounds mod cycle_len)-th successor
+    either way. Null ancestors get the distributed left-join's exact
+    semantics: the row itself resolves to null (a null anc joins nothing,
+    so it can never change), while chains running THROUGH the node stop at
+    it (its children coalesce back to their own anc).
+
+    The ``in_cycle`` result is :attr:`RollupResult.n_in_cycle`'s test:
+    the resolved ancestor is an id whose own edge is not a non-null
+    self-loop. Every id here is such a node (a root never moves), except a
+    settled self-map, whose flag is given — as is the flag of each settled
+    row's ancestor, among the ids or not. Any other node is not an id. A
+    row that resolves to null is never flagged.
+
+    Duplicate ids raise a plain ``ValueError`` — a BACKSTOP only: every
+    caller's gate counts the ids first and raises the catchable
+    ``DuplicateIdError``, and an error raised in an executor task reaches
+    the driver wrapped in a Spark task failure anyway.
+    """
+    n = len(ids)
+    encoded = pc.dictionary_encode(pa.concat_arrays([ids, ancs]))
+    nodes = encoded.dictionary
+    codes = pc.fill_null(encoded.indices, -1).to_numpy().astype(np.int64)
+    id_codes = codes[:n]
+    anc_codes = codes[n:].copy()
+    repeated = np.bincount(id_codes, minlength=len(nodes)) > 1
+    if repeated.any():
+        sample = nodes.take(np.flatnonzero(repeated)[:5]).to_pylist()
+        raise ValueError(f"Duplicate ID(s): {sample}")
+    # a null code (-1) would index the last node — an arbitrary unrelated
+    # one. Match the distributed left-join instead: a null-anc node acts
+    # as a terminal for chains passing through it (self-loop in the
+    # array) and resolves to null itself (restored after the doubling).
+    null_anc = anc_codes < 0
+    anc_codes[null_anc] = id_codes[null_anc]
+    anc = np.arange(len(nodes), dtype=np.int64)  # not an id: self
+    anc[id_codes] = anc_codes
+    for _ in range(k):
+        anc = anc[anc]
+    resolved = anc[id_codes]
+    flag = np.zeros(len(nodes), dtype=bool)
+    flag[id_codes] = True
+    given = in_cycle.is_valid().to_numpy(zero_copy_only=False) & ~null_anc
+    flag[anc_codes[given]] = pc.fill_null(in_cycle, False).to_numpy(zero_copy_only=False)[given]
+    roots = nodes.take(pa.array(resolved, mask=null_anc))
+    return roots, pa.array(flag[resolved] & ~null_anc)
+
+
+def rollup_on_driver(spark: SparkSession, edges: pa.Table, max_depth: int = 200) -> RollupResult:
+    """The single-task route for (id, anc) edges already on the driver,
+    such as the gate ``sources.fetch`` computes while it writes the feed:
+    :func:`_double_pointers` runs here, and the mapping becomes a
+    DataFrame through ``createDataFrame``, with no Spark job. The caller
+    has checked the ids are distinct and at most ``local_threshold``."""
+    ids = edges["id"].combine_chunks()
+    ancs = edges["anc"].combine_chunks()
+    settled = pc.if_else(pc.equal(ids, ancs), False, pa.scalar(None, pa.bool_()))
+    n_iters = _rounds(max_depth)
+    roots, in_cycle = _double_pointers(ids, ancs, settled, n_iters)
+    mapping = spark.createDataFrame(pa.table({"id": ids, "ultimate_parent": roots}))
+    return RollupResult(
+        mapping, n_iters, "single-task", _n_in_cycle=int(pc.sum(in_cycle).as_py() or 0)
+    )
 
 
 def attach_ultimate_parent(ror: DataFrame, result: RollupResult) -> DataFrame:

@@ -3,11 +3,14 @@ DataFrame stages (reference: ror_dag.py task chain :228-238).
 
 Stage map (reference → here):
 - clear_tmp_dir (ror_dag.py:53-55)            → ``clear_tmp``
-- download (GKE pod running fetch.py)          → sources.fetch (driver-side)
+- download (GKE pod running fetch.py)          → sources.fetch (driver-side;
+                                                 also computes the gate)
 - load (ror_dag.py:166-175)                    → ``load_input``: schema-FAILFAST
-                                                 read + one gate scan (REQUIRED
-                                                 nulls, duplicate ids, edges)
-- add_ultimate_parent (get_ultimate_parent.py) → rollup operators (distributed)
+                                                 read + the gate (REQUIRED
+                                                 nulls, duplicate ids, edges):
+                                                 the fetch's, or one Spark scan
+- add_ultimate_parent (get_ultimate_parent.py) → rollup operators (driver or
+                                                 distributed, by size)
 - load_staging (ror_dag.py:166-175)            → overwrite parquet with inline
                                                  row/null metrics
 - checks (ror_dag.py:178-192)                  → ``check_unique_ids`` +
@@ -41,17 +44,23 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ror_etl_spark.operators.rollup import (
+    DuplicateIdError,
     RollupResult,
+    _conf_local_threshold,
     _parent_col,
     _raise_if_duplicate_ids,
     _rollup_edges,
     attach_ultimate_parent,
+    rollup_on_driver,
 )
+from ror_etl_spark.sources.fetch import read_gate
 from ror_etl_spark.sources.ror_schema import (
     ROR_INPUT_SCHEMA,
     TABLE_DESCRIPTION,
@@ -67,9 +76,11 @@ class CheckFailed(RuntimeError):
 
 @dataclass(frozen=True)
 class _Gate:
-    """What the input gate's one scan of the feed established."""
+    """What the input gate established about the feed."""
 
-    edges: DataFrame  # (id, anc): lazily checkpointed parent edges
+    # (id, anc) parent edges: lazily checkpointed by the Spark scan, or
+    # on the driver from the fetch's sidecar
+    edges: DataFrame | pa.Table
     n: int  # rows
     n_ids: int  # distinct ids
 
@@ -144,17 +155,46 @@ class RorPipeline:
 
     def load_input(self, jsonl_path: str) -> DataFrame:
         """Schema-enforced read: FAILFAST rejects shape/type mismatches the
-        way the BigQuery load does. The gate (``_scan_gate``) then rejects
-        REQUIRED nulls (Spark's reader can't — SURVEY §4.2) and duplicate
-        ids, in that order, from one scan; ``add_ultimate_parent`` reuses
-        what it found when handed the frame returned here."""
+        way the BigQuery load does. The gate then rejects REQUIRED nulls
+        (Spark's reader can't — SURVEY §4.2) and duplicate ids, in that
+        order; ``add_ultimate_parent`` reuses what it found when handed
+        the frame returned here.
+
+        The gate comes from the fetch when it can (``_fetched_gate``), at
+        no Spark job: the feed is then parsed once, by the staging write.
+        Any other feed, or one above the rollup's ``local_threshold``, is
+        gated by one Spark scan (``_scan_gate``), the 100 TB route."""
         df = (
             self.spark.read.schema(ROR_INPUT_SCHEMA)
             .option("mode", "FAILFAST")
             .json(jsonl_path)
         )
-        self._gate = (df, self._scan_gate(df))
+        gate = self._fetched_gate(df, jsonl_path)
+        self._gate = (df, gate if gate is not None else self._scan_gate(df))
         return df
+
+    def _fetched_gate(self, ror: DataFrame, jsonl_path: str) -> _Gate | None:
+        """The gate ``sources.fetch`` computed while it wrote this feed,
+        when it did and the feed fits the single-task rollup: its null
+        counts and edges raise what ``_scan_gate`` raises, with the same
+        messages, in the same order. None sends the feed to the scan.
+
+        The fetch vouches only for records whose gate columns have the
+        JSON types the schema declares, so Spark's typed read of them
+        cannot fail and reads the same ids, parents and nulls; a feed it
+        did not vouch for has no sidecar."""
+        fetched = read_gate(jsonl_path)
+        threshold = _conf_local_threshold(ror)
+        if fetched is None or threshold <= 0 or fetched.n > threshold:
+            return None
+        raise_required_nulls(fetched.null_counts)
+        ids = fetched.edges["id"]
+        n_ids = pc.count_distinct(ids).as_py()
+        if fetched.n > n_ids:
+            counts = pc.value_counts(ids)
+            repeated = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
+            raise DuplicateIdError(f"Duplicate ID(s): {repeated[:5].to_pylist()}")
+        return _Gate(fetched.edges, fetched.n, n_ids)
 
     def _scan_gate(self, ror: DataFrame) -> _Gate:
         """One narrow scan of ``ror``: (id, parent, one flag per REQUIRED
@@ -193,16 +233,22 @@ class RorPipeline:
             gate = self._gate[1]
         else:
             gate = self._scan_gate(ror)
-        # check_every=2 halves the convergence-aggregate jobs (each is a
-        # fixed ~0.3 s shuffle round locally); results are identical and
-        # the duplicate-explosion guard still fires at the first check.
-        # local_threshold stays on its adaptive default: the real ROR
-        # registry is ~110k orgs, which routes to the single-task strategy
-        # and beats the reference's in-memory walk outright (r6 shootout:
-        # kernel 2.04 s vs 2.94 s = 0.69x; the END-TO-END gated run is
-        # near-parity, 3.07-3.57 s vs 2.91-3.13 s — see NOTES round 6);
-        # a 100 TB input routes to the fixpoint.
-        result = _rollup_edges(gate.edges, (gate.n, gate.n_ids), check_every=2)
+        if isinstance(gate.edges, pa.Table):
+            # the fetch's gate: at most local_threshold rows, already on
+            # the driver, so the single-task kernel runs right here
+            result = rollup_on_driver(self.spark, gate.edges)
+        else:
+            # check_every=2 halves the convergence-aggregate jobs (each is
+            # a fixed ~0.3 s shuffle round locally); results are identical
+            # and the duplicate-explosion guard still fires at the first
+            # check. local_threshold stays on its adaptive default: the
+            # real ROR registry is ~110k orgs, which routes to the
+            # single-task strategy and beats the reference's in-memory
+            # walk outright (r6 shootout: kernel 2.04 s vs 2.94 s = 0.69x;
+            # the END-TO-END gated run is near-parity, 3.07-3.57 s vs
+            # 2.91-3.13 s — see NOTES round 6); a 100 TB input routes to
+            # the fixpoint.
+            result = _rollup_edges(gate.edges, (gate.n, gate.n_ids), check_every=2)
         self._rollup = result
         if result.n_in_cycle:
             self.alert(
@@ -314,13 +360,18 @@ class RorPipeline:
         """Full gated chain. Check failures raise BEFORE promotion; staging
         keeps the failed data (reference comment ror_dag.py:51-52).
 
-        The feed is parsed twice per run. The first parse is the gate's
-        narrow scan: id, parent and the REQUIRED-null flags, lazily
-        checkpointed and materialized by the one aggregate that runs the
-        null, row and distinct-id checks. The rollup reads its edges and
-        its routing counts from that checkpoint. The second parse is the
-        staging write, which joins the full records with the broadcast
-        mapping. The full records are deliberately not cached: an
+        A feed that ``sources.fetch`` wrote and vouched for is parsed
+        once per run, by the staging write: the fetch computed the gate
+        (ids, parent edges, REQUIRED-null counts) from the records it
+        decodes anyway, so ``load_input`` and the driver-side single-task
+        rollup run no Spark job, and the staging write joins the full
+        records with the broadcast mapping. Any other feed, or one above
+        the rollup's ``local_threshold``, is parsed twice: first by the
+        gate's narrow scan (id, parent and the REQUIRED-null flags,
+        lazily checkpointed and materialized by the one aggregate that
+        runs the null, row and distinct-id checks; the rollup reads its
+        edges and routing counts from that checkpoint), then by the
+        staging write. The full records are deliberately not cached: an
         end-to-end A/B at the shootout's 110k-org tier measured persist()
         slower (3.59 vs 3.16 s warm best-of-3), since materializing the
         nested record cache costs more than the re-parse it saves. At

@@ -168,24 +168,34 @@ def _nested(elem, path: str):
     return cur
 
 
+def required_paths(extra_scalars: list[str] | None = None) -> list[tuple[str, str | None, str]]:
+    """Each REQUIRED path as (the name ``RequiredFieldViolation`` reports,
+    the array it sits in or None for a top-level scalar, the field path
+    inside it), in the order :func:`required_null_flags` lists them."""
+    paths: list[tuple[str, str | None, str]] = [
+        (f"null:{col}", None, col) for col in REQUIRED_SCALARS + (extra_scalars or [])
+    ]
+    for arr, fields in REQUIRED_IN_ARRAYS.items():
+        paths += [(f"null:{arr}[].{path}", arr, path) for path in fields]
+    return paths
+
+
 def required_null_flags(extra_scalars: list[str] | None = None) -> dict[str, Column]:
     """One boolean per REQUIRED path, true on a row that violates it,
     keyed by the name ``RequiredFieldViolation`` reports. Top-level scalars
     test the column; array elements test ``exists(arr, elem-null)``."""
-    flags = {}
-    for col in REQUIRED_SCALARS + (extra_scalars or []):
-        flags[f"null:{col}"] = F.col(col).isNull()
 
     def make_pred(p: str):
         # factory keeps the lambda unary (pyspark treats default-arg
         # lambdas as its multi-arg higher-order-function form)
         return lambda elem: _nested(elem, p).isNull()
 
-    for arr, paths in REQUIRED_IN_ARRAYS.items():
-        for path in paths:
-            flags[f"null:{arr}[].{path}"] = F.col(arr).isNotNull() & F.exists(
-                F.col(arr), make_pred(path)
-            )
+    flags = {}
+    for name, arr, path in required_paths(extra_scalars):
+        if arr is None:
+            flags[name] = F.col(path).isNull()
+        else:
+            flags[name] = F.col(arr).isNotNull() & F.exists(F.col(arr), make_pred(path))
     return flags
 
 

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import shutil
 import zipfile
+from datetime import datetime
 
 import pytest
 
@@ -14,12 +16,16 @@ from ror_etl_spark.plans.ror_pipeline import CheckFailed, RorPipeline
 from ror_etl_spark.sources.fetch import (
     LocalDumpClient,
     fetch_to_jsonl,
+    gate_path,
+    gate_record,
     json_array_to_jsonl,
     pick_data_json,
+    read_gate,
 )
 from ror_etl_spark.sources.ror_schema import (
     ROR_INPUT_SCHEMA,
     RequiredFieldViolation,
+    required_paths,
     validate_required,
 )
 from ror_etl_spark.operators.rollup import DuplicateIdError
@@ -367,3 +373,398 @@ def test_cycle_alerts_but_pipeline_succeeds(spark, tmp_path):
     up = {r["id"]: r["ultimate_parent"]
           for r in spark.read.parquet(p.prod_path).collect()}
     assert set(up.values()) <= {"https://ror.org/x", "https://ror.org/y"}
+
+
+# --- the fetch's gate: both routes ----------------------------------------
+#
+# fetch_to_jsonl computes the input gate while it writes the feed and
+# commits it as a sidecar; load_input trusts it only for that same feed,
+# at or below the rollup's local_threshold. Deleting the sidecar sends the
+# same feed through the Spark scan, so each case below runs both routes.
+
+ROUTES = pytest.mark.parametrize("route", ["fetched", "scanned"])
+
+
+def _jobs(spark, name, fn):
+    """Spark jobs that ``fn()`` runs, and its result."""
+    sc = spark.sparkContext
+    group = f"pipeline-{name}-{os.getpid()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _fetch(tmp_path, orgs, route="fetched", name="ror.jsonl"):
+    """Fetch ``orgs`` as a zipped dump; the ``scanned`` route drops the
+    sidecar, so the pipeline gates the same feed with its Spark scan."""
+    dump_dir = tmp_path / f"dump-{name}"
+    dump_dir.mkdir()
+    feed = str(tmp_path / name)
+    fetch_to_jsonl(LocalDumpClient(_write_dump(dump_dir, orgs)), feed)
+    if route == "scanned" and os.path.exists(gate_path(feed)):
+        os.remove(gate_path(feed))
+    return feed
+
+
+def test_gate_record_reads_the_spark_gate_columns():
+    rels = [
+        {"id": "p1", "type": "PARENT"},
+        None,
+        {"id": "r", "type": "related"},
+        {"id": "p2", "type": "pArEnT"},
+        {"type": "parent"},  # a typeless or idless relationship
+    ]
+    assert gate_record({"id": "x", "relationships": rels[:4]}) == ("x", "p2", ())
+    # the last parent's id is null: coalesce to self, not to an earlier one
+    assert gate_record({"id": "x", "relationships": rels}) == ("x", "x", ())
+    assert gate_record({"relationships": None}) == (None, None, ())
+    loc = {"geonames_id": 1, "geonames_details": {"name": None, "lat": 1}}
+    _, _, nulls = gate_record(
+        {"id": "x", "names": [None], "locations": [loc], "links": []}
+    )
+    names = [name for name, _, _ in required_paths()]
+    assert [names[i] for i in nulls] == [
+        "null:names[].value",
+        "null:locations[].geonames_details.name",
+    ]
+    unvouched = [
+        [1],
+        {"id": 5},
+        {"id": "x", "relationships": [{"id": "p", "type": 5}]},
+        {"id": "x", "relationships": [{"id": 5, "type": "parent"}]},
+        {"id": "x", "relationships": {"id": "p", "type": "parent"}},
+        {"id": "x", "names": ["n"]},
+        {"id": "x", "names": [{"value": 5}]},
+        {"id": "x", "locations": [{"geonames_id": "1"}]},
+        {"id": "x", "locations": [{"geonames_id": True}]},
+        {"id": "x", "locations": [{"geonames_id": 1 << 63}]},
+        {"id": "x", "locations": [{"geonames_details": "Paris"}]},
+        {"id": "x", "locations": [{"geonames_details": {"lat": "1"}}]},
+        {"id": "x", "external_ids": [{"type": "grid", "all": "g"}]},
+    ]
+    for record in unvouched:
+        assert gate_record(record) is None, record
+
+
+def test_fetched_feed_gates_and_rolls_up_in_zero_jobs(spark, tmp_path):
+    """The fetch computed the gate, so the week's front runs no Spark job:
+    load_input reads the sidecar and the single-task kernel runs on the
+    driver. Compare test_gate_and_rollup_run_in_four_jobs, its Spark
+    route."""
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    jobs, _ = _jobs(spark, "fetched", lambda: p.add_ultimate_parent(p.load_input(feed)))
+    assert jobs == 0
+    assert p._rollup.strategy == "single-task" and p._rollup.n_in_cycle == 0
+
+
+@pytest.mark.parametrize("case", ["rewritten", "foreign", "over-threshold"])
+def test_spark_gates_a_feed_the_sidecar_does_not_vouch_for(spark, tmp_path, case):
+    from ror_etl_spark.operators.rollup import LOCAL_THRESHOLD_CONF
+
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    orgs = [ORG_A, ORG_B, ORG_C]
+    if case == "rewritten":
+        orgs = [ORG_A, ORG_B, ORG_C, ORG_D_NON_ASCII]
+        with open(feed, "w") as f:
+            f.write("\n".join(json.dumps(o) for o in orgs))
+    elif case == "foreign":
+        other = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C, ORG_D_NON_ASCII], name="other.jsonl")
+        shutil.copy(gate_path(other), gate_path(feed))
+    else:
+        spark.conf.set(LOCAL_THRESHOLD_CONF, "2")
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    try:
+        jobs, _ = _jobs(spark, case, lambda: p.load_input(feed))
+        result = p.run(feed)
+    finally:
+        spark.conf.unset(LOCAL_THRESHOLD_CONF)
+    assert jobs > 0
+    assert result["rows"] == len(orgs)
+    assert result["strategy"] == ("doubling" if case == "over-threshold" else "single-task")
+    up = {r["id"]: r["ultimate_parent"] for r in spark.read.parquet(p.prod_path).collect()}
+    assert set(up.values()) == {"https://ror.org/b"}
+
+
+def test_fetch_that_fails_keeps_the_feed_and_its_gate(tmp_path, monkeypatch):
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    before = (open(feed, "rb").read(), open(gate_path(feed), "rb").read())
+    truncated = tmp_path / "truncated.json"
+    truncated.write_text(json.dumps([ORG_A, ORG_B, ORG_D_NON_ASCII])[:-40])
+    with pytest.raises(json.JSONDecodeError):
+        fetch_to_jsonl(LocalDumpClient(str(truncated)), feed)
+    assert (open(feed, "rb").read(), open(gate_path(feed), "rb").read()) == before
+    assert read_gate(feed).n == 3
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["dump-ror.jsonl", "ror.jsonl", ".ror.jsonl.gate", "truncated.json"]
+    )
+
+    # a crash between the two renames: the new gate names a file that is
+    # not the old feed, so it is refused and the old feed is scanned
+    import ror_etl_spark.sources.fetch as fetch_mod
+
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if dst == feed:
+            raise OSError("injected crash before the feed's rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(fetch_mod.os, "replace", replace)
+    longer = tmp_path / "longer.json"
+    longer.write_text(json.dumps([ORG_A, ORG_B, ORG_C, ORG_D_NON_ASCII]))
+    with pytest.raises(OSError, match="injected"):
+        fetch_to_jsonl(LocalDumpClient(str(longer)), feed)
+    assert open(feed, "rb").read() == before[0]
+    assert open(gate_path(feed), "rb").read() != before[1]
+    assert read_gate(feed) is None
+
+
+@pytest.mark.parametrize(
+    "odd, spark_id, spark_up",
+    [
+        # Spark reads the type 7 as the string "7": not a parent
+        ({"relationships": [{"id": "https://ror.org/a", "type": 7}]},
+         "https://ror.org/c", "https://ror.org/c"),
+        # Spark reads a lone surrogate as "?"
+        ({"id": "https://ror.org/c\udc00"}, "https://ror.org/c?", "https://ror.org/b"),
+    ],
+    ids=["non-string-type", "lone-surrogate"],
+)
+def test_dump_with_an_unvouched_record_leaves_no_sidecar(
+    spark, tmp_path, odd, spark_id, spark_up
+):
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    assert read_gate(feed) is not None
+    dump = tmp_path / "odd.json"
+    dump.write_text(json.dumps([ORG_A, ORG_B, {**ORG_C, **odd}]))
+    fetch_to_jsonl(LocalDumpClient(str(dump)), feed)
+    assert not os.path.exists(gate_path(feed))
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    jobs, _ = _jobs(spark, "unvouched", lambda: p.load_input(feed))
+    assert jobs > 0
+    result = p.run(feed)
+    up = {r["id"]: r["ultimate_parent"] for r in spark.read.parquet(p.prod_path).collect()}
+    assert result["rows"] == 3 and up[spark_id] == spark_up
+
+
+@ROUTES
+@pytest.mark.parametrize(
+    "case", ["duplicate-id", "required-null-outranks-duplicate", "shrinking"]
+)
+def test_rejects_on_both_routes(spark, tmp_path, case, route):
+    """The reject tests above, through fetch_to_jsonl: with the sidecar
+    and with the Spark scan, the same error and prod left as it was."""
+    wh = str(tmp_path / "wh")
+    RorPipeline(spark, wh).run(_fetch(tmp_path, [ORG_A, ORG_B, ORG_C], name="good.jsonl"))
+    prod_before = _tree(os.path.join(wh, "prod"))
+    orgs, error, match = {
+        "duplicate-id": ([ORG_A, ORG_B, ORG_C, ORG_A], DuplicateIdError, "ror.org/a"),
+        "required-null-outranks-duplicate": (
+            [{**ORG_A, "names": [{"value": None}]}, ORG_B, ORG_B, ORG_C],
+            RequiredFieldViolation,
+            "names",
+        ),
+        "shrinking": ([ORG_B], CheckFailed, "shrinking"),
+    }[case]
+    feed = _fetch(tmp_path, orgs, route)
+    assert os.path.exists(gate_path(feed)) == (route == "fetched")
+    with pytest.raises(error, match=match):
+        RorPipeline(spark, wh).run(feed)
+    assert _tree(os.path.join(wh, "prod")) == prod_before
+
+
+# One mutation per kind the fetch's gate must agree with Spark on. Each
+# takes (rng, orgs) and changes one org in place.
+def _mutate_missing_vs_null(rng, orgs):
+    org = rng.choice(orgs)
+    key = rng.choice(["names", "relationships", "locations", "links", "external_ids"])
+    if rng.random() < 0.5:
+        org.pop(key, None)
+    else:
+        org[key] = None
+
+
+def _mutate_null_element(rng, orgs):
+    org = rng.choice(orgs)
+    key = rng.choice(["names", "relationships", "locations", "links"])
+    elems = list(org.get(key) or [])
+    elems.insert(rng.randrange(len(elems) + 1), None)
+    org[key] = elems
+
+
+def _mutate_required_leaf(rng, orgs):
+    org = rng.choice(orgs)
+    arr, elem, leaf = rng.choice([
+        ("names", {"value": "n", "lang": "en"}, "value"),
+        ("links", {"type": "website", "value": "w"}, "type"),
+        ("links", {"type": "website", "value": "w"}, "value"),
+        ("locations", {"geonames_id": 3, "geonames_details": {"name": "t"}}, "geonames_id"),
+        ("locations", {"geonames_id": 3, "geonames_details": {"name": "t"}}, "geonames_details"),
+        ("external_ids", {"type": "grid", "all": ["g"]}, "type"),
+    ])
+    elem = json.loads(json.dumps(elem))
+    if rng.random() < 0.5:
+        del elem[leaf]
+    else:
+        elem[leaf] = None
+    org[arr] = (org.get(arr) or []) + [elem]
+
+
+def _mutate_details_name(rng, orgs):
+    org = rng.choice(orgs)
+    details = rng.choice([{"name": None, "lat": 1.5}, {"lat": 2}, None])
+    org["locations"] = [{"geonames_id": 9, "geonames_details": details}]
+
+
+def _mutate_parent_case(rng, orgs):
+    org, target = rng.sample(orgs, 2)
+    kind = rng.choice(["PaReNt", "PARENT", "parent", "Parent "])  # the last is no parent
+    org["relationships"] = (org.get("relationships") or []) + [
+        {"id": target.get("id"), "label": "", "type": kind}
+    ]
+
+
+def _mutate_parent_without_id(rng, orgs):
+    # the last parent has no id: the org maps to itself, not to an earlier
+    # parent, so pick one that has a parent already
+    with_parent = [o for o in orgs if "parent" in json.dumps(o.get("relationships")).lower()]
+    org = rng.choice(with_parent or orgs)
+    org["relationships"] = (org.get("relationships") or []) + [
+        rng.choice([{"type": "parent"}, {"id": None, "type": "parent", "label": "x"}])
+    ]
+
+
+def _mutate_non_string_type(rng, orgs):
+    org = rng.choice(orgs)
+    org["relationships"] = (org.get("relationships") or []) + [
+        {"id": orgs[0].get("id"), "type": rng.choice([5, ["parent"], {"t": "parent"}, True])}
+    ]
+
+
+def _mutate_id(rng, orgs):
+    org = rng.choice(orgs)
+    u = rng.random()
+    if u < 0.3:
+        org["id"] = rng.choice(orgs)["id"]  # duplicate (or unchanged)
+    elif u < 0.5:
+        org["id"] = None
+    elif u < 0.6:
+        org.pop("id", None)
+    else:
+        org["id"] = rng.choice([42, 4.5, {"a": 1}, ["x"], False])
+
+
+def _mutate_wrong_typed_leaf(rng, orgs):
+    org = rng.choice(orgs)
+    u = rng.random()
+    if u < 0.4:
+        org["locations"] = [{"geonames_id": rng.choice(["12", 1.5, 1 << 64]),
+                             "geonames_details": {"name": "t"}}]
+    elif u < 0.7:
+        org["locations"] = [{"geonames_id": 1, "geonames_details": rng.choice(["Paris", [1]])}]
+    else:
+        org["names"] = [{"value": rng.choice([7, ["n"], {"v": 1}])}]
+
+
+def _mutate_lone_surrogate(rng, orgs):
+    org = rng.choice(orgs)
+    if rng.random() < 0.5:
+        org["id"] = org["id"] + "\ud800" if isinstance(org.get("id"), str) else "\udc00"
+    else:
+        org["relationships"] = [{"id": "https://ror.org/\ud83d", "type": "parent"}]
+
+
+MUTATIONS = [
+    _mutate_missing_vs_null, _mutate_null_element, _mutate_required_leaf,
+    _mutate_details_name, _mutate_parent_case, _mutate_parent_without_id,
+    _mutate_non_string_type, _mutate_id, _mutate_wrong_typed_leaf,
+    _mutate_lone_surrogate,
+]
+
+
+def _fuzzed_orgs(seed):
+    """A seeded registry of 6-14 orgs (chains, a cycle, ghost parents,
+    last-parent-wins) with MUTATIONS[seed % len(MUTATIONS)] applied, and
+    maybe one more."""
+    rng = random.Random(seed)
+    n = rng.randint(6, 14)
+    ids = [f"https://ror.org/s{seed}n{i}" for i in range(n)]
+    orgs = []
+    for i in range(n):
+        rels = [{"id": ids[rng.randrange(n)], "label": "", "type": "related"}]
+        u = rng.random()
+        if u < 0.5 and i:
+            rels.append({"id": ids[rng.randrange(i)], "label": "", "type": "parent"})
+        elif u < 0.6:
+            rels.append({"id": "https://ror.org/ghost", "label": "", "type": "Parent"})
+        elif u < 0.7:
+            rels.append({"id": ids[(i + 1) % n], "label": "", "type": "PARENT"})
+        rng.shuffle(rels)
+        orgs.append({
+            "id": ids[i],
+            "status": "active",
+            "names": [{"value": f"Org {i}", "types": ["label"], "lang": "en"}],
+            "links": [{"type": "website", "value": f"https://o{i}.example"}],
+            "locations": [{"geonames_id": i, "geonames_details": {"name": "T", "lat": 1.0}}],
+            "relationships": rels,
+            "external_ids": [{"type": "grid", "all": [f"g{i}"], "preferred": None}],
+        })
+    for mutate in [MUTATIONS[seed % len(MUTATIONS)]] + rng.sample(MUTATIONS, rng.randint(0, 1)):
+        mutate(rng, orgs)
+    return orgs
+
+
+def _week(spark, wh, feed):
+    """Run one week; the outcome is the error class, or everything the
+    week wrote that a reader sees."""
+    p = RorPipeline(spark, wh, run_date=datetime(2026, 8, 7))
+    try:
+        report = p.run(feed)
+    except Exception as e:  # noqa: BLE001 - the class is the outcome
+        return type(e).__name__, None
+    staging = spark.read.parquet(p.staging_path)
+    prod = spark.read.parquet(p.prod_path).select("id", "ultimate_parent")
+    return "promoted", (
+        {k: v for k, v in report.items() if k != "backup"},
+        staging.schema,
+        sorted(staging.toJSON().collect()),
+        sorted(map(tuple, prod.collect()), key=repr),
+    )
+
+
+def test_fetched_gate_matches_the_spark_gate_on_fuzzed_dumps(spark, tmp_path):
+    """Seeded fuzzed dumps, each fetched once and run twice on a copy of
+    the same prod: with the fetch's sidecar and with it deleted. Both
+    routes reject with the same error class, prod byte-identical, or
+    promote the same mapping, n_in_cycle and staging rows."""
+    template = str(tmp_path / "template")
+    RorPipeline(spark, template).run(_fetch(tmp_path, [ORG_B], name="seed.jsonl"))
+    prod_before = _tree(os.path.join(template, "prod"))
+    seen = set()
+    for seed in range(2 * len(MUTATIONS)):
+        feed = _fetch(tmp_path, _fuzzed_orgs(seed), name=f"fuzz{seed}.jsonl")
+        vouched = os.path.exists(gate_path(feed))
+        outcomes = {}
+        for route in ("fetched", "scanned"):
+            if route == "scanned" and vouched:
+                os.remove(gate_path(feed))
+            wh = str(tmp_path / f"wh{seed}-{route}")
+            shutil.copytree(template, wh)
+            outcome, written = _week(spark, wh, feed)
+            if written is None:
+                assert _tree(os.path.join(wh, "prod")) == prod_before, (seed, route)
+            outcomes[route] = (outcome, written)
+        assert outcomes["fetched"] == outcomes["scanned"], seed
+        seen.add((vouched, outcomes["fetched"][0]))
+    # the seeds reach both routes and every outcome the fetched gate decides
+    assert {
+        (True, "promoted"),
+        (True, "RequiredFieldViolation"),
+        (True, "DuplicateIdError"),
+        (False, "promoted"),
+        (False, "Py4JJavaError"),
+    } <= seen, seen

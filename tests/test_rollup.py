@@ -11,14 +11,19 @@ import io
 import math
 import os
 import random
+import subprocess
+import sys
 
+import pyarrow as pa
 import pytest
 
 from ror_etl_spark.operators.rollup import (
     DuplicateIdError,
+    _one_task_fn,
     assert_unique_ids,
     attach_ultimate_parent,
     extract_parent_edges,
+    rollup_on_driver,
     ultimate_parent,
 )
 
@@ -113,6 +118,71 @@ def test_null_parent_matches_distributed_semantics(spark, lt):
     # B and C resolve to A, whose own parent is null: not a root. A itself
     # resolves to null, which no edge matches, so it is not counted.
     assert res.n_in_cycle == 2
+
+
+def test_single_task_keeps_long_ids_exact(spark):
+    # a null parent makes the parent column nullable; a pandas batch would
+    # carry it as float64 and round ids above 2^53 before resolving them
+    base = 1 << 60
+    edges = spark.createDataFrame(
+        [(base + 1, base + 2), (base + 3, None)], "id long, parent long"
+    )
+    local = ultimate_parent(edges, local_threshold=1_000_000)
+    pinned = ultimate_parent(edges, local_threshold=0)
+    assert local.strategy == "single-task"
+    assert _mapping(local) == _mapping(pinned) == {base + 1: base + 2, base + 3: None}
+    assert local.n_in_cycle == pinned.n_in_cycle == 0
+
+
+def test_one_task_kernel_runs_without_the_package(tmp_path):
+    """The function mapInArrow ships unpickles and runs in a Python that
+    cannot import ror_etl_spark: Spark's Python workers find the package
+    only if something puts it on their path."""
+    from pyspark import cloudpickle
+
+    (tmp_path / "fn.pkl").write_bytes(cloudpickle.dumps(_one_task_fn(8)))
+    script = """
+import importlib.util, pickle, sys
+import pyarrow as pa
+assert importlib.util.find_spec("ror_etl_spark") is None, sys.path
+with open("fn.pkl", "rb") as f:
+    fn = pickle.load(f)
+batch = pa.record_batch({
+    "id": ["A", "B", "C", "X", "Y"],
+    "anc": ["B", "C", "C", "Y", "X"],
+    "in_cycle": pa.array([None, None, False, None, None], pa.bool_()),
+})
+[out] = fn(iter([batch]))
+assert "ror_etl_spark" not in sys.modules
+print(out.to_pydict())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True
+    )
+    assert run.returncode == 0, run.stderr
+    # X and Y form a 2-cycle: after 8 rounds each is back on itself
+    assert eval(run.stdout) == {
+        "id": ["A", "B", "C", "X", "Y"],
+        "anc": ["C", "C", "C", "X", "Y"],
+        "in_cycle": [False, False, False, True, True],
+    }
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_rollup_on_driver_matches_the_executor_task(spark, seed):
+    """The driver route runs the executor task's kernel on the same
+    edges: same mapping, same n_in_cycle, same round count."""
+    rows = _fuzz_edges(seed, long_ids=False)
+    edges = spark.createDataFrame(rows, "id string, parent string")
+    task = ultimate_parent(edges, local_threshold=1_000_000)
+    ids, parents = zip(*rows)
+    driver = rollup_on_driver(
+        spark, pa.table({"id": pa.array(ids), "anc": pa.array(parents, pa.string())})
+    )
+    assert (driver.strategy, driver.iterations) == (task.strategy, task.iterations)
+    assert _mapping(driver) == _mapping(task)
+    assert driver.n_in_cycle == task.n_in_cycle
 
 
 ROR_SCHEMA = (
