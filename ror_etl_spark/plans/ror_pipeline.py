@@ -235,8 +235,11 @@ class RorPipeline:
             gate = self._scan_gate(ror)
         if isinstance(gate.edges, pa.Table):
             # the fetch's gate: at most local_threshold rows, already on
-            # the driver, so the single-task kernel runs right here
-            result = rollup_on_driver(self.spark, gate.edges)
+            # the driver, so the single-task kernel runs right here; its
+            # mapping lands in tmp, which the next run clears
+            os.makedirs(self.tmp_dir, exist_ok=True)
+            path = os.path.join(self.tmp_dir, "ultimate_parent.parquet")
+            result = rollup_on_driver(self.spark, gate.edges, path)
         else:
             # check_every=2 halves the convergence-aggregate jobs (each is
             # a fixed ~0.3 s shuffle round locally); results are identical

@@ -23,14 +23,15 @@ whenever the dump itself is compact ``json.dumps`` output.
 
 The fetch is also the pipeline's input gate. The walk already holds each
 decoded record, so it reads off what ``RorPipeline``'s gate scan would:
-the id, the parent edge and the REQUIRED-null flags (``gate_record``).
-It commits them beside the feed as a small Arrow sidecar (``gate_path``)
-together with the feed file's identity; ``read_gate`` hands them back
-only for that same file. The feed is then parsed once, by the staging
-write. The walk vouches only for records whose gate columns carry the
-JSON types the schema declares; for any other dump it writes no sidecar
-and Spark's FAILFAST scan gates the feed, as it does for any feed this
-module did not write.
+the id, the parent edge and the REQUIRED-null flags
+(``ror_schema.gate_record``, which owns those rules next to the Spark
+gate's). It commits them beside the feed as a small Arrow sidecar
+(``gate_path``) together with the byte count and CRC-32 of the feed it
+wrote; ``read_gate`` hands them back only for those same bytes. The feed
+is then parsed once, by the staging write. The walk vouches only for
+records whose gate columns carry the JSON types the schema declares; for
+any other dump it writes no sidecar and Spark's FAILFAST scan gates the
+feed, as it does for any feed this module did not write.
 
 Network access is isolated behind ``ZenodoClient`` so tests (and this
 offline build environment) use ``LocalDumpClient`` with a file fixture.
@@ -38,18 +39,17 @@ offline build environment) use ``LocalDumpClient`` with a file fixture.
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import tempfile
 import zipfile
+import zlib
 from dataclasses import dataclass
 from typing import Protocol
 
 import pyarrow as pa
-from pyspark.sql import types as T
 
-from ror_etl_spark.sources.ror_schema import ROR_INPUT_SCHEMA, required_paths
+from ror_etl_spark.sources.ror_schema import gate_record, required_paths
 
 ZENODO_API = "https://zenodo.org/api/records/?communities=ror-data&sort=mostrecent"
 
@@ -148,115 +148,6 @@ _GATE_META = "ror_gate"  # the sidecar's schema-metadata key
 _REQUIRED = required_paths()
 
 
-def _compile_gate_check():
-    """One Python function, generated from ``ROR_INPUT_SCHEMA``, that
-    checks a decoded record's gate columns (``id``, ``relationships`` and
-    those holding a REQUIRED path) against the JSON types the schema
-    declares, and finds the REQUIRED paths the record leaves null.
-
-    It returns -1 when some value is neither null (Spark reads every
-    field as nullable) nor of the declared type: on such a value Spark's
-    FAILFAST read either fails (an array that is not a list, a long that
-    is not an integer in range, ...) or reads something other than what
-    Python decoded (a non-string token becomes its raw text). Otherwise
-    it returns a bitmask over ``required_paths()``: bit i is set when the
-    record violates path i by ``required_null_flags``'s rule (its array
-    holds a null element, or an element whose leaf, or a struct on the
-    way to it, is null or missing).
-
-    The check runs on every record of every dump. Straight-line code with
-    a loop per array runs about three times faster than the same checks
-    as nested closures, so the schema is compiled once, at import."""
-    columns = ["id", "relationships"] + [arr or path for _, arr, path in _REQUIRED]
-    # field path (from the column) -> bits of the REQUIRED paths that a
-    # null there violates
-    masks: dict[tuple[str, ...], int] = {}
-    for bit, (_, arr, path) in enumerate(_REQUIRED):
-        keys = ([arr] if arr else []) + path.split(".")
-        for k in range(1, len(keys) + 1):
-            masks[tuple(keys[:k])] = masks.get(tuple(keys[:k]), 0) | 1 << bit
-    lines = ["def check(record):", "    hits = 0"]
-    names = (f"v{i}" for i in itertools.count())
-
-    def emit(var: str, dtype: T.DataType, at: tuple[str, ...], null_mask: int, ind: str):
-        if null_mask:
-            lines.append(f"{ind}if {var} is None: hits |= {null_mask}")
-        if isinstance(dtype, T.StringType):
-            lines.append(f"{ind}if {var} is not None and type({var}) is not str: return -1")
-        elif isinstance(dtype, T.LongType):
-            lines.append(
-                f"{ind}if {var} is not None and (type({var}) is not int"
-                f" or not {-(1 << 63)} <= {var} < {1 << 63}): return -1"
-            )
-        elif isinstance(dtype, T.DoubleType):  # also read from an integer token
-            lines.append(
-                f"{ind}if {var} is not None and type({var}) is not float"
-                f" and type({var}) is not int: return -1"
-            )
-        elif isinstance(dtype, T.StructType):
-            lines.append(f"{ind}if {var} is not None:")
-            lines.append(f"{ind}    if type({var}) is not dict: return -1")
-            for f in dtype.fields:
-                field = next(names)
-                lines.append(f"{ind}    {field} = {var}.get({f.name!r})")
-                emit(field, f.dataType, at + (f.name,), masks.get(at + (f.name,), 0), ind + "    ")
-        elif isinstance(dtype, T.ArrayType):
-            elem = next(names)
-            lines.append(f"{ind}if {var} is not None:")
-            lines.append(f"{ind}    if type({var}) is not list: return -1")
-            lines.append(f"{ind}    for {elem} in {var}:")
-            # a null element violates every REQUIRED path inside it
-            emit(elem, dtype.elementType, at, masks.get(at, 0), ind + "        ")
-        else:
-            raise TypeError(f"no JSON type check for {dtype}")
-
-    for col in dict.fromkeys(columns):
-        dtype = ROR_INPUT_SCHEMA[col].dataType
-        var = next(names)
-        lines.append(f"    {var} = record.get({col!r})")
-        # a null array holds no null element: only a scalar's own null counts
-        own = 0 if isinstance(dtype, T.ArrayType) else masks.get((col,), 0)
-        emit(var, dtype, (col,), own, "    ")
-    lines.append("    return hits")
-    namespace: dict = {}
-    exec("\n".join(lines), namespace)
-    return namespace["check"]
-
-
-_gate_check = _compile_gate_check()
-
-
-def gate_record(record) -> tuple[str | None, str | None, tuple[int, ...]] | None:
-    """What the input gate reads from one decoded feed record: its id, its
-    parent and the REQUIRED paths it leaves null (indices into
-    ``required_paths()``).
-
-    The parent is the id of the last relationship whose ``type`` is
-    ``parent`` in any case, or the record's own id when there is none or
-    that id is null: ``_parent_col``'s rule. The null paths follow
-    ``required_null_flags``'s rule.
-
-    Returns None (the record is not vouched for) unless every column the
-    gate reads has the JSON type ``ROR_INPUT_SCHEMA`` declares, so that
-    Spark's typed read of them cannot fail and reads exactly these
-    values. One case it cannot see: a key repeated inside one object.
-    Both readers keep the last value, but Spark also fails on an earlier
-    value of the wrong type; such a feed is then rejected by the staging
-    write's parse instead of the gate's, with the same error."""
-    hits = _gate_check(record) if type(record) is dict else -1
-    if hits < 0:
-        return None
-    rid = record.get("id")
-    parent = None
-    for rel in record.get("relationships") or ():
-        if rel is not None:
-            kind = rel.get("type")
-            if kind is not None and kind.lower() == "parent":
-                parent = rel.get("id")
-    nulls = tuple(i for i in range(len(_REQUIRED)) if hits >> i & 1) if hits else ()
-    return rid, rid if parent is None else parent, nulls
-
-
 @dataclass(frozen=True)
 class FeedGate:
     """The input gate of one feed, as the fetch computed it."""
@@ -276,23 +167,25 @@ def gate_path(feed: str) -> str:
     return os.path.join(head, f".{tail}.gate")
 
 
-def _identity(st: os.stat_result) -> list[int]:
-    return [st.st_size, st.st_mtime_ns, st.st_ino]
+def _crc32(path: str) -> int:
+    crc = 0
+    with open(path, "rb") as f:
+        while chunk := f.read(1 << 22):
+            crc = zlib.crc32(chunk, crc)
+    return crc
 
 
-def _write_gate(
-    path: str, ids: list, parents: list, nulls: list[int], feed: os.stat_result
-) -> bool:
+def _write_gate(path: str, ids: list, parents: list, nulls: list[int], feed: list[int]) -> bool:
     """Write the sidecar: the edges as an Arrow IPC file, the null counts
-    and the feed file's identity in its schema metadata. False (nothing
-    written) when an id or parent holds a lone surrogate, which Spark
-    reads as ``?`` and UTF-8 cannot hold."""
+    and the feed's (byte count, CRC-32) in its schema metadata. False
+    (nothing written) when an id or parent holds a lone surrogate, which
+    Spark reads as ``?`` and UTF-8 cannot hold."""
     try:
         table = pa.table({"id": pa.array(ids, pa.string()), "anc": pa.array(parents, pa.string())})
     except UnicodeEncodeError:
         return False
     meta = {
-        "feed": _identity(feed),
+        "feed": feed,
         "nulls": {name: count for (name, _, _), count in zip(_REQUIRED, nulls)},
     }
     table = table.replace_schema_metadata({_GATE_META: json.dumps(meta)})
@@ -303,17 +196,21 @@ def _write_gate(
 
 def read_gate(feed: str) -> FeedGate | None:
     """The gate ``json_array_to_jsonl`` wrote with ``feed``, or None when
-    there is none or it was written with a different file: the identity
-    it recorded (size, mtime, inode) must be the feed's now, and its
-    paths today's REQUIRED paths."""
+    there is none or the feed's bytes are not the ones it was computed
+    from: the byte count and CRC-32 it recorded must be the feed's now
+    (so this reads the whole feed once), and its paths today's REQUIRED
+    paths."""
     try:
-        st = os.stat(feed)
+        size = os.path.getsize(feed)
         with pa.OSFile(gate_path(feed)) as source:
             table = pa.ipc.open_file(source).read_all()
     except FileNotFoundError:
         return None
     meta = json.loads(table.schema.metadata[_GATE_META.encode()])
-    if meta["feed"] != _identity(st) or list(meta["nulls"]) != [p[0] for p in _REQUIRED]:
+    if list(meta["nulls"]) != [p[0] for p in _REQUIRED]:
+        return None
+    recorded_size, recorded_crc = meta["feed"]
+    if recorded_size != size or recorded_crc != _crc32(feed):
         return None
     return FeedGate(table.replace_schema_metadata(None), meta["nulls"])
 
@@ -331,9 +228,10 @@ def json_array_to_jsonl(src: str, dest: str) -> int:
 
     The walk decodes every element anyway, so it also computes the
     pipeline's input gate from it (``gate_record``) and commits it beside
-    the feed (``gate_path``), renamed into place before the feed is: a
-    crash between the two renames leaves a gate that names a file other
-    than the old feed, which ``read_gate`` then refuses. When any record
+    the feed (``gate_path``) with the byte count and CRC-32 of the lines
+    written. The gate is renamed into place before the feed is: a crash
+    between the two renames leaves a gate whose checksum is the new
+    feed's, so ``read_gate`` refuses it for the old one. When any record
     is not vouched for, no gate is written and any older one is removed;
     the pipeline's Spark scan gates that feed."""
     with open(src, encoding="utf-8") as f:
@@ -341,14 +239,17 @@ def json_array_to_jsonl(src: str, dest: str) -> int:
     part = dest + ".part"
     gate = gate_path(dest)
     gate_part = gate + ".part"
-    n = 0
+    n = size = crc = 0
     ids: list | None = []
     parents: list = []
     nulls = [0] * len(_REQUIRED)
     try:
-        with open(part, "w", encoding="utf-8") as out:
+        with open(part, "wb") as out:
             for record, element in _array_elements(text):
-                out.write(element.replace("\n", " ").replace("\r", " ") + "\n")
+                line = (element.replace("\n", " ").replace("\r", " ") + "\n").encode()
+                crc = zlib.crc32(line, crc)
+                size += len(line)
+                out.write(line)
                 n += 1
                 if ids is not None:
                     seen = gate_record(record)
@@ -359,7 +260,7 @@ def json_array_to_jsonl(src: str, dest: str) -> int:
                     parents.append(seen[1])
                     for i in seen[2]:
                         nulls[i] += 1
-        if ids is not None and _write_gate(gate_part, ids, parents, nulls, os.stat(part)):
+        if ids is not None and _write_gate(gate_part, ids, parents, nulls, [size, crc]):
             os.replace(gate_part, gate)
         elif os.path.exists(gate):
             os.remove(gate)

@@ -17,7 +17,6 @@ from ror_etl_spark.sources.fetch import (
     LocalDumpClient,
     fetch_to_jsonl,
     gate_path,
-    gate_record,
     json_array_to_jsonl,
     pick_data_json,
     read_gate,
@@ -25,6 +24,7 @@ from ror_etl_spark.sources.fetch import (
 from ror_etl_spark.sources.ror_schema import (
     ROR_INPUT_SCHEMA,
     RequiredFieldViolation,
+    gate_record,
     required_paths,
     validate_required,
 )
@@ -461,7 +461,9 @@ def test_fetched_feed_gates_and_rolls_up_in_zero_jobs(spark, tmp_path):
     assert p._rollup.strategy == "single-task" and p._rollup.n_in_cycle == 0
 
 
-@pytest.mark.parametrize("case", ["rewritten", "foreign", "over-threshold"])
+@pytest.mark.parametrize(
+    "case", ["rewritten", "rewritten-in-place", "foreign", "over-threshold"]
+)
 def test_spark_gates_a_feed_the_sidecar_does_not_vouch_for(spark, tmp_path, case):
     from ror_etl_spark.operators.rollup import LOCAL_THRESHOLD_CONF
 
@@ -471,6 +473,19 @@ def test_spark_gates_a_feed_the_sidecar_does_not_vouch_for(spark, tmp_path, case
         orgs = [ORG_A, ORG_B, ORG_C, ORG_D_NON_ASCII]
         with open(feed, "w") as f:
             f.write("\n".join(json.dumps(o) for o in orgs))
+    elif case == "rewritten-in-place":
+        # same file, same size, same mtime: only the bytes tell. A stale
+        # gate would map the new id to itself instead of to b.
+        before = os.stat(feed)
+        with open(feed, "r+b") as f:
+            text = f.read()
+            f.seek(0)
+            f.write(text.replace(b'"id": "https://ror.org/a"', b'"id": "https://ror.org/x"'))
+        os.utime(feed, ns=(before.st_atime_ns, before.st_mtime_ns))
+        after = os.stat(feed)
+        assert (after.st_size, after.st_mtime_ns, after.st_ino) == (
+            before.st_size, before.st_mtime_ns, before.st_ino
+        )
     elif case == "foreign":
         other = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C, ORG_D_NON_ASCII], name="other.jsonl")
         shutil.copy(gate_path(other), gate_path(feed))
@@ -502,8 +517,8 @@ def test_fetch_that_fails_keeps_the_feed_and_its_gate(tmp_path, monkeypatch):
         ["dump-ror.jsonl", "ror.jsonl", ".ror.jsonl.gate", "truncated.json"]
     )
 
-    # a crash between the two renames: the new gate names a file that is
-    # not the old feed, so it is refused and the old feed is scanned
+    # a crash between the two renames: the new gate's byte count and
+    # checksum are the new feed's, so it is refused for the old feed
     import ror_etl_spark.sources.fetch as fetch_mod
 
     real_replace = os.replace

@@ -170,7 +170,7 @@ print(out.to_pydict())
 
 
 @pytest.mark.parametrize("seed", range(4))
-def test_rollup_on_driver_matches_the_executor_task(spark, seed):
+def test_rollup_on_driver_matches_the_executor_task(spark, tmp_path, seed):
     """The driver route runs the executor task's kernel on the same
     edges: same mapping, same n_in_cycle, same round count."""
     rows = _fuzz_edges(seed, long_ids=False)
@@ -178,7 +178,9 @@ def test_rollup_on_driver_matches_the_executor_task(spark, seed):
     task = ultimate_parent(edges, local_threshold=1_000_000)
     ids, parents = zip(*rows)
     driver = rollup_on_driver(
-        spark, pa.table({"id": pa.array(ids), "anc": pa.array(parents, pa.string())})
+        spark,
+        pa.table({"id": pa.array(ids), "anc": pa.array(parents, pa.string())}),
+        str(tmp_path / "mapping.parquet"),
     )
     assert (driver.strategy, driver.iterations) == (task.strategy, task.iterations)
     assert _mapping(driver) == _mapping(task)
