@@ -13,8 +13,12 @@ Stage map (reference → here):
                                                  distributed, by size)
 - load_staging (ror_dag.py:166-175)            → overwrite parquet with inline
                                                  row/null metrics
-- checks (ror_dag.py:178-192)                  → ``check_unique_ids`` +
-                                                 ``check_monotonic_count``; any
+- checks (ror_dag.py:178-192)                  → ``check_unique_ids`` (the
+                                                 staging write's row count
+                                                 against the gate's) +
+                                                 ``check_monotonic_count``
+                                                 (against prod's Parquet
+                                                 footers); no Spark job. Any
                                                  failure stops before promote,
                                                  staging keeps the bad data for
                                                  inspection (comment :51-52)
@@ -46,6 +50,7 @@ from typing import Callable
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,6 +88,17 @@ class _Gate:
     edges: DataFrame | pa.Table
     n: int  # rows
     n_ids: int  # distinct ids
+
+
+def _parquet_row_count(path: str) -> int:
+    """Rows in the Parquet table at ``path``: the sum of ``num_rows`` in
+    its files' footers, with no Spark job and no data page read. Files
+    named with a leading ``_`` or ``.`` (``_SUCCESS``, ``.crc``) are
+    skipped, as Spark's reader skips them. Exact for any Parquet table,
+    however it was written. At 100 TB the same count is the table
+    format's manifest row count (Delta's or Iceberg's ``numRecords``),
+    also read without a scan."""
+    return ds.dataset(path, format="parquet").count_rows()
 
 
 def _swap_paths(dest: str) -> tuple[str, str]:
@@ -126,7 +142,11 @@ class RorPipeline:
     # per-run state handed from stage to stage
     _gate: tuple[DataFrame, _Gate] | None = field(default=None, init=False, repr=False)
     _rollup: RollupResult | None = field(default=None, init=False, repr=False)
+    # the frame add_ultimate_parent returned, and the gate's row count for it
+    _attached: tuple[DataFrame, int] | None = field(default=None, init=False, repr=False)
     _staging_metrics: dict | None = field(default=None, init=False, repr=False)
+    # the gate's row count when load_staging wrote the _attached frame
+    _staged_gate_n: int | None = field(default=None, init=False, repr=False)
     _staging_schema: T.StructType | None = field(default=None, init=False, repr=False)
 
     @property
@@ -258,7 +278,9 @@ class RorPipeline:
                 f"rollup: {result.n_in_cycle} id(s) did not converge to a "
                 f"root (cycle or depth cap) — kept an in-chain ancestor"
             )
-        return attach_ultimate_parent(ror, result)
+        with_up = attach_ultimate_parent(ror, result)
+        self._attached = (with_up, gate.n)
+        return with_up
 
     def load_staging(self, df: DataFrame) -> None:
         """Staging write with INLINE quality metrics: an Observation rides
@@ -266,10 +288,16 @@ class RorPipeline:
         of the same pass that writes the parquet — at 100 TB this saves
         the full re-scan that a separate validation query (or the
         reference's post-load BigQueryCheckOperator) would cost. The
-        observed count also feeds check_monotonic_count, which then needs
-        no staging re-read."""
+        observed count also feeds both checks, which then read nothing
+        back: ``check_unique_ids`` compares it with the gate's row count
+        when ``df`` is the frame ``add_ultimate_parent`` returned (the
+        link is recorded here, not assumed), and
+        ``check_monotonic_count`` compares it with prod's."""
         from pyspark.sql import Observation
 
+        attached = self._attached
+        self._staged_gate_n = attached[1] if attached and attached[0] is df else None
+        self._staging_metrics = None
         obs = Observation("staging_load")
         observed = df.observe(
             obs,
@@ -287,7 +315,31 @@ class RorPipeline:
             )
 
     def check_unique_ids(self) -> None:
-        """Q1: select count(distinct id) = count(id) (ror_dag.py:179-183)."""
+        """Q1: select count(distinct id) = count(id) (ror_dag.py:179-183).
+
+        Proven from two counts the run already holds, with no Spark job,
+        when staging was written from the frame ``add_ultimate_parent``
+        returned. The gate raised unless the feed's ``n`` ids were
+        distinct and non-null, and that frame is a left join of exactly
+        those rows with the mapping. A left join keeps every left row at
+        least once and repeats one only when a mapping id repeats, so
+        staging's ids are distinct exactly when the staging write's
+        observed row count equals the gate's ``n``; fewer rows mean a
+        row was lost. (The staging write parses the same feed the gate
+        read, as the rollup already assumes.) This is Deequ's rule of
+        verifying from metrics already computed instead of rescanning
+        (Schelter et al., VLDB 2018). A standalone call, with no gate in
+        hand, runs the Spark query over staging."""
+        gate_n, metrics = self._staged_gate_n, self._staging_metrics
+        if gate_n is not None and metrics is not None:
+            if metrics["n"] > gate_n:
+                raise CheckFailed("staging ror: duplicate ids")
+            if metrics["n"] < gate_n:
+                raise CheckFailed(
+                    f"staging ror: {metrics['n']} row(s) written, the gate "
+                    f"counted {gate_n} (lost rows)"
+                )
+            return
         row = (
             self.spark.read.schema("id string")
             .parquet(self.staging_path)
@@ -304,19 +356,19 @@ class RorPipeline:
         (ror_dag.py:184-191); trivially passes when prod doesn't exist.
         A prod left mid-swap by a crashed promote is restored first, so a
         crash can never make this pass trivially.
-        Uses the count observed during the staging write when available
-        (no staging re-scan); falls back to a read for standalone use."""
+        Runs no Spark job: staging's count is the one observed during the
+        staging write (for a standalone call, its Parquet footers), and
+        prod's is the sum of its Parquet footers' row counts
+        (``_parquet_row_count``)."""
         _recover_swap(self.prod_path)
         metrics = self._staging_metrics
         if metrics is not None:
             staging_n = metrics["n"]
         else:
-            staging_n = (
-                self.spark.read.schema("id string").parquet(self.staging_path).count()
-            )
+            staging_n = _parquet_row_count(self.staging_path)
         if not os.path.exists(self.prod_path):
             return
-        prod_n = self.spark.read.schema("id string").parquet(self.prod_path).count()
+        prod_n = _parquet_row_count(self.prod_path)
         if staging_n < prod_n:
             raise CheckFailed(
                 f"staging count {staging_n} < prod count {prod_n} (shrinking table)"
@@ -381,6 +433,12 @@ class RorPipeline:
         100 TB the answer changes shape, not flags: land the raw feed as
         parquet once and run the chain off that (the staging write IS
         that materialization here).
+
+        The two checks then read nothing back: unique ids compare the
+        staging write's observed row count with the gate's, and the
+        monotonic count compares it with prod's Parquet footers. So after
+        the fetch, a fetched week runs two Spark jobs, the staging
+        write's broadcast of the mapping and the write itself.
 
         Returns a report built from values the stages already computed
         (no extra Spark job) and passes it to ``alert`` as JSON: rows

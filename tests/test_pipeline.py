@@ -3,6 +3,7 @@ stages → staging/prod/backup parquet, mirroring the reference DAG run."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import random
@@ -12,6 +13,7 @@ from datetime import datetime
 
 import pytest
 
+from ror_etl_spark.plans import ror_pipeline
 from ror_etl_spark.plans.ror_pipeline import CheckFailed, RorPipeline
 from ror_etl_spark.sources.fetch import (
     LocalDumpClient,
@@ -459,6 +461,126 @@ def test_fetched_feed_gates_and_rolls_up_in_zero_jobs(spark, tmp_path):
     jobs, _ = _jobs(spark, "fetched", lambda: p.add_ultimate_parent(p.load_input(feed)))
     assert jobs == 0
     assert p._rollup.strategy == "single-task" and p._rollup.n_in_cycle == 0
+
+
+def test_fetched_week_runs_two_jobs_after_the_fetch(spark, tmp_path):
+    """After the fetch a good week runs the staging write's two jobs (the
+    mapping's broadcast and the write); the checks prove their answers
+    from counts the run already holds. The second week has a prod to
+    count and runs through run()."""
+    wh = str(tmp_path / "wh")
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    p = RorPipeline(spark, wh)
+    p.clear_tmp()
+    jobs = {}
+    jobs["load_input"], ror = _jobs(spark, "week-load", lambda: p.load_input(feed))
+    jobs["add_ultimate_parent"], ror = _jobs(
+        spark, "week-rollup", lambda: p.add_ultimate_parent(ror)
+    )
+    jobs["load_staging"], _ = _jobs(spark, "week-staging", lambda: p.load_staging(ror))
+    for stage in ("check_unique_ids", "check_monotonic_count", "promote", "backup"):
+        jobs[stage], _ = _jobs(spark, f"week-{stage}", getattr(p, stage))
+    assert jobs == {
+        "load_input": 0, "add_ultimate_parent": 0, "load_staging": 2,
+        "check_unique_ids": 0, "check_monotonic_count": 0, "promote": 0, "backup": 0,
+    }
+    jobs, result = _jobs(spark, "second-week", lambda: RorPipeline(spark, wh).run(feed))
+    assert jobs == 2 and result["rows"] == 3
+
+
+def _repeat_one_mapping_id(real):
+    """Wrap a rollup route so its mapping carries ORG_A's row twice."""
+
+    def rollup(*args, **kw):
+        result = real(*args, **kw)
+        m = result.mapping
+        return dataclasses.replace(
+            result, mapping=m.unionByName(m.filter(m["id"] == ORG_A["id"]))
+        )
+
+    return rollup
+
+
+@ROUTES
+def test_repeated_mapping_id_fails_before_promote(spark, tmp_path, monkeypatch, route):
+    """A mapping that repeats one id doubles that id's staging row. The
+    gate counted 3 distinct ids, the staging write 4 rows: the week
+    fails on unique ids, and prod stays as it was."""
+    wh = str(tmp_path / "wh")
+    RorPipeline(spark, wh).run(_fetch(tmp_path, [ORG_A, ORG_B, ORG_C], name="good.jsonl"))
+    prod_before = _tree(os.path.join(wh, "prod"))
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C], route)
+    target = "rollup_on_driver" if route == "fetched" else "_rollup_edges"
+    monkeypatch.setattr(
+        ror_pipeline, target, _repeat_one_mapping_id(getattr(ror_pipeline, target))
+    )
+    p = RorPipeline(spark, wh)
+    with pytest.raises(CheckFailed, match="duplicate ids"):
+        p.run(feed)
+    assert spark.read.parquet(p.staging_path).count() == 4
+    assert _tree(os.path.join(wh, "prod")) == prod_before
+
+
+@ROUTES
+def test_staged_frame_that_lost_a_row_fails_before_promote(spark, tmp_path, monkeypatch, route):
+    """Fewer staging rows than the gate counted fail unique ids too, even
+    with no prod yet for the monotonic check to compare against."""
+    real = ror_pipeline.attach_ultimate_parent
+    monkeypatch.setattr(
+        ror_pipeline,
+        "attach_ultimate_parent",
+        lambda ror, result: real(ror, result).filter(f"id != '{ORG_C['id']}'"),
+    )
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    with pytest.raises(CheckFailed, match=r"2 row\(s\) written, the gate counted 3"):
+        p.run(_fetch(tmp_path, [ORG_A, ORG_B, ORG_C], route))
+    assert not os.path.exists(p.prod_path)
+
+
+def test_unique_ids_queries_a_frame_the_gate_did_not_count(spark, tmp_path):
+    """Staging written from any frame but the one add_ultimate_parent
+    returned: the gate's count says nothing about it, so check_unique_ids
+    queries staging. Here the counts agree (3 and 3) yet an id repeats."""
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C])
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    with_up = p.add_ultimate_parent(p.load_input(feed))
+    a = with_up.filter(f"id = '{ORG_A['id']}'")
+    p.load_staging(a.unionByName(a).unionByName(with_up.filter(f"id = '{ORG_B['id']}'")))
+    with pytest.raises(CheckFailed, match="duplicate ids"):
+        p.check_unique_ids()
+
+
+def _write_table(spark, path, ids):
+    spark.createDataFrame([(i,) for i in ids], "id string").write.mode(
+        "overwrite"
+    ).parquet(path)
+
+
+def test_checks_called_alone_read_the_tables(spark, tmp_path):
+    """A fresh pipeline has no gate in hand: check_unique_ids queries
+    staging with Spark, and check_monotonic_count counts staging's and
+    prod's Parquet footers."""
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    _write_table(spark, p.staging_path, ["a", "b", "a"])
+    with pytest.raises(CheckFailed, match="duplicate ids"):
+        RorPipeline(spark, p.root).check_unique_ids()
+    _write_table(spark, p.staging_path, ["a"])
+    RorPipeline(spark, p.root).check_unique_ids()
+    RorPipeline(spark, p.root).check_monotonic_count()  # no prod yet
+    _write_table(spark, p.prod_path, ["a", "b", "c"])
+    with pytest.raises(CheckFailed, match="staging count 1 < prod count 3"):
+        RorPipeline(spark, p.root).check_monotonic_count()
+    _write_table(spark, p.staging_path, ["a", "b", "c"])
+    RorPipeline(spark, p.root).check_monotonic_count()
+
+
+def test_footer_row_count_equals_spark_count(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(0, 1003, numPartitions=4).selectExpr("cast(id as string) id").write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert sum(n.endswith(".parquet") for n in names) == 4
+    assert ror_pipeline._parquet_row_count(path) == spark.read.parquet(path).count() == 1003
 
 
 @pytest.mark.parametrize(
