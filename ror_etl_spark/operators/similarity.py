@@ -358,21 +358,15 @@ def lsh_near_dup_pairs(
             return empty
         return pd.concat(outs, ignore_index=True)
 
-    # Pin the group exchange at the larger of defaultParallelism and
-    # spark.sql.shuffle.partitions (same key as the groupBy, so
-    # FlatMapGroupsInPandas adds no second exchange): the per-group cost
-    # of applyInPandas is pandas-frame construction + the GEMM, and AQE's
-    # byte-based coalescing packs the shuffle into a handful of tasks (5
-    # at sf0.1 — bucket rows are narrow), serializing hundreds of group
-    # kernels onto a few cores (guide §4.3 batch sizing / §2.5:
-    # CPU-heavy post-shuffle work, not bytes, is the unit here).
-    # defaultParallelism is the cluster width; a cluster that sets more
-    # shuffle partitions than cores keeps that width here too.
-    session = corpus.sparkSession
-    nparts = max(
-        session.sparkContext.defaultParallelism,
-        int(session.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # Pin the group exchange at defaultParallelism (same key as the
+    # groupBy, so FlatMapGroupsInPandas adds no second exchange): the
+    # per-group cost of applyInPandas is pandas-frame construction +
+    # the GEMM, and AQE's byte-based coalescing packs the shuffle into a
+    # handful of tasks (5 at sf0.1 — bucket rows are narrow), serializing
+    # hundreds of group kernels onto a few cores (guide §4.3 batch
+    # sizing / §2.5: CPU-heavy post-shuffle work, not bytes, is the unit
+    # here). defaultParallelism is the cluster width at any scale.
+    nparts = corpus.sparkSession.sparkContext.defaultParallelism
     pairs = (
         buckets.repartition(nparts, "tbl", "bucket")
         .groupBy("tbl", "bucket")

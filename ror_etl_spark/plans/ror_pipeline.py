@@ -44,6 +44,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import stat
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
@@ -101,6 +102,21 @@ def _parquet_row_count(path: str) -> int:
     return ds.dataset(path, format="parquet").count_rows()
 
 
+def _file_identity(path: str) -> tuple[int, ...] | None:
+    """What tells one version of the file at ``path`` from another
+    without reading it: device, inode, size, mtime and ctime. A feed
+    renamed into place (how ``sources.fetch`` replaces one) has a new
+    inode, and a rewrite in place moves ctime, which no caller can set
+    back. None for anything but a local regular file."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
 def _swap_paths(dest: str) -> tuple[str, str]:
     """The sibling paths a swap of ``dest`` uses: the new copy, and the
     previous table while it is being replaced."""
@@ -141,11 +157,18 @@ class RorPipeline:
     run_date: datetime | None = None
     # per-run state handed from stage to stage
     _gate: tuple[DataFrame, _Gate] | None = field(default=None, init=False, repr=False)
+    # the feed load_input read, and its _file_identity before the gate
+    # read it (None: not a local file)
+    _feed: tuple[str, tuple[int, ...]] | None = field(default=None, init=False, repr=False)
     _rollup: RollupResult | None = field(default=None, init=False, repr=False)
-    # the frame add_ultimate_parent returned, and the gate's row count for it
-    _attached: tuple[DataFrame, int] | None = field(default=None, init=False, repr=False)
+    # the frame add_ultimate_parent returned, the gate's row count for it,
+    # and the feed that count was taken from (None: a frame it gated itself)
+    _attached: tuple[DataFrame, int, tuple | None] | None = field(
+        default=None, init=False, repr=False
+    )
     _staging_metrics: dict | None = field(default=None, init=False, repr=False)
     # the gate's row count when load_staging wrote the _attached frame
+    # from a feed that did not change while the week read it
     _staged_gate_n: int | None = field(default=None, init=False, repr=False)
     _staging_schema: T.StructType | None = field(default=None, init=False, repr=False)
 
@@ -183,7 +206,12 @@ class RorPipeline:
         The gate comes from the fetch when it can (``_fetched_gate``), at
         no Spark job: the feed is then parsed once, by the staging write.
         Any other feed, or one above the rollup's ``local_threshold``, is
-        gated by one Spark scan (``_scan_gate``), the 100 TB route."""
+        gated by one Spark scan (``_scan_gate``), the 100 TB route.
+
+        The feed's file identity is taken before the gate reads it, so
+        ``load_staging`` can tell whether the write parsed the same feed."""
+        identity = _file_identity(jsonl_path)
+        self._feed = (jsonl_path, identity) if identity is not None else None
         df = (
             self.spark.read.schema(ROR_INPUT_SCHEMA)
             .option("mode", "FAILFAST")
@@ -250,9 +278,9 @@ class RorPipeline:
         routing runs no job of its own; a frame other than the one
         ``load_input`` returned is gated here first."""
         if self._gate is not None and self._gate[0] is ror:
-            gate = self._gate[1]
+            gate, feed = self._gate[1], self._feed
         else:
-            gate = self._scan_gate(ror)
+            gate, feed = self._scan_gate(ror), None
         if isinstance(gate.edges, pa.Table):
             # the fetch's gate: at most local_threshold rows, already on
             # the driver, so the single-task kernel runs right here; its
@@ -279,7 +307,7 @@ class RorPipeline:
                 f"root (cycle or depth cap) — kept an in-chain ancestor"
             )
         with_up = attach_ultimate_parent(ror, result)
-        self._attached = (with_up, gate.n)
+        self._attached = (with_up, gate.n, feed)
         return with_up
 
     def load_staging(self, df: DataFrame) -> None:
@@ -290,13 +318,19 @@ class RorPipeline:
         reference's post-load BigQueryCheckOperator) would cost. The
         observed count also feeds both checks, which then read nothing
         back: ``check_unique_ids`` compares it with the gate's row count
-        when ``df`` is the frame ``add_ultimate_parent`` returned (the
-        link is recorded here, not assumed), and
-        ``check_monotonic_count`` compares it with prod's."""
+        when ``df`` is the frame ``add_ultimate_parent`` returned for
+        the feed ``load_input`` read (the link is recorded here, not
+        assumed), and ``check_monotonic_count`` compares it with prod's.
+
+        ``df`` parses the feed lazily, so the write reads the file again.
+        A fetch that renames a new feed into place between the gate and
+        the write would leave the gate's count about other rows; the
+        count is kept only when the feed's file identity after the write
+        is the one ``load_input`` took before the gate read it."""
         from pyspark.sql import Observation
 
         attached = self._attached
-        self._staged_gate_n = attached[1] if attached and attached[0] is df else None
+        self._staged_gate_n = None
         self._staging_metrics = None
         obs = Observation("staging_load")
         observed = df.observe(
@@ -308,6 +342,10 @@ class RorPipeline:
         metrics = obs.get
         self._staging_metrics = metrics
         self._staging_schema = df.schema
+        if attached is not None and attached[0] is df and attached[2] is not None:
+            path, identity = attached[2]
+            if _file_identity(path) == identity:
+                self._staged_gate_n = attached[1]
         if metrics["null_up"]:
             raise CheckFailed(
                 f"staging ror: {metrics['null_up']} row(s) with NULL "
@@ -319,17 +357,17 @@ class RorPipeline:
 
         Proven from two counts the run already holds, with no Spark job,
         when staging was written from the frame ``add_ultimate_parent``
-        returned. The gate raised unless the feed's ``n`` ids were
-        distinct and non-null, and that frame is a left join of exactly
-        those rows with the mapping. A left join keeps every left row at
-        least once and repeats one only when a mapping id repeats, so
-        staging's ids are distinct exactly when the staging write's
-        observed row count equals the gate's ``n``; fewer rows mean a
-        row was lost. (The staging write parses the same feed the gate
-        read, as the rollup already assumes.) This is Deequ's rule of
-        verifying from metrics already computed instead of rescanning
-        (Schelter et al., VLDB 2018). A standalone call, with no gate in
-        hand, runs the Spark query over staging."""
+        returned for an unchanged feed (``load_staging``). The gate
+        raised unless the feed's ``n`` ids were distinct and non-null,
+        and that frame is a left join of exactly those rows with the
+        mapping. A left join keeps every left row at least once and
+        repeats one only when a mapping id repeats, so staging's ids are
+        distinct exactly when the staging write's observed row count
+        equals the gate's ``n``; fewer rows mean a row was lost. This is
+        Deequ's rule of verifying from metrics already computed instead
+        of rescanning (Schelter et al., VLDB 2018). A standalone call, with no gate in
+        hand, or a feed that changed while the week read it, runs the
+        Spark query over staging."""
         gate_n, metrics = self._staged_gate_n, self._staging_metrics
         if gate_n is not None and metrics is not None:
             if metrics["n"] > gate_n:

@@ -550,6 +550,36 @@ def test_unique_ids_queries_a_frame_the_gate_did_not_count(spark, tmp_path):
         p.check_unique_ids()
 
 
+@ROUTES
+def test_feed_replaced_during_the_week_is_queried(spark, tmp_path, monkeypatch, route):
+    """A fetch renames a new feed into place after the gate read the old
+    one, so the staging write parses the new feed. It has the old one's
+    size and row count but repeats b: the gate's count proves nothing
+    about it, and check_unique_ids queries staging."""
+    feed = _fetch(tmp_path, [ORG_A, ORG_B, ORG_C], route)
+    with open(feed, "rb") as f:
+        old = f.read()
+    a, b, c = old.splitlines(keepends=True)
+    pad = len(a) - len(b)
+    new = b + b"{" + b" " * pad + b[1:] + c
+    assert len(new) == len(old)
+    real = ror_pipeline.attach_ultimate_parent
+
+    def attach(ror, result):
+        with open(feed + ".new", "wb") as f:
+            f.write(new)
+        os.replace(feed + ".new", feed)
+        return real(ror, result)
+
+    monkeypatch.setattr(ror_pipeline, "attach_ultimate_parent", attach)
+    p = RorPipeline(spark, str(tmp_path / "wh"))
+    with pytest.raises(CheckFailed, match="duplicate ids"):
+        p.run(feed)
+    staged = sorted(r["id"] for r in spark.read.parquet(p.staging_path).collect())
+    assert staged == [ORG_B["id"], ORG_B["id"], ORG_C["id"]]
+    assert not os.path.exists(p.prod_path)
+
+
 def _write_table(spark, path, ids):
     spark.createDataFrame([(i,) for i in ids], "id string").write.mode(
         "overwrite"
